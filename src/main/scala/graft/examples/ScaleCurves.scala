@@ -37,7 +37,7 @@ import graft.ops.{Dedup, Similarity}
   *    ±1 Rademacher mask. Intra-shard dot products and norms are EXACTLY
   *    preserved (s_i² = 1), so each shard reproduces the original
   *    neighborhood structure; cross-shard cosines have mean 0 (random
-  *    relative signs). CAVEAT, measured r14 (IvfScaleProbe diag): mean-0
+  *    relative signs). CAVEAT, measured r14 (IVF scale diagnostic): mean-0
   *    is not enough for exact top-k QUALITY baselines — individual
   *    cross-shard cosines have std ~1/√dim ≈ 0.125 and the max over 450k
   *    of them reaches ~0.125·√(2·ln 450k) ≈ 0.64, which beats this
@@ -228,7 +228,7 @@ object ScaleCurves {
     * leg's 6.7× in-one-job ratio conflates).
     *
     * Measurement lessons baked in (r14a/r14b bench embeds + the
-    * IvfScaleProbe sweeps): (a) at sf0.1 the whole 1× job is ~0.2 s of
+    * r14 IVF scale sweeps): (a) at sf0.1 the whole 1× job is ~0.2 s of
     * scheduling overhead and any ratio over it is overhead division, so the
     * leg amplifies 10·copies — the measured pair is 10× vs 100× shards,
     * still exactly 10× apart, both op-dominated; (b) recall is pinned at

@@ -42,7 +42,7 @@ object Graph {
     // round over frames that are read back, not recomputed). Checkpoints
     // are EAGER with previous-generation unpersist (r17: the lazy form
     // left every generation's blocks to GC — ~5 leaked block sets per
-    // invocation, and the PprProbe measured 5–16 s walls on an idle box
+    // invocation, and a PPR probe measured 5–16 s walls on an idle box
     // from the resulting block-manager churn): once round t's blocks are
     // materialized, round t−1's are dead by construction, and once the
     // final round is materialized the e/nodes/outw inputs are too — only

@@ -3,6 +3,8 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
+import graft.streaming.Commit
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -991,15 +993,15 @@ object Similarity {
     */
   private def publishIndexLists(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      lists: DataFrame, sidecar: DataFrame): Unit =
-    readManifest(spark, path) match {
+      lists: DataFrame, sidecar: DataFrame): Unit = {
+    val prior = readCommit(spark, path)
+    prior.map(parseManifest) match {
       case None =>
         // fresh build: plain overwrite, then the first manifest
         lists.write.mode("overwrite").partitionBy("cent_id").parquet(s"$path/lists")
         sidecar.write.mode("overwrite").parquet(s"$path/centroids")
         commitManifest(spark, path,
-          IndexManifest(0L, listDataFiles(spark, path), Seq.empty),
-          expectedPrior = None)
+          IndexManifest(0L, listDataFiles(spark, path), Seq.empty), prior, "build")
       case Some(m) =>
         // REBUILD over a committed index: same crash-safe protocol as the
         // append — everything is written as NEW files/dirs, the flip is the
@@ -1024,21 +1026,18 @@ object Similarity {
         commitManifest(spark, path, IndexManifest(
           version, newFiles, expired = m.files, cdir = cdir,
           expiredDirs = if (m.cdir == cdir) Seq.empty else Seq(m.cdir)),
-          expectedPrior = Some(m.version))
+          prior, "rebuild")
     }
+  }
 
-  /** Commit manifest of a persisted IVF index — the crash/reader-isolation
-    * protocol. `_COMMIT` at the index root is the single source of truth for
-    * which data files under `lists/` are live; it is replaced by atomic
-    * rename, so a reader resolves either the pre-append or the post-append
-    * file set, NEVER a mix — no matter when an append crashes or what a
-    * concurrent reader is doing. `expired` carries the files the latest
-    * commit replaced: they stay on disk for one commit (the reader grace
-    * window, the [[graft.streaming.Streams.commitSnapshot]] pattern) and are
-    * deleted by the next append. Writers are single-writer by contract
-    * (concurrent appends would race the flip); readers need no coordination.
-    * An index written before this protocol (no `_COMMIT`) is adopted on
-    * first read/append from its directory listing.
+  /** Commit manifest of a persisted IVF index: `_COMMIT` at the index root
+    * is the pointer [[Commit.flip]] replaces and the single source of truth
+    * for which data files under `lists/` are live, so a reader resolves the
+    * pre- or the post-commit file set, never a mix. `expired` carries the
+    * files the latest commit replaced: they stay on disk for one commit (the
+    * reader grace window) and are deleted by the next append. An index
+    * written before this protocol (no `_COMMIT`) is adopted on first
+    * read/append from its directory listing.
     *
     * `cdir` names the live centroid-sidecar directory: a REBUILD writes a
     * new `centroids_v<N>` and flips `cdir` with everything else, so the
@@ -1046,20 +1045,13 @@ object Similarity {
     * same index version; the replaced sidecar rides `expiredDirs` through
     * the same one-commit grace window as replaced list files.
     *
-    * The single-writer contract is backed by three mechanisms, not just
-    * documentation:
+    * On top of [[Commit]]'s single-writer fence (a loser's promoted files
+    * become orphans the next append or vacuum sweeps) the index adds:
     *
     *  - POSITIVE file ownership: a writer's manifest lists exactly the files
     *    it staged and promoted under its own nonce ([[stageAndPromote]]) —
     *    never a listing diff, which under true concurrency would silently
     *    adopt another writer's uncommitted files into this writer's commit.
-    *  - the flip-time FENCE: every commit re-reads `_COMMIT` immediately
-    *    before the rename and fails with [[ConcurrentIndexWriteException]]
-    *    if the version moved — the loser's promoted files become orphans
-    *    the next append or vacuum sweeps. Plain filesystems have no
-    *    compare-and-swap rename, so two flips inside the same instant can
-    *    still race; the fence is loud detection for everything slower, not
-    *    mutual exclusion — single-writer remains the deployment contract.
     *  - vacuum AS a commit: [[vacuumIvfInt8Index]] re-publishes the manifest
     *    at version + 1 after its sweep, so an append racing the sweep fails
     *    its own fence instead of committing partitions whose files vacuum
@@ -1069,78 +1061,33 @@ object Similarity {
       version: Long, files: Seq[String], expired: Seq[String],
       cdir: String = "centroids", expiredDirs: Seq[String] = Seq.empty)
 
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_COMMIT")
+  /** the raw `_COMMIT` pointer — writers keep it as their flip's prior */
+  private def readCommit(
+      spark: org.apache.spark.sql.SparkSession, path: String): Option[String] =
+    Commit.read(spark.sparkContext.hadoopConfiguration, path, "_COMMIT")
+
+  private def parseManifest(body: String): IndexManifest = {
+    val lines = body.linesIterator.toVector
+    IndexManifest(
+      lines.collectFirst { case l if l.startsWith("v ") => l.drop(2).toLong }.getOrElse(0L),
+      lines.collect { case l if l.startsWith("f ") => l.drop(2) },
+      lines.collect { case l if l.startsWith("x ") => l.drop(2) },
+      lines.collectFirst { case l if l.startsWith("c ") => l.drop(2) }.getOrElse("centroids"),
+      lines.collect { case l if l.startsWith("xd ") => l.drop(3) })
+  }
 
   private def readManifest(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[IndexManifest] = {
-    val p = manifestPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
-      Some(IndexManifest(
-        lines.collectFirst { case l if l.startsWith("v ") => l.drop(2).toLong }.getOrElse(0L),
-        lines.collect { case l if l.startsWith("f ") => l.drop(2) },
-        lines.collect { case l if l.startsWith("x ") => l.drop(2) },
-        lines.collectFirst { case l if l.startsWith("c ") => l.drop(2) }.getOrElse("centroids"),
-        lines.collect { case l if l.startsWith("xd ") => l.drop(3) }))
-    }
-  }
-
-  /** Thrown when the writer fence detects that another writer committed
-    * between this writer's manifest read and its flip — the index is intact
-    * (the OTHER writer's commit is live); this writer's work must be retried
-    * from a fresh manifest read.
-    */
-  final class ConcurrentIndexWriteException(msg: String)
-    extends IllegalStateException(msg)
-
-  /** the flip-time writer fence: the on-disk manifest version must still be
-    * `expectedPrior` (None = no manifest existed when this writer started)
-    */
-  private def verifyWriterFence(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      expectedPrior: Option[Long], who: String): Unit = {
-    val now = readManifest(spark, path).map(_.version)
-    if (now != expectedPrior)
-      throw new ConcurrentIndexWriteException(
-        s"$who on index $path started from manifest version " +
-          s"${expectedPrior.map(_.toString).getOrElse("<none>")} but found " +
-          s"${now.map(_.toString).getOrElse("<none>")} at flip time: a " +
-          "concurrent writer committed in between (the protocol is " +
-          "single-writer). The other commit is live and intact; retry this " +
-          "operation from a fresh manifest read — its orphaned part files " +
-          "will be swept by the next append or vacuum.")
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Option[IndexManifest] =
+    readCommit(spark, path).map(parseManifest)
 
   private def commitManifest(
       spark: org.apache.spark.sql.SparkSession, path: String, m: IndexManifest,
-      expectedPrior: Option[Long], who: String = "commit"): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"_COMMIT.tmp_${m.version}")
-    val out = fs.create(tmp, true)
-    try {
-      val body = (Seq(s"v ${m.version}", s"c ${m.cdir}") ++
-        m.files.sorted.map("f " + _) ++ m.expired.sorted.map("x " + _) ++
-        m.expiredDirs.sorted.map("xd " + _)).mkString("\n")
-      out.write(body.getBytes(StandardCharsets.UTF_8))
-    } finally out.close()
-    // fence LAST, immediately before the rename: the check-then-rename
-    // window is then the instant between this re-read and the flip. Plain
-    // filesystems offer no compare-and-swap rename, so two writers flipping
-    // inside that instant can still race undetected — the fence is loud
-    // DETECTION for everything slower than that, not mutual exclusion;
-    // single-writer remains the deployment contract.
-    verifyWriterFence(spark, path, expectedPrior, who)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
-    fc.rename(tmp, manifestPath(path),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      prior: Option[String], op: String): Unit = {
+    val body = (Seq(s"v ${m.version}", s"c ${m.cdir}") ++
+      m.files.sorted.map("f " + _) ++ m.expired.sorted.map("x " + _) ++
+      m.expiredDirs.sorted.map("xd " + _)).mkString("\n")
+    Commit.flip(spark.sparkContext.hadoopConfiguration, path, "_COMMIT",
+      m.version, body, prior, op)
   }
 
   /** `lists/`-relative paths of the data files currently on disk (recursive
@@ -1396,7 +1343,7 @@ object Similarity {
       col(idCol).as("neighbor_id"),
       int16Codes(asDouble(col(vecCol))).cast("array<smallint>").as("q"),
       assign(asDouble(col(vecCol))).as("cent_id")) ++ attrCols.map(col): _*)
-    appendListsIndexImpl(spark, path, newRows, maxBucket, () => ())
+    appendListsIndexImpl(spark, path, newRows, maxBucket)
   }
 
   /** the nCents-row centroid sidecar of a persisted index, driver-side (the
@@ -1444,19 +1391,15 @@ object Similarity {
       maxBucket: Int = DEFAULT_MAX_BUCKET, assignKernel: Boolean = true,
       attrCols: Seq[String] = Seq.empty): Unit =
     appendIvfInt8IndexImpl(spark, batch, idCol, vecCol, path, maxBucket,
-      assignKernel, beforeFlip = () => (), attrCols = attrCols)
+      assignKernel, afterStage = () => (), attrCols = attrCols)
 
-  /** [[appendIvfInt8Index]] with a test seam: `beforeFlip` runs after this
-    * append's part files are written but before its manifest flip — the
-    * window where a concurrent writer's commit must trip the fence. Specs
-    * use it to run a REAL interleaved second append and assert the loser
-    * fails loudly instead of clobbering the winner's commit.
+  /** [[appendIvfInt8Index]] with a test seam: `afterStage` runs between the
+    * staged write and the promote listing — the window a stage sweep hits.
     */
   private[graft] def appendIvfInt8IndexImpl(
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
       idCol: String, vecCol: String, path: String,
-      maxBucket: Int, assignKernel: Boolean, beforeFlip: () => Unit,
-      afterStage: () => Unit = () => (),
+      maxBucket: Int, assignKernel: Boolean, afterStage: () => Unit,
       attrCols: Seq[String] = Seq.empty): Unit = {
     val cents = loadCentroids(spark, path)
     val assign = assignExpr(cents, assignKernel)
@@ -1467,7 +1410,7 @@ object Similarity {
       col(idCol).as("neighbor_id"),
       int8Codes(asDouble(col(vecCol))).as("q"),
       assign(asDouble(col(vecCol))).as("cent_id")) ++ attrCols.map(col): _*)
-    appendListsIndexImpl(spark, path, newRows, maxBucket, beforeFlip, afterStage)
+    appendListsIndexImpl(spark, path, newRows, maxBucket, afterStage)
   }
 
   /** The append half of the commit protocol, shared by every persisted lists
@@ -1477,13 +1420,13 @@ object Similarity {
     */
   private def appendListsIndexImpl(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      newRows: DataFrame, maxBucket: Int, beforeFlip: () => Unit,
+      newRows: DataFrame, maxBucket: Int,
       afterStage: () => Unit = () => ()): Unit = {
     val touched = newRows.select(col("cent_id")).distinct()
       .collect().map(_.getLong(0)) // <= nCents values, a driver-side build
     if (touched.isEmpty) return
-    val prior = readManifest(spark, path)
-    val manifest = prior.getOrElse(
+    val prior = readCommit(spark, path)
+    val manifest = prior.map(parseManifest).getOrElse(
       // pre-manifest index: adopt what is on disk as version -1
       IndexManifest(-1L, listDataFiles(spark, path), Seq.empty))
     val listsRoot = new org.apache.hadoop.fs.Path(s"$path/lists")
@@ -1516,12 +1459,10 @@ object Similarity {
       existing.unionByName(newRows), Seq("cent_id"), "neighbor_id", maxBucket)
       .localCheckpoint(true)
     val newFiles = stageAndPromote(spark, path, merged, afterStage)
-    beforeFlip()
     commitManifest(spark, path, IndexManifest(
       manifest.version + 1,
       manifest.files.filterNot(inTouched) ++ newFiles,
-      touchedFiles, cdir = manifest.cdir),
-      expectedPrior = prior.map(_.version))
+      touchedFiles, cdir = manifest.cdir), prior, "append")
   }
 
   /** Persist an IVF+PQ index — the [[ivfPqTopK]] composition in its stored
@@ -1647,7 +1588,7 @@ object Similarity {
     val newRows = batch.select(Seq(
       col(idCol).as("neighbor_id"), codes.as("q"),
       assign(asDouble(col(vecCol))).as("cent_id")) ++ attrCols.map(col): _*)
-    appendListsIndexImpl(spark, path, newRows, maxBucket, () => ())
+    appendListsIndexImpl(spark, path, newRows, maxBucket)
   }
 
   /** Sweep unreferenced files from a persisted index — the admin op that
@@ -1665,7 +1606,7 @@ object Similarity {
     * version + 1 (through the fenced [[commitManifest]]) — so an append
     * whose PROMOTED files the sweep may have eaten fails its own flip, and
     * a vacuum overlapped by a completed commit fails ITS flip with
-    * [[ConcurrentIndexWriteException]]; and a sweep that ate an append's
+    * [[Commit.ConcurrentWriteException]]; and a sweep that ate an append's
     * STAGING directory (before its promote — a window the appender's fence
     * cannot see, because vacuum commits its version bump only afterwards)
     * aborts the append inside [[stageAndPromote]], which refuses to promote
@@ -1678,31 +1619,8 @@ object Similarity {
   def vacuumIvfInt8Index(
       spark: org.apache.spark.sql.SparkSession, path: String,
       stageGraceMs: Long = DEFAULT_STAGE_GRACE_MS): Unit =
-    vacuumIvfInt8IndexImpl(spark, path, beforeFence = () => (),
-      stageGraceMs = stageGraceMs)
-
-  /** how old a `stage_*` dir must be before vacuum treats it as a crash
-    * leftover rather than a possibly-live writer's in-flight staging
-    */
-  val DEFAULT_STAGE_GRACE_MS: Long = 60L * 60 * 1000
-
-  /** index-type-agnostic alias: the sweep only reads the manifest and the
-    * `lists/` + `centroids*` layout, which int8 and PQ indexes share — one
-    * vacuum serves both
-    */
-  def vacuumIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    vacuumIvfInt8Index(spark, path)
-
-  /** [[vacuumIvfInt8Index]] with a test seam: `beforeFence` runs after the
-    * sweep, before the closing fence check — the window where a concurrent
-    * writer's commit must make vacuum fail loudly.
-    */
-  private[graft] def vacuumIvfInt8IndexImpl(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      beforeFence: () => Unit,
-      stageGraceMs: Long = DEFAULT_STAGE_GRACE_MS): Unit =
-    readManifest(spark, path).foreach { m =>
+    readCommit(spark, path).foreach { prior =>
+      val m = parseManifest(prior)
       val listsRoot = new org.apache.hadoop.fs.Path(s"$path/lists")
       val fs = listsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val referenced = m.files.toSet ++ m.expired.toSet
@@ -1724,16 +1642,26 @@ object Similarity {
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("stage_")
           && s.getModificationTime < cutoff)
         .foreach(s => fs.delete(s.getPath, true))
-      beforeFence()
       // vacuum IS a commit: re-publishing the same manifest at version + 1
       // makes any writer whose files the sweep may have touched fail its
-      // flip loudly (its expected prior version no longer matches) instead
-      // of committing partitions vacuum just swept — without the bump, a
-      // racing append's fence would PASS (vacuum used to leave the version
-      // unchanged) even though its uncommitted files were deleted.
-      commitManifest(spark, path, m.copy(version = m.version + 1),
-        expectedPrior = Some(m.version), who = "vacuum")
+      // flip loudly (its prior no longer matches) instead of committing
+      // partitions vacuum just swept — without the bump, a racing append's
+      // fence would PASS even though its uncommitted files were deleted.
+      commitManifest(spark, path, m.copy(version = m.version + 1), Some(prior), "vacuum")
     }
+
+  /** how old a `stage_*` dir must be before vacuum treats it as a crash
+    * leftover rather than a possibly-live writer's in-flight staging
+    */
+  val DEFAULT_STAGE_GRACE_MS: Long = 60L * 60 * 1000
+
+  /** index-type-agnostic alias: the sweep only reads the manifest and the
+    * `lists/` + `centroids*` layout, which int8 and PQ indexes share — one
+    * vacuum serves both
+    */
+  def vacuumIndex(
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    vacuumIvfInt8Index(spark, path)
 
   /** Symmetric int8 quantization of an embedding column — the vector-
     * compression step a 100 TB ANN index runs before storage (4× smaller than

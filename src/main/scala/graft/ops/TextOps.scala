@@ -133,7 +133,7 @@ object TextOps {
     * producer re-evaluates once PER WINDOW (filter pushdown inlines
     * unconditionally and lambda-bearing trees get no CSE) — measured as a
     * 5 k-doc probe-filter scan re-tokenizing every doc per shingle, 2.6 s
-    * vs 0.3 s (r16 AdmitProbe). The custom expression evaluates its child
+    * vs 0.3 s (r16 piece timing). The custom expression evaluates its child
     * exactly once per row wherever the plan puts it. Same output
     * bit-for-bit: single-space joins, `< n` and NULL inputs → empty array,
     * distinct keeps first occurrence.

@@ -7,17 +7,18 @@ import org.apache.spark.sql.functions._
   * [[Streams.commitSnapshot]]'s whole-table versions. A version's data
   * directory `d_<v>/<partCol>=<value>/` holds only the partitions that
   * version REWROTE; a JSON manifest maps every live partition value to the
-  * version that owns it, and the `_LATEST` pointer flips atomically to the
-  * new manifest. Merge I/O is therefore proportional to the TOUCHED
-  * partitions, never the table — the property that makes keyed maintenance
-  * of a 100 TB corpus affordable (cf. the reference's whole-frame Snapshot,
+  * version that owns it, and the `_LATEST` pointer flips to the new
+  * manifest. Merge I/O is therefore proportional to the TOUCHED partitions,
+  * never the table — the property that makes keyed maintenance of a 100 TB
+  * corpus affordable (cf. the reference's whole-frame Snapshot,
   * TDataFrame.hxx; this is the maintenance layer it has no analog for).
   *
-  * Same deployment contract as the IVF index commit protocol
-  * ([[graft.ops.Similarity]]): single writer; readers are never torn
-  * because data and manifest are immutable once the pointer flips, and a
-  * crashed commit leaves only an unreferenced `d_<v>` directory (swept by
-  * [[vacuum]] behind the same mtime grace window discipline).
+  * Every commit publishes through [[Commit]] (single writer; the `d_<v>`
+  * directory is claimed and `m_<v>.json` created exclusively, then one
+  * fenced flip). Readers are never torn because data and manifest are
+  * immutable once the pointer flips, and a crashed commit leaves only an
+  * unreferenced `d_<v>` / `m_<v>.json` (swept by [[vacuum]] behind an
+  * mtime grace window).
   *
   * Reads group live partitions by owning version — ONE parquet read per
   * live version (`basePath` keeps the partition column), unioned by name.
@@ -48,9 +49,14 @@ object PartitionedSnapshot {
   private def manifestPath(dir: String, v: Long) =
     new org.apache.hadoop.fs.Path(dir, s"m_$v.json")
 
+  private def conf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
+
+  /** Create `m_<v>.json` and flip `_LATEST` to it; `prior` is the manifest
+    * this commit was derived from.
+    */
   private def writeManifest(
-      spark: SparkSession, dir: String, m: Manifest): Unit = {
-    val fs = fsOf(spark, dir)
+      spark: SparkSession, dir: String, m: Manifest, prior: Option[Manifest],
+      op: String): Unit = {
     // flat line-oriented format, no JSON library needed: version, then one
     // "#addcol\t<name>\t<type>\t<defaultSql>" / "#dropcol\t<name>" line per
     // evolved column, then one "<ownerVersion>\t<partitionValue>" line per
@@ -59,30 +65,16 @@ object PartitionedSnapshot {
       (m.addedCols.map(c => s"#addcol\t${c.name}\t${c.dataType}\t${c.defaultSql}") ++
         m.droppedCols.map(c => s"#dropcol\t$c") ++
         m.owners.toSeq.sortBy(_._1).map { case (p, v) => s"$v\t$p" })).mkString("\n")
-    val out = fs.create(manifestPath(dir, m.version), true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"_LATEST.tmp_${m.version}")
-    val o2 = fs.create(tmp, true)
-    try o2.write(s"m_${m.version}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally o2.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new org.apache.hadoop.fs.Path(dir).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(dir, "_LATEST"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    Commit.createNew(conf(spark), manifestPath(dir, m.version).toString, body)
+    Commit.flip(conf(spark), dir, "_LATEST", m.version, s"m_${m.version}",
+      prior.map(p => s"m_${p.version}"), op)
   }
 
   private[streaming] def readManifest(
       spark: SparkSession, dir: String): Option[Manifest] = {
-    val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, "_LATEST")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val name = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
-    val v = name.stripPrefix("m_").toLong
-    val mIn = fs.open(manifestPath(dir, v))
+    val v = Commit.read(conf(spark), dir, "_LATEST").getOrElse(return None)
+      .stripPrefix("m_").toLong
+    val mIn = fsOf(spark, dir).open(manifestPath(dir, v))
     val lines = try scala.io.Source.fromInputStream(mIn, "UTF-8").getLines().toList
     finally mIn.close()
     // meta detection is STRICT: only the two known meta prefixes are meta;
@@ -173,38 +165,31 @@ object PartitionedSnapshot {
         afterDel.join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
           .unionByName(batch.toDF, allowMissingColumns = false)
     }
-    val fs0 = fsOf(spark, tableDir)
-    val dpath = new org.apache.hadoop.fs.Path(s"$tableDir/d_$v")
-    // exists-guard (single-writer contract, violations loud): a concurrent
-    // writer derived the same next version, or a crashed commit left its
-    // data dir — abort instead of overwriting either
-    if (fs0.exists(dpath))
-      throw new IllegalStateException(
-        s"version dir $dpath already exists: concurrent writer or crashed-" +
-          "commit leftover (vacuum after the grace window, then retry)")
-    merged.write.mode("overwrite").partitionBy(partCol).parquet(dpath.toString)
-    // flip-time fence: the manifest must still be the one this merge read
-    val nowV = readManifest(spark, tableDir).map(_.version)
-    if (nowV != cur.map(_.version))
-      throw new IllegalStateException(
-        s"concurrent table writer detected under $tableDir: read manifest " +
-          s"${cur.map(_.version)} but found $nowV at flip time")
-
     // partitions actually written (a fully-deleted partition writes no dir
     // and must leave the manifest); everything else carries its old owner
-    val writtenParts = fs0.listStatus(dpath)
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"$partCol="))
-      .map(_.stripPrefix(s"$partCol="))
-      .toSet
+    val writtenParts = writeVersion(spark, tableDir, v, merged, partCol)
     val prevOwners = cur.map(_.owners).getOrElse(Map.empty)
     val owners = prevOwners.filter { case (p, _) => !touched.contains(p) } ++
       writtenParts.map(_ -> v)
     writeManifest(spark, tableDir,
       Manifest(v, owners, cur.map(_.addedCols).getOrElse(Nil),
-        cur.map(_.droppedCols).getOrElse(Nil)))
+        cur.map(_.droppedCols).getOrElse(Nil)), cur, "upsert")
     v
+  }
+
+  /** Claim and write `d_<v>` partitioned by `partCol`; returns the
+    * partition values it holds.
+    */
+  private def writeVersion(
+      spark: SparkSession, tableDir: String, v: Long, rows: DataFrame,
+      partCol: String): Set[String] = {
+    val dpath = s"$tableDir/d_$v"
+    Commit.claim(conf(spark), dpath)
+    rows.write.mode("overwrite").partitionBy(partCol).parquet(dpath)
+    fsOf(spark, tableDir).listStatus(new org.apache.hadoop.fs.Path(dpath))
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith(s"$partCol=")).map(_.stripPrefix(s"$partCol="))
+      .toSet
   }
 
   /** ONE read per owning version (basePath preserves the partition
@@ -269,26 +254,12 @@ object PartitionedSnapshot {
     val m = readManifest(spark, tableDir).getOrElse(
       throw new IllegalArgumentException(s"no committed table under $tableDir"))
     val v = m.version + 1
-    val fs = fsOf(spark, tableDir)
-    val dpath = new org.apache.hadoop.fs.Path(s"$tableDir/d_$v")
-    if (fs.exists(dpath))
-      throw new IllegalStateException(
-        s"version dir $dpath already exists: concurrent writer or crashed-" +
-          "commit leftover (vacuum after the grace window, then retry)")
-    read(spark, tableDir).write.mode("overwrite").partitionBy(partCol)
-      .parquet(dpath.toString)
-    val nowV = readManifest(spark, tableDir).map(_.version)
-    if (nowV != Some(m.version))
-      throw new IllegalStateException(
-        s"concurrent table writer detected under $tableDir: read manifest " +
-          s"${m.version} but found $nowV at flip time")
-    val writtenParts = fs.listStatus(new org.apache.hadoop.fs.Path(s"$tableDir/d_$v"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith(s"$partCol=")).map(_.stripPrefix(s"$partCol="))
+    val writtenParts = writeVersion(spark, tableDir, v, read(spark, tableDir), partCol)
     // the rewrite materialized every evolved column's values into the data
     // files (read() fills defaults), so the addcol metadata is retired —
     // rewriteAll doubles as schema compaction
-    writeManifest(spark, tableDir, Manifest(v, writtenParts.map(_ -> v).toMap))
+    writeManifest(spark, tableDir, Manifest(v, writtenParts.map(_ -> v).toMap),
+      Some(m), "rewriteAll")
     v
   }
 
@@ -308,13 +279,8 @@ object PartitionedSnapshot {
     require(remaining.nonEmpty,
       s"dropping ${partValues.size} partitions would empty the table under $tableDir")
     val v = m.version + 1
-    val nowV = readManifest(spark, tableDir).map(_.version)
-    if (nowV != Some(m.version))
-      throw new IllegalStateException(
-        s"concurrent table writer detected under $tableDir: read manifest " +
-          s"${m.version} but found $nowV at flip time")
     writeManifest(spark, tableDir,
-      Manifest(v, remaining, m.addedCols, m.droppedCols))
+      Manifest(v, remaining, m.addedCols, m.droppedCols), Some(m), "dropPartitions")
     v
   }
 
@@ -374,14 +340,9 @@ object PartitionedSnapshot {
     require(!analyzedDefault.exists(e => dynamicFns.contains(e.prettyName)),
       s"addColumn default must not depend on evaluation time/session: $defaultSql")
     val v = m.version + 1
-    val nowV = readManifest(spark, tableDir).map(_.version)
-    if (nowV != Some(m.version))
-      throw new IllegalStateException(
-        s"concurrent table writer detected under $tableDir: read manifest " +
-          s"${m.version} but found $nowV at flip time")
     writeManifest(spark, tableDir,
       Manifest(v, m.owners, m.addedCols :+ AddedCol(name, dataType, defaultSql),
-        m.droppedCols))
+        m.droppedCols), Some(m), "addColumn")
     v
   }
 
@@ -411,16 +372,11 @@ object PartitionedSnapshot {
     require(current.columns.length > 2,
       s"dropping $name would leave no data column in $tableDir")
     val v = m.version + 1
-    val nowV = readManifest(spark, tableDir).map(_.version)
-    if (nowV != Some(m.version))
-      throw new IllegalStateException(
-        s"concurrent table writer detected under $tableDir: read manifest " +
-          s"${m.version} but found $nowV at flip time")
     // an added (still-virtual-anywhere) column keeps its dropcol entry too:
     // versions upserted after the add DO physically carry it
     writeManifest(spark, tableDir,
       Manifest(v, m.owners, m.addedCols.filterNot(_.name == name),
-        m.droppedCols :+ name))
+        m.droppedCols :+ name), Some(m), "dropColumn")
     v
   }
 
@@ -441,9 +397,12 @@ object PartitionedSnapshot {
     }.reduce(_.unionByName(_))
   }
 
-  /** Delete version directories no partition references any more, behind an
-    * mtime grace window (same discipline as the index vacuum: never sweep
-    * a directory a racing writer might still be staging).
+  /** Delete version directories no partition references any more, and
+    * manifests newer than the live one (a commit that crashed before its
+    * flip — left in place, its `m_<v>.json` would refuse every later commit
+    * of that version), behind an mtime grace window (same discipline as the
+    * index vacuum: never sweep what a racing writer might still be
+    * committing).
     */
   def vacuum(
       spark: SparkSession, tableDir: String,
@@ -453,9 +412,14 @@ object PartitionedSnapshot {
     val fs = fsOf(spark, tableDir)
     val now = System.currentTimeMillis()
     fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("d_"))
-      .filter(s => !liveVersions.contains(s.getPath.getName.stripPrefix("d_").toLong))
       .filter(s => now - s.getModificationTime > graceMs)
+      .filter { s =>
+        val name = s.getPath.getName
+        if (s.isDirectory && name.startsWith("d_"))
+          !liveVersions.contains(name.stripPrefix("d_").toLong)
+        else s.isFile && name.startsWith("m_") && name.endsWith(".json") &&
+          name.stripPrefix("m_").stripSuffix(".json").toLong > m.version
+      }
       .foreach(s => fs.delete(s.getPath, true))
   }
 }

@@ -555,41 +555,38 @@ object Streams {
   }
 
   /** Publish one complete snapshot version: write `outDir/v_<version>` in
-    * full, then atomically flip the `_LATEST` pointer to it (temp file +
-    * `FileContext.rename(OVERWRITE)` — a metadata op on HDFS-like stores and
-    * an atomic `REPLACE_EXISTING` move on local disks). Readers going
-    * through [[readSnapshot]] therefore never observe a partial or deleted
-    * snapshot: until the flip they resolve the previous version, after it
-    * the new one. Versions older than the `retain` immediately-previous
-    * ones are pruned — `retain` is the reader contract: a reader that
-    * resolved the pointer and then stalls is safe for `retain` further
-    * commits (default 1, the minimum grace for one racing with the flip);
-    * size it to the slowest reader the deployment tolerates.
+    * full, then flip the `_LATEST` pointer to it through [[Commit.flip]].
+    * Readers going through [[readSnapshot]] therefore never observe a
+    * partial or deleted snapshot: until the flip they resolve the previous
+    * version, after it the new one. The version is the caller's choice and
+    * an existing `v_<version>` is overwritten (a stream sink re-commits a
+    * retried batch id), but a writer that committed in between still fails
+    * the flip. Versions older than the `retain` immediately-previous ones
+    * are pruned — `retain` is the reader contract: a reader that resolved
+    * the pointer and then stalls is safe for `retain` further commits
+    * (default 1, the minimum grace for one racing with the flip); size it
+    * to the slowest reader the deployment tolerates.
     */
   def commitSnapshot(
       batch: Dataset[Row], outDir: String, version: Long, retain: Int = 1): Unit = {
     require(retain >= 1, s"snapshot retention must keep >= 1 previous version, got $retain")
+    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
+    val prior = Commit.read(conf, outDir, Latest)
     batch.write.mode("overwrite").parquet(s"$outDir/v_$version")
-    flipLatestAndPrune(
-      batch.sparkSession.sparkContext.hadoopConfiguration, outDir, version, retain)
+    flipLatestAndPrune(conf, outDir, version, retain, prior, "commitSnapshot")
   }
 
-  /** The commit tail shared by every snapshot writer: atomically flip the
-    * `_LATEST` pointer to `v_<version>` (temp file + rename(OVERWRITE)),
-    * then prune versions older than the `retain` window.
+  private val Latest = "_LATEST"
+
+  /** The commit tail shared by every snapshot writer: flip `_LATEST` to
+    * `v_<version>`, then prune versions older than the `retain` window.
     */
   private def flipLatestAndPrune(
       conf: org.apache.hadoop.conf.Configuration, outDir: String,
-      version: Long, retain: Int): Unit = {
+      version: Long, retain: Int, prior: Option[String], op: String): Unit = {
+    Commit.flip(conf, outDir, Latest, version, s"v_$version", prior, op)
     val dir = new org.apache.hadoop.fs.Path(outDir)
     val fs = dir.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"_LATEST.tmp_$version")
-    val out = fs.create(tmp, true)
-    try out.write(s"v_$version".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(dir, "_LATEST"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     fs.listStatus(dir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v_"))
       .map(s => s.getPath)
@@ -605,14 +602,12 @@ object Streams {
   def readSnapshot(
       spark: SparkSession, outDir: String,
       version: Option[Long] = None): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = version.map(n => s"v_$n").getOrElse {
-      val in = fs.open(new org.apache.hadoop.fs.Path(dir, "_LATEST"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    require(fs.exists(new org.apache.hadoop.fs.Path(dir, v)),
+    val conf = spark.sparkContext.hadoopConfiguration
+    val v = version.map(n => s"v_$n")
+      .orElse(Commit.read(conf, outDir, Latest))
+      .getOrElse(throw new IllegalArgumentException(s"no committed snapshot under $outDir"))
+    val p = new org.apache.hadoop.fs.Path(outDir, v)
+    require(p.getFileSystem(conf).exists(p),
       s"snapshot $v does not exist under $outDir " +
         "(pruned beyond the retain window, or never committed)")
     spark.read.parquet(s"$outDir/$v")
@@ -666,18 +661,9 @@ object Streams {
   /** Current committed version of a [[commitSnapshot]] directory (the
     * `_LATEST` pointer), `None` before the first commit.
     */
-  def latestVersion(spark: SparkSession, outDir: String): Option[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, "_LATEST")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(s.stripPrefix("v_").toLong)
-    }
-  }
+  def latestVersion(spark: SparkSession, outDir: String): Option[Long] =
+    Commit.read(spark.sparkContext.hadoopConfiguration, outDir, Latest)
+      .map(_.stripPrefix("v_").toLong)
 
   /** Keyed UPSERT (MERGE) into a [[commitSnapshot]] directory — the
     * write-side complement of [[diffSnapshots]]'s CDC read: apply a change
@@ -694,11 +680,10 @@ object Streams {
     * set, it does not resolve intra-batch conflicts). First call on an
     * empty directory commits `batch` as version 0.
     *
-    * Single-writer contract, violations LOUD (the index-protocol
-    * discipline): two racing writers would derive the SAME next version —
-    * the second to reach the version directory fails the pre-write
-    * exists-guard, and a writer that loses the race between its read and
-    * its flip fails the flip-time fence instead of silently dropping the
+    * Single-writer contract, violations LOUD ([[Commit]]): two racing
+    * writers derive the SAME next version, so the second fails to claim
+    * its version directory, and a writer that loses the race between its
+    * read and its flip fails the flip instead of silently dropping the
     * other writer's merge.
     *
     * Scale shape: ONE left_anti sort-merge join on the key against the
@@ -713,7 +698,9 @@ object Streams {
       deletes: Option[DataFrame] = None, retain: Int = 1): Long = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val spark = batch.sparkSession
-    val cur = latestVersion(spark, outDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val prior = Commit.read(conf, outDir, Latest)
+    val cur = prior.map(_.stripPrefix("v_").toLong)
     val merged = cur match {
       case None => batch.toDF
       case Some(v) =>
@@ -731,24 +718,9 @@ object Streams {
           .unionByName(batch.toDF)
     }
     val v = cur.getOrElse(-1L) + 1
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vpath = new org.apache.hadoop.fs.Path(s"$outDir/v_$v")
-    // exists-guard: a concurrent writer (or a crashed commit's leftover)
-    // already owns this version directory — abort instead of clobbering it
-    if (fs.exists(vpath))
-      throw new IllegalStateException(
-        s"snapshot version dir $vpath already exists: concurrent writer or " +
-          "crashed-commit leftover (inspect and delete it to retry)")
-    merged.write.mode("overwrite").parquet(vpath.toString)
-    // flip-time fence: the pointer must still be where we read it
-    val now = latestVersion(spark, outDir)
-    if (now != cur)
-      throw new IllegalStateException(
-        s"concurrent snapshot writer detected under $outDir: " +
-          s"read version $cur but found $now at flip time")
-    flipLatestAndPrune(
-      spark.sparkContext.hadoopConfiguration, outDir, v, retain)
+    Commit.claim(conf, s"$outDir/v_$v")
+    merged.write.mode("overwrite").parquet(s"$outDir/v_$v")
+    flipLatestAndPrune(conf, outDir, v, retain, prior, "upsertSnapshot")
     v
   }
 
@@ -778,6 +750,8 @@ object Streams {
     require(retain >= 1, s"snapshot retention must keep >= 1 previous version, got $retain")
     require(statCols.nonEmpty, "data skipping needs at least one stat column")
     val spark = batch.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    val prior = Commit.read(conf, outDir, Latest)
     val vdir = s"$outDir/v_$version"
     val laid =
       if (layoutParts > 0) batch.repartitionByRange(layoutParts, statCols.map(col): _*)
@@ -795,8 +769,7 @@ object Streams {
     bloomCols.foreach { c =>
       writeBloomSidecar(written, vdir, c, bloomBits, bloomHashes)
     }
-    flipLatestAndPrune(
-      spark.sparkContext.hadoopConfiguration, outDir, version, retain)
+    flipLatestAndPrune(conf, outDir, version, retain, prior, "commitSnapshotStats")
   }
 
   /** Per-file BLOOM sidecar (`v_<version>/_bloom_<col>/`) for point-lookup
@@ -1566,7 +1539,7 @@ object Streams {
     // first r16 fold filtered `keep` directly on the flag columns, which let
     // filter pushdown splice the five rule trees into the predicate where
     // they re-evaluate with no CSE — measured ~5 s/trigger, WORSE. The
-    // measured-fastest shape (AdmitProbe: 0.7 s vs 4.7/2.8 per third) is the
+    // measured-fastest shape (r16 piece timing: 0.7 s vs 4.7/2.8 per third) is the
     // funnel keep-set idiom: widen the NARROW raw batch (the staged file is
     // one row group → one scan task), score it ONCE, and materialize the
     // flags (localCheckpoint — legal here, foreachBatch bodies are batch

@@ -1633,7 +1633,7 @@ class OpsSpec extends AnyFunSuite {
     // single-writer guard: a leftover/concurrent next-version dir aborts
     // the commit loudly instead of being clobbered
     assert(new java.io.File(s"$out/d_3").mkdirs())
-    intercept[IllegalStateException] {
+    intercept[graft.streaming.Commit.ConcurrentWriteException] {
       PartitionedSnapshot.upsert(batch, out, Seq("k"), "lang")
     }
   }
@@ -1738,7 +1738,7 @@ class OpsSpec extends AnyFunSuite {
     val base = Seq((1L, 10L)).toDF("k", "n")
     Streams.upsertSnapshot(base, out, Seq("k"), retain = 5)
     assert(new java.io.File(s"$out/v_1").mkdirs())
-    intercept[IllegalStateException] {
+    intercept[graft.streaming.Commit.ConcurrentWriteException] {
       Streams.upsertSnapshot(Seq((2L, 20L)).toDF("k", "n"), out, Seq("k"))
     }
   }

@@ -492,12 +492,11 @@ class ScaleSpec extends AnyFunSuite {
     assert(version(path) == 0L)
     // writer A appends batchA, but a REAL second append (batchB) runs and
     // commits inside A's write-to-flip window: A's flip must trip the fence
-    val ex = intercept[graft.ops.Similarity.ConcurrentIndexWriteException] {
-      graft.ops.Similarity.appendIvfInt8IndexImpl(
-        spark, batchA, "vec_id", "embedding", path,
-        graft.ops.Similarity.DEFAULT_MAX_BUCKET, assignKernel = false,
-        beforeFlip = () => graft.ops.Similarity.appendIvfInt8Index(
-          spark, batchB, "vec_id", "embedding", path))
+    val ex = intercept[graft.streaming.Commit.ConcurrentWriteException] {
+      graft.streaming.Commit.interleaved(graft.ops.Similarity.appendIvfInt8Index(
+          spark, batchB, "vec_id", "embedding", path)) {
+        graft.ops.Similarity.appendIvfInt8Index(spark, batchA, "vec_id", "embedding", path)
+      }
     }
     assert(ex.getMessage.contains("concurrent writer"))
     assert(version(path) == 1L, "the interleaved winner's commit must stay live")
@@ -521,11 +520,12 @@ class ScaleSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     graft.ops.Similarity.writeIvfInt8Index(
       emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8)
-    val ex = intercept[graft.ops.Similarity.ConcurrentIndexWriteException] {
-      graft.ops.Similarity.vacuumIvfInt8IndexImpl(spark, path,
-        beforeFence = () => graft.ops.Similarity.appendIvfInt8Index(
+    val ex = intercept[graft.streaming.Commit.ConcurrentWriteException] {
+      graft.streaming.Commit.interleaved(graft.ops.Similarity.appendIvfInt8Index(
           spark, emb.filter($"vec_id" >= 137 && $"vec_id" < 200),
-          "vec_id", "embedding", path))
+          "vec_id", "embedding", path)) {
+        graft.ops.Similarity.vacuumIvfInt8Index(spark, path)
+      }
     }
     assert(ex.getMessage.contains("vacuum"))
     // quiet vacuum still works
@@ -575,7 +575,6 @@ class ScaleSpec extends AnyFunSuite {
         spark, emb.filter($"vec_id" >= 137 && $"vec_id" < 200),
         "vec_id", "embedding", path,
         graft.ops.Similarity.DEFAULT_MAX_BUCKET, assignKernel = false,
-        beforeFlip = () => (),
         afterStage = () => new java.io.File(path).listFiles()
           .filter(_.getName.startsWith("stage_"))
           .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d)))

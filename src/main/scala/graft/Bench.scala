@@ -959,19 +959,20 @@ object Bench {
       fs.delete(new org.apache.hadoop.fs.Path(p), true); ()
     }
     rmrf(servePqPath); rmrf(serveI8Path)
-    val buildPqSec = timedBuild(() => graft.ops.Similarity.writeIvfPqIndex(
-      emb, "vec_id", "embedding", servePqPath, 16, 4, 16, 64))
+    val buildPqSec = timedBuild(() => graft.ops.Similarity.writeIvfIndex(
+      emb, "vec_id", "embedding", servePqPath, 16, graft.ops.IvfCodec.Pq(4, 16, 64)))
     // the int8 index carries the label attribute so the filtered-search row
     // measures the vector-DB `filter=` path over the same stored lists
-    val buildI8Sec = timedBuild(() => graft.ops.Similarity.writeIvfInt8Index(
-      emb, "vec_id", "embedding", serveI8Path, 16, attrCols = Seq("label")))
-    def servePq() = graft.ops.Similarity.searchIvfPqIndex(
-      spark, servePqPath, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 5, 2)
-    def serveI8() = graft.ops.Similarity.searchIvfInt8Index(
-      spark, serveI8Path, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 3, 2)
-    def serveI8F() = graft.ops.Similarity.searchIvfInt8Index(
-      spark, serveI8Path, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 3, 2,
-      listFilter = Some(col("label") === 7))
+    val buildI8Sec = timedBuild(() => graft.ops.Similarity.writeIvfIndex(
+      emb, "vec_id", "embedding", serveI8Path, 16, graft.ops.IvfCodec.Int8,
+      attrCols = Seq("label")))
+    def servePq() = graft.ops.Similarity.openIvfSearcher(
+      spark, servePqPath, "vec_id", "embedding", 5, 2)(emb.filter(col("vec_id") < 10))
+    def serveI8() = graft.ops.Similarity.openIvfSearcher(
+      spark, serveI8Path, "vec_id", "embedding", 3, 2)(emb.filter(col("vec_id") < 10))
+    def serveI8F() = graft.ops.Similarity.openIvfSearcher(
+      spark, serveI8Path, "vec_id", "embedding", 3, 2,
+      listFilter = Some(col("label") === 7))(emb.filter(col("vec_id") < 10))
     val serveResults = Seq(
       "q_serve_pq_index" ->
         samples3("q_serve_pq_index", () => servePq().write.format("noop").mode("overwrite").save()),

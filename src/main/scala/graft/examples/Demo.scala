@@ -103,15 +103,16 @@ object Demo {
     println(s"partitioned-compact rows = ${pcomp.Count()()} (4 concurrent partition jobs)")
 
     val idx = "/tmp/graft_demo_ivf_index"
-    graft.ops.Similarity.writeIvfInt8Index(
-      emb.filter(col("vec_id") < 300), "vec_id", "embedding", idx, nCents = 8)
-    graft.ops.Similarity.appendIvfInt8Index(
+    graft.ops.Similarity.writeIvfIndex(
+      emb.filter(col("vec_id") < 300), "vec_id", "embedding", idx, nCents = 8,
+      graft.ops.IvfCodec.Int8)
+    graft.ops.Similarity.appendIvfIndex(
       spark, emb.filter(col("vec_id") >= 300), "vec_id", "embedding", idx)
-    val hits = graft.ops.Similarity.searchIvfInt8Index(
-      spark, idx, qs, "vec_id", "embedding", k = 2, nprobe = 2).count()
+    val hits = graft.ops.Similarity.openIvfSearcher(
+      spark, idx, "vec_id", "embedding", k = 2, nprobe = 2)(qs).count()
     println(s"persisted-index (build+append) hits = $hits")
     // list-balance stats: the operational retrain signal for the index
-    val istats = graft.ops.Similarity.ivfInt8IndexStats(spark, idx)
+    val istats = graft.ops.Similarity.ivfIndexStats(spark, idx)
       .agg(org.apache.spark.sql.functions.count(lit(1)), max(col("share"))).head()
     println(s"index stats: ${istats.getLong(0)} lists, max share ${istats.getDouble(1)}")
     // compressed-search family: JL projection, PQ-ADC, and the IVF+PQ
@@ -128,7 +129,7 @@ object Demo {
     println(s"projected vectors = ${projected.count()} (64 -> 8 dims)")
     // admin surface: sweep crashed-writer leftovers (fences loudly if a
     // writer commits mid-sweep — single-writer contract, enforced)
-    graft.ops.Similarity.vacuumIvfInt8Index(spark, idx)
+    graft.ops.Similarity.vacuumIvfIndex(spark, idx)
     println("index vacuumed: unreferenced files swept, grace window kept")
     // versioned snapshots: retention + time travel
     val snapDir = "/tmp/graft_demo_snapshots"
@@ -197,11 +198,10 @@ object Demo {
     new org.apache.hadoop.fs.Path(fidx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(fidx), true)
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", fidx, 8,
-      attrCols = Seq("label"))
-    val fhits = graft.ops.Similarity.searchIvfInt8Index(spark, fidx,
-      emb.filter(col("vec_id") < 5), "vec_id", "embedding", 3, 2,
-      listFilter = Some(col("label") === 7))
+    graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", fidx, 8,
+      graft.ops.IvfCodec.Int8, attrCols = Seq("label"))
+    val fhits = graft.ops.Similarity.openIvfSearcher(spark, fidx, "vec_id", "embedding", 3, 2,
+      listFilter = Some(col("label") === 7))(emb.filter(col("vec_id") < 5))
     println(s"filtered ANN (label=7) hits = ${fhits.count()}")
     // semantic dedup: collapse in-cluster near-duplicates, keep the earliest
     val sem = graft.ops.Similarity.semanticDedup(emb, "vec_id", "embedding",

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, IvfCodec, Similarity}
 
 /** Empirical scaling curves for the most expensive candidate-generation
   * paths (near-dup ppJoin, mutual-kNN clustering, paragraph dedup, IVF
@@ -218,7 +218,7 @@ object ScaleCurves {
     * fixed-nCents [[ivfLeg]] deliberately omits: nCents grows √-with the
     * corpus (the standard nlist ≈ √N sizing — per-query probe work is then
     * nprobe·N/nCents ∝ √N instead of ∝ N), the index is PREBUILT and
-    * persisted ([[Similarity.writeIvfInt8Index]], the q_serve_* shape —
+    * persisted ([[Similarity.writeIvfIndex]], the q_serve_* shape —
     * build is the pay-once cost, cached per (dir, size) and never timed),
     * and the leg times SEARCH ONLY: 100 identical float queries against the
     * stored partition-pruned lists at both sizes, probe selection through
@@ -242,9 +242,8 @@ object ScaleCurves {
     * leg keeps the cheaper init-from-corpus training.
     */
   def ivfScaledLeg(s: SparkSession, dir: String, copies: Int): DataFrame =
-    Similarity.searchIvfInt8Index(s, scaledIndexPath(s, dir, copies * AMP_BASE),
-      scaledQueries(s, dir), "vec_id", "embedding", 3, SCALED_NPROBE,
-      assignKernel = true)
+    Similarity.openIvfSearcher(s, scaledIndexPath(s, dir, copies * AMP_BASE),
+      "vec_id", "embedding", 3, SCALED_NPROBE)(scaledQueries(s, dir))
 
   /** PLANTED-NEIGHBOR recall@3 of the scaled-index search (r16 verdict ask
     * #6): the old pin measured the index against exact brute force, but on
@@ -312,10 +311,10 @@ object ScaleCurves {
       // the planted twins live in the SAME stored index the timed leg
       // searches (≤0.2% extra rows): one build serves both the cost curve
       // and the planted-recall pin
-      Similarity.writeIvfInt8Index(
+      Similarity.writeIvfIndex(
         amplifyEmbeddings(Tables.embeddings(s, dir), copies)
           .unionByName(plantedTwins(s, dir)),
-        "vec_id", "embedding", path, scaledCents(copies), assignKernel = true)
+        "vec_id", "embedding", path, scaledCents(copies), IvfCodec.Int8)
       path
     })
 

@@ -226,16 +226,6 @@ object Dedup {
         round(col("n_inter").cast("double") / col("n_union"), 6).as("jaccard"))
   }
 
-  /** Incremental [[ppJoin]] — exact near-dup ADMISSION against a stored
-    * corpus: every (corpus, batch) pair with Jaccard ≥ t, none within
-    * either side (the nightly-crawl question is "which new docs duplicate
-    * what we already have"). The global token order comes from the CORPUS
-    * document frequencies (tokens unseen in the corpus count df = 0, i.e.
-    * rarest); the prefix lemma holds under ANY fixed total order applied
-    * to both sides, so completeness survives the batch's novel vocabulary
-    * — which is what lets a deployment precompute the corpus prefix table
-    * once and stream batches against it.
-    */
   /** The persisted CORPUS-SIDE INDEX of the incremental similarity joins —
     * what a deployment stores once so admission never rescans the history:
     * the sized shingle-set table (id, sh, sz), the token document
@@ -311,6 +301,16 @@ object Dedup {
         round(col("n_inter").cast("double") / col("n_union"), 6).as("jaccard"))
   }
 
+  /** Incremental [[ppJoin]] — exact near-dup ADMISSION against a stored
+    * corpus: every (corpus, batch) pair with Jaccard ≥ t, none within
+    * either side (the nightly-crawl question is "which new docs duplicate
+    * what we already have"). The global token order comes from the CORPUS
+    * document frequencies (tokens unseen in the corpus count df = 0, i.e.
+    * rarest); the prefix lemma holds under ANY fixed total order applied
+    * to both sides, so completeness survives the batch's novel vocabulary
+    * — which is what lets a deployment precompute the corpus prefix table
+    * once and stream batches against it.
+    */
   def ppJoinIncremental(
       corpus: DataFrame, batch: DataFrame, idCol: String, textCol: String,
       shingleN: Int, tPct: Int): DataFrame =
@@ -364,17 +364,6 @@ object Dedup {
         round(col("n_inter").cast("double") / col("sz_a"), 6).as("containment"))
   }
 
-  /** Incremental [[containmentJoin]] — exact containment ADMISSION of a new
-    * batch against a stored corpus: every (batch b, corpus c) pair with
-    * |B∩C| / |B| ≥ t, i.e. "which new docs are mostly made of content we
-    * already have" (the quote/boilerplate-inclusion admission question).
-    * The prefix side is the BATCH (the bound ceil(t·|B|) depends only on
-    * B); the corpus contributes its FULL token postings — which is exactly
-    * the inverted index a deployment has already persisted, so admission
-    * needs no corpus rescan. The token order comes from CORPUS dfs
-    * (batch-novel tokens rank rarest, df = 0); the one-sided prefix lemma
-    * holds under any fixed order applied to the batch side.
-    */
   /** fit half of [[containmentJoinIncremental]]: the stored corpus index —
     * `tokens` holds the FULL postings (the one-sided prefix lemma puts the
     * prefix on the batch side, so the corpus contributes everything)
@@ -411,6 +400,17 @@ object Dedup {
         round(col("n_inter").cast("double") / col("sz_b"), 6).as("containment"))
   }
 
+  /** Incremental [[containmentJoin]] — exact containment ADMISSION of a new
+    * batch against a stored corpus: every (batch b, corpus c) pair with
+    * |B∩C| / |B| ≥ t, i.e. "which new docs are mostly made of content we
+    * already have" (the quote/boilerplate-inclusion admission question).
+    * The prefix side is the BATCH (the bound ceil(t·|B|) depends only on
+    * B); the corpus contributes its FULL token postings — which is exactly
+    * the inverted index a deployment has already persisted, so admission
+    * needs no corpus rescan. The token order comes from CORPUS dfs
+    * (batch-novel tokens rank rarest, df = 0); the one-sided prefix lemma
+    * holds under any fixed order applied to the batch side.
+    */
   def containmentJoinIncremental(
       corpus: DataFrame, batch: DataFrame, idCol: String, textCol: String,
       shingleN: Int, tPct: Int): DataFrame =
@@ -644,11 +644,6 @@ object Dedup {
     (labels, rounds)
   }
 
-  /** 32-bit SimHash over distinct whitespace tokens: bit j of the result is
-    * set iff Σ_words (±1 by bit j of hash32(word)) >= 0. One codegen'd
-    * expression per doc ([[graft.functions.Simhash32]]) — shuffle-free map,
-    * replacing the explode → 32 conditional sums → groupBy shape.
-    */
   /** Substring-level duplicate candidates via winnowing fingerprints
     * ([[TextOps.winnowedFingerprints]]): documents sharing ≥ `minShared`
     * selected fingerprints share (with the winnowing guarantee) local
@@ -682,41 +677,6 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** Duplicate-substring REMOVAL (the step after
-    * [[substringDupCandidates]]' detection): keep the FIRST copy of every
-    * duplicated span, cut the others — the exact-substring-dedup semantic of
-    * Lee et al.'s "Deduplicating Training Data Makes Language Models Better"
-    * (their suffix-array pass; here winnowing-approximated so it stays
-    * relational and distributed).
-    *
-    * Mechanics: winnow-selected fingerprints WITH positions
-    * ([[TextOps.winnowSelectPos]], scan-level, ~2/(w+1) density); a
-    * fingerprint's OWNER is the min doc id containing it; every selected
-    * occurrence in a later doc marks its k-gram `[pos, pos+k)` for removal;
-    * per-doc overlapping gram spans merge by gaps-and-islands (running
-    * lag(e) window over the HANDFUL of marked positions per doc — never the
-    * text); the kept text is rebuilt array-natively from the merged spans
-    * (one projection, no per-char work).
-    *
-    * Returns every input row: (id, n_spans, n_removed, cleaned). Owners and
-    * untouched docs come back verbatim (n_spans = 0).
-    *
-    * Approximate by construction, in the honest directions: winnowing only
-    * SELECTS ~2/(w+1) of grams, so a duplicated substring shorter than
-    * k+w−1 may survive (winnow guarantee is one-way), and only the selected
-    * occurrences of a shared span are cut (removal is a subset of the true
-    * duplicated chars — it never removes more than one winnowed gram-span
-    * per island boundary beyond the overlap). A 2⁻³² hash collision can cut
-    * a non-duplicated k-gram; at corpus scale that is dominated by the
-    * benefit, and the removal is always a valid k-char-aligned cut.
-    *
-    * Scale shape: shuffle 1 on `fp`, where ownership is a WINDOW min over
-    * the fp partition rather than a groupBy+self-join — the expensive
-    * winnow extraction is computed once, not once per join branch; shuffle
-    * 2 on `id` for the island window + span aggregation; shuffle 3 the
-    * sort-merge join of sidecar-per-doc spans back to the text. Text never
-    * rides the fp shuffle.
-    */
   /** PARAGRAPH-level exact dedup — the C4/Gopher block-dedup shape, adapted
     * to the unpunctuated synthetic corpus by defining a "paragraph" as a
     * fixed run of `chunkTokens` whitespace tokens (the final partial run
@@ -804,6 +764,41 @@ object Dedup {
           " ").as("cleaned"))
   }
 
+  /** Duplicate-substring REMOVAL (the step after
+    * [[substringDupCandidates]]' detection): keep the FIRST copy of every
+    * duplicated span, cut the others — the exact-substring-dedup semantic of
+    * Lee et al.'s "Deduplicating Training Data Makes Language Models Better"
+    * (their suffix-array pass; here winnowing-approximated so it stays
+    * relational and distributed).
+    *
+    * Mechanics: winnow-selected fingerprints WITH positions
+    * ([[TextOps.winnowSelectPos]], scan-level, ~2/(w+1) density); a
+    * fingerprint's OWNER is the min doc id containing it; every selected
+    * occurrence in a later doc marks its k-gram `[pos, pos+k)` for removal;
+    * per-doc overlapping gram spans merge by gaps-and-islands (running
+    * lag(e) window over the HANDFUL of marked positions per doc — never the
+    * text); the kept text is rebuilt array-natively from the merged spans
+    * (one projection, no per-char work).
+    *
+    * Returns every input row: (id, n_spans, n_removed, cleaned). Owners and
+    * untouched docs come back verbatim (n_spans = 0).
+    *
+    * Approximate by construction, in the honest directions: winnowing only
+    * SELECTS ~2/(w+1) of grams, so a duplicated substring shorter than
+    * k+w−1 may survive (winnow guarantee is one-way), and only the selected
+    * occurrences of a shared span are cut (removal is a subset of the true
+    * duplicated chars — it never removes more than one winnowed gram-span
+    * per island boundary beyond the overlap). A 2⁻³² hash collision can cut
+    * a non-duplicated k-gram; at corpus scale that is dominated by the
+    * benefit, and the removal is always a valid k-char-aligned cut.
+    *
+    * Scale shape: shuffle 1 on `fp`, where ownership is a WINDOW min over
+    * the fp partition rather than a groupBy+self-join — the expensive
+    * winnow extraction is computed once, not once per join branch; shuffle
+    * 2 on `id` for the island window + span aggregation; shuffle 3 the
+    * sort-merge join of sidecar-per-doc spans back to the text. Text never
+    * rides the fp shuffle.
+    */
   def removeDuplicateSubstrings(
       df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int): DataFrame = {
@@ -823,19 +818,6 @@ object Dedup {
       .select(col("id"), explode(TextOps.winnowSelectPos(col("__hs"), w)).as("f"))
       .select(col("id"), col("f.fp").as("fp"), col("f.pos").as("pos"))
 
-  /** SCRUB docs against a static REFERENCE corpus: cut every winnow-selected
-    * k-gram span whose fingerprint occurs anywhere in the reference — the
-    * span-level refinement of decontamination ([[graft.ops.Decontam]] FLAGS
-    * contaminated docs; this removes the contaminated characters and keeps
-    * the rest). The reference's fingerprint set stays a DataFrame joined
-    * left-semi on `fp` (an eval-benchmark reference is usually broadcast-
-    * sized, and Catalyst broadcasts it when it is — but nothing requires it
-    * to fit in memory, unlike a hash-set probe).
-    *
-    * Same output contract and honest approximations as
-    * [[removeDuplicateSubstrings]], with ownership replaced by reference
-    * membership (every doc is scrubbed; the reference keeps nothing).
-    */
   /** Fit half of [[scrubSubstrings]]: the reference corpus's distinct
     * winnow-selected fingerprints — compute ONCE and reuse across serving
     * calls (r19: the streaming twin used to re-derive this whole frame —
@@ -857,6 +839,19 @@ object Dedup {
     cutMarkedSpans(df, idCol, textCol, rem)
   }
 
+  /** SCRUB docs against a static REFERENCE corpus: cut every winnow-selected
+    * k-gram span whose fingerprint occurs anywhere in the reference — the
+    * span-level refinement of decontamination ([[graft.ops.Decontam]] FLAGS
+    * contaminated docs; this removes the contaminated characters and keeps
+    * the rest). The reference's fingerprint set stays a DataFrame joined
+    * left-semi on `fp` (an eval-benchmark reference is usually broadcast-
+    * sized, and Catalyst broadcasts it when it is — but nothing requires it
+    * to fit in memory, unlike a hash-set probe).
+    *
+    * Same output contract and honest approximations as
+    * [[removeDuplicateSubstrings]], with ownership replaced by reference
+    * membership (every doc is scrubbed; the reference keeps nothing).
+    */
   def scrubSubstrings(
       df: DataFrame, idCol: String, textCol: String,
       ref: DataFrame, refTextCol: String,
@@ -900,6 +895,11 @@ object Dedup {
           .otherwise(concat(array_join(gaps, ""), tail)).as("cleaned"))
   }
 
+  /** 32-bit SimHash over distinct whitespace tokens: bit j of the result is
+    * set iff Σ_words (±1 by bit j of hash32(word)) >= 0. One codegen'd
+    * expression per doc ([[graft.functions.Simhash32]]) — shuffle-free map,
+    * replacing the explode → 32 conditional sums → groupBy shape.
+    */
   def simhash32(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), array_distinct(tokens(col(textCol))).as("__w"))
       .filter(size(col("__w")) > 0) // no tokens → no simhash (as before)

@@ -25,6 +25,16 @@ object Graph {
 
   val SCALE: Long = 1000000000L // 1e9 fixed-point units
 
+  /** Free an eager local checkpoint's blocks. `Dataset.unpersist` only drops
+    * cache-manager entries, so on a checkpoint it frees nothing: the blocks
+    * belong to the RDD under the checkpointed frame's `LogicalRDD`.
+    */
+  private def release(checkpoint: DataFrame): Unit =
+    checkpoint.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case p => throw new IllegalArgumentException(s"not a local checkpoint: ${p.nodeName}")
+    }
+
   /** `edges`: (src, dst, w) with w a positive long; directed (symmetrize
     * before calling for an undirected graph). Nodes are derived from edge
     * endpoints, so every node has outgoing mass (no dangling handling
@@ -72,8 +82,9 @@ object Graph {
     // Scala `/`, so every pr value is bit-identical to the in-frame form.
     val n = nodes.count()
     if (n == 0L) {
-      // empty graph: nothing to iterate; the e/nodes checkpoints hold no
-      // rows, and the returned frame reads them, so they are NOT unpersisted
+      // empty graph: nothing to iterate. The returned frame reads the
+      // `nodes` checkpoint, so only that one stays persisted
+      release(e)
       nodes.select(col("node"), lit(0L).as("pr"))
     } else {
       var pr = nodes.select(col("node"), lit(SCALE / n).as("pr"))
@@ -90,10 +101,10 @@ object Graph {
             (lit(basePerNode) +
               expr(s"($damp * coalesce(s, 0L)) div 100")).as("pr"))
           .localCheckpoint(true)
-        if (prevPr != null) prevPr.unpersist(false)
+        if (prevPr != null) release(prevPr)
         prevPr = pr
       }
-      Seq(e, nodes).foreach(_.unpersist(false))
+      Seq(e, nodes).foreach(release)
       pr
     }
   }
@@ -151,10 +162,10 @@ object Graph {
           (when(col("is_seed") === 1L, lit(basePerSeed)).otherwise(lit(0L)) +
             expr(s"($damp * coalesce(s, 0L)) div 100")).as("pr"))
         .localCheckpoint(true)
-      if (prevPr != null) prevPr.unpersist(false)
+      if (prevPr != null) release(prevPr)
       prevPr = pr
     }
-    Seq(e, seeded).foreach(_.unpersist(false))
+    Seq(e, seeded).foreach(release)
     pr
   }
 
@@ -187,7 +198,7 @@ object Graph {
       done = n == prev
       prev = n
       // ne is materialized: the previous generation's blocks are dead
-      ee.unpersist(false)
+      release(ee)
       ee = ne
       it += 1
     }

@@ -138,12 +138,6 @@ object Retrieval {
       excludeSelf: Boolean = false): DataFrame =
     bm25ScoreTerms(stats, queryTerms(queries, qIdCol, qTextCol), k, k1, b, excludeSelf)
 
-  /** The scoring core over an EXPLICIT distinct (query_id, tok) term frame —
-    * what [[bm25TopKStored]] wraps with query tokenization and
-    * [[bm25ExpandedTopK]] feeds the expanded term set. The term frame must
-    * be distinct per (query_id, tok): a duplicate would double-count its
-    * contribution.
-    */
   /** the per-(tok, doc) scaled-long BM25 contribution over a stats-table
     * row — ONE definition shared by the postings scorer and the forward
     * scorer, so the two paths cannot drift by an ulp
@@ -169,6 +163,12 @@ object Retrieval {
       .select(col("query_id"), col("doc_id"), col("score"), col("n_terms"), col("rank"))
   }
 
+  /** The scoring core over an EXPLICIT distinct (query_id, tok) term frame —
+    * what [[bm25TopKStored]] wraps with query tokenization and
+    * [[bm25ExpandedTopK]] feeds the expanded term set. The term frame must
+    * be distinct per (query_id, tok): a duplicate would double-count its
+    * contribution.
+    */
   def bm25ScoreTerms(
       stats: DataFrame, qterms: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75,
@@ -342,14 +342,8 @@ object Retrieval {
         col("rank"))
   }
 
-  /** Hybrid search: BM25 over the text × exact cosine over the embeddings,
-    * fused by RRF — each leg retrieves a `kEach` shortlist, fusion keeps
-    * `k`. Corpus cost is one BM25 pass + one brute-force (or, in
-    * production, any persisted-index) ANN pass; the fusion itself is
-    * dim-sized. `docs` and `embeddings` share the id namespace.
-    */
   /** The PRODUCTION hybrid: both legs serve from persisted artifacts — the
-    * int8 IVF index ([[Similarity.searchIvfInt8Index]]: partition-pruned
+    * int8 IVF index ([[Similarity.openIvfSearcher]]: partition-pruned
     * list scans, integer-domain ranking) and the stored
     * [[bm25StatsTable]] — so a query batch touches nprobe/nCents of the
     * compressed lists plus the query terms' slice of the stats table, and
@@ -363,11 +357,17 @@ object Retrieval {
       k: Int, kLex: Int, kVec: Int, nprobe: Int): DataFrame = {
     val lex = bm25TopKStored(stats, queryDocs, idCol, textCol, kLex,
       excludeSelf = true)
-    val vec = Similarity.searchIvfInt8Index(spark, indexPath, queryEmb,
-      eIdCol, vecCol, kVec, nprobe)
+    val vec = Similarity.openIvfSearcher(spark, indexPath, eIdCol, vecCol, kVec, nprobe)(
+      queryEmb)
     rrfFuse(lex, vec, "doc_id", "neighbor_id", k)
   }
 
+  /** Hybrid search: BM25 over the text × exact cosine over the embeddings,
+    * fused by RRF — each leg retrieves a `kEach` shortlist, fusion keeps
+    * `k`. Corpus cost is one BM25 pass + one brute-force (or, in
+    * production, any persisted-index) ANN pass; the fusion itself is
+    * dim-sized. `docs` and `embeddings` share the id namespace.
+    */
   def hybridTopK(
       docs: DataFrame, idCol: String, textCol: String,
       embeddings: DataFrame, eIdCol: String, vecCol: String,

@@ -9,6 +9,33 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** How a persisted IVF index codes the vectors in its lists — the one
+  * choice [[Similarity.writeIvfIndex]] takes. Every other index verb reads
+  * it back from the committed index: a sidecar with a `kind` column is PQ,
+  * and the lists' `q` element type tells int16 (`smallint`) from int8.
+  */
+sealed trait IvfCodec
+
+object IvfCodec {
+  /** [[Similarity.int8Codes]] per dimension (4× smaller than float32);
+    * cosine ranking in the exact integer domain
+    */
+  case object Int8 extends IvfCodec
+
+  /** [[Similarity.int16Codes]] per dimension, stored as `array<smallint>` —
+    * the 2-byte rung, 256× finer than int8; same integer-domain ranking
+    * (dot terms bounded by 32767²·dim, exact in the long accumulator)
+    */
+  case object Int16 extends IvfCodec
+
+  /** `m` PQ codes per vector over `nCodes`-centroid codebooks of `dim/m`
+    * dims ([[Similarity.pqCodebooks]], one Lloyd iteration) — the
+    * [[Similarity.ivfPqTopK]] composition in stored form (~a dozen
+    * bytes/vector); candidates are ranked by asymmetric distance
+    */
+  final case class Pq(m: Int, nCodes: Int, dim: Int) extends IvfCodec
+}
+
 /** Similarity search over embedding columns (`Array[Float]`).
   *
   * Baseline: brute-force cosine top-k with the (small) query side broadcast —
@@ -302,7 +329,7 @@ object Similarity {
     }
 
   /** The query-side probe frame shared by BOTH routed PQ searches
-    * (in-memory [[ivfPqTopK]] and persisted [[searchIvfPqIndex]]): the
+    * (in-memory [[ivfPqTopK]] and the persisted PQ index): the
     * nprobe coarse routing (cosine desc, cent_id tiebreak — the IVF rule)
     * exploded per probe, plus the pre-computed ADC tables; the raw vector
     * is dropped before the broadcast. ONE definition keeps the stored and
@@ -316,8 +343,7 @@ object Similarity {
       .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv")), books, sub)
       // nprobe routing through the broadcast-matrix kernel (bit-identical
       // to the literal (negcos, cid) struct sort — TopCentroids scaladoc)
-      .withColumn("cent_id",
-        explode(graft.functions.CentroidExprs.topCentroids(col("__qv"), cents, nprobe)))
+      .withColumn("cent_id", explode(probeIds(cents, col("__qv"), nprobe, assignKernel = true)))
       .drop("__qv")
   }
 
@@ -438,7 +464,7 @@ object Similarity {
     * The storage-side twin of [[randomProject]]'s project-at-ingest: no
     * projection matrix, no rotation — truncation IS the compression. At
     * 100 TB the prefix slice is what you'd store in the hot tier (the
-    * [[searchIvfInt8Index]] attr machinery can carry it) and the full
+    * [[openIvfSearcher]] attr machinery can carry it) and the full
     * vector stays in the cold fetch path. Ranking discipline identical to
     * every ANN op: rounded-6 cosine, id tiebreaks.
     */
@@ -717,17 +743,8 @@ object Similarity {
       base.withColumn("cent_id", assign(col("__v"))), Seq("cent_id"), "id", maxBucket)
       .select(col("id").as("neighbor_id"), col("__v").as("__cv"), col("cent_id"))
 
-    // nprobe centroid ids per query: sort (−cos, cent_id) asc, take nprobe
-    lazy val probeArr = slice(
-      array_sort(array(cents.map { case (cid, cvec) =>
-        struct((cosineR6(col("__qv"), array(cvec.map(lit): _*)) * -1).as("negcos"),
-          lit(cid).as("cid"))
-      }: _*)), 1, nprobe)
-    val probeIds: Column =
-      if (assignKernel) graft.functions.CentroidExprs.topCentroids(col("__qv"), cents, nprobe)
-      else transform(probeArr, x => x.getField("cid"))
     val probes = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-      .withColumn("cent_id", explode(probeIds))
+      .withColumn("cent_id", explode(probeIds(cents, col("__qv"), nprobe, assignKernel)))
 
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
@@ -738,6 +755,19 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cent_id"), col("cos_sim"), col("rank"))
   }
+
+  /** the `nprobe` nearest centroid ids of each query vector `qv` — sort
+    * (−cos, cent_id) asc, take nprobe: the broadcast-matrix
+    * [[graft.functions.TopCentroids]] kernel, or the literal-struct sort it
+    * is bit-identical to. One definition for every IVF probe stage.
+    */
+  private def probeIds(
+      cents: Seq[(Long, Seq[Double])], qv: Column, nprobe: Int,
+      assignKernel: Boolean): Column =
+    if (assignKernel) graft.functions.CentroidExprs.topCentroids(qv, cents, nprobe)
+    else transform(slice(array_sort(array(cents.map { case (cid, cvec) =>
+      struct((cosineR6(qv, array(cvec.map(lit): _*)) * -1).as("negcos"), lit(cid).as("cid"))
+    }: _*)), 1, nprobe), x => x.getField("cid"))
 
   /** nearest-centroid assignment expression: literal-struct argmax (optimal
     * at small nCents) or the broadcast-matrix [[graft.functions.TopCentroids]]
@@ -886,39 +916,39 @@ object Similarity {
       k: Int, nCents: Int, nprobe: Int,
       maxBucket: Int = DEFAULT_MAX_BUCKET, trainIters: Int = 0,
       trainSample: Double = 1.0, assignKernel: Boolean = true): DataFrame = {
-    val base = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("__v"),
-      int8Codes(asDouble(col(vecCol))).as("__q"))
-    val cents = lloydCentroids(
-      sampleForTraining(base, trainSample).select(col("id"), col("__v")), nCents, trainIters)
-
-    val assign = assignExpr(cents, assignKernel)
-    val inverted = Dedup.capBuckets(
-      base.withColumn("cent_id", assign(col("__v"))), Seq("cent_id"), "id", maxBucket)
-      .select(col("id").as("neighbor_id"), col("__q").as("__cq"), col("cent_id"))
+    val base = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("__v"))
+    val cents = lloydCentroids(sampleForTraining(base, trainSample), nCents, trainIters)
+    val inverted = cappedLists(base, assignExpr(cents, assignKernel), maxBucket, int8Codes)
+      .withColumnRenamed("q", "__cq")
     quantProbeRank(inverted, queries, idCol, vecCol, cents, k, nprobe, assignKernel)
   }
 
+  /** The anchor-capped inverted lists shared by [[ivfInt8TopK]] and
+    * [[writeIvfIndex]]: `base` (`id`, `__v`, payload…) is assigned to its
+    * nearest centroid, capped per list, and coded AFTER the cap, so only
+    * surviving rows are encoded. Emits (`neighbor_id`, `q`, `cent_id`,
+    * payload…) — the stored row shape of every persisted index.
+    */
+  private def cappedLists(
+      base: DataFrame, assign: Column => Column, maxBucket: Int,
+      code: Column => Column, payload: Seq[String] = Seq.empty): DataFrame =
+    Dedup.capBuckets(
+      base.withColumn("cent_id", assign(col("__v"))), Seq("cent_id"), "id", maxBucket)
+      .select(Seq(col("id").as("neighbor_id"), code(col("__v")).as("q"), col("cent_id"))
+        ++ payload.map(col): _*)
+
   /** shared probe + quantized ranking stage of every scalar-quantized IVF
-    * search ([[ivfInt8TopK]], [[searchIvfInt8Index]], [[searchIvfF16Index]]):
-    * probes select nprobe centroids on floats, meet the quantized lists
-    * through the cent_id equi-join, rank in the integer domain. `inverted`
-    * carries (neighbor_id, __cq array<int>, cent_id); `mkCodes` quantizes
-    * the query side with the SAME construction the lists were stored with.
+    * search ([[ivfInt8TopK]] and the int8/int16 persisted indexes): probes
+    * select nprobe centroids on floats, meet the quantized lists through
+    * the cent_id equi-join, rank in the integer domain. `inverted` carries
+    * (neighbor_id, __cq array<int>, cent_id); `mkCodes` quantizes the query
+    * side with the SAME construction the lists were stored with.
     */
   private def quantProbeRank(
       inverted: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])], k: Int, nprobe: Int,
       assignKernel: Boolean = true,
       mkCodes: Column => Column = int8Codes): DataFrame = {
-    lazy val probeArr = slice(
-      array_sort(array(cents.map { case (cid, cvec) =>
-        struct((cosineR6(col("__qv"), array(cvec.map(lit): _*)) * -1).as("negcos"),
-          lit(cid).as("cid"))
-      }: _*)), 1, nprobe)
-    val probeIds: Column =
-      if (assignKernel)
-        graft.functions.CentroidExprs.topCentroids(col("__qv"), cents, nprobe)
-      else transform(probeArr, x => x.getField("cid"))
     val dotInt = graft.functions.VectorExprs.dotInt _
     def qnorm(c: Column) = sqrt(dotInt(c, c).cast("double"))
     // norms projected ONCE per side (a row's norm would otherwise be
@@ -928,7 +958,7 @@ object Similarity {
       asDouble(col(vecCol)).as("__qv"),
       mkCodes(asDouble(col(vecCol))).as("__qq"))
       .withColumn("__qn", qnorm(col("__qq")))
-      .withColumn("cent_id", explode(probeIds))
+      .withColumn("cent_id", explode(probeIds(cents, col("__qv"), nprobe, assignKernel)))
     val lists = inverted.withColumn("__cn", qnorm(col("__cq")))
 
     val w = Window.partitionBy(col("query_id"))
@@ -942,54 +972,111 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cent_id"), col("cos_q"), col("rank"))
   }
 
-  /** Build and PERSIST the quantized inverted-file index — the storage form
-    * of [[ivfInt8TopK]] and the layout a 100 TB deployment actually keeps on
-    * disk (the in-memory ops rebuild the index per query; a production index
-    * is built once, searched many times):
+  /** A codec with the geometry it was trained to: the coarse centroids and,
+    * for PQ, the per-subspace codebooks (dense position order — the code
+    * values). It holds everything that differs between codecs, so the
+    * index verbs are written once.
+    */
+  private final case class IvfGeometry(
+      codec: IvfCodec, cents: Seq[(Long, Seq[Double])],
+      books: Seq[Seq[(Long, Seq[Double])]] = Seq.empty) {
+
+    /** the stored `q` of an `array<double>` vector */
+    def code(v: Column): Column = codec match {
+      case IvfCodec.Int8 => int8Codes(v)
+      case IvfCodec.Int16 => int16Codes(v).cast("array<smallint>")
+      case IvfCodec.Pq(m, _, dim) =>
+        graft.functions.PqExprs.pqCodePositions(v, books, dim / m)
+    }
+
+    /** the one-file sidecar: (cent_id, cv) rows for the scalar codecs; for
+      * PQ BOTH geometries in one frame (`kind` = coarse centroid rows and
+      * per-subspace codebook rows), so a reader always resolves lists,
+      * coarse centroids and codebooks from the same committed version
+      */
+    def sidecar(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+      import spark.implicits._
+      val frame =
+        if (books.isEmpty) cents.toDF("cent_id", "cv")
+        else (cents.map { case (cid, cv) => ("coarse", cid, -1L, cv) } ++
+          books.zipWithIndex.flatMap { case (bk, s) =>
+            bk.sortBy(_._1).zipWithIndex.map { case ((_, cv), pos) =>
+              ("book", s.toLong, pos.toLong, cv)
+            }
+          }).toDF("kind", "k1", "k2", "cv")
+      frame.coalesce(1)
+    }
+
+    /** rank the committed lists (`neighbor_id`, `__cq` array<int>,
+      * `cent_id` long, payload…) against a query batch: the integer-domain
+      * cosine of [[quantProbeRank]], or the ADC tail [[pqProbeSide]] +
+      * [[adcRanked]] that [[ivfPqTopK]] ranks with
+      */
+    def rank(
+        lists: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+        k: Int, nprobe: Int): DataFrame = codec match {
+      case IvfCodec.Int8 =>
+        quantProbeRank(lists, queries, idCol, vecCol, cents, k, nprobe)
+      case IvfCodec.Int16 =>
+        quantProbeRank(lists, queries, idCol, vecCol, cents, k, nprobe,
+          mkCodes = int16Codes)
+      case IvfCodec.Pq(m, _, dim) =>
+        val probes = pqProbeSide(queries, idCol, vecCol, cents, books, dim / m, nprobe)
+        adcRanked(
+          broadcast(probes).join(lists, Seq("cent_id"))
+            .filter(col("query_id") =!= col("neighbor_id")),
+          m, k, s => element_at(col("__cq"), s + 1),
+          Seq(col("query_id"), col("neighbor_id"), col("cent_id"),
+            col("adist"), col("rank")))
+    }
+  }
+
+  /** Build and PERSIST an inverted-file index — the storage form of
+    * [[ivfInt8TopK]] / [[ivfPqTopK]] and the layout a 100 TB deployment
+    * actually keeps on disk (the in-memory ops rebuild the index per query;
+    * a production index is built once, searched many times):
     *
-    *   `path/lists/`     (neighbor_id, q int8 codes) PARTITIONED BY cent_id —
-    *                     4× smaller than float32, and a probe touches only
-    *                     its nprobe directories (partition-level pruning, so
-    *                     search I/O is `nprobe/nCents` of the index, not a
-    *                     full scan)
-    *   `path/centroids/` (cent_id, cv) sidecar — nCents rows, the
-    *                     driver-side broadcast build for probe selection
+    *   `path/lists/`     (neighbor_id, q, payload…) PARTITIONED BY cent_id —
+    *                     `q` is the `codec`'s stored code, and a probe
+    *                     touches only its nprobe directories (partition-
+    *                     level pruning, so search I/O is `nprobe/nCents` of
+    *                     the index, not a full scan)
+    *   `path/centroids/` the codec's sidecar (`IvfGeometry.sidecar`) —
+    *                     nCents rows (+ PQ codebooks), the driver-side
+    *                     broadcast build for probe selection
     *   `path/_COMMIT`    [[IndexManifest]] pointer — the live file set,
     *                     flipped atomically by every append so readers never
     *                     see a half-updated index
     *
-    * Same deterministic construction as the in-memory ops (smallest-id init,
-    * optional Lloyd refinement + training sample, anchor-capped lists), so a
-    * search over the persisted index returns exactly what [[ivfInt8TopK]]
-    * returns for the same parameters.
+    * Same deterministic construction as the in-memory ops (smallest-id
+    * centroids, kernel assignment, anchor-capped lists; PQ codebooks get one
+    * Lloyd iteration), so a search over the persisted index returns exactly
+    * what [[ivfInt8TopK]] / [[ivfPqTopK]] return for the same parameters.
+    * `attrCols` ride the lists as plain payload columns: they cost their
+    * storage width per row and buy FILTERED search — a metadata predicate
+    * Catalyst pushes into the list parquet scan ([[openIvfSearcher]]'s
+    * `listFilter`), composing with partition pruning. Writing over a
+    * committed index is a crash-safe rebuild ([[publishIndexLists]]).
     */
-  def writeIvfInt8Index(
+  def writeIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nCents: Int, trainIters: Int = 0, trainSample: Double = 1.0,
-      maxBucket: Int = DEFAULT_MAX_BUCKET, assignKernel: Boolean = true,
-      attrCols: Seq[String] = Seq.empty): Unit = {
-    val spark = corpus.sparkSession
-    // attrCols ride the lists as plain payload columns: they cost their
-    // storage width per row and buy FILTERED search — a metadata predicate
-    // Catalyst pushes into the list parquet scan (searchIvfInt8Index's
-    // listFilter), composing with partition pruning
-    val base = corpus.select(Seq(col(idCol).as("id"), asDouble(col(vecCol)).as("__v"),
-      int8Codes(asDouble(col(vecCol))).as("__q")) ++ attrCols.map(col): _*)
-    val cents = lloydCentroids(
-      sampleForTraining(base, trainSample).select(col("id"), col("__v")), nCents, trainIters)
-    val assign = assignExpr(cents, assignKernel)
-    val lists = Dedup.capBuckets(
-      base.withColumn("cent_id", assign(col("__v"))), Seq("cent_id"), "id", maxBucket)
-      .select(Seq(col("id").as("neighbor_id"), col("__q").as("q"), col("cent_id"))
-        ++ attrCols.map(col): _*)
-    import spark.implicits._
-    publishIndexLists(spark, path, lists, cents.toDF("cent_id", "cv").coalesce(1))
+      nCents: Int, codec: IvfCodec, attrCols: Seq[String] = Seq.empty): Unit = {
+    val base = corpus.select(Seq(col(idCol).as("id"), asDouble(col(vecCol)).as("__v"))
+      ++ attrCols.map(col): _*)
+    val books = codec match {
+      case IvfCodec.Pq(m, nCodes, dim) => pqCodebooks(corpus, idCol, vecCol, m, nCodes, dim, 1)
+      case _ => Seq.empty
+    }
+    val cents = lloydCentroids(base.select(col("id"), col("__v")), nCents, 0)
+    val geo = IvfGeometry(codec, cents, books)
+    val lists = cappedLists(base, assignExpr(cents, assignKernel = true),
+      DEFAULT_MAX_BUCKET, geo.code, attrCols)
+    publishIndexLists(corpus.sparkSession, path, lists, geo.sidecar(corpus.sparkSession))
   }
 
-  /** The fresh-build / rebuild half of the commit protocol, shared by every
-    * persisted lists index (int8 and PQ): lists go under `lists/`
-    * partitioned by `cent_id`, the sidecar frame under the (versioned)
-    * `cdir`, and the `_COMMIT` flip publishes both atomically.
+  /** The fresh-build / rebuild half of the commit protocol: lists go under
+    * `lists/` partitioned by `cent_id`, the sidecar frame under the
+    * (versioned) `cdir`, and the `_COMMIT` flip publishes both atomically.
     */
   private def publishIndexLists(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -1052,9 +1139,9 @@ object Similarity {
     *    it staged and promoted under its own nonce ([[stageAndPromote]]) —
     *    never a listing diff, which under true concurrency would silently
     *    adopt another writer's uncommitted files into this writer's commit.
-    *  - vacuum AS a commit: [[vacuumIvfInt8Index]] re-publishes the manifest
-    *    at version + 1 after its sweep, so an append racing the sweep fails
-    *    its own fence instead of committing partitions whose files vacuum
+    *  - vacuum AS a commit: [[vacuumIvfIndex]] re-publishes the manifest at
+    *    version + 1 after its sweep, so an append racing the sweep fails its
+    *    own fence instead of committing partitions whose files vacuum
     *    deleted.
     */
   private case class IndexManifest(
@@ -1075,10 +1162,6 @@ object Similarity {
       lines.collectFirst { case l if l.startsWith("c ") => l.drop(2) }.getOrElse("centroids"),
       lines.collect { case l if l.startsWith("xd ") => l.drop(3) })
   }
-
-  private def readManifest(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[IndexManifest] =
-    readCommit(spark, path).map(parseManifest)
 
   private def commitManifest(
       spark: org.apache.spark.sql.SparkSession, path: String, m: IndexManifest,
@@ -1171,13 +1254,15 @@ object Similarity {
 
   /** The live inverted lists of a persisted index: exactly the manifest's
     * file set (explicit paths + `basePath`, so `cent_id` stays a partition
-    * column and partition/dynamic pruning still apply). Falls back to the
-    * raw directory for pre-manifest indexes.
+    * column and partition/dynamic pruning still apply), with the `cent_id`
+    * key restored to long (partition inference reads it as int) and any
+    * attribute payload columns kept. Falls back to the raw directory for
+    * pre-manifest indexes.
     */
   private def readIndexLists(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      emptyQType: org.apache.spark.sql.types.DataType): DataFrame =
-    readManifest(spark, path) match {
+      manifest: Option[IndexManifest]): DataFrame = {
+    val lists = manifest match {
       case Some(m) if m.files.nonEmpty =>
         spark.read.option("basePath", s"$path/lists")
           .parquet(m.files.map(f => s"$path/lists/$f"): _*)
@@ -1185,40 +1270,103 @@ object Similarity {
         // a committed manifest with an EMPTY file list (e.g. an empty-corpus
         // build) still defines the live set: it is empty. Falling back to the
         // raw directory here would surface grace-window files and uncommitted
-        // orphans — exactly what reader isolation forbids. The payload type
-        // is the caller's: array<byte> for int8 lists, array<int> for PQ.
+        // orphans — exactly what reader isolation forbids.
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("neighbor_id",
               org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("q", emptyQType),
+            org.apache.spark.sql.types.StructField("q",
+              org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.IntegerType)),
             org.apache.spark.sql.types.StructField("cent_id",
               org.apache.spark.sql.types.IntegerType))))
       case None => spark.read.parquet(s"$path/lists")
     }
+    lists.withColumn("cent_id", col("cent_id").cast("long"))
+  }
 
-  /** Search a persisted [[writeIvfInt8Index]] index: centroids come from the
-    * nCents-row sidecar (a driver-side broadcast build), probes meet ONLY
-    * their nprobe list partitions through the cent_id equi-join — at 100 TB
-    * the scan reads `nprobe/nCents` of the stored (already 4×-compressed)
-    * index. Ranking identical to [[ivfInt8TopK]].
+  /** A committed index as every verb but the build reads it, resolved from
+    * ONE `_COMMIT` read: the raw pointer (an appender's flip prior), the
+    * geometry with its codec, and the live lists ([[readIndexLists]]).
     */
-  /** List-balance statistics of a persisted int8 index — the operational
-    * "retrain or not" signal: IVF search cost is `nprobe/nCents` of the
-    * data ONLY while lists stay balanced, and drift (appends routed through
-    * stale centroids) shows up here first as a rising share on a few lists.
-    * One pass over the committed lists (reader-isolated via the manifest,
-    * same as search), one `cent_id` group: per-list count plus its share of
-    * the corpus. Counts are exact longs; the share is one division rounded
-    * to 6 (engine-exact — same integers, same op).
+  private final case class OpenIndex(
+      prior: Option[String], geometry: IvfGeometry, lists: DataFrame)
+
+  private def openIndex(spark: org.apache.spark.sql.SparkSession, path: String): OpenIndex = {
+    val prior = readCommit(spark, path)
+    val manifest = prior.map(parseManifest)
+    val lists = readIndexLists(spark, path, manifest)
+    val sidecar = spark.read.parquet(s"$path/${manifest.fold("centroids")(_.cdir)}")
+    val rows = sidecar.collect()
+    def keyed(rs: Seq[org.apache.spark.sql.Row], key: String) = rs.map(r =>
+      (r.getAs[Long](key), r.getAs[scala.collection.Seq[Double]]("cv").toSeq)).sortBy(_._1)
+    val geometry =
+      if (sidecar.columns.contains("kind")) {
+        val (coarse, book) = rows.toSeq.partition(_.getAs[String]("kind") == "coarse")
+        val books = book.groupBy(_.getAs[Long]("k1")).toSeq.sortBy(_._1)
+          .map { case (_, rs) => keyed(rs, "k2") }
+        val (m, nCodes) = (books.length, books.head.length)
+        IvfGeometry(IvfCodec.Pq(m, nCodes, m * books.head.head._2.length),
+          keyed(coarse, "k1"), books)
+      } else {
+        val codec = lists.schema("q").dataType match {
+          case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ShortType, _) =>
+            IvfCodec.Int16
+          case _ => IvfCodec.Int8
+        }
+        IvfGeometry(codec, keyed(rows.toSeq, "cent_id"))
+      }
+    OpenIndex(prior, geometry, lists)
+  }
+
+  /** Search a persisted [[writeIvfIndex]] index of any codec — the serving
+    * FIT/SERVE split: resolve the manifest, construct the list frame, and
+    * collect the sidecar ONCE, returning the per-query-batch search
+    * function. Probes meet ONLY their nprobe list partitions through the
+    * cent_id equi-join, so at 100 TB the scan reads `nprobe/nCents` of the
+    * stored (already compressed) index; ranking is identical to
+    * [[ivfInt8TopK]] (int8), its int16 twin, or [[ivfPqTopK]] (PQ) over the
+    * same corpus. A one-shot search is `openIvfSearcher(...)(queries)`.
+    *
+    * The streaming searches open once so a static index's sidecar is not
+    * re-collected (a driver job) and its manifest not re-read on EVERY
+    * micro-batch — the same static-side fit-once discipline the
+    * asof/bm25/scrub twins pin. The returned closure is only valid while
+    * the index version it resolved is live (a static index for the
+    * stream's lifetime, per the twins' contract).
+    *
+    * FILTERED ANN: `listFilter` lands before ranking, so top-k is taken
+    * among MATCHING rows (the vector-database `filter=` semantics). It sits
+    * directly over the parquet scan — Catalyst pushes it into the reader
+    * (PushedFilters), composing with cent_id partition pruning: search I/O
+    * is (nprobe/nCents) × selectivity of the index, and PQ rows that fail
+    * it never expand their codes into distance lookups.
     */
-  def ivfInt8IndexStats(
+  def openIvfSearcher(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      idCol: String, vecCol: String, k: Int, nprobe: Int,
+      listFilter: Option[Column] = None): DataFrame => DataFrame = {
+    val idx = openIndex(spark, path)
+    val raw = idx.lists
+      .withColumn("q", col("q").cast("array<int>"))
+      .withColumnRenamed("q", "__cq")
+    val lists = listFilter.map(raw.filter).getOrElse(raw)
+    queries => idx.geometry.rank(lists, queries, idCol, vecCol, k, nprobe)
+  }
+
+  /** List-balance statistics of a persisted index of any codec — the
+    * operational "retrain or not" signal: IVF search cost is `nprobe/nCents`
+    * of the data ONLY while lists stay balanced, and drift (appends routed
+    * through stale centroids) shows up here first as a rising share on a
+    * few lists. One pass over the committed lists (reader-isolated via the
+    * manifest, same as search), one `cent_id` group: per-list count plus its
+    * share of the corpus. Counts are exact longs; the share is one division
+    * rounded to 6 (engine-exact — same integers, same op).
+    */
+  def ivfIndexStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val lists = readIndexLists(spark, path,
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ByteType))
-      .withColumn("cent_id", col("cent_id").cast("long"))
-    val perCent = lists.groupBy(col("cent_id"))
+    val perCent = readIndexLists(spark, path, readCommit(spark, path).map(parseManifest))
+      .groupBy(col("cent_id"))
       .agg(count(lit(1)).as("n_vectors"))
     val tot = perCent.agg(sum(col("n_vectors")).as("__tot"))
     perCent.crossJoin(broadcast(tot)) // 1-row scalar attach
@@ -1226,146 +1374,18 @@ object Similarity {
         round(col("n_vectors").cast("double") / col("__tot"), 6).as("share"))
   }
 
-  def searchIvfInt8Index(
-      spark: org.apache.spark.sql.SparkSession, path: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      assignKernel: Boolean = true, listFilter: Option[Column] = None): DataFrame =
-    openIvfInt8Searcher(spark, path, idCol, vecCol, k, nprobe,
-      assignKernel, listFilter)(queries)
-
-  /** The serving FIT/SERVE split of [[searchIvfInt8Index]]: resolve the
-    * manifest, construct the list frame, and collect the centroid sidecar
-    * ONCE, returning the per-query-batch search function. The streaming
-    * twins use this so a static index's sidecar is not re-collected (a
-    * driver job) and its manifest not re-read on EVERY micro-batch — the
-    * same static-side fit-once discipline the asof/bm25/scrub twins pin.
-    * The returned closure is only valid while the index version it
-    * resolved is live (a static index for the stream's lifetime, per the
-    * twins' contract).
-    */
-  def openIvfInt8Searcher(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      assignKernel: Boolean = true,
-      listFilter: Option[Column] = None): DataFrame => DataFrame = {
-    val cents = loadCentroids(spark, path)
-    val raw = readIndexLists(spark, path,
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ByteType))
-      // partition-column inference reads cent_id as int; restore the long
-      // key. Attribute payload columns (attrCols at build time) pass through
-      // for listFilter to reference.
-      .withColumnRenamed("q", "__cq")
-      .withColumn("cent_id", col("cent_id").cast("long"))
-    // FILTERED ANN: the predicate lands before ranking, so top-k is taken
-    // among MATCHING rows (the vector-database `filter=` semantics). It
-    // sits directly over the parquet scan — Catalyst pushes it into the
-    // reader (PushedFilters), composing with cent_id partition pruning:
-    // search I/O is (nprobe/nCents) × selectivity of the index.
-    val inverted = listFilter.map(raw.filter).getOrElse(raw)
-    queries =>
-      quantProbeRank(inverted, queries, idCol, vecCol, cents, k, nprobe, assignKernel)
-  }
-
-  /** Persist an int16-quantized inverted-file index — the 2-byte/dim middle
-    * rung of the storage ladder ([[int16Codes]]: 256× finer than int8 at 2×
-    * the bytes, 4× smaller than float64). Identical layout and crash-safe
-    * commit protocol to [[writeIvfInt8Index]] (lists partitioned by
-    * cent_id, nCents-row sidecar, manifest flip); lists store
-    * `array<smallint>` codes.
-    */
-  def writeIvfF16Index(
-      corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nCents: Int, trainIters: Int = 0, trainSample: Double = 1.0,
-      maxBucket: Int = DEFAULT_MAX_BUCKET, assignKernel: Boolean = true,
-      attrCols: Seq[String] = Seq.empty): Unit = {
-    val spark = corpus.sparkSession
-    val base = corpus.select(Seq(col(idCol).as("id"), asDouble(col(vecCol)).as("__v"),
-      int16Codes(asDouble(col(vecCol))).cast("array<smallint>").as("__q"))
-      ++ attrCols.map(col): _*)
-    val cents = lloydCentroids(
-      sampleForTraining(base, trainSample).select(col("id"), col("__v")), nCents, trainIters)
-    val assign = assignExpr(cents, assignKernel)
-    val lists = Dedup.capBuckets(
-      base.withColumn("cent_id", assign(col("__v"))), Seq("cent_id"), "id", maxBucket)
-      .select(Seq(col("id").as("neighbor_id"), col("__q").as("q"), col("cent_id"))
-        ++ attrCols.map(col): _*)
-    import spark.implicits._
-    publishIndexLists(spark, path, lists, cents.toDF("cent_id", "cv").coalesce(1))
-  }
-
-  /** Search a persisted [[writeIvfF16Index]] index — the int8 search with
-    * 16-bit codes: float coarse stage from the sidecar, partition-pruned
-    * list scan, ranking entirely in the integer domain (dot terms bounded
-    * by 32767²·dim, exact in the long accumulator).
-    */
-  def searchIvfF16Index(
-      spark: org.apache.spark.sql.SparkSession, path: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      assignKernel: Boolean = true, listFilter: Option[Column] = None): DataFrame =
-    openIvfF16Searcher(spark, path, idCol, vecCol, k, nprobe,
-      assignKernel, listFilter)(queries)
-
-  /** [[openIvfInt8Searcher]]'s int16 twin — the fit/serve split of
-    * [[searchIvfF16Index]] (sidecar collected and manifest resolved once,
-    * per-batch serve closure returned).
-    */
-  def openIvfF16Searcher(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      assignKernel: Boolean = true,
-      listFilter: Option[Column] = None): DataFrame => DataFrame = {
-    val cents = loadCentroids(spark, path)
-    // same filtered-search semantics as the int8/PQ twins: payload columns
-    // pass through, the predicate lands before ranking and pushes into the
-    // list parquet scan
-    val raw = readIndexLists(spark, path,
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ShortType))
-      .withColumn("q", col("q").cast("array<int>"))
-      .withColumnRenamed("q", "__cq")
-      .withColumn("cent_id", col("cent_id").cast("long"))
-    val inverted = listFilter.map(raw.filter).getOrElse(raw)
-    queries =>
-      quantProbeRank(inverted, queries, idCol, vecCol, cents, k, nprobe,
-        assignKernel, int16Codes)
-  }
-
-  /** Append a batch to a persisted [[writeIvfF16Index]] index — the shared
-    * crash-safe append protocol with int16 encoding of the batch.
-    */
-  def appendIvfF16Index(
-      spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-      idCol: String, vecCol: String, path: String,
-      maxBucket: Int = DEFAULT_MAX_BUCKET, assignKernel: Boolean = true,
-      attrCols: Seq[String] = Seq.empty): Unit = {
-    val cents = loadCentroids(spark, path)
-    val assign = assignExpr(cents, assignKernel)
-    val newRows = batch.select(Seq(
-      col(idCol).as("neighbor_id"),
-      int16Codes(asDouble(col(vecCol))).cast("array<smallint>").as("q"),
-      assign(asDouble(col(vecCol))).as("cent_id")) ++ attrCols.map(col): _*)
-    appendListsIndexImpl(spark, path, newRows, maxBucket)
-  }
-
-  /** the nCents-row centroid sidecar of a persisted index, driver-side (the
-    * broadcast build every search and append starts from)
-    */
-  private def loadCentroids(
-      spark: org.apache.spark.sql.SparkSession, path: String): Seq[(Long, Seq[Double])] = {
-    val cdir = readManifest(spark, path).map(_.cdir).getOrElse("centroids")
-    spark.read.parquet(s"$path/$cdir")
-      .collect()
-      .map(r => (r.getAs[Long]("cent_id"), r.getAs[scala.collection.Seq[Double]]("cv").toSeq))
-      .toSeq.sortBy(_._1)
-  }
-
-  /** Append a batch of new vectors to a persisted [[writeIvfInt8Index]]
-    * index — the maintenance op of the nightly-crawl pattern (the ANN twin
-    * of [[Dedup.incrementalExact]]): a 100 TB index is never rebuilt from
-    * scratch. Three steps, I/O proportional to the BATCH, not the index:
+  /** Append a batch of new vectors to a persisted [[writeIvfIndex]] index
+    * of any codec — the maintenance op of the nightly-crawl pattern (the ANN
+    * twin of [[Dedup.incrementalExact]]): a 100 TB index is never rebuilt
+    * from scratch. Three steps, I/O proportional to the BATCH, not the
+    * index:
     *
-    *  1. assign: new vectors are quantized and assigned with the STORED
-    *     centroid sidecar — the index's coarse geometry is immutable across
-    *     appends, so probe routing agrees before and after;
+    *  1. encode: new vectors are coded and assigned with the STORED
+    *     geometry (coarse centroids, and PQ codebooks) — immutable across
+    *     appends, so probe routing and codes agree before and after. The
+    *     batch carries the payload columns the build wrote, read from the
+    *     committed lists' schema: a batch without them would merge as nulls
+    *     that a `listFilter` silently stops matching;
     *  2. merge: only the TOUCHED `cent_id` lists are read back (exactly the
     *     manifest's files for those partitions, ≤ nCents of them), unioned
     *     with the new rows, and re-capped — capping the union of an
@@ -1373,60 +1393,41 @@ object Similarity {
     *     union, because the anchor cap keeps smallest ids: any id surviving
     *     the union cap survived the base cap too;
     *  3. publish: the merged lists are written as NEW uniquely-named part
-    *     files (append-mode parquet — no live file is ever mutated), then
-    *     the [[IndexManifest]] `_COMMIT` pointer flips atomically to the
-    *     new file set. A crash before the flip leaves only uncommitted
-    *     orphan files that readers (manifest-driven) never see and the next
-    *     append sweeps; a crash after the flip is a completed append. The
-    *     files the flip replaced stay on disk for one commit as the reader
-    *     grace window. Untouched partitions are never read or written.
+    *     files (no live file is ever mutated), then the [[IndexManifest]]
+    *     `_COMMIT` pointer flips atomically to the new file set. A crash
+    *     before the flip leaves only uncommitted orphan files that readers
+    *     (manifest-driven) never see and the next append sweeps; a crash
+    *     after the flip is a completed append. The files the flip replaced
+    *     stay on disk for one commit as the reader grace window. Untouched
+    *     partitions are never read or written.
     *
-    * Result is bit-identical to [[writeIvfInt8Index]] over base ∪ batch
-    * with the same centroids (OpsSpec pins it; the gate's oracle is the
+    * Result is bit-identical to [[writeIvfIndex]] over base ∪ batch with
+    * the same centroids (OpsSpec pins it; the gate's oracle is the
     * full-corpus index search).
     */
-  def appendIvfInt8Index(
+  def appendIvfIndex(
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-      idCol: String, vecCol: String, path: String,
-      maxBucket: Int = DEFAULT_MAX_BUCKET, assignKernel: Boolean = true,
-      attrCols: Seq[String] = Seq.empty): Unit =
-    appendIvfInt8IndexImpl(spark, batch, idCol, vecCol, path, maxBucket,
-      assignKernel, afterStage = () => (), attrCols = attrCols)
+      idCol: String, vecCol: String, path: String): Unit =
+    appendIvfIndexImpl(spark, batch, idCol, vecCol, path, afterStage = () => ())
 
-  /** [[appendIvfInt8Index]] with a test seam: `afterStage` runs between the
+  /** [[appendIvfIndex]] with a test seam: `afterStage` runs between the
     * staged write and the promote listing — the window a stage sweep hits.
     */
-  private[graft] def appendIvfInt8IndexImpl(
+  private[graft] def appendIvfIndexImpl(
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-      idCol: String, vecCol: String, path: String,
-      maxBucket: Int, assignKernel: Boolean, afterStage: () => Unit,
-      attrCols: Seq[String] = Seq.empty): Unit = {
-    val cents = loadCentroids(spark, path)
-    val assign = assignExpr(cents, assignKernel)
-    // a batch appended to an attr-carrying index must carry the SAME
-    // attrCols the build wrote — otherwise the merged parquet schema gains
-    // nulls and a listFilter silently stops matching the new rows
-    val newRows = batch.select(Seq(
-      col(idCol).as("neighbor_id"),
-      int8Codes(asDouble(col(vecCol))).as("q"),
-      assign(asDouble(col(vecCol))).as("cent_id")) ++ attrCols.map(col): _*)
-    appendListsIndexImpl(spark, path, newRows, maxBucket, afterStage)
-  }
-
-  /** The append half of the commit protocol, shared by every persisted lists
-    * index: merge `newRows` (`neighbor_id`, `q`, `cent_id` — `q` is whatever
-    * the index stores per row, int8 codes or PQ codes) into the touched
-    * `cent_id` partitions, publish as new files, flip the manifest.
-    */
-  private def appendListsIndexImpl(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newRows: DataFrame, maxBucket: Int,
-      afterStage: () => Unit = () => ()): Unit = {
+      idCol: String, vecCol: String, path: String, afterStage: () => Unit): Unit = {
+    val idx = openIndex(spark, path)
+    val v = asDouble(col(vecCol))
+    // the build's attrCols, from the committed lists: the batch must carry
+    // each one (a missing column fails here, before anything is written)
+    val payload = idx.lists.columns.filterNot(Set("neighbor_id", "q", "cent_id"))
+    val newRows = batch.select(Seq(col(idCol).as("neighbor_id"), idx.geometry.code(v).as("q"),
+      assignExpr(idx.geometry.cents, assignKernel = true)(v).as("cent_id"))
+      ++ payload.map(col): _*)
     val touched = newRows.select(col("cent_id")).distinct()
       .collect().map(_.getLong(0)) // <= nCents values, a driver-side build
     if (touched.isEmpty) return
-    val prior = readCommit(spark, path)
-    val manifest = prior.map(parseManifest).getOrElse(
+    val manifest = idx.prior.map(parseManifest).getOrElse(
       // pre-manifest index: adopt what is on disk as version -1
       IndexManifest(-1L, listDataFiles(spark, path), Seq.empty))
     val listsRoot = new org.apache.hadoop.fs.Path(s"$path/lists")
@@ -1445,158 +1446,26 @@ object Similarity {
     listDataFiles(spark, path)
       .filter(f => inTouched(f) && !live.contains(f))
       .foreach(f => fs.delete(new org.apache.hadoop.fs.Path(listsRoot, f), false))
-    val touchedFiles = manifest.files.filter(inTouched)
-    val existing =
-      if (touchedFiles.isEmpty) newRows.limit(0) // all-new partitions
-      else spark.read.option("basePath", listsRoot.toString)
-        .parquet(touchedFiles.map(f => s"$path/lists/$f"): _*)
-        // restore the long key but KEEP attribute payload columns — a
-        // narrowing select here would break unionByName for attr-carrying
-        // indexes (the batch must carry the same attrCols; name alignment
-        // then makes the merge column-order-proof)
-        .withColumn("cent_id", col("cent_id").cast("long"))
+    // the touched partitions of the live lists (partition-pruned to exactly
+    // the manifest's files there), merged by NAME with the new rows
+    val existing = idx.lists.filter(col("cent_id").isin(touched: _*))
     val merged = Dedup.capBuckets(
-      existing.unionByName(newRows), Seq("cent_id"), "neighbor_id", maxBucket)
+      existing.unionByName(newRows), Seq("cent_id"), "neighbor_id", DEFAULT_MAX_BUCKET)
       .localCheckpoint(true)
     val newFiles = stageAndPromote(spark, path, merged, afterStage)
     commitManifest(spark, path, IndexManifest(
       manifest.version + 1,
       manifest.files.filterNot(inTouched) ++ newFiles,
-      touchedFiles, cdir = manifest.cdir), prior, "append")
+      manifest.files.filter(inTouched), cdir = manifest.cdir), idx.prior, "append")
   }
 
-  /** Persist an IVF+PQ index — the [[ivfPqTopK]] composition in its stored
-    * form, riding the SAME crash-safe commit protocol as the int8 index
-    * (manifest flip, grace window, writer fence, vacuum): `lists/` holds
-    * `(neighbor_id, q = array<int> of m PQ codes, cent_id)` partitioned by
-    * `cent_id` (~a dozen bytes/vector — the 100 TB storage form), and the
-    * versioned sidecar holds BOTH geometries in one frame (`kind` = coarse
-    * centroid rows and per-subspace codebook rows), so a reader always
-    * resolves lists, coarse centroids and codebooks from the same committed
-    * version.
-    */
-  def writeIvfPqIndex(
-      corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nCents: Int, m: Int, nCodes: Int, dim: Int, trainIters: Int = 1,
-      maxBucket: Int = DEFAULT_MAX_BUCKET, attrCols: Seq[String] = Seq.empty): Unit = {
-    val spark = corpus.sparkSession
-    val books = pqCodebooks(corpus, idCol, vecCol, m, nCodes, dim, trainIters)
-    val base = corpus.select(Seq(col(idCol).as("id"), asDouble(col(vecCol)).as("__v"))
-      ++ attrCols.map(col): _*)
-    val cents = lloydCentroids(base.select(col("id"), col("__v")), nCents, 0)
-    val assign = assignExpr(cents, assignKernel = true)
-    val sub = dim / m
-    // same stored array<int> code values, one kernel call per row (PqCodes)
-    val codes = graft.functions.PqExprs.pqCodePositions(col("__v"), books, sub)
-    val lists = Dedup.capBuckets(
-      base.withColumn("cent_id", assign(col("__v"))), Seq("cent_id"), "id", maxBucket)
-      .select(Seq(col("id").as("neighbor_id"), codes.as("q"), col("cent_id"))
-        ++ attrCols.map(col): _*)
-    import spark.implicits._
-    val sidecar = (
-      cents.map { case (cid, cv) => ("coarse", cid, -1L, cv) } ++
-        books.zipWithIndex.flatMap { case (bk, s) =>
-          bk.sortBy(_._1).zipWithIndex.map { case ((_, cv), pos) =>
-            ("book", s.toLong, pos.toLong, cv)
-          }
-        }
-      ).toDF("kind", "k1", "k2", "cv").coalesce(1)
-    publishIndexLists(spark, path, lists, sidecar)
-  }
-
-  /** the committed (coarse centroids, per-subspace codebooks) of a persisted
-    * PQ index, driver-side — the broadcast build every search/append starts
-    * from; books come back in dense position order (the code values)
-    */
-  private def loadPqSidecar(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Seq[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]]) = {
-    val cdir = readManifest(spark, path).map(_.cdir).getOrElse("centroids")
-    val rows = spark.read.parquet(s"$path/$cdir").collect()
-    val cents = rows.filter(_.getAs[String]("kind") == "coarse")
-      .map(r => (r.getAs[Long]("k1"), r.getAs[scala.collection.Seq[Double]]("cv").toSeq))
-      .sortBy(_._1).toSeq
-    val m = rows.filter(_.getAs[String]("kind") == "book")
-      .map(_.getAs[Long]("k1")).max.toInt + 1
-    val books = (0 until m).map { s =>
-      rows.filter(r => r.getAs[String]("kind") == "book" && r.getAs[Long]("k1") == s)
-        .map(r => (r.getAs[Long]("k2"), r.getAs[scala.collection.Seq[Double]]("cv").toSeq))
-        .sortBy(_._1).toSeq
-    }
-    (cents, books)
-  }
-
-  /** Search a persisted [[writeIvfPqIndex]] index: probes meet only their
-    * `nprobe` list partitions (same DPP-preserving manifest-driven read as
-    * [[searchIvfInt8Index]]), candidates ranked by PQ asymmetric distance —
-    * per query, `nprobe/nCents` of the 32×-compressed index is scanned.
-    * Ranking identical to [[ivfPqTopK]] over the same corpus.
-    */
-  def searchIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      listFilter: Option[Column] = None): DataFrame =
-    openIvfPqSearcher(spark, path, idCol, vecCol, k, nprobe, listFilter)(queries)
-
-  /** [[openIvfInt8Searcher]]'s PQ twin — the fit/serve split of
-    * [[searchIvfPqIndex]]: the coarse+codebook sidecar (a collect) and the
-    * manifest are resolved once; each serve call only builds the
-    * query-batch probe side and the ADC ranking.
-    */
-  def openIvfPqSearcher(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      listFilter: Option[Column] = None): DataFrame => DataFrame = {
-    val (cents, books) = loadPqSidecar(spark, path)
-    val sub = books.head.head._2.length
-    // keep attribute payload columns for listFilter (the int8 twin's
-    // filtered-search semantics: predicate lands before ranking, pushed
-    // into the list parquet scan)
-    val raw = readIndexLists(spark, path,
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.IntegerType))
-      .withColumn("q", col("q").cast("array<int>"))
-      .withColumnRenamed("q", "__cq")
-      .withColumn("cent_id", col("cent_id").cast("long"))
-    val inverted = listFilter.map(raw.filter).getOrElse(raw)
-    queries => {
-      val probes = pqProbeSide(queries, idCol, vecCol, cents, books, sub, nprobe)
-      adcRanked(
-        broadcast(probes).join(inverted, Seq("cent_id"))
-          .filter(col("query_id") =!= col("neighbor_id")),
-        books.length, k, s => element_at(col("__cq"), s + 1),
-        Seq(col("query_id"), col("neighbor_id"), col("cent_id"),
-          col("adist"), col("rank")))
-    }
-  }
-
-  /** Append a batch to a persisted [[writeIvfPqIndex]] index: new vectors
-    * are encoded with the STORED coarse centroids and codebooks (both
-    * geometries immutable across appends, so routing and codes agree before
-    * and after), then merged through the shared crash-safe append protocol —
-    * I/O ∝ batch, atomic flip, fence, grace window, all inherited.
-    */
-  def appendIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-      idCol: String, vecCol: String, path: String,
-      maxBucket: Int = DEFAULT_MAX_BUCKET, attrCols: Seq[String] = Seq.empty): Unit = {
-    val (cents, books) = loadPqSidecar(spark, path)
-    val sub = books.head.head._2.length
-    val assign = assignExpr(cents, assignKernel = true)
-    val codes = graft.functions.PqExprs.pqCodePositions(asDouble(col(vecCol)), books, sub)
-    // same attrCols contract as the int8 append: a batch into an
-    // attr-carrying index must carry the columns the build wrote
-    val newRows = batch.select(Seq(
-      col(idCol).as("neighbor_id"), codes.as("q"),
-      assign(asDouble(col(vecCol))).as("cent_id")) ++ attrCols.map(col): _*)
-    appendListsIndexImpl(spark, path, newRows, maxBucket)
-  }
-
-  /** Sweep unreferenced files from a persisted index — the admin op that
-    * reclaims space after crashed writers. Deletes list files neither live
-    * nor inside the current grace window, and stale `centroids_v*` sidecars
-    * that no manifest entry references. Never touches the grace window
-    * itself, so in-flight readers of the previous commit stay safe; readers
-    * of the CURRENT commit are untouched by construction.
+  /** Sweep unreferenced files from a persisted index of any codec — the
+    * admin op that reclaims space after crashed writers. Deletes list files
+    * neither live nor inside the current grace window, and stale
+    * `centroids_v*` sidecars that no manifest entry references. Never
+    * touches the grace window itself, so in-flight readers of the previous
+    * commit stay safe; readers of the CURRENT commit are untouched by
+    * construction.
     *
     * Vacuum is a WRITER under the single-writer contract: a promoted but
     * not-yet-committed part file is indistinguishable from a crash orphan,
@@ -1611,14 +1480,12 @@ object Similarity {
     * cannot see, because vacuum commits its version bump only afterwards)
     * aborts the append inside [[stageAndPromote]], which refuses to promote
     * zero data files for a non-empty input. Defense in depth on top of
-    * that: vacuum only sweeps `stage_*` dirs older than `stageGraceMs`
-    * (default 1 h), so a LIVE writer's in-flight staging is never deleted
-    * in the first place — only genuine crash leftovers are.
+    * that: vacuum only sweeps `stage_*` dirs older than `STAGE_GRACE_MS`,
+    * so a LIVE writer's in-flight staging is never deleted in the first
+    * place — only genuine crash leftovers are.
     * Run vacuum only when no append/rebuild is in flight.
     */
-  def vacuumIvfInt8Index(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      stageGraceMs: Long = DEFAULT_STAGE_GRACE_MS): Unit =
+  def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
     readCommit(spark, path).foreach { prior =>
       val m = parseManifest(prior)
       val listsRoot = new org.apache.hadoop.fs.Path(s"$path/lists")
@@ -1637,7 +1504,7 @@ object Similarity {
       // LIVE writer mid-write — sweeping it would turn its append into a
       // loud failure (stageAndPromote aborts on an empty promote) where
       // leaving it costs only disk until the next vacuum.
-      val cutoff = System.currentTimeMillis() - stageGraceMs
+      val cutoff = System.currentTimeMillis() - STAGE_GRACE_MS
       fs.listStatus(new org.apache.hadoop.fs.Path(path))
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("stage_")
           && s.getModificationTime < cutoff)
@@ -1650,28 +1517,11 @@ object Similarity {
       commitManifest(spark, path, m.copy(version = m.version + 1), Some(prior), "vacuum")
     }
 
-  /** how old a `stage_*` dir must be before vacuum treats it as a crash
-    * leftover rather than a possibly-live writer's in-flight staging
+  /** how old a `stage_*` dir must be (1 h) before vacuum treats it as a
+    * crash leftover rather than a possibly-live writer's in-flight staging
     */
-  val DEFAULT_STAGE_GRACE_MS: Long = 60L * 60 * 1000
+  private val STAGE_GRACE_MS: Long = 60L * 60 * 1000
 
-  /** index-type-agnostic alias: the sweep only reads the manifest and the
-    * `lists/` + `centroids*` layout, which int8 and PQ indexes share — one
-    * vacuum serves both
-    */
-  def vacuumIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    vacuumIvfInt8Index(spark, path)
-
-  /** Symmetric int8 quantization of an embedding column — the vector-
-    * compression step a 100 TB ANN index runs before storage (4× smaller than
-    * float32). Per-vector scale = max|x|/127, stored q_i = round(x_i·127/max)
-    * ∈ [-127, 127]; a zero vector quantizes to zeros. Pure scan-level
-    * expressions (zero shuffle), exact-integer codes → SQL-reproducible.
-    * Emits scalar diagnostics (dims, scale, code sum, md5 digest of the code
-    * array, max dequantization error) — the quality-monitoring columns a
-    * pipeline tracks, and a full bit-level pin of the codes via the digest.
-    */
   /** int8 quantization codes of an `array<double>` view: per-vector scale
     * max|x|/127, q_i = round(x_i·127/max) ∈ [-127, 127]; zero vector → zeros.
     * The ONE definition of the code construction — [[quantizeInt8]]
@@ -1735,6 +1585,15 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cos_q"), col("rank"))
   }
 
+  /** Symmetric int8 quantization of an embedding column — the vector-
+    * compression step a 100 TB ANN index runs before storage (4× smaller than
+    * float32). Per-vector scale = max|x|/127, stored q_i = round(x_i·127/max)
+    * ∈ [-127, 127]; a zero vector quantizes to zeros. Pure scan-level
+    * expressions (zero shuffle), exact-integer codes → SQL-reproducible.
+    * Emits scalar diagnostics (dims, scale, code sum, md5 digest of the code
+    * array, max dequantization error) — the quality-monitoring columns a
+    * pipeline tracks, and a full bit-level pin of the codes via the digest.
+    */
   def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     quantizeScalar(df, idCol, vecCol, 127)
 

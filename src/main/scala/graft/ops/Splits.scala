@@ -127,16 +127,6 @@ object Splits {
         min(col("ts")).as("seq_start"), max(col("ts")).as("seq_end"))
   }
 
-  /** Deterministic fixed-size per-group sample — the balanced training-mix
-    * op (k documents per source/language/domain regardless of group skew):
-    * rows rank within their group by the md5 hash of their key (a
-    * reproducible shuffle — no RNG, no partition sensitivity, the
-    * [[bucket100]] convention) and the first `k` survive. One shuffle on
-    * the group column at any scale; groups larger than memory stream
-    * through Spark's sort-based window (`WindowGroupLimit` prunes to k per
-    * group map-side before the exchange). Emits the input columns plus
-    * `sample_rank` (1-based position in the group's hash order).
-    */
   /** Deterministic training-order shuffle — the LAST prep step: a training
     * run wants the corpus in pseudo-random order (no source/time runs), in
     * `nShards` shards a data loader can consume independently, and
@@ -209,6 +199,16 @@ object Splits {
       .drop("__thr")
   }
 
+  /** Deterministic fixed-size per-group sample — the balanced training-mix
+    * op (k documents per source/language/domain regardless of group skew):
+    * rows rank within their group by the md5 hash of their key (a
+    * reproducible shuffle — no RNG, no partition sensitivity, the
+    * [[bucket100]] convention) and the first `k` survive. One shuffle on
+    * the group column at any scale; groups larger than memory stream
+    * through Spark's sort-based window (`WindowGroupLimit` prunes to k per
+    * group map-side before the exchange). Emits the input columns plus
+    * `sample_rank` (1-based position in the group's hash order).
+    */
   def sampleGroupK(
       df: DataFrame, groupCol: String, keyCol: String, k: Int): DataFrame = {
     require(k > 0, s"sample size must be positive, got $k")

@@ -27,9 +27,6 @@ object TextOps {
   /** whitespace tokens of trimmed text */
   def tokens(c: Column): Column = split(trim(c), "\\s+")
 
-  /** BPE-ish subword segmentation: letter runs, digit runs, single symbols.
-    * Column-native (no SQL-string splicing), so any composed expression works.
-    */
   /** BPE tokenizer TRAINING — the first `nMerges` byte-pair-encoding merge
     * rounds as DataFrame ops: count adjacent in-token character pairs,
     * merge the most frequent pair corpus-wide into a fresh unit symbol
@@ -91,6 +88,9 @@ object TextOps {
     t
   }
 
+  /** BPE-ish subword segmentation: letter runs, digit runs, single symbols.
+    * Column-native (no SQL-string splicing), so any composed expression works.
+    */
   def bpeishTokens(c: Column): Column =
     regexp_extract_all(c, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"), lit(0))
 

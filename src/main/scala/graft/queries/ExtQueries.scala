@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Dedup, Joins, Multimodal, Similarity, TextOps}
+import graft.ops.{Dedup, IvfCodec, Joins, Multimodal, Similarity, TextOps}
 import graft.streaming.Streams
 
 /** Similarity search, streaming, sessionization, multimodal plumbing —
@@ -74,32 +74,30 @@ object ExtQueries {
   private[graft] def annFilteredBuild(s: SparkSession, dir: String): Unit = {
     val emb = Tables.embeddings(s, dir)
     val path = s"${Tables.scratchRoot}/graft_filtered_idx_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-    Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", path, IVF_CENTS,
-      attrCols = Seq("label"))
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, IVF_CENTS,
+      IvfCodec.Int8, attrCols = Seq("label"))
   }
 
   private[graft] def annFilteredSearch(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val path = s"${Tables.scratchRoot}/graft_filtered_idx_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-    Similarity.searchIvfInt8Index(s, path, emb.filter(col("vec_id") < 10),
-      "vec_id", "embedding", IVF_TOPK, IVF_NPROBE,
-      listFilter = Some(col("label") === FILTER_LABEL))
+    Similarity.openIvfSearcher(s, path, "vec_id", "embedding", IVF_TOPK, IVF_NPROBE,
+      listFilter = Some(col("label") === FILTER_LABEL))(emb.filter(col("vec_id") < 10))
       .orderBy(col("query_id"), col("rank"))
   }
 
   private[graft] def annPqFilteredBuild(s: SparkSession, dir: String): Unit = {
     val emb = Tables.embeddings(s, dir)
     val path = s"${Tables.scratchRoot}/graft_pq_filtered_idx_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-    Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", path,
-      IVF_CENTS, PQ_M, PQ_CODES, DIM, trainIters = 1, attrCols = Seq("label"))
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path,
+      IVF_CENTS, IvfCodec.Pq(PQ_M, PQ_CODES, DIM), attrCols = Seq("label"))
   }
 
   private[graft] def annPqFilteredSearch(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val path = s"${Tables.scratchRoot}/graft_pq_filtered_idx_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-    Similarity.searchIvfPqIndex(s, path, emb.filter(col("vec_id") < 10),
-      "vec_id", "embedding", PQ_TOPK, IVF_NPROBE,
-      listFilter = Some(col("label") === FILTER_LABEL))
+    Similarity.openIvfSearcher(s, path, "vec_id", "embedding", PQ_TOPK, IVF_NPROBE,
+      listFilter = Some(col("label") === FILTER_LABEL))(emb.filter(col("vec_id") < 10))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -514,10 +512,10 @@ object ExtQueries {
     "q_ann_pq_index" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val path = s"${Tables.scratchRoot}/graft_pq_index_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", path,
-        IVF_CENTS, PQ_M, PQ_CODES, DIM, trainIters = 1)
-      Similarity.searchIvfPqIndex(s, path, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", PQ_TOPK, IVF_NPROBE)
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", path,
+        IVF_CENTS, IvfCodec.Pq(PQ_M, PQ_CODES, DIM))
+      Similarity.openIvfSearcher(s, path, "vec_id", "embedding", PQ_TOPK, IVF_NPROBE)(
+        emb.filter(col("vec_id") < 10))
         .orderBy(col("query_id"), col("rank"))
     },
 
@@ -634,9 +632,9 @@ object ExtQueries {
     "q_ann_ivf_index" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val path = s"${Tables.scratchRoot}/graft_ivf_index_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", path, IVF_CENTS)
-      Similarity.searchIvfInt8Index(s, path, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", IVF_TOPK, IVF_NPROBE)
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, IVF_CENTS, IvfCodec.Int8)
+      Similarity.openIvfSearcher(s, path, "vec_id", "embedding", IVF_TOPK, IVF_NPROBE)(
+        emb.filter(col("vec_id") < 10))
         .orderBy(col("query_id"), col("rank"))
     },
 
@@ -648,7 +646,7 @@ object ExtQueries {
       val emb = Tables.embeddings(s, dir)
       val docs = Tables.documents(s, dir)
       val ipath = Tables.scratch("hyb_idx", dir)
-      Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", ipath, IVF_CENTS)
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", ipath, IVF_CENTS, IvfCodec.Int8)
       val statsDir = Tables.scratch("hyb_stats", dir)
       Streams.commitSnapshot(
         graft.ops.Retrieval.bm25StatsTable(docs, "doc_id", "text"), statsDir, 1L)
@@ -666,8 +664,8 @@ object ExtQueries {
     "q_ann_index_stats" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val path = s"${Tables.scratchRoot}/graft_ivf_index_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", path, IVF_CENTS)
-      Similarity.ivfInt8IndexStats(s, path)
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, IVF_CENTS, IvfCodec.Int8)
+      Similarity.ivfIndexStats(s, path)
         .orderBy(col("cent_id"))
     },
 
@@ -698,9 +696,9 @@ object ExtQueries {
     "q_ann_f16_index" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val path = s"${Tables.scratchRoot}/graft_f16_index_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      Similarity.writeIvfF16Index(emb, "vec_id", "embedding", path, IVF_CENTS)
-      Similarity.searchIvfF16Index(s, path, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", IVF_TOPK, IVF_NPROBE)
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, IVF_CENTS, IvfCodec.Int16)
+      Similarity.openIvfSearcher(s, path, "vec_id", "embedding", IVF_TOPK, IVF_NPROBE)(
+        emb.filter(col("vec_id") < 10))
         .orderBy(col("query_id"), col("rank"))
     },
 
@@ -721,7 +719,7 @@ object ExtQueries {
       val emb = Tables.embeddings(s, dir)
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"${Tables.scratchRoot}/graft_stream_ann_idx_$tag"
-      Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", path, IVF_CENTS)
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, IVF_CENTS, IvfCodec.Int8)
       graft.streaming.Streams.streamingAnnSearch(
         emb.filter(col("vec_id") < 10), path, s"${Tables.scratchRoot}/graft_stream_ann_out_$tag",
         "vec_id", "embedding", IVF_TOPK, IVF_NPROBE)
@@ -747,8 +745,8 @@ object ExtQueries {
       val emb = Tables.embeddings(s, dir)
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"${Tables.scratchRoot}/graft_stream_f16_idx_$tag"
-      Similarity.writeIvfF16Index(emb, "vec_id", "embedding", path, IVF_CENTS)
-      graft.streaming.Streams.streamingF16Search(
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, IVF_CENTS, IvfCodec.Int16)
+      graft.streaming.Streams.streamingAnnSearch(
         emb.filter(col("vec_id") < 10), path, s"${Tables.scratchRoot}/graft_stream_f16_out_$tag",
         "vec_id", "embedding", IVF_TOPK, IVF_NPROBE)
         .orderBy(col("query_id"), col("rank"))
@@ -761,9 +759,9 @@ object ExtQueries {
       val emb = Tables.embeddings(s, dir)
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"${Tables.scratchRoot}/graft_stream_pq_idx_$tag"
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", path,
-        IVF_CENTS, PQ_M, PQ_CODES, DIM, trainIters = 1)
-      graft.streaming.Streams.streamingPqSearch(
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", path,
+        IVF_CENTS, IvfCodec.Pq(PQ_M, PQ_CODES, DIM))
+      graft.streaming.Streams.streamingAnnSearch(
         emb.filter(col("vec_id") < 10), path, s"${Tables.scratchRoot}/graft_stream_pq_out_$tag",
         "vec_id", "embedding", PQ_TOPK, IVF_NPROBE)
         .orderBy(col("query_id"), col("rank"))
@@ -778,12 +776,12 @@ object ExtQueries {
     "q_ann_ivf_append" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val path = s"${Tables.scratchRoot}/graft_ivf_append_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      Similarity.writeIvfInt8Index(
-        emb.filter(col("vec_id") < 300), "vec_id", "embedding", path, IVF_CENTS)
-      Similarity.appendIvfInt8Index(
+      Similarity.writeIvfIndex(
+        emb.filter(col("vec_id") < 300), "vec_id", "embedding", path, IVF_CENTS, IvfCodec.Int8)
+      Similarity.appendIvfIndex(
         s, emb.filter(col("vec_id") >= 300), "vec_id", "embedding", path)
-      Similarity.searchIvfInt8Index(s, path, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", IVF_TOPK, IVF_NPROBE)
+      Similarity.openIvfSearcher(s, path, "vec_id", "embedding", IVF_TOPK, IVF_NPROBE)(
+        emb.filter(col("vec_id") < 10))
         .orderBy(col("query_id"), col("rank"))
     },
 

@@ -1402,14 +1402,6 @@ object Streams {
     spark.table(name)
   }
 
-  /** Streaming classifier scoring — the quality-filter cell at INGEST time:
-    * the fastText-shaped scan-level scorer
-    * ([[graft.ops.TextOps.withClassifierScore]]) applied per micro-batch.
-    * Stateless (one codegen'd expression chain per row — no joins, no model
-    * table), so it needs no state store and no watermark: state is zero
-    * regardless of stream length, and a firehose scores at scan speed with
-    * results identical to the batch op over the same rows.
-    */
   /** Streaming DSIR scoring — ONLINE domain-relevance scoring of arriving
     * documents against a PRE-FITTED [[graft.ops.Selection.dsirBucketTable]]
     * (fit once on the static corpus + target sample, broadcast as a dense
@@ -1642,6 +1634,14 @@ object Streams {
       graft.ops.Selection.ccnetAssign(b, "doc_id", "text", "lang", lp, cuts))
   }
 
+  /** Streaming classifier scoring — the quality-filter cell at INGEST time:
+    * the fastText-shaped scan-level scorer
+    * ([[graft.ops.TextOps.withClassifierScore]]) applied per micro-batch.
+    * Stateless (one codegen'd expression chain per row — no joins, no model
+    * table), so it needs no state store and no watermark: state is zero
+    * regardless of stream length, and a firehose scores at scan speed with
+    * results identical to the batch op over the same rows.
+    */
   def streamingClassifierScore(
       spark: SparkSession, sfDir: String, nBuckets: Int, seed: String): DataFrame = {
     val name = s"graft_sclass_${System.nanoTime()}"
@@ -1691,20 +1691,6 @@ object Streams {
     spark.table(name)
   }
 
-  /** Streaming SCD Type-2 maintenance — the dimension-history table kept
-    * current across micro-batches ([[graft.ops.Scd2.foldBatch]] per batch;
-    * state = ONE open row per key, closed history append-only). The replay
-    * is staged as `nChunks` contiguous event-time files with ascending
-    * mtimes, so the file source delivers true multi-batch, time-ordered
-    * feeds — the condition the fold's exactness contract needs (and which
-    * any event-time-partitioned CDC feed satisfies in production). Equals
-    * the batch [[graft.ops.Scd2.batch]] build exactly (shared oracle;
-    * LawsSpec pins the equality under random chunkings).
-    *
-    * The global ntile used to cut the staging chunks is harness-only (it
-    * fabricates a time-ordered feed from a batch fixture) — production
-    * feeds arrive already time-partitioned.
-    */
   /** Stage a batch frame as `nChunks` contiguous event-time files with
     * ascending mtimes — fabricates a true multi-batch, TIME-ORDERED file
     * feed from a fixture (harness-only; production feeds arrive already
@@ -1743,6 +1729,20 @@ object Streams {
     stage
   }
 
+  /** Streaming SCD Type-2 maintenance — the dimension-history table kept
+    * current across micro-batches ([[graft.ops.Scd2.foldBatch]] per batch;
+    * state = ONE open row per key, closed history append-only). The replay
+    * is staged as `nChunks` contiguous event-time files with ascending
+    * mtimes, so the file source delivers true multi-batch, time-ordered
+    * feeds — the condition the fold's exactness contract needs (and which
+    * any event-time-partitioned CDC feed satisfies in production). Equals
+    * the batch [[graft.ops.Scd2.batch]] build exactly (shared oracle;
+    * LawsSpec pins the equality under random chunkings).
+    *
+    * The global ntile used to cut the staging chunks is harness-only (it
+    * fabricates a time-ordered feed from a batch fixture) — production
+    * feeds arrive already time-partitioned.
+    */
   def streamingScd2(spark: SparkSession, sfDir: String, nChunks: Int = 4): DataFrame = {
     import graft.ops.Scd2
     val ev = graft.Tables.events(spark, sfDir)
@@ -1995,7 +1995,8 @@ object Streams {
   }
 
   /** Streaming similarity search — ONLINE retrieval against a static
-    * persisted IVF index ([[graft.ops.Similarity.writeIvfInt8Index]]):
+    * persisted IVF index of any codec ([[graft.ops.Similarity.writeIvfIndex]];
+    * the codec is read from the index):
     * query vectors arrive on a stream, each micro-batch is searched with
     * full batch semantics through `foreachBatch` and appended to a parquet
     * result sink. Per-query top-k ranking is NOT a streaming aggregation
@@ -2025,36 +2026,7 @@ object Streams {
     // centroid sidecar ONCE — the per-batch closure used to re-read both
     // on every trigger (a driver collect job per micro-batch against an
     // index that is static for the stream's lifetime)
-    val search = graft.ops.Similarity.openIvfInt8Searcher(
-      queries.sparkSession, indexPath, idCol, vecCol, k, nprobe)
-    streamingSearch(queries, outDir, batches, search)
-  }
-
-  /** [[streamingAnnSearch]]'s twin over the persisted IVF+PQ index
-    * ([[graft.ops.Similarity.writeIvfPqIndex]]) — online retrieval against
-    * the 32×-compressed stored form, same stateless per-batch semantics and
-    * retry-idempotent sink.
-    */
-  def streamingPqSearch(
-      queries: DataFrame, indexPath: String, outDir: String,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      batches: Int = 4): DataFrame = {
-    // fit-once static side (r20) — see streamingAnnSearch
-    val search = graft.ops.Similarity.openIvfPqSearcher(
-      queries.sparkSession, indexPath, idCol, vecCol, k, nprobe)
-    streamingSearch(queries, outDir, batches, search)
-  }
-
-  /** [[streamingAnnSearch]] over the persisted int16 ("f16-class") index
-    * ([[graft.ops.Similarity.writeIvfF16Index]]) — the 2-byte storage rung,
-    * same stateless per-batch semantics and retry-idempotent sink.
-    */
-  def streamingF16Search(
-      queries: DataFrame, indexPath: String, outDir: String,
-      idCol: String, vecCol: String, k: Int, nprobe: Int,
-      batches: Int = 4): DataFrame = {
-    // fit-once static side (r20) — see streamingAnnSearch
-    val search = graft.ops.Similarity.openIvfF16Searcher(
+    val search = graft.ops.Similarity.openIvfSearcher(
       queries.sparkSession, indexPath, idCol, vecCol, k, nprobe)
     streamingSearch(queries, outDir, batches, search)
   }
@@ -2075,11 +2047,6 @@ object Streams {
       graft.ops.Retrieval.bm25TopKStored(stats, b, qIdCol, qTextCol, k,
         excludeSelf = excludeSelf))
 
-  /** the shared streaming-search harness: stage queries as `batches` files,
-    * feed one file per trigger, run `searchFn` with full batch semantics per
-    * micro-batch through the idempotent [[searchBatchSink]], read the union
-    * back (empty stream → `searchFn` of zero queries, i.e. the search schema)
-    */
   /** Streaming substring SCRUB — span-level decontamination at ingest:
     * arriving docs have every winnow-selected k-gram span that duplicates a
     * STATIC reference corpus cut out before they land
@@ -2229,6 +2196,11 @@ object Streams {
       graft.ops.Features.attachLast3(b, artifact))
   }
 
+  /** the shared streaming-search harness: stage queries as `batches` files,
+    * feed one file per trigger, run `searchFn` with full batch semantics per
+    * micro-batch through the idempotent [[searchBatchSink]], read the union
+    * back (empty stream → `searchFn` of zero queries, i.e. the search schema)
+    */
   private def streamingSearch(
       queries: DataFrame, outDir: String, batches: Int,
       searchFn: DataFrame => DataFrame): DataFrame = {
@@ -2316,14 +2288,14 @@ object Streams {
       searchFn(batch.toDF())
         .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
 
-  /** [[searchBatchSink]] instantiated for the int8 index (the spec's replay
-    * target)
+  /** [[searchBatchSink]] instantiated for a persisted IVF index (the
+    * spec's replay target)
     */
   private[graft] def annBatchSink(
       indexPath: String, outDir: String, idCol: String, vecCol: String,
       k: Int, nprobe: Int)(batch: Dataset[Row], batchId: Long): Unit =
-    searchBatchSink(outDir, b => graft.ops.Similarity.searchIvfInt8Index(
-      b.sparkSession, indexPath, b, idCol, vecCol, k, nprobe))(batch, batchId)
+    searchBatchSink(outDir, b => graft.ops.Similarity.openIvfSearcher(
+      b.sparkSession, indexPath, idCol, vecCol, k, nprobe)(b))(batch, batchId)
 
   /** Native checkpointed streaming FILE sink — the exactly-once path: an
     * append-shaped stream (here: documents labelled with their

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
+import graft.ops.{Dedup, IvfCodec, Multimodal, Similarity, TextOps}
 import graft.streaming.{PartitionedSnapshot, Streams}
 
 /** Edge-case and invariance tests for the pipeline operator library. */
@@ -338,14 +338,14 @@ class OpsSpec extends AnyFunSuite {
     val emb = graft.Tables.embeddings(spark, dir)
     val idx = "/tmp/graft_stream_ann_opsspec_idx"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", idx, 8)
+    graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, 8, IvfCodec.Int8)
     val qs = emb.filter($"vec_id" < 20)
     val streamed = Streams.streamingAnnSearch(
       qs, idx, "/tmp/graft_stream_ann_opsspec_out", "vec_id", "embedding", 3, 2,
       batches = 4)
       .collect().map(_.toString).sorted.toSeq
-    val batch = graft.ops.Similarity.searchIvfInt8Index(
-      spark, idx, qs, "vec_id", "embedding", 3, 2)
+    val batch = graft.ops.Similarity.openIvfSearcher(
+      spark, idx, "vec_id", "embedding", 3, 2)(qs)
       .collect().map(_.toString).sorted.toSeq
     assert(streamed == batch && streamed.nonEmpty)
   }
@@ -355,17 +355,17 @@ class OpsSpec extends AnyFunSuite {
     val emb = graft.Tables.embeddings(spark, dir)
     val idx = "/tmp/graft_open_searcher_idx"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", idx, 8)
+    graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, 8, IvfCodec.Int8)
     // the r20 serving split: the static side (manifest, list frame,
     // centroid sidecar) is resolved ONCE; the returned closure must give
-    // the one-shot API's exact rows for EVERY batch it serves
-    val serve = graft.ops.Similarity.openIvfInt8Searcher(
+    // a fresh opener's exact rows for EVERY batch it serves
+    val serve = graft.ops.Similarity.openIvfSearcher(
       spark, idx, "vec_id", "embedding", 3, 2)
     Seq(emb.filter($"vec_id" < 10), emb.filter($"vec_id" >= 10 && $"vec_id" < 20))
       .foreach { batch =>
         val got = serve(batch).collect().map(_.toString).sorted.toSeq
-        val expected = graft.ops.Similarity.searchIvfInt8Index(
-          spark, idx, batch, "vec_id", "embedding", 3, 2)
+        val expected = graft.ops.Similarity.openIvfSearcher(
+          spark, idx, "vec_id", "embedding", 3, 2)(batch)
           .collect().map(_.toString).sorted.toSeq
         assert(got == expected && got.nonEmpty)
       }
@@ -418,7 +418,7 @@ class OpsSpec extends AnyFunSuite {
     val out = "/tmp/graft_sann_idem_out"
     Seq(idx, out).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", idx, 8)
+    graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, 8, IvfCodec.Int8)
     val sink = Streams.annBatchSink(idx, out, "vec_id", "embedding", 3, 2) _
     val b0 = emb.filter($"vec_id" < 10).toDF()
     sink(b0, 0L)
@@ -445,12 +445,12 @@ class OpsSpec extends AnyFunSuite {
     val emb = graft.Tables.embeddings(spark, dir)
     val idx = "/tmp/graft_sann_empty_idx"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", idx, 8)
+    graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, 8, IvfCodec.Int8)
     val got = Streams.streamingAnnSearch(
       emb.filter($"vec_id" < 0), idx, "/tmp/graft_sann_empty_out",
       "vec_id", "embedding", 3, 2, batches = 2)
-    val expected = graft.ops.Similarity.searchIvfInt8Index(
-      spark, idx, emb.limit(0), "vec_id", "embedding", 3, 2)
+    val expected = graft.ops.Similarity.openIvfSearcher(
+      spark, idx, "vec_id", "embedding", 3, 2)(emb.limit(0))
     assert(got.schema.fieldNames.toSeq == expected.schema.fieldNames.toSeq)
     assert(got.count() == 0)
   }
@@ -570,18 +570,18 @@ class OpsSpec extends AnyFunSuite {
     // pins that two searches of the same stored index agree exactly)
     val path = "/tmp/graft_f16_opsspec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    Similarity.writeIvfF16Index(emb, "vec_id", "embedding", path, 8)
-    def search() = Similarity.searchIvfF16Index(
-      spark, path, emb.filter($"vec_id" < 10), "vec_id", "embedding", 3, 2)
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Int16)
+    def search() = Similarity.openIvfSearcher(
+      spark, path, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
       .collect().map(_.toString).sorted.toSeq
     val s1 = search()
     assert(s1 == search() && s1.nonEmpty)
     // appends ride the shared protocol and are searchable
-    Similarity.appendIvfF16Index(
+    Similarity.appendIvfIndex(
       spark, emb.filter($"vec_id" === 0).withColumn("vec_id", lit(900000L)),
       "vec_id", "embedding", path)
-    val all = Similarity.searchIvfF16Index(
-      spark, path, emb.filter($"vec_id" < 10), "vec_id", "embedding", 100000, 8)
+    val all = Similarity.openIvfSearcher(
+      spark, path, "vec_id", "embedding", 100000, 8)(emb.filter($"vec_id" < 10))
       .select($"neighbor_id").as[Long].collect().toSet
     assert(all.contains(900000L), "appended vector must be searchable")
   }
@@ -653,11 +653,11 @@ class OpsSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val path = "/tmp/graft_pq_index_opsspec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    graft.ops.Similarity.writeIvfPqIndex(
-      emb, "vec_id", "embedding", path, 8, 4, 16, 64, trainIters = 1)
+    graft.ops.Similarity.writeIvfIndex(
+      emb, "vec_id", "embedding", path, 8, IvfCodec.Pq(4, 16, 64))
     val qs = emb.filter($"vec_id" < 10)
-    val search = graft.ops.Similarity.searchIvfPqIndex(
-      spark, path, qs, "vec_id", "embedding", 5, 2)
+    val search = graft.ops.Similarity.openIvfSearcher(
+      spark, path, "vec_id", "embedding", 5, 2)(qs)
     // the stored index answers exactly like the in-memory composition
     val inMem = graft.ops.Similarity.ivfPqTopK(
       emb, qs, "vec_id", "embedding", 5, 8, 2, 4, 16, 64, trainIters = 1)
@@ -670,24 +670,24 @@ class OpsSpec extends AnyFunSuite {
     // an appended batch is encoded with the STORED geometry and searchable
     val base = "/tmp/graft_pq_append_opsspec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-    graft.ops.Similarity.writeIvfPqIndex(
-      emb.filter($"vec_id" < 300), "vec_id", "embedding", base, 8, 4, 16, 64)
-    graft.ops.Similarity.appendIvfPqIndex(
+    graft.ops.Similarity.writeIvfIndex(
+      emb.filter($"vec_id" < 300), "vec_id", "embedding", base, 8, IvfCodec.Pq(4, 16, 64))
+    graft.ops.Similarity.appendIvfIndex(
       spark, emb.filter($"vec_id" >= 300), "vec_id", "embedding", base)
-    val all = graft.ops.Similarity.searchIvfPqIndex(
-      spark, base, qs, "vec_id", "embedding", 100000, 8)
+    val all = graft.ops.Similarity.openIvfSearcher(
+      spark, base, "vec_id", "embedding", 100000, 8)(qs)
       .select($"neighbor_id").as[Long].collect().toSet
     assert(all.exists(_ >= 300), "appended vectors must be searchable")
     assert(all.size == emb.count() - 1 ||
       all.size >= emb.count() - 10, // anchor caps can trim oversized lists
       s"full-probe search must see the merged corpus, got ${all.size}")
     // vacuum is index-type-agnostic: sweeping the PQ index changes nothing
-    val before = graft.ops.Similarity.searchIvfPqIndex(
-      spark, base, qs, "vec_id", "embedding", 5, 2)
+    val before = graft.ops.Similarity.openIvfSearcher(
+      spark, base, "vec_id", "embedding", 5, 2)(qs)
       .collect().map(_.toString).sorted.toSeq
-    graft.ops.Similarity.vacuumIndex(spark, base)
-    val after = graft.ops.Similarity.searchIvfPqIndex(
-      spark, base, qs, "vec_id", "embedding", 5, 2)
+    graft.ops.Similarity.vacuumIvfIndex(spark, base)
+    val after = graft.ops.Similarity.openIvfSearcher(
+      spark, base, "vec_id", "embedding", 5, 2)(qs)
       .collect().map(_.toString).sorted.toSeq
     assert(after == before, "vacuum must not change PQ index answers")
     // consistency: with nprobe = nCents every list is probed, so the IVF+PQ
@@ -1186,9 +1186,10 @@ class OpsSpec extends AnyFunSuite {
     val path = "/tmp/graft_test_filtered_idx"
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", path, 8, attrCols = Seq("label"))
-    val got = Similarity.searchIvfInt8Index(spark, path, emb.filter($"vec_id" < 5),
-      "vec_id", "embedding", 3, 2, listFilter = Some($"label" === 7))
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Int8,
+      attrCols = Seq("label"))
+    val got = Similarity.openIvfSearcher(spark, path,
+      "vec_id", "embedding", 3, 2, listFilter = Some($"label" === 7))(emb.filter($"vec_id" < 5))
     // every neighbor actually has the filtered label
     val labels = emb.select($"vec_id", $"label").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -1198,15 +1199,13 @@ class OpsSpec extends AnyFunSuite {
     // the predicate reaches the parquet reader, not a post-scan filter only
     val plan = got.queryExecution.executedPlan.toString
     assert("PushedFilters: \\[[^\\]]*label".r.findFirstIn(plan).isDefined, plan)
-    // append with the same attrCols merges by NAME (read-back keeps payload
-    // columns); the appended row is findable through the filter
+    // append takes the payload columns from the committed lists and merges
+    // by NAME; the appended row is findable through the filter
     val extra = emb.filter($"vec_id" === 0)
       .select(($"vec_id" + 10000).as("vec_id"), $"embedding", lit(7).as("label"))
-    Similarity.appendIvfInt8Index(spark, extra, "vec_id", "embedding", path,
-      attrCols = Seq("label"))
-    val after = Similarity.searchIvfInt8Index(spark, path,
-      emb.filter($"vec_id" === 0), "vec_id", "embedding", 1, 2,
-      listFilter = Some($"label" === 7))
+    Similarity.appendIvfIndex(spark, extra, "vec_id", "embedding", path)
+    val after = Similarity.openIvfSearcher(spark, path, "vec_id", "embedding", 1, 2,
+      listFilter = Some($"label" === 7))(emb.filter($"vec_id" === 0))
     // vec 10000 is a copy of query vec 0 with label 7 → cosine 1.0, rank 1
     assert(after.collect().head.getLong(1) == 10000L)
   }
@@ -1216,10 +1215,10 @@ class OpsSpec extends AnyFunSuite {
     val path = "/tmp/graft_test_pq_filtered_idx"
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", path, 8, 4, 16, 64,
-      trainIters = 1, attrCols = Seq("label"))
-    val got = Similarity.searchIvfPqIndex(spark, path, emb.filter($"vec_id" < 5),
-      "vec_id", "embedding", 3, 2, listFilter = Some($"label" === 7))
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Pq(4, 16, 64),
+      attrCols = Seq("label"))
+    val got = Similarity.openIvfSearcher(spark, path,
+      "vec_id", "embedding", 3, 2, listFilter = Some($"label" === 7))(emb.filter($"vec_id" < 5))
     val labels = emb.select($"vec_id", $"label").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val rows = got.collect()
@@ -1236,15 +1235,81 @@ class OpsSpec extends AnyFunSuite {
     val path = "/tmp/graft_test_filtered_pq_idx"
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", path, 8, 4, 16, 64,
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Pq(4, 16, 64),
       attrCols = Seq("label"))
-    val got = Similarity.searchIvfPqIndex(spark, path, emb.filter($"vec_id" < 5),
-      "vec_id", "embedding", 3, 2, listFilter = Some($"label" === 7))
+    val got = Similarity.openIvfSearcher(spark, path,
+      "vec_id", "embedding", 3, 2, listFilter = Some($"label" === 7))(emb.filter($"vec_id" < 5))
     val labels = emb.select($"vec_id", $"label").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val rows = got.collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => labels(r.getLong(1)) == 7))
+  }
+
+  test("filtered PQ append takes the attribute columns from the index") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val path = "/tmp/graft_test_pq_filtered_append_idx"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Pq(4, 16, 64),
+      attrCols = Seq("label"))
+    // the batch carries `label`; the append keeps it as the payload the
+    // build wrote, so the filter matches the new row
+    val extra = emb.filter($"vec_id" === 0)
+      .select(($"vec_id" + 10000).as("vec_id"), $"embedding", lit(7).as("label"))
+    Similarity.appendIvfIndex(spark, extra, "vec_id", "embedding", path)
+    val got = Similarity.openIvfSearcher(spark, path, "vec_id", "embedding", 100000, 2,
+      listFilter = Some($"label" === 7))(emb.filter($"vec_id" === 0))
+      .collect().map(r => r.getLong(1) -> r.getDouble(3)).toMap
+    // vec 10000 is a copy of query vec 0 with label 7: same codes, so its
+    // ADC distance is the smallest any row can reach
+    assert(got.contains(10000L), "the appended row must match the filter")
+    assert(got(10000L) == got.values.min)
+  }
+
+  test("index stats and vacuum are codec-agnostic: int16 and PQ") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val qs = emb.filter($"vec_id" < 10)
+    Seq("int16" -> IvfCodec.Int16, "pq" -> IvfCodec.Pq(4, 16, 64)).foreach { case (tag, codec) =>
+      val path = s"/tmp/graft_test_stats_vacuum_$tag"
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, codec)
+      // the per-list counts of the build, read straight from the fresh lists
+      val built = spark.read.parquet(s"$path/lists").groupBy($"cent_id").count()
+        .collect().map(r => r.getInt(0).toLong -> r.getLong(1)).toMap
+      def stats() = Similarity.ivfIndexStats(spark, path)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def search() = Similarity.openIvfSearcher(spark, path, "vec_id", "embedding", 3, 2)(qs)
+        .collect().map(_.toString).sorted.toSeq
+      assert(stats() == built && built.values.sum == emb.count(), tag)
+      val shares = Similarity.ivfIndexStats(spark, path).select($"share").as[Double].collect()
+      assert(math.abs(shares.sum - 1.0) < 1e-5, s"$tag shares must sum to 1")
+      // an uncommitted orphan: invisible to stats, swept by vacuum
+      val dir = new java.io.File(s"$path/lists").listFiles()
+        .filter(d => d.isDirectory && d.getName.startsWith("cent_id=")).head
+      val part = dir.listFiles().filter(_.getName.contains("part-")).head
+      val orphan = dir.toPath.resolve("part-orphan-vacuum.parquet")
+      java.nio.file.Files.copy(part.toPath, orphan)
+      val before = search()
+      assert(before.nonEmpty && stats() == built, tag)
+      Similarity.vacuumIvfIndex(spark, path)
+      assert(!orphan.toFile.exists(), s"$tag vacuum must delete the unreferenced file")
+      assert(search() == before, s"$tag vacuum must not change answers")
+      assert(stats() == built, s"$tag vacuum must not change stats")
+    }
+  }
+
+  test("pageRankFixedPoint keeps only the checkpoint its result reads persisted") {
+    def added(edges: org.apache.spark.sql.DataFrame): (Int, Long) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val pr = graft.ops.Graph.pageRankFixedPoint(edges, 3, 85)
+      ((spark.sparkContext.getPersistentRDDs.keySet -- before).size, pr.count())
+    }
+    // empty graph: the result reads the nodes checkpoint, the edge
+    // checkpoint is released
+    assert(added(Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")) == ((1, 0L)))
+    // iterated graph: only the last round's rank checkpoint survives
+    val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 2L)).toDF("src", "dst", "w")
+    assert(added(edges) == ((1, 3L)))
   }
 
   test("interval overlap join: one row per overlapping pair even across many buckets") {

@@ -298,9 +298,9 @@ class ScaleSpec extends AnyFunSuite {
     // nprobe/nCents of the stored index — the build-once/search-many contract
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val path = "/tmp/graft_ivf_index_scalespec"
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", path, 8)
-    val search = graft.ops.Similarity.searchIvfInt8Index(
-      spark, path, emb.filter($"vec_id" < 10), "vec_id", "embedding", 3, 2)
+    graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
+    val search = graft.ops.Similarity.openIvfSearcher(
+      spark, path, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
     val plan = search.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruning"),
       s"list scan must carry a dynamic partition-pruning filter on cent_id:\n$plan")
@@ -315,14 +315,14 @@ class ScaleSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val path = "/tmp/graft_ivf_commit_scalespec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    graft.ops.Similarity.writeIvfInt8Index(
-      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8)
+    graft.ops.Similarity.writeIvfIndex(
+      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
     def manifest(): Seq[String] =
       scala.io.Source.fromFile(s"$path/_COMMIT").getLines().toSeq
     def liveFiles(m: Seq[String]): Set[String] =
       m.collect { case l if l.startsWith("f ") => l.drop(2) }.toSet
-    def search() = graft.ops.Similarity.searchIvfInt8Index(
-      spark, path, emb.filter($"vec_id" < 10), "vec_id", "embedding", 3, 2)
+    def search() = graft.ops.Similarity.openIvfSearcher(
+      spark, path, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
       .collect().map(_.toString).sorted.toSeq
     val m0 = manifest()
     assert(liveFiles(m0).nonEmpty, "build must commit a manifest of its files")
@@ -340,7 +340,7 @@ class ScaleSpec extends AnyFunSuite {
     assert(search() == before, "uncommitted files must be invisible to readers")
     // the real append: flips the manifest, sweeps the orphans it found in the
     // partitions it touched, and keeps the files it replaced as grace
-    graft.ops.Similarity.appendIvfInt8Index(
+    graft.ops.Similarity.appendIvfIndex(
       spark, emb.filter($"vec_id" >= 137), "vec_id", "embedding", path)
     val m1 = manifest()
     val touched = dirs.map(_.getName).filter { d =>
@@ -364,7 +364,7 @@ class ScaleSpec extends AnyFunSuite {
       "the new manifest must record exactly the replaced files as expired")
     // the NEXT append closes the grace window
     val afterFirst = search()
-    graft.ops.Similarity.appendIvfInt8Index(
+    graft.ops.Similarity.appendIvfIndex(
       spark, emb.filter($"vec_id" >= 130 && $"vec_id" < 137), "vec_id", "embedding", path)
     expired.foreach { f =>
       assert(!new java.io.File(s"$path/lists/$f").exists(),
@@ -384,17 +384,18 @@ class ScaleSpec extends AnyFunSuite {
     def liveFiles(m: Seq[String]) = m.collect { case l if l.startsWith("f ") => l.drop(2) }
     def cdir(m: Seq[String]) =
       m.collectFirst { case l if l.startsWith("c ") => l.drop(2) }.get
-    def search(p: String) = graft.ops.Similarity.searchIvfInt8Index(
-      spark, p, emb.filter($"vec_id" < 10), "vec_id", "embedding", 3, 2)
+    def search(p: String) = graft.ops.Similarity.openIvfSearcher(
+      spark, p, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
       .collect().map(_.toString).sorted.toSeq
-    graft.ops.Similarity.writeIvfInt8Index(
-      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8)
-    graft.ops.Similarity.appendIvfInt8Index(
+    graft.ops.Similarity.writeIvfIndex(
+      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
+    graft.ops.Similarity.appendIvfIndex(
       spark, emb.filter($"vec_id" >= 137 && $"vec_id" < 300), "vec_id", "embedding", path)
     val m1 = manifest()
     assert(cdir(m1) == "centroids", "appends must not move the centroid sidecar")
     // REBUILD in place over the full corpus with a different geometry
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", path, 16)
+    graft.ops.Similarity.writeIvfIndex(
+      emb, "vec_id", "embedding", path, 16, graft.ops.IvfCodec.Int8)
     val m2 = manifest()
     assert(cdir(m2) == "centroids_v2", s"rebuild must version the sidecar, got ${cdir(m2)}")
     // the ENTIRE previous version is the grace window: old lists files and
@@ -403,10 +404,11 @@ class ScaleSpec extends AnyFunSuite {
       s"pre-rebuild file $f must survive one commit"))
     assert(new java.io.File(s"$path/${cdir(m1)}").exists())
     // and the rebuilt index answers exactly like a fresh build (same params)
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", fresh, 16)
+    graft.ops.Similarity.writeIvfIndex(
+      emb, "vec_id", "embedding", fresh, 16, graft.ops.IvfCodec.Int8)
     assert(search(path) == search(fresh) && search(path).nonEmpty)
     // the next commit closes the rebuild's grace window
-    graft.ops.Similarity.appendIvfInt8Index(
+    graft.ops.Similarity.appendIvfIndex(
       spark, emb.filter($"vec_id" === 0).withColumn("vec_id", lit(900000L)),
       "vec_id", "embedding", path)
     assert(!new java.io.File(s"$path/${cdir(m1)}").exists(),
@@ -418,7 +420,7 @@ class ScaleSpec extends AnyFunSuite {
     val orphan = dir.toPath.resolve("part-orphan-vacuum.parquet")
     java.nio.file.Files.copy(part.toPath, orphan)
     val s0 = search(path)
-    graft.ops.Similarity.vacuumIvfInt8Index(spark, path)
+    graft.ops.Similarity.vacuumIvfIndex(spark, path)
     assert(!orphan.toFile.exists(), "vacuum must delete the unreferenced file")
     assert(search(path) == s0, "vacuum must not change answers")
   }
@@ -427,11 +429,11 @@ class ScaleSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val full = "/tmp/graft_ivf_full_scalespec"
     val inc = "/tmp/graft_ivf_inc_scalespec"
-    graft.ops.Similarity.writeIvfInt8Index(emb, "vec_id", "embedding", full, 8)
+    graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", full, 8, graft.ops.IvfCodec.Int8)
     // base on an ODD split boundary (ids 0..7 still inside, so the stored
     // centroids equal the full build's smallest-id init)
-    graft.ops.Similarity.writeIvfInt8Index(
-      emb.filter($"vec_id" < 137), "vec_id", "embedding", inc, 8)
+    graft.ops.Similarity.writeIvfIndex(
+      emb.filter($"vec_id" < 137), "vec_id", "embedding", inc, 8, graft.ops.IvfCodec.Int8)
     // record per-partition file state before the append
     def fileState(dir: String): Map[String, Set[(String, Long)]] =
       new java.io.File(s"$dir/lists").listFiles().toSeq
@@ -442,17 +444,17 @@ class ScaleSpec extends AnyFunSuite {
         .toMap
     val before = fileState(inc)
     val batch = emb.filter($"vec_id" >= 137)
-    graft.ops.Similarity.appendIvfInt8Index(
+    graft.ops.Similarity.appendIvfIndex(
       spark, batch, "vec_id", "embedding", inc)
     val after = fileState(inc)
     val rewritten = after.keySet.filter(p => before.get(p) != Some(after(p)))
     assert(rewritten.nonEmpty, "the append must rewrite at least one partition")
     // appended index answers exactly like the full-corpus build
-    val got = graft.ops.Similarity.searchIvfInt8Index(
-      spark, inc, emb.filter($"vec_id" < 10), "vec_id", "embedding", 3, 2)
+    val got = graft.ops.Similarity.openIvfSearcher(
+      spark, inc, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
       .collect().map(_.toString).sorted.toSeq
-    val expected = graft.ops.Similarity.searchIvfInt8Index(
-      spark, full, emb.filter($"vec_id" < 10), "vec_id", "embedding", 3, 2)
+    val expected = graft.ops.Similarity.openIvfSearcher(
+      spark, full, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
       .collect().map(_.toString).sorted.toSeq
     assert(got == expected && got.nonEmpty)
     // with 8 centroids and a 363-vector batch it is overwhelmingly likely
@@ -465,7 +467,7 @@ class ScaleSpec extends AnyFunSuite {
       scala.io.Source.fromFile(s"$inc/_COMMIT").getLines()
         .collect { case l if l.startsWith("f ") => l.drop(2) }.toSet
     val live2 = liveFiles()
-    graft.ops.Similarity.appendIvfInt8Index(
+    graft.ops.Similarity.appendIvfIndex(
       spark, emb.filter($"vec_id" === 0).withColumn("vec_id", lit(100000L)),
       "vec_id", "embedding", inc)
     val gained = (liveFiles() -- live2).map(_.takeWhile(_ != '/'))
@@ -482,35 +484,37 @@ class ScaleSpec extends AnyFunSuite {
     def version(p: String): Long =
       scala.io.Source.fromFile(s"$p/_COMMIT").getLines()
         .collectFirst { case l if l.startsWith("v ") => l.drop(2).toLong }.get
-    def search(p: String) = graft.ops.Similarity.searchIvfInt8Index(
-      spark, p, emb.filter($"vec_id" < 10), "vec_id", "embedding", 3, 2)
+    def search(p: String) = graft.ops.Similarity.openIvfSearcher(
+      spark, p, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
       .collect().map(_.toString).sorted.toSeq
     val base = emb.filter($"vec_id" < 137)
     val batchA = emb.filter($"vec_id" >= 137 && $"vec_id" < 200)
     val batchB = emb.filter($"vec_id" >= 300 && $"vec_id" < 400)
-    graft.ops.Similarity.writeIvfInt8Index(base, "vec_id", "embedding", path, 8)
+    graft.ops.Similarity.writeIvfIndex(
+      base, "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
     assert(version(path) == 0L)
     // writer A appends batchA, but a REAL second append (batchB) runs and
     // commits inside A's write-to-flip window: A's flip must trip the fence
     val ex = intercept[graft.streaming.Commit.ConcurrentWriteException] {
-      graft.streaming.Commit.interleaved(graft.ops.Similarity.appendIvfInt8Index(
+      graft.streaming.Commit.interleaved(graft.ops.Similarity.appendIvfIndex(
           spark, batchB, "vec_id", "embedding", path)) {
-        graft.ops.Similarity.appendIvfInt8Index(spark, batchA, "vec_id", "embedding", path)
+        graft.ops.Similarity.appendIvfIndex(spark, batchA, "vec_id", "embedding", path)
       }
     }
     assert(ex.getMessage.contains("concurrent writer"))
     assert(version(path) == 1L, "the interleaved winner's commit must stay live")
     // the surviving index answers exactly as base ∪ batchB appended cleanly
-    graft.ops.Similarity.writeIvfInt8Index(base, "vec_id", "embedding", twin, 8)
-    graft.ops.Similarity.appendIvfInt8Index(spark, batchB, "vec_id", "embedding", twin)
+    graft.ops.Similarity.writeIvfIndex(
+      base, "vec_id", "embedding", twin, 8, graft.ops.IvfCodec.Int8)
+    graft.ops.Similarity.appendIvfIndex(spark, batchB, "vec_id", "embedding", twin)
     assert(search(path) == search(twin) && search(path).nonEmpty,
       "the loser's discarded work must not corrupt the winner's commit")
     // and the loser's orphans are invisible to readers + swept by the next
     // legitimate append (the crash-safety path already pinned above); a
     // fresh retry of A from a new manifest read succeeds
-    graft.ops.Similarity.appendIvfInt8Index(spark, batchA, "vec_id", "embedding", path)
+    graft.ops.Similarity.appendIvfIndex(spark, batchA, "vec_id", "embedding", path)
     assert(version(path) == 2L)
-    graft.ops.Similarity.appendIvfInt8Index(spark, batchA, "vec_id", "embedding", twin)
+    graft.ops.Similarity.appendIvfIndex(spark, batchA, "vec_id", "embedding", twin)
     assert(search(path) == search(twin), "retried append must converge")
   }
 
@@ -518,26 +522,26 @@ class ScaleSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val path = "/tmp/graft_ivf_vacfence_scalespec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    graft.ops.Similarity.writeIvfInt8Index(
-      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8)
+    graft.ops.Similarity.writeIvfIndex(
+      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
     val ex = intercept[graft.streaming.Commit.ConcurrentWriteException] {
-      graft.streaming.Commit.interleaved(graft.ops.Similarity.appendIvfInt8Index(
+      graft.streaming.Commit.interleaved(graft.ops.Similarity.appendIvfIndex(
           spark, emb.filter($"vec_id" >= 137 && $"vec_id" < 200),
           "vec_id", "embedding", path)) {
-        graft.ops.Similarity.vacuumIvfInt8Index(spark, path)
+        graft.ops.Similarity.vacuumIvfIndex(spark, path)
       }
     }
     assert(ex.getMessage.contains("vacuum"))
     // quiet vacuum still works
-    graft.ops.Similarity.vacuumIvfInt8Index(spark, path)
+    graft.ops.Similarity.vacuumIvfIndex(spark, path)
   }
 
   test("vacuum stage sweep honors the grace window (live staging spared)") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val path = "/tmp/graft_ivf_vacgrace_scalespec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    graft.ops.Similarity.writeIvfInt8Index(
-      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8)
+    graft.ops.Similarity.writeIvfIndex(
+      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
     // a FRESH stage dir (a possibly-live writer mid-write) must survive a
     // default-grace vacuum; once older than the grace window it is a crash
     // leftover and is swept
@@ -546,10 +550,10 @@ class ScaleSpec extends AnyFunSuite {
     assert(stageSub.mkdirs())
     java.nio.file.Files.writeString(
       stageSub.toPath.resolve("part-x.parquet"), "stub")
-    graft.ops.Similarity.vacuumIvfInt8Index(spark, path)
+    graft.ops.Similarity.vacuumIvfIndex(spark, path)
     assert(stageRoot.exists(), "a stage dir younger than the grace window must survive vacuum")
     assert(stageRoot.setLastModified(System.currentTimeMillis() - 2 * 60 * 60 * 1000))
-    graft.ops.Similarity.vacuumIvfInt8Index(spark, path)
+    graft.ops.Similarity.vacuumIvfIndex(spark, path)
     assert(!stageRoot.exists(), "a stage dir older than the grace window must be swept")
   }
 
@@ -560,21 +564,20 @@ class ScaleSpec extends AnyFunSuite {
     def version(): Long =
       scala.io.Source.fromFile(s"$path/_COMMIT").getLines()
         .collectFirst { case l if l.startsWith("v ") => l.drop(2).toLong }.get
-    def search() = graft.ops.Similarity.searchIvfInt8Index(
-      spark, path, emb.filter($"vec_id" < 10), "vec_id", "embedding", 3, 2)
+    def search() = graft.ops.Similarity.openIvfSearcher(
+      spark, path, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
       .collect().map(_.toString).sorted.toSeq
-    graft.ops.Similarity.writeIvfInt8Index(
-      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8)
+    graft.ops.Similarity.writeIvfIndex(
+      emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
     val before = search()
     // an external sweep (e.g. a zero-grace vacuum) eats the staging dir in
     // the window between the staged write and the promote listing: the
     // append must fail LOUDLY — the silent alternative is a manifest whose
     // touched partitions carry no files, dropping the merged-in base rows
     val ex = intercept[java.io.IOException] {
-      graft.ops.Similarity.appendIvfInt8IndexImpl(
+      graft.ops.Similarity.appendIvfIndexImpl(
         spark, emb.filter($"vec_id" >= 137 && $"vec_id" < 200),
         "vec_id", "embedding", path,
-        graft.ops.Similarity.DEFAULT_MAX_BUCKET, assignKernel = false,
         afterStage = () => new java.io.File(path).listFiles()
           .filter(_.getName.startsWith("stage_"))
           .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d)))

@@ -68,7 +68,38 @@ final case class HistBuffer(
     var overflow: Long,
     var entries: Long,
     var sumx: Double,
-    var sumx2: Double)
+    var sumx2: Double) {
+
+  /** TH1 `Fill(x, wt)` on the axis `[lo, hi)` cut into `counts.length` bins
+    * of width `w`: the one place the bin-edge convention lives. Bin i covers
+    * [lo + i*w, lo + (i+1)*w) (identical formula to the SQL oracle:
+    * floor((x-lo)/w)), below lo underflows, >= hi overflows; `entries`,
+    * `sumx` and `sumx2` accumulate the weight.
+    */
+  def fill(x: Double, wt: Long, lo: Double, hi: Double, w: Double): Unit = {
+    if (x < lo) underflow += wt
+    else if (x >= hi) overflow += wt
+    else {
+      val bin = math.floor((x - lo) / w).toInt
+      counts(math.min(bin, counts.length - 1)) += wt
+    }
+    entries += wt
+    sumx += x * wt
+    sumx2 += x * x * wt
+  }
+
+  /** TH1 `Add`: merges another partial on the same axis into this one */
+  def add(o: HistBuffer): Unit = {
+    var i = 0
+    while (i < counts.length) { counts(i) += o.counts(i); i += 1 }
+    underflow += o.underflow; overflow += o.overflow
+    entries += o.entries; sumx += o.sumx; sumx2 += o.sumx2
+  }
+}
+
+object HistBuffer {
+  def empty(nbins: Int): HistBuffer = HistBuffer(new Array[Long](nbins), 0L, 0L, 0L, 0.0, 0.0)
+}
 
 /** Single-pass fixed-range histogram as a typed `Aggregator` (partial/final
   * merge maps 1:1 onto the reference's per-slot fill + end-of-loop merge).
@@ -80,41 +111,14 @@ final class HistogramAggregator(nbins: Int, lo: Double, hi: Double)
     extends Aggregator[Seq[Double], HistBuffer, Histogram] {
   private val w = (hi - lo) / nbins
 
-  override def zero: HistBuffer =
-    HistBuffer(Array.fill[Long](nbins)(0L), 0L, 0L, 0L, 0.0, 0.0)
+  override def zero: HistBuffer = HistBuffer.empty(nbins)
 
   override def reduce(b: HistBuffer, in: Seq[Double]): HistBuffer = {
-    if (in != null) {
-      var i = 0
-      val n = in.length
-      while (i < n) {
-        val x = in(i)
-        if (x < lo) b.underflow += 1
-        else if (x >= hi) b.overflow += 1
-        else {
-          // identical formula to the SQL oracle: floor((x-lo)/w)
-          val bin = math.floor((x - lo) / w).toInt
-          b.counts(math.min(bin, nbins - 1)) += 1
-        }
-        b.entries += 1
-        b.sumx += x
-        b.sumx2 += x * x
-        i += 1
-      }
-    }
+    if (in != null) in.foreach(b.fill(_, 1L, lo, hi, w))
     b
   }
 
-  override def merge(a: HistBuffer, b: HistBuffer): HistBuffer = {
-    var i = 0
-    while (i < nbins) { a.counts(i) += b.counts(i); i += 1 }
-    a.underflow += b.underflow
-    a.overflow += b.overflow
-    a.entries += b.entries
-    a.sumx += b.sumx
-    a.sumx2 += b.sumx2
-    a
-  }
+  override def merge(a: HistBuffer, b: HistBuffer): HistBuffer = { a.add(b); a }
 
   override def finish(b: HistBuffer): Histogram =
     Histogram(nbins, lo, hi, b.counts, b.underflow, b.overflow, b.entries, b.sumx, b.sumx2)

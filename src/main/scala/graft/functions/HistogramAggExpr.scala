@@ -58,23 +58,7 @@ case class HistogramAggExpr(
   // lazy: child may still be unresolved while rules copy this node around
   private lazy val isArrayInput = child.dataType.isInstanceOf[ArrayType]
 
-  override def createAggregationBuffer(): HistBuffer =
-    HistBuffer(Array.fill[Long](nbins)(0L), 0L, 0L, 0L, 0.0, 0.0)
-
-  /** weighted fill: counts accumulate integer weights (TH1-style Fill(x, w);
-    * the unweighted path is wt = 1)
-    */
-  @inline private def fill(b: HistBuffer, x: Double, wt: Long): Unit = {
-    if (x < lo) b.underflow += wt
-    else if (x >= hi) b.overflow += wt
-    else {
-      val bin = math.floor((x - lo) / w).toInt
-      b.counts(math.min(bin, nbins - 1)) += wt
-    }
-    b.entries += wt
-    b.sumx += x * wt
-    b.sumx2 += x * x * wt
-  }
+  override def createAggregationBuffer(): HistBuffer = HistBuffer.empty(nbins)
 
   override def update(b: HistBuffer, input: InternalRow): HistBuffer = {
     val v = child.eval(input)
@@ -97,22 +81,16 @@ case class HistogramAggExpr(
           var i = 0
           val n = a.numElements()
           while (i < n) {
-            if (!a.isNullAt(i)) fill(b, a.getDouble(i), wt)
+            if (!a.isNullAt(i)) b.fill(a.getDouble(i), wt, lo, hi, w)
             i += 1
           }
-        } else fill(b, v.asInstanceOf[Double], wt)
+        } else b.fill(v.asInstanceOf[Double], wt, lo, hi, w)
       }
     }
     b
   }
 
-  override def merge(a: HistBuffer, b: HistBuffer): HistBuffer = {
-    var i = 0
-    while (i < nbins) { a.counts(i) += b.counts(i); i += 1 }
-    a.underflow += b.underflow; a.overflow += b.overflow
-    a.entries += b.entries; a.sumx += b.sumx; a.sumx2 += b.sumx2
-    a
-  }
+  override def merge(a: HistBuffer, b: HistBuffer): HistBuffer = { a.add(b); a }
 
   override def eval(b: HistBuffer): Any =
     InternalRow(nbins, lo, hi, new GenericArrayData(b.counts),
@@ -145,7 +123,7 @@ case class HistogramAggExpr(
 }
 
 object HistogramAggExpr {
-  /** struct layout consumed by the facade's structToHistogram */
+  /** struct layout of the SQL-registered `graft_histogram` result */
   val resultType: StructType = StructType(Seq(
     StructField("nbins", IntegerType, false), StructField("lo", DoubleType, false),
     StructField("hi", DoubleType, false),

@@ -6,7 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{Histogram, HistogramAggregator}
+import org.apache.spark.sql.graftbridge.GraftSql
+
+import graft.functions.Histogram
 
 /** Lazy result proxy — the Spark analog of the reference's
   * `TActionResultProxy<T>` (reference: TDataFrame.hxx:170-236): first access
@@ -48,14 +50,19 @@ private[tdf] final case class Booked(steps: Vector[Step], spec: ActionSpec, resu
 
 /** Shared root registry of booked (plan, action) pairs — the analog of the
   * reference's `TDataFrameImpl` (TDataFrame.hxx:1336-1351, run loop
-  * :1362-1421). On first result access it compiles every booked aggregating
-  * action into ONE Spark job over ONE scan, using conditional aggregation
-  * (`agg(f(when(pred_i, x_i)))` over the common root with all derived columns
-  * attached). Auto-ranged histograms need a range pre-pass: their min/max ride
-  * along in the first job, then all of them share a single second job. This is
-  * the piece Spark does not provide across actions (one job per action is the
-  * default); everything inside the fused plan — pushdown, pruning, partial
-  * aggregation, codegen — is Catalyst's.
+  * :1362-1421). On first result access it runs every booked aggregating
+  * action in ONE Spark job over ONE scan. Below the job's single aggregate, a
+  * whole-stage-codegen projection computes each distinct filter node's flag
+  * once per entry — a node's predicate runs only on entries its parent
+  * passed, the reference's per-entry filter memoization
+  * (TDataFrame.hxx:1293-1306) — and each distinct value column once. The
+  * aggregate ([[BookedAgg]]) keeps one per-slot buffer holding every
+  * action's partial state, runs only the ops whose node passed, and merges
+  * the slots' partials at the end of the loop (the reference's per-slot
+  * results, :483-517). Auto-ranged histograms need a range pre-pass: their
+  * min/max ride along in the first job, then all of them share a single
+  * second job. Scan, pushdown, pruning, codegen and the partial/final
+  * aggregation exchange are Catalyst's.
   */
 final class BookingContext private[tdf] (val base: DataFrame) {
   // Frame identity captured eagerly so it is still printable after the owning
@@ -116,108 +123,6 @@ final class BookingContext private[tdf] (val base: DataFrame) {
   private def withDefines(defines: Seq[DefineStep]): DataFrame =
     defines.foldLeft(base) { case (df, DefineStep(n, e)) => df.withColumn(n, e) }
 
-  /** Double-valued view of a column for Min/Max/Mean/Sum; arrays are handled
-    * elementwise (the reference's container overloads, TDataFrame.hxx:451-459).
-    */
-  private def isArray(wide: DataFrame, c: String): Boolean =
-    wide.schema(c).dataType.isInstanceOf[ArrayType]
-
-  private def dvalOf(wide: DataFrame, c: String): Column =
-    if (isArray(wide, c)) col(c).cast(ArrayType(DoubleType)) else col(c).cast(DoubleType)
-
-  /** Compile one booked action into (aggregate columns, result filler).
-    * `histoInput`: name of the pre-projected input column for fixed-range
-    * histograms — the imperative aggregate then reads a plain attribute while
-    * whole-stage codegen computes the conditional value (measurably faster
-    * than interpreting the `when` tree per row inside the aggregate).
-    */
-  private def compile(
-      b: Booked, wide: DataFrame, id: Int,
-      histoInput: Option[String] = None): (Seq[Column], Row => Unit) = {
-    val pred = predOf(b.steps)
-    def a(i: Int) = s"__a${id}_$i"
-    def dcol(c: String): Column = dvalOf(wide, c)
-    b.spec match {
-      case CountSpec =>
-        (Seq(count(when(pred, lit(1))).as(a(0))),
-          row => fill(b.result, row.getAs[Long](a(0))))
-      case SumSpec(c) =>
-        val v = if (isArray(wide, c))
-          sum(when(pred, aggregate(dcol(c), lit(0.0), _ + _)))
-        else sum(when(pred, dcol(c)))
-        (Seq(coalesce(v, lit(0.0)).as(a(0))),
-          row => fill(b.result, row.getAs[Double](a(0))))
-      case MinSpec(c) =>
-        val v = if (isArray(wide, c)) min(when(pred, array_min(dcol(c)))) else min(when(pred, dcol(c)))
-        val dflt = if (compat) Double.MaxValue else Double.NaN
-        (Seq(coalesce(v, lit(dflt)).as(a(0))),
-          row => fill(b.result, row.getAs[Double](a(0))))
-      case MaxSpec(c) =>
-        val v = if (isArray(wide, c)) max(when(pred, array_max(dcol(c)))) else max(when(pred, dcol(c)))
-        // reference quirk: empty Max → numeric_limits<double>::min() (tiniest
-        // positive double), tests/regression_zeroentries.cxx:36
-        val dflt = if (compat) java.lang.Double.MIN_NORMAL else Double.NaN
-        (Seq(coalesce(v, lit(dflt)).as(a(0))),
-          row => fill(b.result, row.getAs[Double](a(0))))
-      case MeanSpec(c) =>
-        val (s, n) =
-          if (isArray(wide, c))
-            (sum(when(pred, aggregate(dcol(c), lit(0.0), _ + _))),
-              sum(when(pred, size(col(c)).cast(LongType))))
-          else (sum(when(pred, dcol(c))), count(when(pred, dcol(c))))
-        (Seq(s.as(a(0)), n.as(a(1))), { row =>
-          val cnt = Option(row.getAs[Any](a(1))).map(_.toString.toLong).getOrElse(0L)
-          val mean =
-            if (cnt == 0L) { if (compat) 0.0 else Double.NaN }
-            else row.getAs[Double](a(0)) / cnt
-          fill(b.result, mean)
-        })
-      case TakeSpec(c) =>
-        (Seq(collect_list(when(pred, col(c))).as(a(0))),
-          row => fill(b.result, row.getSeq[Any](row.fieldIndex(a(0)))))
-      case HistoSpec(c, nbins, Some((lo, hi)), weightCol) =>
-        // native TypedImperativeAggregate (handles double and array<double>)
-        val in = histoInput.map(col).getOrElse(when(pred, dcol(c)))
-        val agg = weightCol match {
-          case Some(wc) => graft.functions.HistogramAggExpr.histoWeighted(
-            in, when(pred, col(wc)).cast("long"), nbins, lo, hi)
-          case None => graft.functions.HistogramAggExpr.histo(in, nbins, lo, hi)
-        }
-        (Seq(agg.as(a(0))), { row =>
-          val r = row.getStruct(row.fieldIndex(a(0)))
-          fill(b.result, structToHistogram(r))
-        })
-      case HistoSpec(_, _, None, _) =>
-        throw new IllegalStateException("auto-range histo must be range-resolved before compile")
-      case _: ForeachSpec =>
-        throw new IllegalStateException("Foreach actions are executed by runFused, not compiled")
-      case ReportSpec =>
-        val filters = b.steps.collect { case f: FilterStep => f }
-        if (filters.isEmpty)
-          // no cuts → empty report; a dummy count keeps the fused agg non-empty
-          return (Seq(count(lit(1)).as(a(0))), _ => fill(b.result, Seq.empty[CutInfo]))
-        val cols = filters.zipWithIndex.flatMap { case (_, i) =>
-          val upTo = filters.take(i + 1).map(_.pred).reduce(_ && _)
-          val before = filters.take(i).map(_.pred).reduceOption(_ && _).getOrElse(lit(true))
-          Seq(count(when(upTo, lit(1))).as(a(2 * i)), count(when(before, lit(1))).as(a(2 * i + 1)))
-        }
-        (cols, { row =>
-          val rep = filters.zipWithIndex.map { case (f, i) =>
-            CutInfo(f.name.getOrElse(s"filter_$i"),
-              row.getAs[Long](a(2 * i)), row.getAs[Long](a(2 * i + 1)))
-          }
-          fill(b.result, rep)
-        })
-    }
-  }
-
-  private def structToHistogram(r: Row): Histogram =
-    Histogram(
-      r.getAs[Int]("nbins"), r.getAs[Double]("lo"), r.getAs[Double]("hi"),
-      r.getSeq[Long](r.fieldIndex("counts")).toArray,
-      r.getAs[Long]("underflow"), r.getAs[Long]("overflow"),
-      r.getAs[Long]("entries"), r.getAs[Double]("sumx"), r.getAs[Double]("sumx2"))
-
   /** Execute every pending action; ideally one job (plus one shared job for
     * auto-ranged histograms). Clears the pending list afterwards.
     */
@@ -241,36 +146,8 @@ final class BookingContext private[tdf] (val base: DataFrame) {
   }
 
   private def runFused(allBatch: Vector[Booked], defines: Vector[DefineStep]): Unit = {
-    val base = withDefines(defines)
+    val wide = withDefines(defines)
     val (foreaches, batch) = allBatch.partition(_.spec.isInstanceOf[ForeachSpec])
-
-    // Pre-project fixed-range histogram inputs (conditional value computed in
-    // whole-stage codegen; the imperative aggregate reads a plain attribute).
-    val histoInputs = mutable.Map.empty[Int, String]
-    val wide = batch.zipWithIndex.foldLeft(base) {
-      case (df, (Booked(steps, HistoSpec(c, _, Some(_), _), _), i)) =>
-        val name = s"__hin$i"
-        histoInputs(i) = name
-        df.withColumn(name, when(predOf(steps), dvalOf(base, c)))
-      case (df, _) => df
-    }
-
-    // Pass-1 aggregates: every fixed action, plus (min,max) probes for
-    // auto-ranged histos (mirrors the reference's deferred-axis FillOperation,
-    // TDataFrame.hxx:410-480, as a two-pass plan).
-    val fixed = mutable.ArrayBuffer.empty[(Seq[Column], Row => Unit)]
-    val autos = mutable.ArrayBuffer.empty[(Booked, String, String)] // (action, minAlias, maxAlias)
-    batch.zipWithIndex.foreach {
-      case (b @ Booked(steps, HistoSpec(c, _, None, _), _), i) =>
-        val pred = predOf(steps)
-        val (mn, mx) = (s"__hmin$i", s"__hmax$i")
-        val base2 =
-          if (isArray(wide, c)) (array_min(col(c)).cast(DoubleType), array_max(col(c)).cast(DoubleType))
-          else (col(c).cast(DoubleType), col(c).cast(DoubleType))
-        fixed += ((Seq(min(when(pred, base2._1)).as(mn), max(when(pred, base2._2)).as(mx)), _ => ()))
-        autos += ((b, mn, mx))
-      case (b, i) => fixed += compile(b, wide, i, histoInputs.get(i))
-    }
     // If side-effecting Foreach actions share the batch with aggregates,
     // persist the common frame so the scan is shared across the jobs
     // (reference: every booked action runs in the same loop as the Foreach
@@ -278,7 +155,7 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     val shareScan = foreaches.nonEmpty && batch.nonEmpty
     if (shareScan) { wide.persist(); () }
     try {
-      if (batch.nonEmpty) runAggregates(batch, wide, fixed, autos)
+      if (batch.nonEmpty) runAggregates(batch, wide)
       foreaches.foreach { case Booked(steps, ForeachSpec(cols, casts, f), result) =>
         // UpCast, not cast: widening (int→double) coerces, but a LOSSY
         // narrowing (double column into an Int lambda) fails analysis on the
@@ -286,9 +163,8 @@ final class BookingContext private[tdf] (val base: DataFrame) {
         val sel = if (casts.isEmpty) cols.map(col)
           else cols.zip(casts).map {
             case (c, Some(dt)) =>
-              org.apache.spark.sql.graftbridge.GraftSql.column(
-                org.apache.spark.sql.catalyst.expressions.UpCast(
-                  org.apache.spark.sql.graftbridge.GraftSql.expression(col(c)), dt))
+              GraftSql.column(org.apache.spark.sql.catalyst.expressions.UpCast(
+                GraftSql.expression(col(c)), dt))
             case (c, None) => col(c) // opaque argument type: raw passthrough
           }
         wide.where(predOf(steps)).select(sel: _*)
@@ -301,34 +177,173 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     } finally if (shareScan) { wide.unpersist(); () }
   }
 
-  private def runAggregates(
-      batch: Vector[Booked], wide: DataFrame,
-      fixed: mutable.ArrayBuffer[(Seq[Column], Row => Unit)],
-      autos: mutable.ArrayBuffer[(Booked, String, String)]): Unit = {
-    val aggCols = fixed.flatMap(_._1).toSeq
-    val row = wide.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-    fixed.foreach { case (_, f) => f(row) }
+  /** Pass 1 runs every fixed action plus a (min, max) probe per auto-ranged
+    * histogram (the reference's deferred-axis FillOperation,
+    * TDataFrame.hxx:410-480, as a two-pass plan); pass 2 fills every
+    * auto-ranged histogram on its resolved axis. Each pass is one job.
+    */
+  private def runAggregates(batch: Vector[Booked], wide: DataFrame): Unit = {
+    val pass1 = new Lowering(wide)
+    val resolved = mutable.ArrayBuffer.empty[Booked]
+    pass1.run(batch.map {
+      case Booked(steps, HistoSpec(c, nbins, None, wc), result) =>
+        val (k, v) = (pass1.node(steps), pass1.value(c))
+        val (d, l) = (pass1.doubles(2), pass1.longs(2))
+        pass1.op(ExtremumOp(k, v, d, l, isMin = true))
+        pass1.op(ExtremumOp(k, v, d + 1, l + 1, isMin = false))
+        (s: SlotBuffer, _: Row) => {
+          val mn = if (s.longs(l) == 0L) 0.0 else s.doubles(d)
+          val mx = if (s.longs(l + 1) == 0L) 1.0 else s.doubles(d + 1)
+          // TH1-style padding for the degenerate lo == hi case
+          val (lo, hi) = if (mn == mx) (mn - 0.5, mx + 0.5) else (mn, mx + (mx - mn) * 1e-9)
+          resolved += Booked(steps, HistoSpec(c, nbins, Some((lo, hi)), wc), result)
+          ()
+        }
+      case b => lower(b, pass1)
+    })
+    if (resolved.nonEmpty) {
+      val pass2 = new Lowering(wide)
+      pass2.run(resolved.toVector.map(lower(_, pass2)))
+    }
+  }
 
-    if (autos.nonEmpty) {
-      // Resolve ranges (TH1-style padding for the degenerate lo==hi case),
-      // then one more fused job for all auto histos.
-      val resolved = autos.toVector.map { case (b, mnA, mxA) =>
-        val mn = Option(row.getAs[Any](mnA)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-        val mx = Option(row.getAs[Any](mxA)).map(_.asInstanceOf[Double]).getOrElse(1.0)
-        val (lo, hi) = if (mn == mx) (mn - 0.5, mx + 0.5) else (mn, mx + (mx - mn) * 1e-9)
-        val HistoSpec(c, nbins, _, wc) = b.spec: @unchecked
-        Booked(b.steps, HistoSpec(c, nbins, Some((lo, hi)), wc), b.result)
-      }
-      val wide2 = resolved.zipWithIndex.foldLeft(wide) { case (df, (b, i)) =>
-        val HistoSpec(c, _, _, _) = b.spec: @unchecked
-        df.withColumn(s"__ain$i", when(predOf(b.steps), dvalOf(wide, c)))
-      }
-      val compiled = resolved.zipWithIndex.map { case (b, i) =>
-        compile(b, wide2, i, Some(s"__ain$i"))
-      }
-      val cols2 = compiled.flatMap(_._1)
-      val row2 = wide2.agg(cols2.head, cols2.tail: _*).collect()(0)
-      compiled.foreach { case (_, f) => f(row2) }
+  /** Books one action onto a pass: its op(s) in the fused aggregate (or a
+    * `collect_list` column for Take); returns the decoder that fills its
+    * result from the merged slot buffer and the aggregate row.
+    */
+  private def lower(b: Booked, p: Lowering): (SlotBuffer, Row) => Unit = {
+    val k = p.node(b.steps)
+    def extremum(c: String, isMin: Boolean, empty: Double): (SlotBuffer, Row) => Unit = {
+      val (d, l) = (p.doubles(1), p.longs(1))
+      p.op(ExtremumOp(k, p.value(c), d, l, isMin))
+      (s, _) => fill(b.result, if (s.longs(l) == 0L) empty else s.doubles(d))
+    }
+    b.spec match {
+      case CountSpec =>
+        val l = p.longs(1)
+        p.op(CountOp(k, l))
+        (s, _) => fill(b.result, s.longs(l))
+      case SumSpec(c) =>
+        val d = p.doubles(1)
+        p.op(SumOp(k, p.value(c), d))
+        (s, _) => fill(b.result, s.doubles(d))
+      case MeanSpec(c) =>
+        val (d, l) = (p.doubles(1), p.longs(1))
+        p.op(MeanOp(k, p.value(c), d, l))
+        (s, _) => fill(b.result,
+          if (s.longs(l) == 0L) { if (compat) 0.0 else Double.NaN } else s.doubles(d) / s.longs(l))
+      case MinSpec(c) => extremum(c, isMin = true, if (compat) Double.MaxValue else Double.NaN)
+      // reference quirk: empty Max → numeric_limits<double>::min() (tiniest
+      // positive double), tests/regression_zeroentries.cxx:36
+      case MaxSpec(c) =>
+        extremum(c, isMin = false, if (compat) java.lang.Double.MIN_NORMAL else Double.NaN)
+      case TakeSpec(c) =>
+        val name = p.take(k, c)
+        (_, row) => fill(b.result, row.getSeq[Any](row.fieldIndex(name)))
+      case HistoSpec(c, nbins, Some((lo, hi)), weightCol) =>
+        require(hi > lo, s"Histo: resolved axis [$lo, $hi) of '$c' is empty")
+        val h = p.hist(nbins)
+        p.op(HistoOp(k, p.value(c), weightCol.fold(-1)(p.weight), h, nbins, lo, hi))
+        (s, _) => {
+          val hb = s.hists(h)
+          fill(b.result, Histogram(nbins, lo, hi, hb.counts, hb.underflow, hb.overflow,
+            hb.entries, hb.sumx, hb.sumx2))
+        }
+      case HistoSpec(_, _, None, _) =>
+        throw new IllegalStateException("auto-range histo must be range-resolved before lowering")
+      case _: ForeachSpec =>
+        throw new IllegalStateException("Foreach actions are executed by runFused, not lowered")
+      case ReportSpec =>
+        val names = b.steps.collect { case FilterStep(n, _) => n }.zipWithIndex.map {
+          case (n, i) => n.getOrElse(s"filter_$i")
+        }
+        // one count per prefix of the cut chain, the empty prefix included:
+        // cut i passes count i + 1 out of count i
+        val prefixes = if (names.isEmpty) Vector.empty else -1 +: p.chain(b.steps)
+        val l = p.longs(prefixes.length)
+        prefixes.zipWithIndex.foreach { case (node, i) => p.op(CountOp(node, l + i)) }
+        (s, _) => fill(b.result, names.zipWithIndex.map { case (n, i) =>
+          CutInfo(n, s.longs(l + i + 1), s.longs(l + i))
+        })
+    }
+  }
+
+  /** One pass of a batch, lowered onto one projection and one [[BookedAgg]].
+    * Filter node k is a (parent node, predicate) pair, each distinct pair
+    * once (Column equality): its flag is `coalesce(parent && pred, false)`,
+    * projected once, so a predicate runs once per entry and only on entries
+    * its parent passed. Each distinct value column is projected once, cast to
+    * double, `array<double>` or (weights) long.
+    */
+  private final class Lowering(wide: DataFrame) {
+    private val nodes = mutable.ArrayBuffer.empty[(Int, Column)]
+    private val values = mutable.ArrayBuffer.empty[(String, ValueKind)]
+    private val takes = mutable.ArrayBuffer.empty[(Int, String)]
+    private val ops = mutable.ArrayBuffer.empty[BookedOp]
+    private val bins = mutable.ArrayBuffer.empty[Int]
+    private var nLongs = 0
+    private var nDoubles = 0
+
+    /** the nodes after each filter of a chain */
+    def chain(steps: Vector[Step]): Vector[Int] =
+      steps.collect { case FilterStep(_, p) => p }.scanLeft(-1) { (parent, p) =>
+        val i = nodes.indexOf((parent, p))
+        if (i >= 0) i else { nodes += ((parent, p)); nodes.length - 1 }
+      }.tail
+    /** the node gating a chain's actions; -1 (every entry) without filters */
+    def node(steps: Vector[Step]): Int = chain(steps).lastOption.getOrElse(-1)
+
+    private def slot(key: (String, ValueKind)): Int = {
+      val i = values.indexOf(key)
+      if (i >= 0) i else { values += key; values.length - 1 }
+    }
+    /** a value column read elementwise when it is an array (the reference's
+      * container overloads, TDataFrame.hxx:451-459)
+      */
+    def value(c: String): Int =
+      slot((c, if (wide.schema(c).dataType.isInstanceOf[ArrayType]) Elements else Scalar))
+    def weight(c: String): Int = slot((c, Weight))
+    def longs(n: Int): Int = { nLongs += n; nLongs - n }
+    def doubles(n: Int): Int = { nDoubles += n; nDoubles - n }
+    def hist(nbins: Int): Int = { bins += nbins; bins.length - 1 }
+    def op(o: BookedOp): Unit = ops += o
+    /** the aggregate column holding a Take's `collect_list` */
+    def take(node: Int, c: String): String = { takes += ((node, c)); s"__tdf_t${takes.length - 1}" }
+
+    /** Runs the pass as one job (none when no action needs one) and hands
+      * every decoder the merged buffer and the aggregate row.
+      */
+    def run(decoders: Seq[(SlotBuffer, Row) => Unit]): Unit = {
+      val (buf, row) =
+        if (ops.isEmpty && takes.isEmpty) (null, null)
+        else {
+          def flag(k: Int) = col(s"__tdf_n$k")
+          val depth = mutable.ArrayBuffer.empty[Int]
+          nodes.foreach { case (parent, _) => depth += (if (parent < 0) 0 else depth(parent) + 1) }
+          // one select per depth: a node's flag reads its parent's
+          val flagged = nodes.indices.groupBy(depth).toSeq.sortBy(_._1).foldLeft(wide) {
+            case (df, (_, ks)) => df.select(col("*") +: ks.map { k =>
+              val (parent, p) = nodes(k)
+              coalesce(if (parent < 0) p else flag(parent) && p, lit(false)).as(s"__tdf_n$k")
+            }: _*)
+          }
+          val projected = flagged.select(nodes.indices.map(flag) ++
+            values.zipWithIndex.map { case ((c, kind), v) =>
+              col(c).cast(kind.dataType).as(s"__tdf_v$v")
+            } ++ takes.zipWithIndex.map { case ((k, c), t) =>
+              (if (k < 0) col(c) else when(flag(k), col(c))).as(s"__tdf_t$t")
+            }: _*)
+          val agg = BookedAgg(
+            (nodes.indices.map(flag) ++ values.indices.map(v => col(s"__tdf_v$v")))
+              .map(GraftSql.expression),
+            nodes.length, values.map(_._2).toSeq, ops.toSeq, nLongs, nDoubles, bins.toSeq)
+          val aggCols =
+            (if (ops.isEmpty) Nil else Seq(GraftSql.column(agg.toAggregateExpression()))) ++
+              takes.indices.map(t => collect_list(col(s"__tdf_t$t")).as(s"__tdf_t$t"))
+          val row = projected.agg(aggCols.head, aggCols.tail: _*).collect()(0)
+          (if (ops.isEmpty) null else agg.deserialize(row.getAs[Array[Byte]](0)), row)
+        }
+      decoders.foreach(_(buf, row))
     }
   }
 }

@@ -33,13 +33,21 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("facade fused job reads only referenced columns (pruning)") {
+    import graft.tdf.TDF
     val li = Tables.lineitem(spark, "/root/testdata/sf0.001")
-    val agg = li
-      .withColumn("z", $"l_extendedprice" * (lit(1.0) - $"l_discount"))
-      .agg(count(when($"z" > 1000.0, lit(1))).as("n"))
-    val scan = agg.queryExecution.executedPlan.toString
-    assert(scan.contains("ReadSchema: struct<l_extendedprice:double,l_discount:double>"),
-      s"expected 2-column pruned scan:\n$scan")
+    val plans = SparkTest.executedPlans(spark) {
+      val z = TDF(li).Define("z", $"l_extendedprice" * (lit(1.0) - $"l_discount"))
+        .Filter($"z" > 1000.0)
+      val (n, h, t) = (z.Count(), z.Histo("z", 10, 0.0, 100000.0), z.Take("l_quantity"))
+      assert(n() > 0L && h().entries == n() && t().size == n())
+    }
+    assert(plans.size == 1, s"one fused pass expected, got ${plans.size}")
+    val scan = plans.head.toString
+    val read = "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(scan)
+      .map(_.group(1).split(",").map(_.takeWhile(_ != ':')).toSet).toSet
+    // Take must not widen the projection to every column
+    assert(read == Set(Set("l_quantity", "l_extendedprice", "l_discount")),
+      s"expected the 3 referenced columns in the fused scan:\n$scan")
   }
 
   test("decontamination probes broadcast; corpus never shuffles for the joins") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for the whole test run. */
 object SparkTest {
@@ -15,5 +17,31 @@ object SparkTest {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The executed plans of the queries `body` runs on `spark`, in order;
+    * adaptive plans are their final plans once run.
+    */
+  def executedPlans(spark: SparkSession)(body: => Unit): Seq[SparkPlan] = {
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener bus delivers asynchronously and in order: once a marker
+      // query's plan has arrived, every plan of `body` has too
+      val token = s"executed-plans-marker-${System.nanoTime()}"
+      spark.range(1).select(org.apache.spark.sql.functions.lit(token)).collect()
+      def seen = plans.asScala.exists(_.toString.contains(token))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
+      plans.asScala.toSeq.takeWhile(!_.toString.contains(token))
+    } finally spark.listenerManager.unregister(listener)
   }
 }

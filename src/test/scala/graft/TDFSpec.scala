@@ -654,6 +654,135 @@ class TDFSpec extends AnyFunSuite {
     }
   }
 
+  test("array Sum and Mean skip null elements and count only non-null ones") {
+    val d = TDF(Seq((1, Seq[java.lang.Double](1.0, null, 3.0)), (2, Seq[java.lang.Double](4.0)))
+      .toDF("id", "a"))
+    val (s, m, h) = (d.Sum("a"), d.Mean("a"), d.Histo("a", 4, 0.0, 8.0))
+    assert(s() == 8.0)
+    assert(m() == 8.0 / 3)
+    assert(h().sumx == 8.0 && h().entries == 3L)
+    assert(d.Min("a")() == 1.0 && d.Max("a")() == 4.0)
+  }
+
+  test("fused aggregate: every action kind on overlapping nodes equals the action run alone") {
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import org.apache.spark.sql.types.ArrayType
+    import graft.functions.{Histogram, HistogramAggExpr}
+    // integral values with nulls, NaN, -0.0 / 0.0, null and empty arrays,
+    // null array elements, null and zero weights
+    val rows = (0 until 40).map { i =>
+      val x =
+        if (i % 11 == 3) None else if (i % 13 == 5) Some(Double.NaN)
+        else if (i % 7 == 0) Some(-0.0) else if (i % 7 == 1) Some(0.0)
+        else Some((i % 17 - 8).toDouble)
+      val y = if (i % 9 == 4) None else if (i % 10 == 6) Some(-0.0) else Some((i * 7 % 23 - 11).toDouble)
+      val a = i % 8 match {
+        case 0 => None
+        case 1 => Some(Seq.empty[Option[Double]])
+        case 2 => Some(Seq(None, Some(-0.0), Some(3.0)))
+        case _ => Some(Seq(Some((i % 5).toDouble), None, Some(-(i % 3).toDouble), Some(0.0)))
+      }
+      val w = i % 6 match { case 0 => None; case 1 => Some(0L); case _ => Some((i % 4).toLong) }
+      (i, x, y, i * i % 50, a, w)
+    }
+    val data = rows.toDF("id", "x", "y", "n", "a", "w")
+    // filter chains: shared root, a two-deep chain, the same predicate under
+    // two different parents
+    val chains: Seq[(String, Seq[(String, Column)])] = Seq(
+      "root" -> Nil,
+      "pos" -> Seq("pos" -> ($"x" > 0)),
+      "pos/even" -> Seq("pos" -> ($"x" > 0), "even" -> ($"id" % 2 === 0)),
+      "even" -> Seq("even" -> ($"id" % 2 === 0)),
+      "low/y" -> Seq("low" -> ($"id" < 25), "y" -> ($"y" > -3.0)))
+    val cols = Seq("x", "y", "n", "a")
+
+    def canon(h: Histogram): Seq[Any] =
+      Seq(h.lo, h.hi, h.underflow, h.overflow, h.entries, h.sumx, h.sumx2) ++ h.counts
+    def booked(df: DataFrame, compat: Boolean): Seq[(String, () => Seq[Any])] = {
+      val d = TDF(df, compat = compat)
+      chains.flatMap { case (name, chain) =>
+        val t = chain.foldLeft(d) { case (n, (cut, p)) => n.Filter(cut, p) }
+        def one[T](key: String, r: graft.tdf.Result[T])(f: T => Seq[Any]) =
+          s"$name/$key" -> (() => f(r()))
+        Seq(one("count", t.Count())(Seq(_)), one("take", t.Take("x"))(_.map(_.asInstanceOf[Double])),
+          one("report", t.Report())(_.flatMap(c => Seq(c.pass, c.all))),
+          one("histo x", t.Histo("x", 5, -4.0, 4.0))(canon),
+          one("histo a", t.Histo("a", 4, -1.0, 3.0))(canon),
+          one("auto y", t.Histo("y", 6))(canon), one("auto a", t.Histo("a", 3))(canon),
+          one("weighted y", t.HistoWeighted("y", "w", 4, -10.0, 10.0))(canon),
+          one("weighted auto a", t.HistoWeighted("a", "w", 3, 0.0, 0.0))(canon)) ++
+          cols.flatMap { c =>
+            Seq(one(s"sum $c", t.Sum(c))(Seq(_)), one(s"mean $c", t.Mean(c))(Seq(_)),
+              one(s"min $c", t.Min(c))(Seq(_)), one(s"max $c", t.Max(c))(Seq(_)))
+          }
+      }
+    }
+    // each action alone, as plain DataFrame aggregations; histograms through
+    // the standalone graft_histogram aggregate on the filtered frame
+    // (an empty Mean/Min/Max is None here: its value depends on compat)
+    def alone(df: DataFrame): Map[String, Seq[Any]] = {
+      def vals(f: DataFrame, c: String) =
+        if (f.schema(c).dataType.isInstanceOf[ArrayType]) f.select(explode(col(c).cast("array<double>")).as("e"))
+        else f.select(col(c).cast("double").as("e"))
+      def orElse(r: Row, i: Int, empty: Double): Double = if (r.isNullAt(i)) empty else r.getDouble(i)
+      def histo(f: DataFrame, c: String, n: Int, lo: Double, hi: Double, w: Option[String]) = {
+        val in = col(c).cast(if (f.schema(c).dataType.isInstanceOf[ArrayType]) "array<double>" else "double")
+        val r = f.agg(w.fold(HistogramAggExpr.histo(in, n, lo, hi))(
+          wc => HistogramAggExpr.histoWeighted(in, col(wc).cast("long"), n, lo, hi))).head().getStruct(0)
+        Seq(lo, hi, r.getAs[Long]("underflow"), r.getAs[Long]("overflow"), r.getAs[Long]("entries"),
+          r.getAs[Double]("sumx"), r.getAs[Double]("sumx2")) ++ r.getSeq[Long](r.fieldIndex("counts"))
+      }
+      def auto(f: DataFrame, c: String, n: Int, w: Option[String]) = {
+        val r = vals(f, c).agg(min("e"), max("e")).head()
+        val (mn, mx) = (orElse(r, 0, 0.0), orElse(r, 1, 1.0))
+        val (lo, hi) = if (mn == mx) (mn - 0.5, mx + 0.5) else (mn, mx + (mx - mn) * 1e-9)
+        histo(f, c, n, lo, hi, w)
+      }
+      chains.flatMap { case (name, chain) =>
+        val f = chain.foldLeft(df) { case (g, (_, p)) => g.where(p) }
+        val prefixes = chain.indices.map(i => chain.take(i + 1).foldLeft(df) { case (g, (_, p)) => g.where(p) }.count())
+        (Seq("count" -> Seq(f.count()),
+          "take" -> f.select("x").collect().toSeq.filterNot(_.isNullAt(0)).map(_.getDouble(0)),
+          "report" -> (df.count() +: prefixes).sliding(2).toSeq.filter(_.size == 2).flatMap(p => Seq(p(1), p(0))),
+          "histo x" -> histo(f, "x", 5, -4.0, 4.0, None), "histo a" -> histo(f, "a", 4, -1.0, 3.0, None),
+          "auto y" -> auto(f, "y", 6, None), "auto a" -> auto(f, "a", 3, None),
+          "weighted y" -> histo(f, "y", 4, -10.0, 10.0, Some("w")),
+          "weighted auto a" -> auto(f, "a", 3, Some("w"))) ++
+          cols.flatMap { c =>
+            val r = vals(f, c).agg(sum("e"), avg("e"), min("e"), max("e")).head()
+            Seq(s"sum $c" -> Seq(orElse(r, 0, 0.0))) ++
+              Seq("mean", "min", "max").zipWithIndex.map { case (s, i) =>
+                s"$s $c" -> Seq(if (r.isNullAt(i + 1)) None else r.getDouble(i + 1))
+              }
+          }).map { case (k, v) => s"$name/$k" -> v }
+      }.toMap
+    }
+    // longs exact, doubles bit-equal (the data is integral, so no sum depends
+    // on the order of its terms); Take is compared as a multiset
+    def bits(v: Seq[Any]): Seq[Any] = v.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case o => o
+    }
+    def empty(k: String, compat: Boolean): Double =
+      if (!compat) Double.NaN
+      else if (k.contains("/mean ")) 0.0
+      else if (k.contains("/min ")) Double.MaxValue
+      else java.lang.Double.MIN_NORMAL
+    for (input <- Seq(data.repartition(1), data.repartition(8), data.where(lit(false)))) {
+      input.cache()
+      val want = alone(input)
+      for (compat <- Seq(false, true); (k, r) <- booked(input, compat)) {
+        val (got, exp) = (bits(r()), bits(want(k).map { case None => empty(k, compat); case v => v }))
+        val same =
+          if (k.endsWith("/take")) got.map(_.asInstanceOf[Long]).sorted == exp.map(_.asInstanceOf[Long]).sorted
+          else got == exp
+        assert(same, s"$k (partitions ${input.rdd.getNumPartitions}, compat $compat): " +
+          s"fused ${r()} vs alone ${want(k)}")
+      }
+      input.unpersist()
+    }
+  }
+
   test("Snapshot writes a skim and reopens it") {
     val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString + "/skim"
     val d = TDF(fixture).Filter($"b1" < 5).Snapshot(dir, Seq("b1", "b2"))

@@ -1,11 +1,8 @@
 package graft.tdf
 
-import java.nio.ByteBuffer
+import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
@@ -13,38 +10,57 @@ import graft.functions.HistBuffer
 
 /** One slot's partial state of every booked action — the analog of the
   * reference's per-slot result clones (TDataFrame.hxx:483-517), flattened:
-  * each op owns a few cells of `longs` / `doubles` or one histogram of
-  * `hists`. The per-entry scratch (`pass`, the entry's values) is filled
-  * once per row by [[BookedAgg.update]] and read by every op.
+  * each op owns a few cells of `longs` / `doubles`, one histogram of `hists`
+  * or one value list of `takes` (Catalyst internal values, in entry order).
+  * A task returns its slot's buffer; the driver merges them.
   */
 private[tdf] final class SlotBuffer(
     val longs: Array[Long], val doubles: Array[Double], val hists: Array[HistBuffer],
-    nNodes: Int, nValues: Int) {
+    val takes: Array[mutable.ArrayBuffer[Any]]) extends Serializable
+
+/** One entry's scratch, filled once per row by [[BookedAgg.fold]] and read by
+  * every op. Value v sits at row ordinal `nNodes + v`.
+  */
+private[tdf] final class Entry(val nNodes: Int, nValues: Int) {
   /** did the entry pass filter node k */
   val pass = new Array[Boolean](nNodes)
   /** the entry's value v: `nul` / `x` for a double, `arr` for an array
-    * (null when the array is null or the value is a scalar), `l` for a weight
+    * (null when the array is null or the value is a scalar), `l` for a weight;
+    * a [[Raw]] value is left on the row
     */
   val nul = new Array[Boolean](nValues)
   val x = new Array[Double](nValues)
   val arr = new Array[ArrayData](nValues)
   val l = new Array[Long](nValues)
+  var row: InternalRow = _
 }
 
-/** One booked action in the fused aggregate's op table. `node` is the filter
-  * node gating it (-1: every entry); the other fields are offsets into the
-  * slot buffer and indexes of the batch's projected values.
+/** One booked action in the fused fold's op table. `node` is the filter node
+  * gating it (-1: every entry); the other fields are offsets into the slot
+  * buffer and indexes of the batch's projected values.
   */
 private[tdf] sealed abstract class BookedOp extends Serializable {
   def node: Int
-  def update(b: SlotBuffer): Unit
+  def update(b: SlotBuffer, e: Entry): Unit
   def merge(into: SlotBuffer, from: SlotBuffer): Unit
 }
 
 /** entries passing `node`, counted in `longs(l)` */
 private[tdf] final case class CountOp(node: Int, l: Int) extends BookedOp {
-  def update(b: SlotBuffer): Unit = b.longs(l) += 1
+  def update(b: SlotBuffer, e: Entry): Unit = b.longs(l) += 1
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.longs(l) += from.longs(l)
+}
+
+/** the non-null values of [[Raw]] value `v`, copied off the reused row into
+  * `takes(t)` in entry order; merged in slot order
+  */
+private[tdf] final case class TakeOp(node: Int, v: Int, dataType: DataType, t: Int)
+    extends BookedOp {
+  def update(b: SlotBuffer, e: Entry): Unit = {
+    val o = e.nNodes + v
+    if (!e.row.isNullAt(o)) b.takes(t) += InternalRow.copyValue(e.row.get(o, dataType))
+  }
+  def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.takes(t) ++= from.takes(t)
 }
 
 /** An op fed with the doubles of value `v`: one per entry for a scalar, one
@@ -52,29 +68,31 @@ private[tdf] final case class CountOp(node: Int, l: Int) extends BookedOp {
   */
 private[tdf] sealed abstract class ValueOp extends BookedOp {
   def v: Int
-  protected def add(b: SlotBuffer, x: Double): Unit
-  def update(b: SlotBuffer): Unit = {
-    val a = b.arr(v)
+  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit
+  def update(b: SlotBuffer, e: Entry): Unit = {
+    val a = e.arr(v)
     if (a != null) {
       var i = 0
       val n = a.numElements()
       while (i < n) {
-        if (!a.isNullAt(i)) add(b, a.getDouble(i))
+        if (!a.isNullAt(i)) add(b, e, a.getDouble(i))
         i += 1
       }
-    } else if (!b.nul(v)) add(b, b.x(v))
+    } else if (!e.nul(v)) add(b, e, e.x(v))
   }
 }
 
 /** Spark `sum` order: `doubles(d)` starts at 0.0 and adds each value */
 private[tdf] final case class SumOp(node: Int, v: Int, d: Int) extends ValueOp {
-  protected def add(b: SlotBuffer, x: Double): Unit = b.doubles(d) += x
+  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = b.doubles(d) += x
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.doubles(d) += from.doubles(d)
 }
 
 /** Spark `avg` partials: the sum in `doubles(d)`, the count of values in `longs(l)` */
 private[tdf] final case class MeanOp(node: Int, v: Int, d: Int, l: Int) extends ValueOp {
-  protected def add(b: SlotBuffer, x: Double): Unit = { b.doubles(d) += x; b.longs(l) += 1 }
+  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = {
+    b.doubles(d) += x; b.longs(l) += 1
+  }
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = {
     into.doubles(d) += from.doubles(d); into.longs(l) += from.longs(l)
   }
@@ -90,10 +108,11 @@ private[tdf] final case class ExtremumOp(node: Int, v: Int, d: Int, l: Int, isMi
     val c = SQLOrderingUtil.compareDoubles(x, cur)
     if (isMin) c < 0 else c > 0
   }
-  protected def add(b: SlotBuffer, x: Double): Unit =
+  private def offer(b: SlotBuffer, x: Double): Unit =
     if (b.longs(l) == 0L || better(x, b.doubles(d))) { b.doubles(d) = x; b.longs(l) = 1L }
+  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = offer(b, x)
   def merge(into: SlotBuffer, from: SlotBuffer): Unit =
-    if (from.longs(l) != 0L) add(into, from.doubles(d))
+    if (from.longs(l) != 0L) offer(into, from.doubles(d))
 }
 
 /** TH1 fill of `hists(h)` on the axis `[lo, hi)`; `w` is the weight value
@@ -102,57 +121,39 @@ private[tdf] final case class ExtremumOp(node: Int, v: Int, d: Int, l: Int, isMi
 private[tdf] final case class HistoOp(
     node: Int, v: Int, w: Int, h: Int, nbins: Int, lo: Double, hi: Double) extends ValueOp {
   private val width = (hi - lo) / nbins
-  private def weight(b: SlotBuffer): Long = if (w < 0) 1L else if (b.nul(w)) 0L else b.l(w)
-  override def update(b: SlotBuffer): Unit = if (weight(b) != 0L) super.update(b)
-  protected def add(b: SlotBuffer, x: Double): Unit =
-    b.hists(h).fill(x, weight(b), lo, hi, width)
+  private def weight(e: Entry): Long = if (w < 0) 1L else if (e.nul(w)) 0L else e.l(w)
+  override def update(b: SlotBuffer, e: Entry): Unit = if (weight(e) != 0L) super.update(b, e)
+  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit =
+    b.hists(h).fill(x, weight(e), lo, hi, width)
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.hists(h).add(from.hists(h))
 }
 
-/** How the fused aggregate reads one projected value column. */
-private[tdf] sealed abstract class ValueKind(val dataType: DataType) {
-  def accepts(dt: DataType): Boolean = dt == dataType
-}
-private[tdf] case object Scalar extends ValueKind(DoubleType)
-private[tdf] case object Elements extends ValueKind(ArrayType(DoubleType)) {
-  override def accepts(dt: DataType): Boolean = dt match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-}
-private[tdf] case object Weight extends ValueKind(LongType)
-
-/** The fused aggregate of one booked batch: ONE `TypedImperativeAggregate`
-  * whose per-slot buffer holds every booked action's partial state (the
-  * reference's per-slot results, TDataFrame.hxx:483-517). Its children are
-  * the batch's filter-node flags (`nodes` booleans, each distinct node
-  * projected once below the aggregate) followed by its distinct value
-  * columns (`kinds`). For each entry `update` reads every flag and value once
-  * — the reference's per-entry filter memoization, TDataFrame.hxx:1293-1306 —
-  * and runs only the ops whose node passed; `merge` is a per-op add or
-  * compare. The result is the serialized buffer, decoded on the driver.
+/** How the fused fold reads one projected value column: the type the
+  * projection casts it to.
   */
-private[tdf] final case class BookedAgg(
-    children: Seq[Expression], nodes: Int, kinds: Seq[ValueKind], ops: Seq[BookedOp],
-    nLongs: Int, nDoubles: Int, bins: Seq[Int],
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SlotBuffer] {
+private[tdf] sealed abstract class ValueKind(val dataType: DataType) extends Serializable
+private[tdf] case object Scalar extends ValueKind(DoubleType)
+private[tdf] case object Elements extends ValueKind(ArrayType(DoubleType))
+private[tdf] case object Weight extends ValueKind(LongType)
+/** a column in its own type, read by a [[TakeOp]] */
+private[tdf] final case class Raw(override val dataType: DataType) extends ValueKind(dataType)
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val types = children.map(_.dataType)
-    if (types.take(nodes).forall(_ == BooleanType) &&
-        types.drop(nodes).zip(kinds).forall { case (t, k) => k.accepts(t) })
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_booked takes $nodes booleans then ${kinds.map(_.dataType.simpleString)
-        .mkString(", ")}; got ${types.map(_.simpleString).mkString(", ")}")
-  }
+/** The fused fold of one booked pass: a plain per-slot fold over the output
+  * rows of the pass's codegen'd projection, whose ordinals are the batch's
+  * filter-node flags (`nodes` non-null booleans, each distinct node projected
+  * once) followed by its distinct value columns (`kinds`). For each entry
+  * [[fold]] reads every flag and value once — the reference's per-entry
+  * filter memoization, TDataFrame.hxx:1293-1306 — and runs only the ops whose
+  * node passed, into one [[SlotBuffer]] per slot (the reference's per-slot
+  * results, :483-517). [[merge]] is a per-op add, compare or append; the
+  * driver merges the slots' buffers in slot order at the end of the loop
+  * (:1364-1394).
+  */
+private[tdf] final class BookedAgg(
+    nodes: Int, kinds: Seq[ValueKind], ops: Seq[BookedOp],
+    nLongs: Int, nDoubles: Int, bins: Seq[Int], nTakes: Int) extends Serializable {
 
-  // bound inputs are read straight off the row; anything else (a literal the
-  // optimizer folded into a flag) is evaluated. Plain fields, not lazy vals:
-  // `update` reads them for every row.
-  private val ordinals: Array[Int] =
-    children.map { case r: BoundReference => r.ordinal; case _ => -1 }.toArray
+  // Plain fields, not lazy vals: `fold` reads them for every row.
   private val kindTable: Array[ValueKind] = kinds.toArray
   // ops grouped by gating node, so each node's flag is tested once per entry:
   // group j runs opTable(groupEnd(j - 1) until groupEnd(j)) when groupNode(j) passed
@@ -160,36 +161,38 @@ private[tdf] final case class BookedAgg(
   private val groupNode: Array[Int] = opTable.map(_.node).distinct
   private val groupEnd: Array[Int] = groupNode.map(k => opTable.lastIndexWhere(_.node == k) + 1)
 
-  override def createAggregationBuffer(): SlotBuffer =
+  def newBuffer(): SlotBuffer =
     new SlotBuffer(new Array[Long](nLongs), new Array[Double](nDoubles),
-      bins.map(HistBuffer.empty).toArray, nodes, kinds.length)
+      bins.map(HistBuffer.empty).toArray, Array.fill(nTakes)(mutable.ArrayBuffer.empty[Any]))
 
-  override def update(b: SlotBuffer, row: InternalRow): SlotBuffer = {
-    val ords = ordinals
+  /** one slot's pass over its entries */
+  def fold(rows: Iterator[InternalRow]): SlotBuffer = {
+    val b = newBuffer()
+    val e = new Entry(nodes, kindTable.length)
+    while (rows.hasNext) update(b, e, rows.next())
+    b
+  }
+
+  private def update(b: SlotBuffer, e: Entry, row: InternalRow): Unit = {
     val nNodes = nodes
     var k = 0
-    while (k < nNodes) {
-      val o = ords(k)
-      b.pass(k) =
-        if (o >= 0) !row.isNullAt(o) && row.getBoolean(o)
-        else children(k).eval(row) == true
-      k += 1
-    }
+    while (k < nNodes) { e.pass(k) = row.getBoolean(k); k += 1 }
     val vk = kindTable
     var v = 0
     while (v < vk.length) {
-      val o = ords(nNodes + v)
-      val value: Any = if (o < 0) children(nNodes + v).eval(row) else null
-      val isNull = if (o >= 0) row.isNullAt(o) else value == null
-      b.nul(v) = isNull
-      b.arr(v) = null
+      val o = nNodes + v
+      val isNull = row.isNullAt(o)
+      e.nul(v) = isNull
+      e.arr(v) = null
       if (!isNull) vk(v) match {
-        case Scalar => b.x(v) = if (o >= 0) row.getDouble(o) else value.asInstanceOf[Double]
-        case Elements => b.arr(v) = if (o >= 0) row.getArray(o) else value.asInstanceOf[ArrayData]
-        case Weight => b.l(v) = if (o >= 0) row.getLong(o) else value.asInstanceOf[Long]
+        case Scalar => e.x(v) = row.getDouble(o)
+        case Elements => e.arr(v) = row.getArray(o)
+        case Weight => e.l(v) = row.getLong(o)
+        case Raw(_) => ()
       }
       v += 1
     }
+    e.row = row
     val table = opTable
     val gn = groupNode
     val ge = groupEnd
@@ -198,53 +201,15 @@ private[tdf] final case class BookedAgg(
     while (j < gn.length) {
       val g = gn(j)
       val end = ge(j)
-      if (g < 0 || b.pass(g)) while (i < end) { table(i).update(b); i += 1 }
+      if (g < 0 || e.pass(g)) while (i < end) { table(i).update(b, e); i += 1 }
       else i = end
       j += 1
     }
-    b
   }
 
-  override def merge(into: SlotBuffer, from: SlotBuffer): SlotBuffer = {
+  def merge(into: SlotBuffer, from: SlotBuffer): SlotBuffer = {
     var i = 0
     while (i < opTable.length) { opTable(i).merge(into, from); i += 1 }
     into
   }
-
-  override def eval(b: SlotBuffer): Any = serialize(b)
-
-  /** flat layout: the op longs, then each histogram's bins, underflow,
-    * overflow and entries; then the op doubles, then each histogram's sumx
-    * and sumx2
-    */
-  override def serialize(b: SlotBuffer): Array[Byte] = {
-    val buf = ByteBuffer.allocate(8 * (nLongs + bins.map(_ + 3).sum + nDoubles + 2 * bins.length))
-    b.longs.foreach(buf.putLong)
-    b.hists.foreach { h =>
-      h.counts.foreach(buf.putLong)
-      buf.putLong(h.underflow).putLong(h.overflow).putLong(h.entries)
-    }
-    b.doubles.foreach(buf.putDouble)
-    b.hists.foreach(h => buf.putDouble(h.sumx).putDouble(h.sumx2))
-    buf.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): SlotBuffer = {
-    val buf = ByteBuffer.wrap(bytes)
-    val longs = Array.fill(nLongs)(buf.getLong)
-    val hists = bins.map { n =>
-      HistBuffer(Array.fill(n)(buf.getLong), buf.getLong, buf.getLong, buf.getLong, 0.0, 0.0)
-    }.toArray
-    val doubles = Array.fill(nDoubles)(buf.getDouble)
-    hists.foreach { h => h.sumx = buf.getDouble; h.sumx2 = buf.getDouble }
-    new SlotBuffer(longs, doubles, hists, 0, 0)
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_booked"
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BookedAgg = copy(children = newChildren)
-  override def withNewMutableAggBufferOffset(o: Int): BookedAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BookedAgg = copy(inputAggBufferOffset = o)
 }

@@ -3,6 +3,8 @@ package graft.tdf
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -51,18 +53,19 @@ private[tdf] final case class Booked(steps: Vector[Step], spec: ActionSpec, resu
 /** Shared root registry of booked (plan, action) pairs — the analog of the
   * reference's `TDataFrameImpl` (TDataFrame.hxx:1336-1351, run loop
   * :1362-1421). On first result access it runs every booked aggregating
-  * action in ONE Spark job over ONE scan. Below the job's single aggregate, a
+  * action in ONE Spark job over ONE scan, with one stage and no shuffle. A
   * whole-stage-codegen projection computes each distinct filter node's flag
   * once per entry — a node's predicate runs only on entries its parent
   * passed, the reference's per-entry filter memoization
-  * (TDataFrame.hxx:1293-1306) — and each distinct value column once. The
-  * aggregate ([[BookedAgg]]) keeps one per-slot buffer holding every
-  * action's partial state, runs only the ops whose node passed, and merges
-  * the slots' partials at the end of the loop (the reference's per-slot
-  * results, :483-517). Auto-ranged histograms need a range pre-pass: their
-  * min/max ride along in the first job, then all of them share a single
-  * second job. Scan, pushdown, pruning, codegen and the partial/final
-  * aggregation exchange are Catalyst's.
+  * (TDataFrame.hxx:1293-1306) — and each distinct value column once. Each
+  * task folds its partition's rows into one per-slot buffer holding every
+  * action's partial state ([[BookedAgg]]), running only the ops whose node
+  * passed; the driver merges the slots' buffers in partition order at the
+  * end of the loop (the reference's per-slot results, :483-517, merged at
+  * :1364-1394), so no result depends on the order tasks finish in.
+  * Auto-ranged histograms need a range pre-pass: their min/max ride along
+  * in the first job, then all of them share a single second job. Scan,
+  * pushdown, pruning and codegen are Catalyst's.
   */
 final class BookingContext private[tdf] (val base: DataFrame) {
   // Frame identity captured eagerly so it is still printable after the owning
@@ -191,11 +194,15 @@ final class BookingContext private[tdf] (val base: DataFrame) {
         val (d, l) = (pass1.doubles(2), pass1.longs(2))
         pass1.op(ExtremumOp(k, v, d, l, isMin = true))
         pass1.op(ExtremumOp(k, v, d + 1, l + 1, isMin = false))
-        (s: SlotBuffer, _: Row) => {
+        (s: SlotBuffer) => {
           val mn = if (s.longs(l) == 0L) 0.0 else s.doubles(d)
           val mx = if (s.longs(l + 1) == 0L) 1.0 else s.doubles(d + 1)
-          // TH1-style padding for the degenerate lo == hi case
-          val (lo, hi) = if (mn == mx) (mn - 0.5, mx + 0.5) else (mn, mx + (mx - mn) * 1e-9)
+          // TH1-style padding for the degenerate lo == hi case; otherwise the
+          // axis ends just above the maximum, at least one ulp above it so a
+          // range tiny next to the values still keeps the maximum in range
+          val (lo, hi) =
+            if (mn == mx) (mn - 0.5, mx + 0.5)
+            else (mn, math.max(mx + (mx - mn) * 1e-9, math.nextUp(mx)))
           resolved += Booked(steps, HistoSpec(c, nbins, Some((lo, hi)), wc), result)
           ()
         }
@@ -207,30 +214,29 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     }
   }
 
-  /** Books one action onto a pass: its op(s) in the fused aggregate (or a
-    * `collect_list` column for Take); returns the decoder that fills its
-    * result from the merged slot buffer and the aggregate row.
+  /** Books one action onto a pass as op(s) of the fused fold; returns the
+    * decoder that fills its result from the merged slot buffer.
     */
-  private def lower(b: Booked, p: Lowering): (SlotBuffer, Row) => Unit = {
+  private def lower(b: Booked, p: Lowering): SlotBuffer => Unit = {
     val k = p.node(b.steps)
-    def extremum(c: String, isMin: Boolean, empty: Double): (SlotBuffer, Row) => Unit = {
+    def extremum(c: String, isMin: Boolean, empty: Double): SlotBuffer => Unit = {
       val (d, l) = (p.doubles(1), p.longs(1))
       p.op(ExtremumOp(k, p.value(c), d, l, isMin))
-      (s, _) => fill(b.result, if (s.longs(l) == 0L) empty else s.doubles(d))
+      s => fill(b.result, if (s.longs(l) == 0L) empty else s.doubles(d))
     }
     b.spec match {
       case CountSpec =>
         val l = p.longs(1)
         p.op(CountOp(k, l))
-        (s, _) => fill(b.result, s.longs(l))
+        s => fill(b.result, s.longs(l))
       case SumSpec(c) =>
         val d = p.doubles(1)
         p.op(SumOp(k, p.value(c), d))
-        (s, _) => fill(b.result, s.doubles(d))
+        s => fill(b.result, s.doubles(d))
       case MeanSpec(c) =>
         val (d, l) = (p.doubles(1), p.longs(1))
         p.op(MeanOp(k, p.value(c), d, l))
-        (s, _) => fill(b.result,
+        s => fill(b.result,
           if (s.longs(l) == 0L) { if (compat) 0.0 else Double.NaN } else s.doubles(d) / s.longs(l))
       case MinSpec(c) => extremum(c, isMin = true, if (compat) Double.MaxValue else Double.NaN)
       // reference quirk: empty Max → numeric_limits<double>::min() (tiniest
@@ -238,13 +244,17 @@ final class BookingContext private[tdf] (val base: DataFrame) {
       case MaxSpec(c) =>
         extremum(c, isMin = false, if (compat) java.lang.Double.MIN_NORMAL else Double.NaN)
       case TakeSpec(c) =>
-        val name = p.take(k, c)
-        (_, row) => fill(b.result, row.getSeq[Any](row.fieldIndex(name)))
+        val field = p.wide.schema(c)
+        val t = p.take()
+        p.op(TakeOp(k, p.raw(c), field.dataType, t))
+        // the external types `collect()` gives: the same row deserializer
+        val toRow = ExpressionEncoder(StructType(Seq(field))).resolveAndBind().createDeserializer()
+        s => fill(b.result, s.takes(t).map(x => toRow(InternalRow(x)).get(0)).toSeq)
       case HistoSpec(c, nbins, Some((lo, hi)), weightCol) =>
         require(hi > lo, s"Histo: resolved axis [$lo, $hi) of '$c' is empty")
         val h = p.hist(nbins)
         p.op(HistoOp(k, p.value(c), weightCol.fold(-1)(p.weight), h, nbins, lo, hi))
-        (s, _) => {
+        s => {
           val hb = s.hists(h)
           fill(b.result, Histogram(nbins, lo, hi, hb.counts, hb.underflow, hb.overflow,
             hb.entries, hb.sumx, hb.sumx2))
@@ -262,27 +272,27 @@ final class BookingContext private[tdf] (val base: DataFrame) {
         val prefixes = if (names.isEmpty) Vector.empty else -1 +: p.chain(b.steps)
         val l = p.longs(prefixes.length)
         prefixes.zipWithIndex.foreach { case (node, i) => p.op(CountOp(node, l + i)) }
-        (s, _) => fill(b.result, names.zipWithIndex.map { case (n, i) =>
+        s => fill(b.result, names.zipWithIndex.map { case (n, i) =>
           CutInfo(n, s.longs(l + i + 1), s.longs(l + i))
         })
     }
   }
 
-  /** One pass of a batch, lowered onto one projection and one [[BookedAgg]].
-    * Filter node k is a (parent node, predicate) pair, each distinct pair
-    * once (Column equality): its flag is `coalesce(parent && pred, false)`,
-    * projected once, so a predicate runs once per entry and only on entries
-    * its parent passed. Each distinct value column is projected once, cast to
-    * double, `array<double>` or (weights) long.
+  /** One pass of a batch, lowered onto one projection and one [[BookedAgg]]
+    * fold. Filter node k is a (parent node, predicate) pair, each distinct
+    * pair once (Column equality): its flag is `coalesce(parent && pred,
+    * false)`, projected once, so a predicate runs once per entry and only on
+    * entries its parent passed. Each distinct value column is projected once,
+    * cast to double, `array<double>`, (weights) long or (Take) its own type.
     */
-  private final class Lowering(wide: DataFrame) {
+  private final class Lowering(val wide: DataFrame) {
     private val nodes = mutable.ArrayBuffer.empty[(Int, Column)]
     private val values = mutable.ArrayBuffer.empty[(String, ValueKind)]
-    private val takes = mutable.ArrayBuffer.empty[(Int, String)]
     private val ops = mutable.ArrayBuffer.empty[BookedOp]
     private val bins = mutable.ArrayBuffer.empty[Int]
     private var nLongs = 0
     private var nDoubles = 0
+    private var nTakes = 0
 
     /** the nodes after each filter of a chain */
     def chain(steps: Vector[Step]): Vector[Int] =
@@ -303,19 +313,21 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     def value(c: String): Int =
       slot((c, if (wide.schema(c).dataType.isInstanceOf[ArrayType]) Elements else Scalar))
     def weight(c: String): Int = slot((c, Weight))
+    def raw(c: String): Int = slot((c, Raw(wide.schema(c).dataType)))
     def longs(n: Int): Int = { nLongs += n; nLongs - n }
     def doubles(n: Int): Int = { nDoubles += n; nDoubles - n }
     def hist(nbins: Int): Int = { bins += nbins; bins.length - 1 }
+    def take(): Int = { nTakes += 1; nTakes - 1 }
     def op(o: BookedOp): Unit = ops += o
-    /** the aggregate column holding a Take's `collect_list` */
-    def take(node: Int, c: String): String = { takes += ((node, c)); s"__tdf_t${takes.length - 1}" }
 
-    /** Runs the pass as one job (none when no action needs one) and hands
-      * every decoder the merged buffer and the aggregate row.
+    /** Runs the pass as one job with one stage and no shuffle (none when no
+      * action needs one): every task folds its partition of the projection
+      * into one slot buffer, and the driver merges the buffers in partition
+      * order and hands every decoder the merged buffer.
       */
-    def run(decoders: Seq[(SlotBuffer, Row) => Unit]): Unit = {
-      val (buf, row) =
-        if (ops.isEmpty && takes.isEmpty) (null, null)
+    def run(decoders: Seq[SlotBuffer => Unit]): Unit = {
+      val buf =
+        if (ops.isEmpty) null
         else {
           def flag(k: Int) = col(s"__tdf_n$k")
           val depth = mutable.ArrayBuffer.empty[Int]
@@ -327,23 +339,18 @@ final class BookingContext private[tdf] (val base: DataFrame) {
               coalesce(if (parent < 0) p else flag(parent) && p, lit(false)).as(s"__tdf_n$k")
             }: _*)
           }
+          // the fold reads flag k at ordinal k and value v at nodes + v
           val projected = flagged.select(nodes.indices.map(flag) ++
             values.zipWithIndex.map { case ((c, kind), v) =>
               col(c).cast(kind.dataType).as(s"__tdf_v$v")
-            } ++ takes.zipWithIndex.map { case ((k, c), t) =>
-              (if (k < 0) col(c) else when(flag(k), col(c))).as(s"__tdf_t$t")
             }: _*)
-          val agg = BookedAgg(
-            (nodes.indices.map(flag) ++ values.indices.map(v => col(s"__tdf_v$v")))
-              .map(GraftSql.expression),
-            nodes.length, values.map(_._2).toSeq, ops.toSeq, nLongs, nDoubles, bins.toSeq)
-          val aggCols =
-            (if (ops.isEmpty) Nil else Seq(GraftSql.column(agg.toAggregateExpression()))) ++
-              takes.indices.map(t => collect_list(col(s"__tdf_t$t")).as(s"__tdf_t$t"))
-          val row = projected.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-          (if (ops.isEmpty) null else agg.deserialize(row.getAs[Array[Byte]](0)), row)
+          val agg = new BookedAgg(nodes.length, values.map(_._2).toSeq, ops.toSeq,
+            nLongs, nDoubles, bins.toSeq, nTakes)
+          GraftSql.withExecution(projected, "graft_booked") { rows =>
+            rows.sparkContext.runJob(rows, agg.fold _).foldLeft(agg.newBuffer())(agg.merge)
+          }
         }
-      decoders.foreach(_(buf, row))
+      decoders.foreach(_(buf))
     }
   }
 }
@@ -493,7 +500,7 @@ final class TDF private (
 
   /** Spill-safe `Take` for large collects: streams the column partition by
     * partition (`toLocalIterator`), so the driver holds at most one partition
-    * instead of the whole `collect_list` result. Instant action — it returns
+    * instead of the whole column at once. Instant action — it returns
     * a live cursor, so it cannot ride the fused batch.
     */
   def TakeIterator(column: String = ""): Iterator[Any] = {
@@ -531,7 +538,7 @@ final class TDF private (
   /** weighted fill: Fill(x, w) with an integer-valued weight column;
     * `lo == hi` auto-ranges, same convention as the unweighted overloads.
     * DELIBERATE integer restriction: the weight is cast to long (a fractional
-    * weight column would silently truncate), because the native aggregate's
+    * weight column would silently truncate), because the fused fold's
     * long bins are what keep weighted counts exact and merge-order-
     * independent. Real-valued weights go through [[HistoWeightedD]], which
     * keeps exactness by decimal-summing quantized weights instead.

@@ -24,4 +24,14 @@ object GraftSql {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Runs `body` over the rows of `df`'s executed plan as ONE SQL execution
+    * named `name`: the job(s) `body` starts carry its execution id, and
+    * query-execution listeners see it as they see an action's.
+    */
+  def withExecution[T](df: org.apache.spark.sql.DataFrame, name: String)(
+      body: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] => T): T = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd))
+  }
 }

@@ -211,15 +211,22 @@ class PlanGuardSpec extends AnyFunSuite {
         s"column or use a codegen'd kernel):\n  " + offenders.mkString("\n  "))
   }
 
-  test("an 8-filter x 8-action batch is one graft_booked aggregate over one flag per predicate") {
+  test("an 8-filter x 8-action batch is one job per pass over one flag per predicate") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import org.apache.spark.sql.execution.ProjectExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
-    object H extends AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     val cuts = (0 until 8).map(_ * 5 + 0.5)
-    val plans = SparkTest.executedPlans(spark) {
+    val group = s"plan-guard-fanout-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (s.properties.getProperty("spark.jobGroup.id") == group) { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val plans = try SparkTest.executedPlans(spark) {
       val root = graft.tdf.TDF(spark.read.parquet(s"$dir/lineitem.parquet"))
         .Define("net", col("l_extendedprice") * (lit(1.0) - col("l_discount")))
       val results = cuts.zipWithIndex.flatMap { case (q, k) =>
@@ -229,14 +236,20 @@ class PlanGuardSpec extends AnyFunSuite {
         Seq(a.Count(), a.Sum("net"), a.Mean("net"), a.Min("net"), b.Max("net"),
           b.Histo("net", 50, 0.0, 100000.0), b.Histo("l_quantity", 10), b.Report())
       }
-      results.foreach(_.apply())
-    }
+      spark.sparkContext.setJobGroup(group, "8x8 deref")
+      try results.foreach(_.apply()) finally spark.sparkContext.clearJobGroup()
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(plans.size == 2, s"pass 1 and the auto-range pass expected, got ${plans.size}")
-    val aggs = H.collect(plans.head) { case a: ObjectHashAggregateExec => a }
-    assert(aggs.size == 2 && aggs.forall(_.aggregateExpressions.map(_.aggregateFunction.prettyName)
-      == Seq("graft_booked")), s"one graft_booked function per aggregate:\n${plans.head}")
-    val partial = aggs.filter(_.aggregateExpressions.forall(_.mode == Partial))
-    val projected = H.collect(partial.head.child) { case p: ProjectExec => p.projectList }.flatten
+    for (p <- plans) {
+      val bad = p.collect {
+        case n @ (_: Exchange | _: BaseAggregateExec | _: AdaptiveSparkPlanExec) => n.nodeName
+      }
+      assert(bad.isEmpty, s"no exchange, aggregate or adaptive stage expected, got $bad:\n$p")
+    }
+    // the marker query of executedPlans arrived after every job start of the
+    // deref on the same listener queue
+    assert(jobs.get == 2, s"one job per pass expected, got ${jobs.get}")
+    val projected = plans.head.collect { case p: ProjectExec => p.projectList }.flatten
     for (q <- cuts) {
       val n = projected.map(_.collect { case Literal(v: Double, _) if v == q => v }.size).sum
       assert(n == 1, s"predicate l_quantity > $q projected $n times:\n${plans.head}")

@@ -783,6 +783,67 @@ class TDFSpec extends AnyFunSuite {
     }
   }
 
+  test("an auto-ranged Histo keeps its maximum in range when the range is tiny next to the values") {
+    val h = TDF(Seq(1e10, 1e10 + 0.5, 1e10 + 1).toDF("x")).Histo("x", 4)()
+    assert(h.hi == math.nextUp(1e10 + 1))
+    assert(h.overflow == 0L && h.counts.toSeq == Seq(1L, 1L, 0L, 1L), h.counts.toSeq)
+    val t = TDF(Seq(0.0, 0.25, 0.5).map(1.7e9 + _).toDF("ts")).Histo("ts", 2)()
+    assert(t.overflow == 0L && t.counts.toSeq == Seq(2L, 1L), t.counts.toSeq)
+  }
+
+  test("a frame with zero partitions gives every action its empty answer") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("x", DoubleType), StructField("s", StringType)))
+    val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(df.rdd.getNumPartitions == 0)
+    for (compat <- Seq(false, true)) {
+      val d = TDF(df, compat = compat)
+      val f = d.Filter("pos", $"x" > 0)
+      val (n, s, m, mn, mx) = (f.Count(), f.Sum("x"), f.Mean("x"), f.Min("x"), f.Max("x"))
+      val (fixed, auto, rep, take) = (f.Histo("x", 4, 0.0, 4.0), d.Histo("x", 3), f.Report(), f.Take("s"))
+      assert(n() == 0L && s() == 0.0)
+      if (compat) {
+        assert(m() == 0.0 && mn() == Double.MaxValue && mx() == java.lang.Double.MIN_NORMAL)
+      } else assert(m().isNaN && mn().isNaN && mx().isNaN)
+      for (h <- Seq(fixed(), auto()))
+        assert(h.entries == 0L && h.underflow == 0L && h.overflow == 0L && h.counts.forall(_ == 0L))
+      assert(auto().lo == 0.0 && auto().hi == 1.000000001)
+      assert(rep() == Seq(graft.tdf.CutInfo("pos", 0L, 0L)))
+      assert(take().isEmpty)
+    }
+  }
+
+  test("Take keeps collect()'s values, order and external types for non-numeric columns") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("s", StringType),
+      StructField("dec", DecimalType(12, 2)), StructField("day", DateType),
+      StructField("st", StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))),
+      StructField("arr", ArrayType(StringType))))
+    val rows = (0 until 200).map { i =>
+      def orNull(skip: Int, v: Any): Any = if (i % skip == 0) null else v
+      Row(i, orNull(5, s"s$i"), orNull(7, new java.math.BigDecimal(i * 37).movePointLeft(2)),
+        orNull(3, java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i.toLong))),
+        orNull(4, Row(i, if (i % 6 == 1) null else s"b$i")),
+        orNull(9, Seq(s"a$i", null, "z")))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
+    assert(df.rdd.getNumPartitions == 8)
+    val pred = $"id" % 3 =!= 1
+    val f = TDF(df).Filter(pred)
+    val cs = Seq("s", "dec", "day", "st", "arr")
+    val (n, takes) = (f.Count(), cs.map(c => c -> f.Take(c)))
+    assert(n() == df.where(pred).count())
+    for ((c, t) <- takes) {
+      val want = df.where(pred).select(c).collect().toSeq.map(_.get(0)).filter(_ != null)
+      val got = t()
+      assert(got.nonEmpty && got == want, s"Take($c)")
+      assert(got.map(_.getClass) == want.map(_.getClass), s"Take($c) external types")
+    }
+  }
+
   test("Snapshot writes a skim and reopens it") {
     val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString + "/skim"
     val d = TDF(fixture).Filter($"b1" < 5).Snapshot(dir, Seq("b1", "b2"))

@@ -2,7 +2,11 @@ package graft.tdf
 
 import scala.collection.mutable
 
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
@@ -11,12 +15,13 @@ import graft.functions.HistBuffer
 /** One slot's partial state of every booked action — the analog of the
   * reference's per-slot result clones (TDataFrame.hxx:483-517), flattened:
   * each op owns a few cells of `longs` / `doubles`, one histogram of `hists`
-  * or one value list of `takes` (Catalyst internal values, in entry order).
-  * A task returns its slot's buffer; the driver merges them.
+  * or one object list of `objs` (a Take's Catalyst values in entry order, or
+  * a user fold's state as its one element). A task returns its slot's
+  * buffer; the driver merges them.
   */
 private[tdf] final class SlotBuffer(
     val longs: Array[Long], val doubles: Array[Double], val hists: Array[HistBuffer],
-    val takes: Array[mutable.ArrayBuffer[Any]]) extends Serializable
+    val objs: Array[mutable.ArrayBuffer[Any]]) extends Serializable
 
 /** One entry's scratch, filled once per row by [[BookedAgg.fold]] and read by
   * every op. Value v sits at row ordinal `nNodes + v`.
@@ -52,15 +57,45 @@ private[tdf] final case class CountOp(node: Int, l: Int) extends BookedOp {
 }
 
 /** the non-null values of [[Raw]] value `v`, copied off the reused row into
-  * `takes(t)` in entry order; merged in slot order
+  * `objs(t)` in entry order; merged in slot order
   */
 private[tdf] final case class TakeOp(node: Int, v: Int, dataType: DataType, t: Int)
     extends BookedOp {
   def update(b: SlotBuffer, e: Entry): Unit = {
     val o = e.nNodes + v
-    if (!e.row.isNullAt(o)) b.takes(t) += InternalRow.copyValue(e.row.get(o, dataType))
+    if (!e.row.isNullAt(o)) b.objs(t) += InternalRow.copyValue(e.row.get(o, dataType))
   }
-  def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.takes(t) ++= from.takes(t)
+  def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.objs(t) ++= from.objs(t)
+}
+
+/** The user's part of a [[FoldOp]]: `first` starts a slot's state at its
+  * first passing entry and `step` folds each later one into it (both get the
+  * slot — the partition id — and the entry's row); `merge` combines two
+  * slots' states.
+  */
+private[tdf] final case class UserFold(
+    first: (Int, Row) => Any, step: (Any, Int, Row) => Any, merge: (Any, Any) => Any)
+
+/** Foreach, ForeachSlot, Reduce and Accumulate: a [[UserFold]] over the
+  * entries passing `node`, each handed over as an external Row of values `vs`
+  * (typed as `schema`). `objs(t)` holds the slot's state as its one element,
+  * empty while no entry has passed, so such a slot contributes nothing.
+  */
+private[tdf] final case class FoldOp(
+    node: Int, vs: Seq[Int], schema: StructType, t: Int, fold: UserFold) extends BookedOp {
+  private val ordinals = vs.toArray
+  @transient private lazy val toRow =
+    ExpressionEncoder(schema).resolveAndBind().createDeserializer()
+  def update(b: SlotBuffer, e: Entry): Unit = {
+    val row = toRow(new GenericInternalRow(Array.tabulate[Any](ordinals.length)(i =>
+      e.row.get(e.nNodes + ordinals(i), schema(i).dataType))))
+    val (s, slot) = (b.objs(t), TaskContext.getPartitionId())
+    if (s.isEmpty) s += fold.first(slot, row) else s(0) = fold.step(s(0), slot, row)
+  }
+  def merge(into: SlotBuffer, from: SlotBuffer): Unit = {
+    val (a, z) = (into.objs(t), from.objs(t))
+    if (a.isEmpty) a ++= z else if (z.nonEmpty) a(0) = fold.merge(a(0), z(0))
+  }
 }
 
 /** An op fed with the doubles of value `v`: one per entry for a scalar, one
@@ -135,7 +170,9 @@ private[tdf] sealed abstract class ValueKind(val dataType: DataType) extends Ser
 private[tdf] case object Scalar extends ValueKind(DoubleType)
 private[tdf] case object Elements extends ValueKind(ArrayType(DoubleType))
 private[tdf] case object Weight extends ValueKind(LongType)
-/** a column in its own type, read by a [[TakeOp]] */
+/** a column up-cast to a type — its own, or a wider one a typed lambda
+  * asks for — read off the row by a [[TakeOp]] or a [[FoldOp]]
+  */
 private[tdf] final case class Raw(override val dataType: DataType) extends ValueKind(dataType)
 
 /** The fused fold of one booked pass: a plain per-slot fold over the output
@@ -151,7 +188,7 @@ private[tdf] final case class Raw(override val dataType: DataType) extends Value
   */
 private[tdf] final class BookedAgg(
     nodes: Int, kinds: Seq[ValueKind], ops: Seq[BookedOp],
-    nLongs: Int, nDoubles: Int, bins: Seq[Int], nTakes: Int) extends Serializable {
+    nLongs: Int, nDoubles: Int, bins: Seq[Int], nObjs: Int) extends Serializable {
 
   // Plain fields, not lazy vals: `fold` reads them for every row.
   private val kindTable: Array[ValueKind] = kinds.toArray
@@ -163,7 +200,7 @@ private[tdf] final class BookedAgg(
 
   def newBuffer(): SlotBuffer =
     new SlotBuffer(new Array[Long](nLongs), new Array[Double](nDoubles),
-      bins.map(HistBuffer.empty).toArray, Array.fill(nTakes)(mutable.ArrayBuffer.empty[Any]))
+      bins.map(HistBuffer.empty).toArray, Array.fill(nObjs)(mutable.ArrayBuffer.empty[Any]))
 
   /** one slot's pass over its entries */
   def fold(rows: Iterator[InternalRow]): SlotBuffer = {

@@ -1,10 +1,13 @@
 package graft.tdf
 
 import scala.collection.mutable
+import scala.util.{Failure, Try}
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.UpCast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,14 +19,16 @@ import graft.functions.Histogram
   * `TActionResultProxy<T>` (reference: TDataFrame.hxx:170-236): first access
   * triggers the shared run of every action booked on the same context; results
   * stay valid afterwards, and further bookings start a fresh batch
-  * (reference re-booking semantics, TDataFrame.hxx test_misc TEST 11).
+  * (reference re-booking semantics, TDataFrame.hxx test_misc TEST 11). When
+  * the run fails, every result it left unfilled keeps the failure as the
+  * cause of the error its dereference throws.
   */
 final class Result[T] private[tdf] (ctx: BookingContext) {
-  @volatile private[tdf] var v: Option[T] = None
-  def isReady: Boolean = v.isDefined
+  @volatile private[tdf] var v: Option[Try[T]] = None
+  def isReady: Boolean = v.exists(_.isSuccess)
   def apply(): T = {
     if (v.isEmpty) ctx.run()
-    v.getOrElse(throw new IllegalStateException("booked action was not filled by the run"))
+    v.getOrElse(throw new IllegalStateException("booked action was not filled by the run")).get
   }
   /** alias mirroring the reference's dereference */
   def value: T = apply()
@@ -44,30 +49,40 @@ private[tdf] final case class HistoSpec(
     col: String, nbins: Int, range: Option[(Double, Double)],
     weight: Option[String] = None) extends ActionSpec
 private[tdf] case object ReportSpec extends ActionSpec
-private[tdf] final case class ForeachSpec(
-    cols: Seq[String], casts: Seq[Option[DataType]], f: (Int, Row) => Unit)
+/** Foreach, ForeachSlot, Reduce and Accumulate: `fold` over the passing
+  * entries' `cols`, each read as its kind (None: [[Raw]] in its own type);
+  * `done` turns the merged state (None when no entry passed) into the result
+  */
+private[tdf] final case class FoldSpec(
+    cols: Seq[(String, Option[ValueKind])], fold: UserFold, done: Option[Any] => Any)
     extends ActionSpec
 
-private[tdf] final case class Booked(steps: Vector[Step], spec: ActionSpec, result: Result[Any])
+/** a booked action; `ren` maps a define name of its fork to the batch's
+  * private column for it (see [[BookingContext.unify]])
+  */
+private[tdf] final case class Booked(
+    steps: Vector[Step], spec: ActionSpec, result: Result[Any], ren: Map[String, String])
 
 /** Shared root registry of booked (plan, action) pairs — the analog of the
   * reference's `TDataFrameImpl` (TDataFrame.hxx:1336-1351, run loop
-  * :1362-1421). On first result access it runs every booked aggregating
-  * action in ONE Spark job over ONE scan, with one stage and no shuffle. A
-  * whole-stage-codegen projection computes each distinct filter node's flag
-  * once per entry — a node's predicate runs only on entries its parent
-  * passed, the reference's per-entry filter memoization
+  * :1362-1421). On first result access it runs every booked action —
+  * aggregates, Take, Report, and the user folds of Foreach, ForeachSlot,
+  * Reduce and Accumulate — in ONE Spark job over ONE scan, with one stage and
+  * no shuffle. A whole-stage-codegen projection computes each distinct filter
+  * node's flag once per entry — a node's predicate runs only on entries its
+  * parent passed, the reference's per-entry filter memoization
   * (TDataFrame.hxx:1293-1306) — and each distinct value column once. Each
   * task folds its partition's rows into one per-slot buffer holding every
   * action's partial state ([[BookedAgg]]), running only the ops whose node
   * passed; the driver merges the slots' buffers in partition order at the
   * end of the loop (the reference's per-slot results, :483-517, merged at
-  * :1364-1394), so no result depends on the order tasks finish in.
-  * Auto-ranged histograms need a range pre-pass: their min/max ride along
-  * in the first job, then all of them share a single second job. Scan,
-  * pushdown, pruning and codegen are Catalyst's.
+  * :1364-1394), so no result depends on the order tasks finish in. Sibling
+  * forks that define one name differently each get their own column of the
+  * same projection. Auto-ranged histograms need a range pre-pass: their
+  * min/max ride along in the first job, then all of them share a single
+  * second job. Scan, pushdown, pruning and codegen are Catalyst's.
   */
-final class BookingContext private[tdf] (val base: DataFrame) {
+final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
   // Frame identity captured eagerly so it is still printable after the owning
   // session has been stopped (used by the dangling-frame guard below).
   private val frameDesc = {
@@ -75,59 +90,49 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     s"TDataFrame(${cs.take(4).mkString(", ")}${if (cs.length > 4) ", …" else ""})"
   }
   private val pending = mutable.ArrayBuffer.empty[Booked]
-  private[tdf] var compat: Boolean = false
 
   private[tdf] def book[T](steps: Vector[Step], spec: ActionSpec): Result[T] = synchronized {
     // same lock as run(): a booking raced against a concurrent trigger must
     // not be cleared unfilled
     val r = new Result[T](this)
-    pending += Booked(steps, spec, r.asInstanceOf[Result[Any]])
+    pending += Booked(steps, spec, r.asInstanceOf[Result[Any]], Map.empty)
     r
   }
 
-  private def fill[T](r: Result[Any], value: T): Unit = r.v = Some(value)
+  /** a decoder that throws fills its own result with the failure */
+  private def fill[T](r: Result[Any], value: => T): Unit = r.v = Some(Try(value))
 
-  /** Predicate for a node = conjunction of its filter chain (true if none). */
-  private def predOf(steps: Vector[Step]): Column =
-    steps.collect { case FilterStep(_, p) => p }
-      .reduceOption(_ && _).getOrElse(lit(true))
-
-  /** All defines across booked nodes, in first-occurrence order. Returns None
-    * on a name conflict (same name, semantically different expressions on
-    * sibling branches) — callers then fall back to per-action jobs.
+  /** The batch's defines, each distinct (name, expression) once, and every
+    * booked action with its fork's filters rewritten onto them. The first
+    * expression of a name keeps the name; a later distinct one — a sibling
+    * fork defining the name differently, or a define over such a column —
+    * gets a private column, and the fork's later steps and its action columns
+    * read that column. Expressions compare as Columns (normalized nodes,
+    * Origin stripped): a UDF keeps its function object in the node, so two
+    * DIFFERENT typed lambdas stay apart even though both render as `UDF(x)`.
     */
-  private def mergedDefines(booked: Seq[Booked]): Option[Vector[DefineStep]] = {
-    val out = mutable.LinkedHashMap.empty[String, DefineStep]
-    var conflict = false
-    val it = booked.iterator.flatMap(_.steps.iterator)
-    while (!conflict && it.hasNext) {
-      it.next() match {
-        case d @ DefineStep(n, e) =>
-          out.get(n) match {
-            case None => out(n) = d
-            case Some(prev) =>
-              // Semantic comparison via Column equality (normalized column
-              // nodes, Origin stripped): structurally equal native
-              // expressions merge; a UDF keeps its function object in the
-              // node, so two DIFFERENT typed lambdas are unequal even though
-              // both render as `UDF(x)` — textual toString comparison would
-              // silently merge them and every action on the second fork would
-              // compute with the first fork's function. Different → per-action
-              // fallback (flagged loop, not a non-local return — this sits on
-              // the fusion hot path).
-              if (prev.expr != e) conflict = true
-          }
-        case _ => ()
+  private def unify(batch: Vector[Booked]): (Seq[(String, Column)], Vector[Booked]) = {
+    val defines = mutable.LinkedHashMap.empty[(String, Column), String]
+    val unified = batch.map { b =>
+      var ren = Map.empty[String, String]
+      def rewrite(c: Column) =
+        if (ren.isEmpty) c else GraftSql.renameColumns(base.sparkSession, c, ren)
+      val filters = b.steps.flatMap {
+        case DefineStep(n, e) =>
+          val c = defines.getOrElseUpdate((n, rewrite(e)),
+            if (defines.keysIterator.exists(_._1 == n)) s"__tdf_d${defines.size}" else n)
+          if (c != n) ren += n -> c
+          None
+        case FilterStep(n, p) => Some(FilterStep(n, rewrite(p)))
       }
+      b.copy(steps = filters, ren = ren)
     }
-    if (conflict) None else Some(out.values.toVector)
+    (defines.toSeq.map { case ((_, e), c) => (c, e) }, unified)
   }
 
-  private def withDefines(defines: Seq[DefineStep]): DataFrame =
-    defines.foldLeft(base) { case (df, DefineStep(n, e)) => df.withColumn(n, e) }
-
-  /** Execute every pending action; ideally one job (plus one shared job for
-    * auto-ranged histograms). Clears the pending list afterwards.
+  /** Execute every pending action: one job per pass, one pass plus one
+    * shared pass for auto-ranged histograms. Clears the pending list first;
+    * if the run fails, each result it left unfilled keeps the failure.
     */
   private[tdf] def run(): Unit = synchronized {
     if (pending.isEmpty) return
@@ -142,42 +147,15 @@ final class BookingContext private[tdf] (val base: DataFrame) {
           "(dereference the result) while the session is alive")
     val batch = pending.toVector
     pending.clear()
-    mergedDefines(batch) match {
-      case Some(defines) => runFused(batch, defines)
-      case None => batch.foreach(b => runFused(Vector(b), mergedDefines(Seq(b)).get))
-    }
-  }
-
-  private def runFused(allBatch: Vector[Booked], defines: Vector[DefineStep]): Unit = {
-    val wide = withDefines(defines)
-    val (foreaches, batch) = allBatch.partition(_.spec.isInstanceOf[ForeachSpec])
-    // If side-effecting Foreach actions share the batch with aggregates,
-    // persist the common frame so the scan is shared across the jobs
-    // (reference: every booked action runs in the same loop as the Foreach
-    // trigger, TDFGuide.md:288-291).
-    val shareScan = foreaches.nonEmpty && batch.nonEmpty
-    if (shareScan) { wide.persist(); () }
     try {
-      if (batch.nonEmpty) runAggregates(batch, wide)
-      foreaches.foreach { case Booked(steps, ForeachSpec(cols, casts, f), result) =>
-        // UpCast, not cast: widening (int→double) coerces, but a LOSSY
-        // narrowing (double column into an Int lambda) fails analysis on the
-        // driver instead of silently truncating fractions per row
-        val sel = if (casts.isEmpty) cols.map(col)
-          else cols.zip(casts).map {
-            case (c, Some(dt)) =>
-              GraftSql.column(org.apache.spark.sql.catalyst.expressions.UpCast(
-                GraftSql.expression(col(c)), dt))
-            case (c, None) => col(c) // opaque argument type: raw passthrough
-          }
-        wide.where(predOf(steps)).select(sel: _*)
-          .foreachPartition { it: Iterator[Row] =>
-            val slot = org.apache.spark.TaskContext.getPartitionId()
-            it.foreach(r => f(slot, r))
-          }
-        fill(result, ())
-      }
-    } finally if (shareScan) { wide.unpersist(); () }
+      val (defines, unified) = unify(batch)
+      runPasses(unified, defines.foldLeft(base) { case (df, (n, e)) => df.withColumn(n, e) })
+    } catch {
+      case NonFatal(t) =>
+        val failed = Failure(new IllegalStateException("booked action's run failed", t))
+        batch.foreach(b => if (b.result.v.isEmpty) b.result.v = Some(failed))
+        throw t
+    }
   }
 
   /** Pass 1 runs every fixed action plus a (min, max) probe per auto-ranged
@@ -185,12 +163,12 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     * TDataFrame.hxx:410-480, as a two-pass plan); pass 2 fills every
     * auto-ranged histogram on its resolved axis. Each pass is one job.
     */
-  private def runAggregates(batch: Vector[Booked], wide: DataFrame): Unit = {
+  private def runPasses(batch: Vector[Booked], wide: DataFrame): Unit = {
     val pass1 = new Lowering(wide)
     val resolved = mutable.ArrayBuffer.empty[Booked]
     pass1.run(batch.map {
-      case Booked(steps, HistoSpec(c, nbins, None, wc), result) =>
-        val (k, v) = (pass1.node(steps), pass1.value(c))
+      case b @ Booked(steps, HistoSpec(c, nbins, None, wc), _, ren) =>
+        val (k, v) = (pass1.node(steps), pass1.value(ren.getOrElse(c, c)))
         val (d, l) = (pass1.doubles(2), pass1.longs(2))
         pass1.op(ExtremumOp(k, v, d, l, isMin = true))
         pass1.op(ExtremumOp(k, v, d + 1, l + 1, isMin = false))
@@ -203,7 +181,7 @@ final class BookingContext private[tdf] (val base: DataFrame) {
           val (lo, hi) =
             if (mn == mx) (mn - 0.5, mx + 0.5)
             else (mn, math.max(mx + (mx - mn) * 1e-9, math.nextUp(mx)))
-          resolved += Booked(steps, HistoSpec(c, nbins, Some((lo, hi)), wc), result)
+          resolved += b.copy(spec = HistoSpec(c, nbins, Some((lo, hi)), wc))
           ()
         }
       case b => lower(b, pass1)
@@ -219,9 +197,10 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     */
   private def lower(b: Booked, p: Lowering): SlotBuffer => Unit = {
     val k = p.node(b.steps)
+    def name(c: String) = b.ren.getOrElse(c, c)
     def extremum(c: String, isMin: Boolean, empty: Double): SlotBuffer => Unit = {
       val (d, l) = (p.doubles(1), p.longs(1))
-      p.op(ExtremumOp(k, p.value(c), d, l, isMin))
+      p.op(ExtremumOp(k, p.value(name(c)), d, l, isMin))
       s => fill(b.result, if (s.longs(l) == 0L) empty else s.doubles(d))
     }
     b.spec match {
@@ -231,11 +210,11 @@ final class BookingContext private[tdf] (val base: DataFrame) {
         s => fill(b.result, s.longs(l))
       case SumSpec(c) =>
         val d = p.doubles(1)
-        p.op(SumOp(k, p.value(c), d))
+        p.op(SumOp(k, p.value(name(c)), d))
         s => fill(b.result, s.doubles(d))
       case MeanSpec(c) =>
         val (d, l) = (p.doubles(1), p.longs(1))
-        p.op(MeanOp(k, p.value(c), d, l))
+        p.op(MeanOp(k, p.value(name(c)), d, l))
         s => fill(b.result,
           if (s.longs(l) == 0L) { if (compat) 0.0 else Double.NaN } else s.doubles(d) / s.longs(l))
       case MinSpec(c) => extremum(c, isMin = true, if (compat) Double.MaxValue else Double.NaN)
@@ -244,25 +223,27 @@ final class BookingContext private[tdf] (val base: DataFrame) {
       case MaxSpec(c) =>
         extremum(c, isMin = false, if (compat) java.lang.Double.MIN_NORMAL else Double.NaN)
       case TakeSpec(c) =>
-        val field = p.wide.schema(c)
-        val t = p.take()
-        p.op(TakeOp(k, p.raw(c), field.dataType, t))
+        val (v, t) = (p.raw(name(c), None), p.obj())
+        p.op(TakeOp(k, v, p.typeOf(v), t))
         // the external types `collect()` gives: the same row deserializer
-        val toRow = ExpressionEncoder(StructType(Seq(field))).resolveAndBind().createDeserializer()
-        s => fill(b.result, s.takes(t).map(x => toRow(InternalRow(x)).get(0)).toSeq)
-      case HistoSpec(c, nbins, Some((lo, hi)), weightCol) =>
+        val toRow = ExpressionEncoder(StructType(Seq(StructField(c, p.typeOf(v)))))
+          .resolveAndBind().createDeserializer()
+        s => fill(b.result, s.objs(t).map(x => toRow(InternalRow(x)).get(0)).toSeq)
+      case FoldSpec(cols, fold, done) =>
+        val (vs, t) = (cols.map { case (c, kind) => p.raw(name(c), kind) }, p.obj())
+        p.op(FoldOp(k, vs, StructType(cols.zip(vs).map { case ((c, _), v) =>
+          StructField(c, p.typeOf(v)) }), t, fold))
+        s => fill(b.result, done(s.objs(t).headOption))
+      case HistoSpec(c, nbins, range, weightCol) =>
+        val (lo, hi) = range.get // an auto-ranged Histo is lowered once pass 1 resolved it
         require(hi > lo, s"Histo: resolved axis [$lo, $hi) of '$c' is empty")
-        val h = p.hist(nbins)
-        p.op(HistoOp(k, p.value(c), weightCol.fold(-1)(p.weight), h, nbins, lo, hi))
+        val (h, w) = (p.hist(nbins), weightCol.fold(-1)(w => p.weight(name(w))))
+        p.op(HistoOp(k, p.value(name(c)), w, h, nbins, lo, hi))
         s => {
           val hb = s.hists(h)
           fill(b.result, Histogram(nbins, lo, hi, hb.counts, hb.underflow, hb.overflow,
             hb.entries, hb.sumx, hb.sumx2))
         }
-      case HistoSpec(_, _, None, _) =>
-        throw new IllegalStateException("auto-range histo must be range-resolved before lowering")
-      case _: ForeachSpec =>
-        throw new IllegalStateException("Foreach actions are executed by runFused, not lowered")
       case ReportSpec =>
         val names = b.steps.collect { case FilterStep(n, _) => n }.zipWithIndex.map {
           case (n, i) => n.getOrElse(s"filter_$i")
@@ -282,8 +263,10 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     * fold. Filter node k is a (parent node, predicate) pair, each distinct
     * pair once (Column equality): its flag is `coalesce(parent && pred,
     * false)`, projected once, so a predicate runs once per entry and only on
-    * entries its parent passed. Each distinct value column is projected once,
-    * cast to double, `array<double>`, (weights) long or (Take) its own type.
+    * entries its parent passed. Each distinct value column is projected once
+    * for every entry, cast to double, `array<double>` or (weights) long, or
+    * (Take and the user folds) up-cast, so a lossy narrowing fails analysis
+    * on the driver.
     */
   private final class Lowering(val wide: DataFrame) {
     private val nodes = mutable.ArrayBuffer.empty[(Int, Column)]
@@ -292,7 +275,7 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     private val bins = mutable.ArrayBuffer.empty[Int]
     private var nLongs = 0
     private var nDoubles = 0
-    private var nTakes = 0
+    private var nObjs = 0
 
     /** the nodes after each filter of a chain */
     def chain(steps: Vector[Step]): Vector[Int] =
@@ -313,11 +296,14 @@ final class BookingContext private[tdf] (val base: DataFrame) {
     def value(c: String): Int =
       slot((c, if (wide.schema(c).dataType.isInstanceOf[ArrayType]) Elements else Scalar))
     def weight(c: String): Int = slot((c, Weight))
-    def raw(c: String): Int = slot((c, Raw(wide.schema(c).dataType)))
+    /** a value read off the row, up-cast to `kind` (None: in its own type) */
+    def raw(c: String, kind: Option[ValueKind]): Int =
+      slot((c, kind.getOrElse(Raw(wide.schema(c).dataType))))
+    def typeOf(v: Int): DataType = values(v)._2.dataType
     def longs(n: Int): Int = { nLongs += n; nLongs - n }
     def doubles(n: Int): Int = { nDoubles += n; nDoubles - n }
     def hist(nbins: Int): Int = { bins += nbins; bins.length - 1 }
-    def take(): Int = { nTakes += 1; nTakes - 1 }
+    def obj(): Int = { nObjs += 1; nObjs - 1 }
     def op(o: BookedOp): Unit = ops += o
 
     /** Runs the pass as one job with one stage and no shuffle (none when no
@@ -341,11 +327,13 @@ final class BookingContext private[tdf] (val base: DataFrame) {
           }
           // the fold reads flag k at ordinal k and value v at nodes + v
           val projected = flagged.select(nodes.indices.map(flag) ++
-            values.zipWithIndex.map { case ((c, kind), v) =>
-              col(c).cast(kind.dataType).as(s"__tdf_v$v")
+            values.zipWithIndex.map {
+              case ((c, Raw(dt)), v) =>
+                GraftSql.column(UpCast(GraftSql.expression(col(c)), dt)).as(s"__tdf_v$v")
+              case ((c, kind), v) => col(c).cast(kind.dataType).as(s"__tdf_v$v")
             }: _*)
           val agg = new BookedAgg(nodes.length, values.map(_._2).toSeq, ops.toSeq,
-            nLongs, nDoubles, bins.toSeq, nTakes)
+            nLongs, nDoubles, bins.toSeq, nObjs)
           GraftSql.withExecution(projected, "graft_booked") { rows =>
             rows.sparkContext.runJob(rows, agg.fold _).foldLeft(agg.newBuffer())(agg.merge)
           }
@@ -601,19 +589,18 @@ final class TDF private (
 
   /** Reference `Foreach` (TDataFrame.hxx:805-813): instant — booked into the
     * shared batch and triggered immediately, so every pending action runs in
-    * the same pass (TDFGuide.md:288-291; the common frame is persisted across
-    * the aggregate and side-effect jobs). User owns thread-safety.
+    * the same pass (TDFGuide.md:288-291): `f` runs inside the fused fold's
+    * job, on each entry that passes this node. User owns thread-safety.
     */
-  def Foreach(cols: Seq[String])(f: Row => Unit): Unit = {
-    ctx.book[Unit](steps, ForeachSpec(cols, Nil, (_, r) => f(r)))
-    ctx.run()
-  }
+  def Foreach(cols: Seq[String])(f: Row => Unit): Unit = ForeachSlot(cols)((_, r) => f(r))
 
   /** Reference `ForeachSlot`: slot = partition id (TDFGuide.md:220-233). */
-  def ForeachSlot(cols: Seq[String])(f: (Int, Row) => Unit): Unit = {
-    ctx.book[Unit](steps, ForeachSpec(cols, Nil, f))
-    ctx.run()
-  }
+  def ForeachSlot(cols: Seq[String])(f: (Int, Row) => Unit): Unit =
+    foreach(cols.map(_ -> None), f)
+
+  private def foreach(cols: Seq[(String, Option[ValueKind])], f: (Int, Row) => Unit): Unit =
+    ctx.book[Unit](steps, FoldSpec(cols, UserFold(f, (_, s, r) => f(s, r), (_, _) => ()),
+      _ => ()))()
 
   /** catalyst type for a lambda argument, so the column can be up-cast to the
     * exact runtime class the callable expects (an Int column handed to a
@@ -630,34 +617,23 @@ final class TDF private (
     * whole argument list — a representable Int column bound to a Double
     * parameter still coerces even when a sibling argument is opaque.
     */
-  private def foreachCasts(dts: Option[DataType]*): Seq[Option[DataType]] =
-    dts.toSeq
+  private def typed(cols: Seq[String], dts: Option[DataType]*): Seq[(String, Option[ValueKind])] =
+    pickN(cols, dts.length, "Foreach").zip(dts.map(_.map(Raw(_))))
 
   /** Typed-lambda `Foreach` (reference TDataFrame.hxx:805-813 takes a callable
     * + branch list): values handed to the callable directly, no Row plumbing;
     * columns are coerced to the callable's argument types.
     */
-  def Foreach[A: TypeTag](f: A => Unit, cols: Seq[String]): Unit = {
-    val cs = pickN(cols, 1, "Foreach")
-    ctx.book[Unit](steps, ForeachSpec(cs, foreachCasts(dtOf[A]),
-      (_, r) => f(r.getAs[A](0))))
-    ctx.run()
-  }
-  def Foreach[A: TypeTag, B: TypeTag](f: (A, B) => Unit, cols: Seq[String]): Unit = {
-    val cs = pickN(cols, 2, "Foreach")
-    ctx.book[Unit](steps, ForeachSpec(cs, foreachCasts(dtOf[A], dtOf[B]),
-      (_, r) => f(r.getAs[A](0), r.getAs[B](1))))
-    ctx.run()
-  }
+  def Foreach[A: TypeTag](f: A => Unit, cols: Seq[String]): Unit =
+    foreach(typed(cols, dtOf[A]), (_, r) => f(r.getAs[A](0)))
+  def Foreach[A: TypeTag, B: TypeTag](f: (A, B) => Unit, cols: Seq[String]): Unit =
+    foreach(typed(cols, dtOf[A], dtOf[B]), (_, r) => f(r.getAs[A](0), r.getAs[B](1)))
   def Foreach[A: TypeTag, B: TypeTag, C: TypeTag](
-      f: (A, B, C) => Unit, cols: Seq[String]): Unit = {
-    val cs = pickN(cols, 3, "Foreach")
-    ctx.book[Unit](steps, ForeachSpec(cs, foreachCasts(dtOf[A], dtOf[B], dtOf[C]),
-      (_, r) => f(r.getAs[A](0), r.getAs[B](1), r.getAs[C](2))))
-    ctx.run()
-  }
+      f: (A, B, C) => Unit, cols: Seq[String]): Unit =
+    foreach(typed(cols, dtOf[A], dtOf[B], dtOf[C]),
+      (_, r) => f(r.getAs[A](0), r.getAs[B](1), r.getAs[C](2)))
 
-  /** Reference planned `Snapshot` (TDFGuide.md:383): persist the skim and
+  /** Reference planned `Snapshot` (TDFGuide.md:383): write the skim and
     * return a new frame over it.
     */
   def Snapshot(path: String, cols: Seq[String] = Nil): TDF = {
@@ -744,37 +720,35 @@ final class TDF private (
     TDF.read(spark, path)
   }
 
-  /** Driver-side reduce over a double column (reference planned op,
-    * TDFGuide.md:379-381). Runs as its own job (it carries a closure).
+  /** Reference planned `Reduce` (TDFGuide.md:379-381) over a column cast to
+    * double: an instant booked action, like [[Foreach]], so pending actions
+    * ride along. Each slot reduces its passing values in entry order; the
+    * driver reduces the slots' partials in partition order. With no passing
+    * value it throws what `Dataset.reduce` throws on empty input.
     */
-  def Reduce(column: String)(f: (Double, Double) => Double): Double = {
-    val ds = toDF.select(col(pick(column, "Reduce")).cast(DoubleType))
-      .as[Double](org.apache.spark.sql.Encoders.scalaDouble)
-    ds.reduce(f)
-  }
+  def Reduce(column: String)(f: (Double, Double) => Double): Double =
+    Accumulate[Option[Double]](pick(column, "Reduce"), None)((o, x) => Some(o.fold(x)(f(_, x))))(
+      (a, b) => Some(f(a.get, b.get))).getOrElse(throw GraftSql.emptyCollectionError())
 
   /** Reference planned `Accumulate` (TDFGuide.md:379-381): general fold with
-    * a typed accumulator — per-partition fold from `init`, partials combined
-    * with `merge` (the reference's per-slot Operation + end-of-loop merge
-    * shape, TDataFrame.hxx:385-684). `merge` must be associative and
-    * commutative for a deterministic result under any partitioning.
+    * a typed accumulator over a column cast to double — an instant booked
+    * action, like [[Foreach]]. Each slot with a passing value folds from
+    * `init`; the driver combines those partials with `merge` in partition
+    * order (the reference's per-slot Operation + end-of-loop merge shape,
+    * TDataFrame.hxx:385-684), and returns `init` when no value passed.
+    * `merge` must be associative and commutative for a deterministic result
+    * under any partitioning.
     */
-  def Accumulate[U: scala.reflect.ClassTag](column: String, init: U)(
-      acc: (U, Double) => U)(
-      merge: (U, U) => U): U = {
-    val ds = toDF.select(col(pick(column, "Accumulate")).cast(DoubleType))
-      .as[Double](org.apache.spark.sql.Encoders.scalaDouble)
-    ds.rdd.aggregate(init)(acc, merge)
-  }
+  def Accumulate[U](column: String, init: U)(acc: (U, Double) => U)(merge: (U, U) => U): U =
+    ctx.book[U](steps, FoldSpec(Seq(pick(column, "Accumulate") -> Some(Scalar)), UserFold(
+      (_, r) => acc(init, r.getDouble(0)), (u, _, r) => acc(u.asInstanceOf[U], r.getDouble(0)),
+      (a, b) => merge(a.asInstanceOf[U], b.asInstanceOf[U])), _.getOrElse(init)))()
 }
 
 object TDF {
   /** Adopt an existing DataFrame (reference ctor TDataFrame.hxx:725). */
-  def apply(df: DataFrame, defaultColumns: Seq[String] = Nil, compat: Boolean = false): TDF = {
-    val ctx = new BookingContext(df)
-    ctx.compat = compat
-    new TDF(ctx, Vector.empty, defaultColumns)
-  }
+  def apply(df: DataFrame, defaultColumns: Seq[String] = Nil, compat: Boolean = false): TDF =
+    new TDF(new BookingContext(df, compat), Vector.empty, defaultColumns)
   /** Open a dataset from storage (reference ctor TDataFrame.hxx:716); parquet
     * path or glob — multi-file is the TChain analog.
     */

@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.errors.SparkCoreErrors
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -11,6 +13,22 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftSql {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c` with each reference to a column named by a key of `names` renamed
+    * to its value (`c` fully converted by `spark`, SQL strings parsed); `c`
+    * itself when it references none of them
+    */
+  def renameColumns(
+      spark: org.apache.spark.sql.SparkSession, c: Column, names: Map[String, String]): Column = {
+    val e = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
+    val renamed = e.transform {
+      case UnresolvedAttribute(Seq(n)) if names.contains(n) => UnresolvedAttribute(Seq(names(n)))
+    }
+    if (renamed fastEquals e) c else column(renamed)
+  }
+
+  /** what `RDD.reduce` (and so `Dataset.reduce`) throws on empty input */
+  def emptyCollectionError(): Throwable = SparkCoreErrors.emptyCollectionError()
 
   /** analyzed logical plan of a DataFrame (classic API) */
   def logicalPlan(df: org.apache.spark.sql.DataFrame)

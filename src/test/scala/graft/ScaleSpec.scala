@@ -599,16 +599,7 @@ class ScaleSpec extends AnyFunSuite {
     // the bench's headline shape (Define → Filter → Define → Histo + Count)
     // must keep riding the booking registry as ONE SQL execution — the
     // plan-shape regression guard behind BENCH's flagship rows
-    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val id = js.properties.getProperty("spark.sql.execution.id")
-        if (id != null) { execs.add(id); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val run = SparkTest.runs(spark) {
       val d = graft.tdf.TDF(Tables.lineitem(spark, "/root/testdata/sf0.001"))
         .Define("z", $"l_extendedprice" * (lit(1.0) - $"l_discount"))
         .Filter($"z" > 1000.0)
@@ -617,10 +608,9 @@ class ScaleSpec extends AnyFunSuite {
       val c = d.Count()
       h(); c()
       assert(c() > 0)
-      Thread.sleep(600) // listener bus is async
-      assert(execs.size() == 1,
-        s"flagship Histo+Count chain must be ONE SQL execution, got ${execs.size()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(run.executions == 1,
+      s"flagship Histo+Count chain must be ONE SQL execution, got $run")
   }
 
   test("retrieval + semantic-dedup ops keep their scale shape") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftest.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -17,6 +19,35 @@ object SparkTest {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The Spark jobs a piece of work started, and the distinct SQL executions
+    * they ran under.
+    */
+  final case class Runs(jobs: Int, executions: Int)
+
+  /** The [[Runs]] of `body` on `spark`. Listener delivery is asynchronous, so
+    * the bus is drained before the count starts (no late event of earlier
+    * work is counted) and before it is read (no event of `body` is missed).
+    */
+  def runs(spark: SparkSession)(body: => Unit): Runs = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        Option(s.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(execs.add)
+      }
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      Bus.drain(sc)
+      Runs(jobs.get, execs.size)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** The executed plans of the queries `body` runs on `spark`, in order;

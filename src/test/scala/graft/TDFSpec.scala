@@ -178,82 +178,149 @@ class TDFSpec extends AnyFunSuite {
   test("one fused Spark job per batch; cached results re-deref without new jobs") {
     // count distinct SQL executions (AQE legitimately splits one query into a
     // job per stage, so job count is the wrong fidelity metric)
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = {
-        val id = s.properties.getProperty("spark.sql.execution.id")
-        if (id != null) { execs.add(id); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    var actions = Seq.empty[graft.tdf.Result[_]]
+    val run = SparkTest.runs(spark) {
       val d = TDF(fixture).Define("z", $"b1" * 3)
       val f = d.Filter($"z" > 10)
-      val actions = Seq(f.Count(), f.Sum("z"), d.Mean("b2"), f.Min("z"), d.Max("b1"))
+      actions = Seq(f.Count(), f.Sum("z"), d.Mean("b2"), f.Min("z"), d.Max("b1"))
       actions.head() // trigger
-      Thread.sleep(600) // let listener events drain
-      val afterRun = execs.size()
-      assert(afterRun == 1,
-        s"5 fused aggregating actions must run as ONE SQL execution, got $afterRun")
-      actions.foreach(_.apply()) // all cached — no new executions
-      Thread.sleep(600)
-      assert(execs.size() == afterRun,
-        "re-dereferencing filled results must not launch executions")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(run.executions == 1,
+      s"5 fused aggregating actions must run as ONE SQL execution, got $run")
+    val again = SparkTest.runs(spark) { actions.foreach(_.apply()) } // all cached
+    assert(again.executions == 0,
+      s"re-dereferencing filled results must not launch executions, got $again")
   }
 
   test("sibling forks: same-named defines with DIFFERENT lambdas do not merge") {
     // Two typed lambdas both lower to ScalaUDFs that render identically
     // (`UDF(b1)`), so textual comparison would silently merge them and the
-    // second fork would compute with the FIRST fork's function. Canonicalized
-    // semanticEquals keeps the function object in the comparison → per-action
-    // fallback, each fork keeps its own lambda.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = {
-        val id = s.properties.getProperty("spark.sql.execution.id")
-        if (id != null) { execs.add(id); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // second fork would compute with the FIRST fork's function. Column
+    // equality keeps the function object in the comparison → the second
+    // fork's define gets its own column, each fork keeps its own lambda.
+    val run = SparkTest.runs(spark) {
       val d = TDF(fixture)
       val f1 = d.Define("z", (x: Double) => x * 2.0, Seq("b1"))
       val f2 = d.Define("z", (x: Double) => x * 10.0, Seq("b1"))
       val s1 = f1.Sum("z")
       val s2 = f2.Sum("z")
       assert(s1() == 380.0) // sum(b1) = 190, lambda ×2
-      assert(s2.isReady, "fallback still fills the whole batch in one trigger")
+      assert(s2.isReady, "the batch fills both forks in one trigger")
       assert(s2() == 1900.0, "second fork must compute with ITS lambda (×10)")
-      Thread.sleep(600)
-      assert(execs.size() == 2,
-        s"conflicting same-named defines must fall back to per-action jobs, got ${execs.size()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(run.executions == 1,
+      s"conflicting same-named defines must share ONE execution, got $run")
   }
 
   test("sibling forks: same-named semantically-equal native defines still fuse") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = {
-        val id = s.properties.getProperty("spark.sql.execution.id")
-        if (id != null) { execs.add(id); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val run = SparkTest.runs(spark) {
       val d = TDF(fixture)
       // two distinct Column objects, same canonical expression → one batch
       val s1 = d.Define("z", $"b1" * 3).Sum("z")
       val s2 = d.Define("z", $"b1" * 3).Filter($"z" > 30).Sum("z")
       assert(s1() == 570.0)
       assert(s2.isReady && s2() == (11 until 20).map(_ * 3.0).sum)
-      Thread.sleep(600)
-      assert(execs.size() == 1,
-        s"semantically equal defines must stay fused in ONE execution, got ${execs.size()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(run.executions == 1,
+      s"semantically equal defines must stay fused in ONE execution, got $run")
+  }
+
+  test("conflicting defines with a chained define on both forks: one execution, each fork's answers") {
+    val d = TDF(fixture)
+    // fork 1: z = 2 b1, w = 2 b1 + 1, so w > 10 keeps b1 in 5..19;
+    // fork 2: z = 10 b1, w = 10 b1 + 1, so w > 10 keeps b1 in 1..19
+    // u is the same on both forks, so they share its column
+    val f1 = d.Define("z", $"b1" * 2).Define("w", $"z" + 1).Define("u", $"b2" * 2)
+      .Filter("w_cut", $"w" > 10)
+    val f2 = d.Define("z", (x: Double) => x * 10.0, Seq("b1")).Define("w", "z + 1")
+      .Define("u", $"b2" * 2).Filter("w_cut", $"w" > 10)
+    val acc = spark.sparkContext.doubleAccumulator("fork2_foreach_z")
+    val run = SparkTest.runs(spark) {
+      val (s1, s2, r1, r2) = (f1.Sum("w"), f2.Sum("w"), f1.Report(), f2.Report())
+      val (t1, h2, m) = (f1.Take("z"), f2.Histo("w", 4, 0.0, 200.0), d.Sum("b1"))
+      val (u1, u2) = (f1.Sum("u"), f2.Sum("u"))
+      f2.Foreach(Seq("z"))(r => acc.add(r.getDouble(0)))
+      assert(Seq(s1, s2, r1, r2, t1, h2, m).forall(_.isReady))
+      assert(s1() == (5 until 20).map(b => 2.0 * b + 1).sum)
+      assert(s2() == (1 until 20).map(b => 10.0 * b + 1).sum)
+      assert(r1().map(c => (c.name, c.pass, c.all)) == Seq(("w_cut", 15L, 20L)))
+      assert(r2().map(c => (c.name, c.pass, c.all)) == Seq(("w_cut", 19L, 20L)))
+      assert(t1().map(_.asInstanceOf[Double]) == (5 until 20).map(2.0 * _))
+      assert(h2().counts.toSeq == Seq(4L, 5L, 5L, 5L) && h2().entries == 19L)
+      assert(m() == 190.0)
+      assert(u1() == (5 until 20).map(b => 2.0 * b * b).sum)
+      assert(u2() == (1 until 20).map(b => 2.0 * b * b).sum)
+    }
+    assert(acc.value == (1 until 20).map(10.0 * _).sum)
+    assert(run == SparkTest.Runs(jobs = 1, executions = 1), s"one pass, one job: $run")
+  }
+
+  test("a Foreach rides the fused fold: Foreach + Count + auto Histo, one job per pass") {
+    val d = TDF(spark.range(0, 20, 1, 4).select($"id".cast("double").as("b1"), $"id"))
+    val (c, h) = (d.Count(), d.Histo("b1", 4))
+    val acc = spark.sparkContext.longAccumulator("fold_foreach")
+    val slots = spark.sparkContext.collectionAccumulator[(Int, Long)]("fold_slots")
+    val run = SparkTest.runs(spark) {
+      d.Filter($"b1" >= 10).ForeachSlot(Seq("id")) { (slot, r) =>
+        acc.add(r.getLong(0)); slots.add((slot, r.getLong(0)))
+      }
+    }
+    assert(c.isReady && h.isReady, "pending aggregates must fill with the Foreach trigger")
+    assert(c() == 20L && acc.value == (10 until 20).sum)
+    assert(h().lo == 0.0 && h().entries == 20L && h().counts.toSeq == Seq(5L, 5L, 5L, 5L))
+    import scala.jdk.CollectionConverters._
+    // range partition i holds ids 5i until 5i + 5
+    assert(slots.value.asScala.toSeq.sortBy(_._2) == (10L until 20L).map(i => ((i / 5).toInt, i)))
+    assert(run == SparkTest.Runs(jobs = 2, executions = 2),
+      s"pass 1 and the auto-range pass, one job each: $run")
+  }
+
+  test("Reduce and Accumulate are booked actions: pending actions fill in the same job") {
+    val d = TDF(fixture)
+    val (c, m) = (d.Count(), d.Filter($"b1" < 5).Mean("b1"))
+    var sum = 0.0
+    val run = SparkTest.runs(spark) { sum = d.Filter($"b1" >= 10).Reduce("b1")(_ + _) }
+    assert(sum == (10 until 20).sum.toDouble)
+    assert(c.isReady && m.isReady && c() == 20L && m() == 2.0)
+    assert(run == SparkTest.Runs(jobs = 1, executions = 1), s"one pass, one job: $run")
+    val t = d.Take("b2")
+    var acc = (0L, 0.0)
+    val run2 = SparkTest.runs(spark) {
+      acc = d.Filter($"b1" < 4).Accumulate("b2", (0L, 0.0)) {
+        case ((n, s), v) => (n + 1, s + v)
+      } { case ((n1, s1), (n2, s2)) => (n1 + n2, s1 + s2) }
+    }
+    assert(acc == ((4L, 14.0)) && t.isReady && t().length == 20)
+    assert(run2 == SparkTest.Runs(jobs = 1, executions = 1), s"one pass, one job: $run2")
+  }
+
+  test("Reduce on an empty node throws what Dataset.reduce throws on empty input") {
+    val want = intercept[Exception] { spark.emptyDataset[Double].reduce(_ + _) }
+    for (df <- Seq(fixture, spark.range(0, 30, 1, 3).select($"id".cast("double").as("b1")))) {
+      val got = intercept[Exception] { TDF(df).Filter($"b1" > 100).Reduce("b1")(_ + _) }
+      assert(got.getClass == want.getClass && got.getMessage == want.getMessage, got)
+      // Accumulate's answer on the same empty node is its init
+      assert(TDF(df).Filter($"b1" > 100).Accumulate("b1", 7.0)(_ + _)(_ + _) == 7.0)
+    }
+  }
+
+  test("a failed run leaves its cause on every result it did not fill") {
+    val d = TDF(fixture)
+    val (bad, c) = (d.Min("no_such_column"), d.Count())
+    val first = intercept[Exception] { bad() }
+    for (r <- Seq(bad, c)) {
+      val again = intercept[IllegalStateException] { r() }
+      assert(again.getCause eq first)
+      assert(!r.isReady)
+    }
+    // a throwing Foreach fails its batch-mates the same way
+    val m = d.Mean("b1")
+    val boom = intercept[Exception] {
+      d.Foreach(Seq("b1"))(_ => throw new ArithmeticException("boom"))
+    }
+    assert(intercept[IllegalStateException] { m() }.getCause eq boom)
+    // the context stays usable
+    assert(d.Count()() == 20L)
   }
 
   test("review fixes: filterless Report, invalid histo axis, type mismatches") {

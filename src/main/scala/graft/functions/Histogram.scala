@@ -71,18 +71,28 @@ final case class HistBuffer(
     var sumx2: Double) {
 
   /** TH1 `Fill(x, wt)` on the axis `[lo, hi)` cut into `counts.length` bins
-    * of width `w`: the one place the bin-edge convention lives. Bin i covers
-    * [lo + i*w, lo + (i+1)*w) (identical formula to the SQL oracle:
-    * floor((x-lo)/w)), below lo underflows, >= hi overflows; `entries`,
-    * `sumx` and `sumx2` accumulate the weight.
+    * of width `w`: [[bin]], then [[moments]].
     */
   def fill(x: Double, wt: Long, lo: Double, hi: Double, w: Double): Unit = {
+    bin(x, wt, lo, hi, w)
+    moments(x, wt)
+  }
+
+  /** The one place the bin-edge convention lives: bin i covers
+    * [lo + i*w, lo + (i+1)*w) (identical formula to the SQL oracle:
+    * floor((x-lo)/w)) and gets the weight; below lo underflows, >= hi
+    * overflows.
+    */
+  def bin(x: Double, wt: Long, lo: Double, hi: Double, w: Double): Unit =
     if (x < lo) underflow += wt
     else if (x >= hi) overflow += wt
     else {
-      val bin = math.floor((x - lo) / w).toInt
-      counts(math.min(bin, counts.length - 1)) += wt
+      val i = math.floor((x - lo) / w).toInt
+      counts(math.min(i, counts.length - 1)) += wt
     }
+
+  /** `entries`, `sumx` and `sumx2` accumulate the weight, whatever the axis */
+  def moments(x: Double, wt: Long): Unit = {
     entries += wt
     sumx += x * wt
     sumx2 += x * x * wt

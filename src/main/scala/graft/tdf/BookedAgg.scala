@@ -38,6 +38,8 @@ private[tdf] final class Entry(val nNodes: Int, nValues: Int) {
   val arr = new Array[ArrayData](nValues)
   val l = new Array[Long](nValues)
   var row: InternalRow = _
+  /** the weight in value `w` (-1: unweighted, 1); a null weight is 0 */
+  def weight(w: Int): Long = if (w < 0) 1L else if (nul(w)) 0L else l(w)
 }
 
 /** One booked action in the fused fold's op table. `node` is the filter node
@@ -139,15 +141,20 @@ private[tdf] final case class MeanOp(node: Int, v: Int, d: Int, l: Int) extends 
   */
 private[tdf] final case class ExtremumOp(node: Int, v: Int, d: Int, l: Int, isMin: Boolean)
     extends ValueOp {
-  private def better(x: Double, cur: Double): Boolean = {
-    val c = SQLOrderingUtil.compareDoubles(x, cur)
-    if (isMin) c < 0 else c > 0
+  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = ExtremumOp.offer(b, d, l, isMin, x)
+  def merge(into: SlotBuffer, from: SlotBuffer): Unit = ExtremumOp.merge(into, from, d, l, isMin)
+}
+
+private[tdf] object ExtremumOp {
+  def offer(b: SlotBuffer, d: Int, l: Int, isMin: Boolean, x: Double): Unit = {
+    def better = {
+      val c = SQLOrderingUtil.compareDoubles(x, b.doubles(d))
+      if (isMin) c < 0 else c > 0
+    }
+    if (b.longs(l) == 0L || better) { b.doubles(d) = x; b.longs(l) = 1L }
   }
-  private def offer(b: SlotBuffer, x: Double): Unit =
-    if (b.longs(l) == 0L || better(x, b.doubles(d))) { b.doubles(d) = x; b.longs(l) = 1L }
-  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = offer(b, x)
-  def merge(into: SlotBuffer, from: SlotBuffer): Unit =
-    if (from.longs(l) != 0L) offer(into, from.doubles(d))
+  def merge(into: SlotBuffer, from: SlotBuffer, d: Int, l: Int, isMin: Boolean): Unit =
+    if (from.longs(l) != 0L) offer(into, d, l, isMin, from.doubles(d))
 }
 
 /** TH1 fill of `hists(h)` on the axis `[lo, hi)`; `w` is the weight value
@@ -156,11 +163,152 @@ private[tdf] final case class ExtremumOp(node: Int, v: Int, d: Int, l: Int, isMi
 private[tdf] final case class HistoOp(
     node: Int, v: Int, w: Int, h: Int, nbins: Int, lo: Double, hi: Double) extends ValueOp {
   private val width = (hi - lo) / nbins
-  private def weight(e: Entry): Long = if (w < 0) 1L else if (e.nul(w)) 0L else e.l(w)
-  override def update(b: SlotBuffer, e: Entry): Unit = if (weight(e) != 0L) super.update(b, e)
+  override def update(b: SlotBuffer, e: Entry): Unit = if (e.weight(w) != 0L) super.update(b, e)
   protected def add(b: SlotBuffer, e: Entry, x: Double): Unit =
-    b.hists(h).fill(x, weight(e), lo, hi, width)
+    b.hists(h).fill(x, e.weight(w), lo, hi, width)
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.hists(h).add(from.hists(h))
+}
+
+/** An auto-ranged histogram of `nbins` bins in one pass, its values walked
+  * once: the (min, max) of every non-null value as two [[ExtremumOp]]s would
+  * keep them, in `doubles(d)`, `doubles(d + 1)`, seen in `longs(l)`,
+  * `longs(l + 1)`; and, for the values a [[HistoOp]] would fill (a null or
+  * zero weight skips them), the moments in the bin-less `hists(h)`, added in
+  * the same order, and the exact [[ValueCounts]] in `objs(t)` (empty until
+  * the slot's first such value). Once the driver resolves the axis,
+  * [[binned]] cuts the counts into bins. A slot meeting more than `cap`
+  * distinct values leaves the counts [[ValueCounts.full]]: the histogram then
+  * needs a pass on the resolved axis.
+  */
+private[tdf] final case class AutoHistoOp(
+    node: Int, v: Int, w: Int, nbins: Int, d: Int, l: Int, h: Int, t: Int, cap: Int)
+    extends ValueOp {
+  private def counts(b: SlotBuffer): ValueCounts = b.objs(t)(0).asInstanceOf[ValueCounts]
+  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = {
+    ExtremumOp.offer(b, d, l, isMin = true, x)
+    ExtremumOp.offer(b, d + 1, l + 1, isMin = false, x)
+    val wt = e.weight(w)
+    if (wt != 0L) {
+      b.hists(h).moments(x, wt)
+      if (b.objs(t).isEmpty) b.objs(t) += new ValueCounts
+      counts(b).add(java.lang.Double.doubleToRawLongBits(x), wt, cap)
+    }
+  }
+  def merge(into: SlotBuffer, from: SlotBuffer): Unit = {
+    ExtremumOp.merge(into, from, d, l, isMin = true)
+    ExtremumOp.merge(into, from, d + 1, l + 1, isMin = false)
+    into.hists(h).add(from.hists(h))
+    val (a, z) = (into.objs(t), from.objs(t))
+    if (a.isEmpty) a ++= z else if (z.nonEmpty) counts(into).merge(counts(from))
+  }
+
+  /** The axis the merged extrema resolve: `[0, 1)` before any value;
+    * TH1-style padding for the degenerate lo == hi case; otherwise it ends
+    * just above the maximum, at least one ulp above it so a range tiny next
+    * to the values still keeps the maximum in range.
+    */
+  def axis(s: SlotBuffer): (Double, Double) = {
+    val mn = if (s.longs(l) == 0L) 0.0 else s.doubles(d)
+    val mx = if (s.longs(l + 1) == 0L) 1.0 else s.doubles(d + 1)
+    if (mn == mx) (mn - 0.5, mx + 0.5)
+    else (mn, math.max(mx + (mx - mn) * 1e-9, math.nextUp(mx)))
+  }
+  /** did a slot meet more than `cap` distinct values */
+  def full(s: SlotBuffer): Boolean = s.objs(t).nonEmpty && counts(s).full
+  /** the merged moments, the merged counts cut into bins on `[lo, hi)` */
+  def binned(s: SlotBuffer, lo: Double, hi: Double): HistBuffer = {
+    val m = s.hists(h)
+    val hb = HistBuffer(new Array[Long](nbins), 0L, 0L, m.entries, m.sumx, m.sumx2)
+    val width = (hi - lo) / nbins
+    if (s.objs(t).nonEmpty)
+      counts(s).foreach((k, wt) => hb.bin(java.lang.Double.longBitsToDouble(k), wt, lo, hi, width))
+    hb
+  }
+}
+
+private[tdf] object AutoHistoOp {
+  /** distinct values an auto-ranged histogram counts per slot before it
+    * needs a second pass; the driver holds every slot's counts, so this
+    * bounds them at 1 MB per histogram per slot
+    */
+  val Cap: Int = 1 << 16
+}
+
+/** One slot's exact multiset of an auto-ranged histogram's values: each
+  * distinct value with its summed weight, in an open-addressing table keyed
+  * by the value's raw bits (so -0.0 and 0.0, and NaNs of different payloads,
+  * stay apart; binning any exact split of the multiset gives the same
+  * counts). A value new past `cap` distinct ones drops them all and leaves
+  * the counts `full`. Serialized as its filled entries.
+  */
+private[tdf] final class ValueCounts extends Serializable {
+  // key 0L (+0.0) marks an empty cell, so +0.0's weight lives in `zero`
+  private var keys = new Array[Long](16)
+  private var weights = new Array[Long](16)
+  private var shift = 60 // 64 - log2(keys.length): Fibonacci hashing keeps the top bits
+  private var hasZero = false
+  private var zero = 0L
+  private var n = 0 // distinct values held, +0.0 included
+  var full = false
+
+  private def index(k: Long): Int = ((k * 0x9E3779B97F4A7C15L) >>> shift).toInt
+
+  /** adds weight `wt` to the value with raw bits `k` */
+  def add(k: Long, wt: Long, cap: Int): Unit =
+    if (!full) {
+      if (k == 0L) {
+        if (hasZero) zero += wt
+        else if (n >= cap) drop()
+        else { hasZero = true; zero = wt; n += 1 }
+      } else {
+        val mask = keys.length - 1
+        var i = index(k)
+        while (keys(i) != 0L && keys(i) != k) i = (i + 1) & mask
+        if (keys(i) == k) weights(i) += wt
+        else if (n >= cap) drop()
+        else {
+          keys(i) = k; weights(i) = wt; n += 1
+          if (2 * n > keys.length) grow()
+        }
+      }
+    }
+
+  private def drop(): Unit = {
+    full = true; hasZero = false; n = 0
+    keys = Array.emptyLongArray; weights = Array.emptyLongArray
+  }
+
+  private def grow(): Unit = {
+    val (ks, ws) = (keys, weights)
+    keys = new Array[Long](ks.length * 2); weights = new Array[Long](ks.length * 2); shift -= 1
+    n = if (hasZero) 1 else 0
+    var i = 0
+    while (i < ks.length) { if (ks(i) != 0L) add(ks(i), ws(i), Int.MaxValue); i += 1 }
+  }
+
+  /** every (raw bits, summed weight), +0.0 first */
+  def foreach(f: (Long, Long) => Unit): Unit = {
+    if (hasZero) f(0L, zero)
+    var i = 0
+    while (i < keys.length) { if (keys(i) != 0L) f(keys(i), weights(i)); i += 1 }
+  }
+
+  /** adds every count of `o`, uncapped; full if either is */
+  def merge(o: ValueCounts): Unit =
+    if (o.full) drop() else o.foreach(add(_, _, Int.MaxValue))
+
+  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+    out.writeBoolean(full)
+    out.writeInt(n)
+    foreach { (k, wt) => out.writeLong(k); out.writeLong(wt) }
+  }
+
+  private def readObject(in: java.io.ObjectInputStream): Unit = {
+    keys = new Array[Long](16); weights = new Array[Long](16); shift = 60
+    full = in.readBoolean()
+    var i = in.readInt()
+    while (i > 0) { add(in.readLong(), in.readLong(), Int.MaxValue); i -= 1 }
+  }
 }
 
 /** How the fused fold reads one projected value column: the type the

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.graftbridge.GraftSql
 
-import graft.functions.Histogram
+import graft.functions.{HistBuffer, Histogram}
 
 /** Lazy result proxy — the Spark analog of the reference's
   * `TActionResultProxy<T>` (reference: TDataFrame.hxx:170-236): first access
@@ -78,9 +78,11 @@ private[tdf] final case class Booked(
   * end of the loop (the reference's per-slot results, :483-517, merged at
   * :1364-1394), so no result depends on the order tasks finish in. Sibling
   * forks that define one name differently each get their own column of the
-  * same projection. Auto-ranged histograms need a range pre-pass: their
-  * min/max ride along in the first job, then all of them share a single
-  * second job. Scan, pushdown, pruning and codegen are Catalyst's.
+  * same projection. An auto-ranged histogram is exact in the same job: each
+  * slot keeps its values' exact counts, which the driver bins once the
+  * merged extrema give the axis; only one whose slot met too many distinct
+  * values needs a second job. Scan, pushdown, pruning and codegen are
+  * Catalyst's.
   */
 final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
   // Frame identity captured eagerly so it is still printable after the owning
@@ -130,9 +132,10 @@ final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
     (defines.toSeq.map { case ((_, e), c) => (c, e) }, unified)
   }
 
-  /** Execute every pending action: one job per pass, one pass plus one
-    * shared pass for auto-ranged histograms. Clears the pending list first;
-    * if the run fails, each result it left unfilled keeps the failure.
+  /** Execute every pending action in one job, plus one shared job for the
+    * auto-ranged histograms a slot met too many distinct values for. Clears
+    * the pending list first; if the run fails, each result it left unfilled
+    * keeps the failure.
     */
   private[tdf] def run(): Unit = synchronized {
     if (pending.isEmpty) return
@@ -158,39 +161,49 @@ final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
     }
   }
 
-  /** Pass 1 runs every fixed action plus a (min, max) probe per auto-ranged
-    * histogram (the reference's deferred-axis FillOperation,
-    * TDataFrame.hxx:410-480, as a two-pass plan); pass 2 fills every
-    * auto-ranged histogram on its resolved axis. Each pass is one job.
+  /** Distinct values an auto-ranged histogram counts per slot before it
+    * needs a second pass; a knob for tests, not a user option.
+    */
+  private[tdf] var valueCap: Int = AutoHistoOp.Cap
+
+  /** One pass runs every action. An auto-ranged histogram (the reference's
+    * deferred-axis FillOperation, TDataFrame.hxx:410-480, which buffers each
+    * slot's values until the axis is known) keeps its (min, max), its moments
+    * and each slot's exact value counts in that pass; the driver resolves the
+    * axis from the merged extrema and bins the merged counts. Only the
+    * histograms some slot met more than [[valueCap]] distinct values for
+    * share a second pass on their resolved axes. Each pass is one job.
     */
   private def runPasses(batch: Vector[Booked], wide: DataFrame): Unit = {
     val pass1 = new Lowering(wide)
-    val resolved = mutable.ArrayBuffer.empty[Booked]
+    val auto = mutable.ArrayBuffer.empty[(Booked, HistoSpec, AutoHistoOp, SlotBuffer)]
     pass1.run(batch.map {
-      case b @ Booked(steps, HistoSpec(c, nbins, None, wc), _, ren) =>
-        val (k, v) = (pass1.node(steps), pass1.value(ren.getOrElse(c, c)))
-        val (d, l) = (pass1.doubles(2), pass1.longs(2))
-        pass1.op(ExtremumOp(k, v, d, l, isMin = true))
-        pass1.op(ExtremumOp(k, v, d + 1, l + 1, isMin = false))
-        (s: SlotBuffer) => {
-          val mn = if (s.longs(l) == 0L) 0.0 else s.doubles(d)
-          val mx = if (s.longs(l + 1) == 0L) 1.0 else s.doubles(d + 1)
-          // TH1-style padding for the degenerate lo == hi case; otherwise the
-          // axis ends just above the maximum, at least one ulp above it so a
-          // range tiny next to the values still keeps the maximum in range
-          val (lo, hi) =
-            if (mn == mx) (mn - 0.5, mx + 0.5)
-            else (mn, math.max(mx + (mx - mn) * 1e-9, math.nextUp(mx)))
-          resolved += b.copy(spec = HistoSpec(c, nbins, Some((lo, hi)), wc))
-          ()
-        }
+      case b @ Booked(steps, spec @ HistoSpec(c, nbins, None, wc), _, ren) =>
+        def name(c: String) = ren.getOrElse(c, c)
+        val op = AutoHistoOp(pass1.node(steps), pass1.value(name(c)),
+          wc.fold(-1)(w => pass1.weight(name(w))), nbins, pass1.doubles(2), pass1.longs(2),
+          pass1.hist(0), pass1.obj(), valueCap)
+        pass1.op(op)
+        (s: SlotBuffer) => { auto += ((b, spec, op, s)); () }
       case b => lower(b, pass1)
     })
-    if (resolved.nonEmpty) {
-      val pass2 = new Lowering(wide)
-      pass2.run(resolved.toVector.map(lower(_, pass2)))
+    // an empty axis fails the whole run, so no auto-ranged result fills
+    // before every axis is checked
+    val axes = auto.map { case (_, spec, op, s) =>
+      val (lo, hi) = op.axis(s)
+      require(hi > lo, s"Histo: resolved axis [$lo, $hi) of '${spec.col}' is empty")
+      (lo, hi)
     }
+    val pass2 = new Lowering(wide)
+    val rest = auto.zip(axes).toVector.flatMap { case ((b, spec, op, s), (lo, hi)) =>
+      if (op.full(s)) Some(lower(b.copy(spec = spec.copy(range = Some((lo, hi)))), pass2))
+      else { fill(b.result, histogram(spec.nbins, lo, hi, op.binned(s, lo, hi))); None }
+    }
+    if (rest.nonEmpty) pass2.run(rest)
   }
+
+  private def histogram(nbins: Int, lo: Double, hi: Double, hb: HistBuffer): Histogram =
+    Histogram(nbins, lo, hi, hb.counts, hb.underflow, hb.overflow, hb.entries, hb.sumx, hb.sumx2)
 
   /** Books one action onto a pass as op(s) of the fused fold; returns the
     * decoder that fills its result from the merged slot buffer.
@@ -235,15 +248,11 @@ final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
           StructField(c, p.typeOf(v)) }), t, fold))
         s => fill(b.result, done(s.objs(t).headOption))
       case HistoSpec(c, nbins, range, weightCol) =>
-        val (lo, hi) = range.get // an auto-ranged Histo is lowered once pass 1 resolved it
-        require(hi > lo, s"Histo: resolved axis [$lo, $hi) of '$c' is empty")
+        // an auto-ranged Histo is lowered here only once pass 1 resolved its axis
+        val (lo, hi) = range.get
         val (h, w) = (p.hist(nbins), weightCol.fold(-1)(w => p.weight(name(w))))
         p.op(HistoOp(k, p.value(name(c)), w, h, nbins, lo, hi))
-        s => {
-          val hb = s.hists(h)
-          fill(b.result, Histogram(nbins, lo, hi, hb.counts, hb.underflow, hb.overflow,
-            hb.entries, hb.sumx, hb.sumx2))
-        }
+        s => fill(b.result, histogram(nbins, lo, hi, s.hists(h)))
       case ReportSpec =>
         val names = b.steps.collect { case FilterStep(n, _) => n }.zipWithIndex.map {
           case (n, i) => n.getOrElse(s"filter_$i")
@@ -502,14 +511,17 @@ final class TDF private (
 
   /** Reference signature `Histo(branchName = "", nBins = 128, minVal = 0.,
     * maxVal = 0.)` (TDataFrame.hxx:924): `lo == hi` means "axis from data
-    * min/max" (TH1 auto-range convention) — the two-pass deferred axis.
+    * min/max" (TH1 auto-range convention) — the deferred axis, filled in the
+    * one pass from each slot's exact value counts.
     */
   def Histo(column: String, nbins: Int, lo: Double, hi: Double): Result[Histogram] = {
     checkAxis(nbins, lo, hi)
     val range = if (lo == hi) None else Some((lo, hi))
     ctx.book(steps, HistoSpec(pick(column, "Histo"), nbins, range))
   }
-  /** auto-ranged: axis from data min/max, two-pass (reference FillOperation). */
+  /** auto-ranged: axis from data min/max (reference FillOperation), one pass
+    * unless a slot meets more than 65,536 distinct values
+    */
   def Histo(column: String, nbins: Int): Result[Histogram] = {
     require(nbins >= 1, s"Histo: nbins must be >= 1, got $nbins")
     ctx.book(steps, HistoSpec(pick(column, "Histo"), nbins, None))

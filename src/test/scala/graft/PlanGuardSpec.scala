@@ -239,7 +239,7 @@ class PlanGuardSpec extends AnyFunSuite {
       spark.sparkContext.setJobGroup(group, "8x8 deref")
       try results.foreach(_.apply()) finally spark.sparkContext.clearJobGroup()
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(plans.size == 2, s"pass 1 and the auto-range pass expected, got ${plans.size}")
+    assert(plans.size == 1, s"one pass expected, got ${plans.size}")
     for (p <- plans) {
       val bad = p.collect {
         case n @ (_: Exchange | _: BaseAggregateExec | _: AdaptiveSparkPlanExec) => n.nodeName
@@ -248,7 +248,7 @@ class PlanGuardSpec extends AnyFunSuite {
     }
     // the marker query of executedPlans arrived after every job start of the
     // deref on the same listener queue
-    assert(jobs.get == 2, s"one job per pass expected, got ${jobs.get}")
+    assert(jobs.get == 1, s"one job expected, got ${jobs.get}")
     val projected = plans.head.collect { case p: ProjectExec => p.projectList }.flatten
     for (q <- cuts) {
       val n = projected.map(_.collect { case Literal(v: Double, _) if v == q => v }.size).sum

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tdf.TDF
+import graft.functions.Histogram
+import graft.tdf.{TDF, TestSeams}
 
 /** Port of the reference's core e2e suite (tests/test_misc.cxx TESTs 1-13) and
   * regression files onto Spark fixtures (FIXTURES.md F1/F2/F4).
@@ -271,8 +272,7 @@ class TDFSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     // range partition i holds ids 5i until 5i + 5
     assert(slots.value.asScala.toSeq.sortBy(_._2) == (10L until 20L).map(i => ((i / 5).toInt, i)))
-    assert(run == SparkTest.Runs(jobs = 2, executions = 2),
-      s"pass 1 and the auto-range pass, one job each: $run")
+    assert(run == SparkTest.Runs(jobs = 1, executions = 1), s"one pass, one job: $run")
   }
 
   test("Reduce and Accumulate are booked actions: pending actions fill in the same job") {
@@ -731,40 +731,47 @@ class TDFSpec extends AnyFunSuite {
     assert(d.Min("a")() == 1.0 && d.Max("a")() == 4.0)
   }
 
-  test("fused aggregate: every action kind on overlapping nodes equals the action run alone") {
-    import org.apache.spark.sql.{Column, DataFrame, Row}
-    import org.apache.spark.sql.types.ArrayType
-    import graft.functions.{Histogram, HistogramAggExpr}
-    // integral values with nulls, NaN, -0.0 / 0.0, null and empty arrays,
-    // null array elements, null and zero weights
-    val rows = (0 until 40).map { i =>
-      val x =
-        if (i % 11 == 3) None else if (i % 13 == 5) Some(Double.NaN)
-        else if (i % 7 == 0) Some(-0.0) else if (i % 7 == 1) Some(0.0)
-        else Some((i % 17 - 8).toDouble)
-      val y = if (i % 9 == 4) None else if (i % 10 == 6) Some(-0.0) else Some((i * 7 % 23 - 11).toDouble)
-      val a = i % 8 match {
-        case 0 => None
-        case 1 => Some(Seq.empty[Option[Double]])
-        case 2 => Some(Seq(None, Some(-0.0), Some(3.0)))
-        case _ => Some(Seq(Some((i % 5).toDouble), None, Some(-(i % 3).toDouble), Some(0.0)))
-      }
-      val w = i % 6 match { case 0 => None; case 1 => Some(0L); case _ => Some((i % 4).toLong) }
-      (i, x, y, i * i % 50, a, w)
+  // integral values with nulls, NaN, -0.0 / 0.0, null and empty arrays,
+  // null array elements, null and zero weights
+  private def fusedData: DataFrame = (0 until 40).map { i =>
+    val x =
+      if (i % 11 == 3) None else if (i % 13 == 5) Some(Double.NaN)
+      else if (i % 7 == 0) Some(-0.0) else if (i % 7 == 1) Some(0.0)
+      else Some((i % 17 - 8).toDouble)
+    val y = if (i % 9 == 4) None else if (i % 10 == 6) Some(-0.0) else Some((i * 7 % 23 - 11).toDouble)
+    val a = i % 8 match {
+      case 0 => None
+      case 1 => Some(Seq.empty[Option[Double]])
+      case 2 => Some(Seq(None, Some(-0.0), Some(3.0)))
+      case _ => Some(Seq(Some((i % 5).toDouble), None, Some(-(i % 3).toDouble), Some(0.0)))
     }
-    val data = rows.toDF("id", "x", "y", "n", "a", "w")
-    // filter chains: shared root, a two-deep chain, the same predicate under
-    // two different parents
-    val chains: Seq[(String, Seq[(String, Column)])] = Seq(
-      "root" -> Nil,
-      "pos" -> Seq("pos" -> ($"x" > 0)),
-      "pos/even" -> Seq("pos" -> ($"x" > 0), "even" -> ($"id" % 2 === 0)),
-      "even" -> Seq("even" -> ($"id" % 2 === 0)),
-      "low/y" -> Seq("low" -> ($"id" < 25), "y" -> ($"y" > -3.0)))
+    val w = i % 6 match { case 0 => None; case 1 => Some(0L); case _ => Some((i % 4).toLong) }
+    (i, x, y, i * i % 50, a, w)
+  }.toDF("id", "x", "y", "n", "a", "w")
+  // filter chains: shared root, a two-deep chain, the same predicate under
+  // two different parents
+  private def fusedChains: Seq[(String, Seq[(String, Column)])] = Seq(
+    "root" -> Nil,
+    "pos" -> Seq("pos" -> ($"x" > 0)),
+    "pos/even" -> Seq("pos" -> ($"x" > 0), "even" -> ($"id" % 2 === 0)),
+    "even" -> Seq("even" -> ($"id" % 2 === 0)),
+    "low/y" -> Seq("low" -> ($"id" < 25), "y" -> ($"y" > -3.0)))
+  /** a histogram's axis, under/overflow, moments and bins */
+  private def canon(h: Histogram): Seq[Any] =
+    Seq(h.lo, h.hi, h.underflow, h.overflow, h.entries, h.sumx, h.sumx2) ++ h.counts
+  /** doubles as their bits, so -0.0 differs from 0.0 and NaN equals NaN */
+  private def bits(v: Seq[Any]): Seq[Any] = v.map {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case o => o
+  }
+
+  test("fused aggregate: every action kind on overlapping nodes equals the action run alone") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.ArrayType
+    import graft.functions.HistogramAggExpr
+    val (data, chains) = (fusedData, fusedChains)
     val cols = Seq("x", "y", "n", "a")
 
-    def canon(h: Histogram): Seq[Any] =
-      Seq(h.lo, h.hi, h.underflow, h.overflow, h.entries, h.sumx, h.sumx2) ++ h.counts
     def booked(df: DataFrame, compat: Boolean): Seq[(String, () => Seq[Any])] = {
       val d = TDF(df, compat = compat)
       chains.flatMap { case (name, chain) =>
@@ -826,10 +833,6 @@ class TDFSpec extends AnyFunSuite {
     }
     // longs exact, doubles bit-equal (the data is integral, so no sum depends
     // on the order of its terms); Take is compared as a multiset
-    def bits(v: Seq[Any]): Seq[Any] = v.map {
-      case d: Double => java.lang.Double.doubleToLongBits(d)
-      case o => o
-    }
     def empty(k: String, compat: Boolean): Double =
       if (!compat) Double.NaN
       else if (k.contains("/mean ")) 0.0
@@ -848,6 +851,102 @@ class TDFSpec extends AnyFunSuite {
       }
       input.unpersist()
     }
+  }
+
+  test("auto-ranged histograms are bit-equal whether some, all or no slots' value counts cap out") {
+    import org.apache.spark.sql.Row
+    val mid = 3
+    def histos(d: TDF): Seq[(String, graft.tdf.Result[Histogram])] = fusedChains.flatMap {
+      case (name, chain) =>
+        val t = chain.foldLeft(d) { case (n, (cut, p)) => n.Filter(cut, p) }
+        Seq(s"$name/auto y" -> t.Histo("y", 6), s"$name/auto a" -> t.Histo("a", 3),
+          s"$name/weighted auto a" -> t.HistoWeighted("a", "w", 3, 0.0, 0.0))
+    }
+    // each histogram's distinct values per slot, as its fold counts them
+    def perSlot(input: DataFrame): Seq[Seq[Int]] = fusedChains.flatMap { case (_, chain) =>
+      val rows = chain.foldLeft(input) { case (g, (_, p)) => g.where(p) }
+        .select(spark_partition_id(), $"y", $"a", $"w").collect().toSeq
+      def elems(r: Row) =
+        if (r.isNullAt(2)) Nil else r.getSeq[Any](2).filter(_ != null).map(_.asInstanceOf[Double])
+      def distinct(vals: Row => Seq[Double]) = (0 until input.rdd.getNumPartitions).map { p =>
+        rows.filter(_.getInt(0) == p).flatMap(vals).map(java.lang.Double.doubleToRawLongBits).distinct.size
+      }
+      Seq(distinct(r => if (r.isNullAt(1)) Nil else Seq(r.getDouble(1))), distinct(elems),
+        distinct(r => if (r.isNullAt(3) || r.getLong(3) == 0L) Nil else elems(r)))
+    }
+    for (input <- Seq(fusedData.repartition(1), fusedData.repartition(8))) {
+      input.cache()
+      val slots = perSlot(input)
+      assert(slots.exists(_.exists(_ > mid)) && slots.exists(_.forall(_ <= mid)),
+        s"cap $mid must cap out only some histograms' slots: $slots")
+      if (input.rdd.getNumPartitions > 1)
+        assert(slots.exists(s => s.exists(_ > mid) && s.exists(n => n > 0 && n <= mid)),
+          s"cap $mid must cap out only some slots of a histogram: $slots")
+      for (compat <- Seq(false, true)) {
+        def run(cap: Int) = histos(TestSeams.withValueCap(TDF(input, compat = compat), cap))
+          .map { case (k, r) => k -> bits(canon(r())) }
+        val exact = run(TestSeams.valueCap)
+        for (cap <- Seq(0, mid)) {
+          val got = run(cap)
+          for (((k, g), (_, e)) <- got.zip(exact))
+            assert(g == e, s"$k (partitions ${input.rdd.getNumPartitions}, compat $compat, cap $cap)")
+        }
+      }
+      input.unpersist()
+    }
+  }
+
+  test("an auto-ranged Histo capped out in a slot still runs exactly one fallback pass") {
+    val df = spark.range(0, 20, 1, 4)
+      .select($"id".cast("double").as("b1"), ($"id" % 2).cast("double").as("k"))
+    def book(cap: Int) = {
+      val d = TestSeams.withValueCap(TDF(df), cap)
+      (d.Count(), d.Histo("b1", 4), d.Histo("k", 2))
+    }
+    val (c0, h0, k0) = book(TestSeams.valueCap)
+    assert(SparkTest.runs(spark)(h0()) == SparkTest.Runs(jobs = 1, executions = 1))
+    // each slot holds 5 distinct b1 values and 2 distinct k values
+    val (c, h, k) = book(2)
+    val run = SparkTest.runs(spark)(h())
+    assert(run == SparkTest.Runs(jobs = 2, executions = 2), s"pass 1 and the fallback pass: $run")
+    assert(c() == 20L && c0() == 20L)
+    assert(bits(canon(h())) == bits(canon(h0())) && h().counts.toSeq == Seq(5L, 5L, 5L, 5L))
+    assert(bits(canon(k())) == bits(canon(k0())) && k().counts.toSeq == Seq(10L, 10L))
+  }
+
+  test("value counts resolve the axis and bins a second pass does: infinities, signed zeros, nulls, constants, NaN") {
+    // two slots; w = 0, 1, 2, 0, …, so a zero weight skips a value but its
+    // value still widens the axis
+    def frame(xs: Option[Double]*): DataFrame =
+      spark.sparkContext.parallelize(xs.zipWithIndex.map { case (x, i) => (x, (i % 3).toLong) }, 2)
+        .toDF("x", "w")
+    def both(df: DataFrame): Seq[Histogram] = {
+      val Seq(exact, capped) = Seq(TestSeams.valueCap, 0).map { cap =>
+        val d = TestSeams.withValueCap(TDF(df), cap)
+        Seq(d.Histo("x", 4), d.HistoWeighted("x", "w", 3, 0.0, 0.0)).map(_())
+      }
+      assert(exact.map(h => bits(canon(h))) == capped.map(h => bits(canon(h))))
+      exact
+    }
+    val inf = both(frame(Some(1.0), Some(2.0), Some(Double.PositiveInfinity), Some(2.0)))
+    assert(inf.forall(h => h.hi == Double.PositiveInfinity && h.overflow > 0L), inf)
+    val negInf = both(frame(Some(Double.NegativeInfinity), Some(1.0), Some(2.0)))
+    assert(negInf.head.lo == Double.NegativeInfinity && negInf.head.entries == 3L)
+    for (zeros <- Seq(Seq(-0.0, 0.0, 1.0, -0.0), Seq(0.0, -0.0, 1.0, 0.0))) {
+      val Seq(h, _) = both(frame(zeros.map(Some(_)): _*))
+      assert(bits(Seq(h.lo)) == bits(Seq(zeros.head)) && h.counts.head == 3L, h)
+    }
+    for (h <- both(frame(None, None)) ++ both(frame()))
+      assert(h.lo == 0.0 && h.hi == 1.000000001 && h.entries == 0L && h.counts.forall(_ == 0L))
+    val Seq(const, constW) = both(frame(Some(3.0), Some(3.0), Some(3.0)))
+    assert(const.lo == 2.5 && const.hi == 3.5 && const.counts.toSeq == Seq(0L, 0L, 3L, 0L))
+    assert(constW.counts.toSeq == Seq(0L, 3L, 0L) && constW.entries == 3L)
+    val nan = frame(Some(1.0), Some(Double.NaN))
+    val msgs = Seq(TestSeams.valueCap, 0).map { cap =>
+      intercept[IllegalArgumentException](TestSeams.withValueCap(TDF(nan), cap).Histo("x", 4)()).getMessage
+    }
+    assert(msgs.distinct.size == 1 && msgs.head.contains("resolved axis") &&
+      msgs.head.contains("of 'x' is empty"), msgs)
   }
 
   test("an auto-ranged Histo keeps its maximum in range when the range is tiny next to the values") {

@@ -24,9 +24,11 @@ private[tdf] final class SlotBuffer(
     val objs: Array[mutable.ArrayBuffer[Any]]) extends Serializable
 
 /** One entry's scratch, filled once per row by [[BookedAgg.fold]] and read by
-  * every op. Value v sits at row ordinal `nNodes + v`.
+  * every op. Value v sits at row ordinal `nNodes + v`. `valueCap` is the
+  * pass's [[AutoHistoOp]] cap: the distinct values each of its counts may
+  * hold in a slot.
   */
-private[tdf] final class Entry(val nNodes: Int, nValues: Int) {
+private[tdf] final class Entry(val nNodes: Int, nValues: Int, val valueCap: Int) {
   /** did the entry pass filter node k */
   val pass = new Array[Boolean](nNodes)
   /** the entry's value v: `nul` / `x` for a double, `arr` for an array
@@ -176,12 +178,12 @@ private[tdf] final case class HistoOp(
   * zero weight skips them), the moments in the bin-less `hists(h)`, added in
   * the same order, and the exact [[ValueCounts]] in `objs(t)` (empty until
   * the slot's first such value). Once the driver resolves the axis,
-  * [[binned]] cuts the counts into bins. A slot meeting more than `cap`
-  * distinct values leaves the counts [[ValueCounts.full]]: the histogram then
-  * needs a pass on the resolved axis.
+  * [[binned]] cuts the counts into bins. A slot meeting more than the pass's
+  * [[Entry.valueCap]] distinct values leaves the counts [[ValueCounts.full]]:
+  * the histogram then needs a pass on the resolved axis.
   */
 private[tdf] final case class AutoHistoOp(
-    node: Int, v: Int, w: Int, nbins: Int, d: Int, l: Int, h: Int, t: Int, cap: Int)
+    node: Int, v: Int, w: Int, nbins: Int, d: Int, l: Int, h: Int, t: Int)
     extends ValueOp {
   private def counts(b: SlotBuffer): ValueCounts = b.objs(t)(0).asInstanceOf[ValueCounts]
   protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = {
@@ -191,7 +193,7 @@ private[tdf] final case class AutoHistoOp(
     if (wt != 0L) {
       b.hists(h).moments(x, wt)
       if (b.objs(t).isEmpty) b.objs(t) += new ValueCounts
-      counts(b).add(java.lang.Double.doubleToRawLongBits(x), wt, cap)
+      counts(b).add(java.lang.Double.doubleToRawLongBits(x), wt, e.valueCap)
     }
   }
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = {
@@ -227,11 +229,28 @@ private[tdf] final case class AutoHistoOp(
 }
 
 private[tdf] object AutoHistoOp {
-  /** distinct values an auto-ranged histogram counts per slot before it
-    * needs a second pass; the driver holds every slot's counts, so this
-    * bounds them at 1 MB per histogram per slot
+  /** the most distinct values an auto-ranged histogram counts per slot
+    * before it needs a second pass. A slot that passes it has spent its
+    * inserts for nothing, so the cap is as low as the quantized inputs it is
+    * for allow: 3.6M exponential values on a 1/256 grid hold about 10.9K
+    * distinct ones. Folding one slot of 450K such values off the grid
+    * (continuous; one core of a 4-core Xeon VM) took about 1.5 ms longer at
+    * this cap than with no counts, and 5-8 ms longer at 65,536.
     */
-  val Cap: Int = 1 << 16
+  val Cap: Int = 1 << 14
+  /** the distinct values every slot's counts of one pass may hold together:
+    * the driver holds every slot's buffer before it merges them, so a pass
+    * cuts each slot's cap to `Budget / (slots * auto-ranged histograms)`.
+    * At 16 bytes a value that bounds a pass's counts at 16 MB of task
+    * results, far below Spark's default 1 GB `spark.driver.maxResultSize`,
+    * and at about 64 MB of tables once the driver reads them.
+    */
+  val Budget: Int = 1 << 20
+  /** each counts' cap in a pass of `slots` slots and `autos` auto-ranged
+    * histograms, at most `cap`
+    */
+  def slotCap(cap: Int, slots: Int, autos: Int): Int =
+    if (slots == 0 || autos == 0) cap else math.min(cap, (Budget / slots.toLong / autos).toInt)
 }
 
 /** One slot's exact multiset of an auto-ranged histogram's values: each
@@ -332,11 +351,11 @@ private[tdf] final case class Raw(override val dataType: DataType) extends Value
   * node passed, into one [[SlotBuffer]] per slot (the reference's per-slot
   * results, :483-517). [[merge]] is a per-op add, compare or append; the
   * driver merges the slots' buffers in slot order at the end of the loop
-  * (:1364-1394).
+  * (:1364-1394). `valueCap` is each slot's [[Entry.valueCap]].
   */
 private[tdf] final class BookedAgg(
     nodes: Int, kinds: Seq[ValueKind], ops: Seq[BookedOp],
-    nLongs: Int, nDoubles: Int, bins: Seq[Int], nObjs: Int) extends Serializable {
+    nLongs: Int, nDoubles: Int, bins: Seq[Int], nObjs: Int, valueCap: Int) extends Serializable {
 
   // Plain fields, not lazy vals: `fold` reads them for every row.
   private val kindTable: Array[ValueKind] = kinds.toArray
@@ -353,7 +372,7 @@ private[tdf] final class BookedAgg(
   /** one slot's pass over its entries */
   def fold(rows: Iterator[InternalRow]): SlotBuffer = {
     val b = newBuffer()
-    val e = new Entry(nodes, kindTable.length)
+    val e = new Entry(nodes, kindTable.length, valueCap)
     while (rows.hasNext) update(b, e, rows.next())
     b
   }

@@ -81,10 +81,12 @@ private[tdf] final case class Booked(
   * same projection. An auto-ranged histogram is exact in the same job: each
   * slot keeps its values' exact counts, which the driver bins once the
   * merged extrema give the axis; only one whose slot met too many distinct
-  * values needs a second job. Scan, pushdown, pruning and codegen are
-  * Catalyst's.
+  * values needs a second job. `valueCap` is the most distinct values such
+  * counts hold per slot ([[AutoHistoOp.Cap]]; tests lower it, it is not a
+  * user option). Scan, pushdown, pruning and codegen are Catalyst's.
   */
-final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
+final class BookingContext private[tdf] (
+    val base: DataFrame, compat: Boolean, valueCap: Int = AutoHistoOp.Cap) {
   // Frame identity captured eagerly so it is still printable after the owning
   // session has been stopped (used by the dangling-frame guard below).
   private val frameDesc = {
@@ -161,17 +163,13 @@ final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
     }
   }
 
-  /** Distinct values an auto-ranged histogram counts per slot before it
-    * needs a second pass; a knob for tests, not a user option.
-    */
-  private[tdf] var valueCap: Int = AutoHistoOp.Cap
-
   /** One pass runs every action. An auto-ranged histogram (the reference's
     * deferred-axis FillOperation, TDataFrame.hxx:410-480, which buffers each
     * slot's values until the axis is known) keeps its (min, max), its moments
     * and each slot's exact value counts in that pass; the driver resolves the
     * axis from the merged extrema and bins the merged counts. Only the
-    * histograms some slot met more than [[valueCap]] distinct values for
+    * histograms some slot met more distinct values for than its cap
+    * (`valueCap`, cut so that the pass's counts fit [[AutoHistoOp.Budget]])
     * share a second pass on their resolved axes. Each pass is one job.
     */
   private def runPasses(batch: Vector[Booked], wide: DataFrame): Unit = {
@@ -182,7 +180,7 @@ final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
         def name(c: String) = ren.getOrElse(c, c)
         val op = AutoHistoOp(pass1.node(steps), pass1.value(name(c)),
           wc.fold(-1)(w => pass1.weight(name(w))), nbins, pass1.doubles(2), pass1.longs(2),
-          pass1.hist(0), pass1.obj(), valueCap)
+          pass1.hist(0), pass1.obj())
         pass1.op(op)
         (s: SlotBuffer) => { auto += ((b, spec, op, s)); () }
       case b => lower(b, pass1)
@@ -318,7 +316,8 @@ final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
     /** Runs the pass as one job with one stage and no shuffle (none when no
       * action needs one): every task folds its partition of the projection
       * into one slot buffer, and the driver merges the buffers in partition
-      * order and hands every decoder the merged buffer.
+      * order and hands every decoder the merged buffer. The slots and
+      * auto-ranged histograms of the pass share [[AutoHistoOp.Budget]].
       */
     def run(decoders: Seq[SlotBuffer => Unit]): Unit = {
       val buf =
@@ -341,9 +340,11 @@ final class BookingContext private[tdf] (val base: DataFrame, compat: Boolean) {
                 GraftSql.column(UpCast(GraftSql.expression(col(c)), dt)).as(s"__tdf_v$v")
               case ((c, kind), v) => col(c).cast(kind.dataType).as(s"__tdf_v$v")
             }: _*)
-          val agg = new BookedAgg(nodes.length, values.map(_._2).toSeq, ops.toSeq,
-            nLongs, nDoubles, bins.toSeq, nObjs)
           GraftSql.withExecution(projected, "graft_booked") { rows =>
+            val cap = AutoHistoOp.slotCap(valueCap, rows.getNumPartitions,
+              ops.count(_.isInstanceOf[AutoHistoOp]))
+            val agg = new BookedAgg(nodes.length, values.map(_._2).toSeq, ops.toSeq,
+              nLongs, nDoubles, bins.toSeq, nObjs, cap)
             rows.sparkContext.runJob(rows, agg.fold _).foldLeft(agg.newBuffer())(agg.merge)
           }
         }
@@ -520,7 +521,8 @@ final class TDF private (
     ctx.book(steps, HistoSpec(pick(column, "Histo"), nbins, range))
   }
   /** auto-ranged: axis from data min/max (reference FillOperation), one pass
-    * unless a slot meets more than 65,536 distinct values
+    * unless a slot meets more than 16,384 distinct values, or fewer on a
+    * frame of many partitions (the counts of a pass hold 2^20 in all)
     */
   def Histo(column: String, nbins: Int): Result[Histogram] = {
     require(nbins >= 1, s"Histo: nbins must be >= 1, got $nbins")
@@ -760,7 +762,9 @@ final class TDF private (
 object TDF {
   /** Adopt an existing DataFrame (reference ctor TDataFrame.hxx:725). */
   def apply(df: DataFrame, defaultColumns: Seq[String] = Nil, compat: Boolean = false): TDF =
-    new TDF(new BookingContext(df, compat), Vector.empty, defaultColumns)
+    of(new BookingContext(df, compat), defaultColumns)
+  private[tdf] def of(ctx: BookingContext, defaultColumns: Seq[String] = Nil): TDF =
+    new TDF(ctx, Vector.empty, defaultColumns)
   /** Open a dataset from storage (reference ctor TDataFrame.hxx:716); parquet
     * path or glob — multi-file is the TChain analog.
     */

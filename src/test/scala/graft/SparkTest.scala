@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.graftest.Bus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -47,6 +47,25 @@ object SparkTest {
       body
       Bus.drain(sc)
       Runs(jobs.get, execs.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The serialized size of every task result `body` ships to the driver of
+    * `spark`, summed; the bus is drained as in [[runs]].
+    */
+  def resultBytes(spark: SparkSession)(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      Bus.drain(sc)
+      bytes.get
     } finally sc.removeSparkListener(listener)
   }
 

@@ -883,7 +883,7 @@ class TDFSpec extends AnyFunSuite {
         assert(slots.exists(s => s.exists(_ > mid) && s.exists(n => n > 0 && n <= mid)),
           s"cap $mid must cap out only some slots of a histogram: $slots")
       for (compat <- Seq(false, true)) {
-        def run(cap: Int) = histos(TestSeams.withValueCap(TDF(input, compat = compat), cap))
+        def run(cap: Int) = histos(TestSeams.withValueCap(input, cap, compat))
           .map { case (k, r) => k -> bits(canon(r())) }
         val exact = run(TestSeams.valueCap)
         for (cap <- Seq(0, mid)) {
@@ -900,7 +900,7 @@ class TDFSpec extends AnyFunSuite {
     val df = spark.range(0, 20, 1, 4)
       .select($"id".cast("double").as("b1"), ($"id" % 2).cast("double").as("k"))
     def book(cap: Int) = {
-      val d = TestSeams.withValueCap(TDF(df), cap)
+      val d = TestSeams.withValueCap(df, cap)
       (d.Count(), d.Histo("b1", 4), d.Histo("k", 2))
     }
     val (c0, h0, k0) = book(TestSeams.valueCap)
@@ -914,6 +914,33 @@ class TDFSpec extends AnyFunSuite {
     assert(bits(canon(k())) == bits(canon(k0())) && k().counts.toSeq == Seq(10L, 10L))
   }
 
+  test("the value counts of a pass share one budget: many slots fall back before they ship counts") {
+    // 2,000 distinct values in each of 128 slots; 8 auto-ranged histograms
+    // cut each slot's cap to the budget / (128 * 8)
+    val (slots, autos, perSlot) = (128, 8, 2000)
+    assert(TestSeams.valueBudget / (slots * autos) < perSlot && perSlot < TestSeams.valueCap)
+    val df = spark.range(0L, slots.toLong * perSlot, 1L, slots).select(($"id" * 1.5).as("x"))
+    def book(d: TDF) = (0 until autos).map(i => d.Histo("x", 16 + i))
+    def shipped(d: TDF): (Seq[Seq[Any]], SparkTest.Runs, Long) = {
+      val hs = book(d)
+      var run: SparkTest.Runs = null
+      val bytes = SparkTest.resultBytes(spark) { run = SparkTest.runs(spark)(hs.head()) }
+      (hs.map(h => bits(canon(h()))), run, bytes)
+    }
+    val (budgeted, run, bytes) = shipped(TDF(df))
+    val (capped, run0, bytes0) = shipped(TestSeams.withValueCap(df, 0))
+    assert(run == SparkTest.Runs(jobs = 2, executions = 2) && run0 == run, s"$run, cap 0: $run0")
+    assert(budgeted == capped)
+    // every slot dropped its counts, so the tasks ship what they ship with no
+    // counts at all, not the 128 * 8 * 2,000 16-byte entries (32 MB) they met
+    assert(bytes <= bytes0 + bytes0 / 10, s"$bytes bytes shipped, $bytes0 with cap 0")
+    // the same slots' values, 4 slots of them, fit the budget: one job
+    val few = spark.range(0L, 4L * perSlot, 1L, 4).select(($"id" * 1.5).as("x"))
+    val (one, run4, _) = shipped(TDF(few))
+    val (one0, _, _) = shipped(TestSeams.withValueCap(few, 0))
+    assert(run4 == SparkTest.Runs(jobs = 1, executions = 1) && one == one0, s"$run4")
+  }
+
   test("value counts resolve the axis and bins a second pass does: infinities, signed zeros, nulls, constants, NaN") {
     // two slots; w = 0, 1, 2, 0, …, so a zero weight skips a value but its
     // value still widens the axis
@@ -922,7 +949,7 @@ class TDFSpec extends AnyFunSuite {
         .toDF("x", "w")
     def both(df: DataFrame): Seq[Histogram] = {
       val Seq(exact, capped) = Seq(TestSeams.valueCap, 0).map { cap =>
-        val d = TestSeams.withValueCap(TDF(df), cap)
+        val d = TestSeams.withValueCap(df, cap)
         Seq(d.Histo("x", 4), d.HistoWeighted("x", "w", 3, 0.0, 0.0)).map(_())
       }
       assert(exact.map(h => bits(canon(h))) == capped.map(h => bits(canon(h))))
@@ -943,7 +970,7 @@ class TDFSpec extends AnyFunSuite {
     assert(constW.counts.toSeq == Seq(0L, 3L, 0L) && constW.entries == 3L)
     val nan = frame(Some(1.0), Some(Double.NaN))
     val msgs = Seq(TestSeams.valueCap, 0).map { cap =>
-      intercept[IllegalArgumentException](TestSeams.withValueCap(TDF(nan), cap).Histo("x", 4)()).getMessage
+      intercept[IllegalArgumentException](TestSeams.withValueCap(nan, cap).Histo("x", 4)()).getMessage
     }
     assert(msgs.distinct.size == 1 && msgs.head.contains("resolved axis") &&
       msgs.head.contains("of 'x' is empty"), msgs)

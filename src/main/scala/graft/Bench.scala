@@ -81,61 +81,6 @@ object Bench {
     }
   }
 
-  /** Per-twin streaming telemetry: micro-batch count, final state-store
-    * rows, and per-batch trigger walls, read from the engine's own progress
-    * events. This is what makes a stream twin's minus-control wall
-    * ATTRIBUTABLE: the machinery cost scales with `batches`, the logic's
-    * state with `state_rows` (the r14 verdict's ask #6), and `batch_ms`
-    * separates trigger-0 (plan + state init) from steady state (the r15
-    * verdict's ask #6) — a steady-state regression becomes visible even
-    * when a heavy first trigger dominates the wall.
-    */
-  private[graft] final class StreamStats
-    extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    // run-id attribution (r16 verdict ask #4): events count only for queries
-    // STARTED after the latest reset(). The listener bus is async, so a
-    // trailing progress event from twin N can arrive after twin N+1's reset;
-    // the old reset-window attribution counted it into the wrong twin. Each
-    // started query is stamped with the generation current at its start;
-    // progress events from an older generation's runId are dropped — batch_ms
-    // arrays can no longer interleave across twins BY CONSTRUCTION.
-    private val gen = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val runGen =
-      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Integer]()
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val lastState =
-      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Long]()
-    private val batchMs =
-      new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    def reset(): Unit = {
-      gen.incrementAndGet(); batches.set(0); lastState.clear(); batchMs.clear()
-    }
-    def stateRows: Long = {
-      var s = 0L; lastState.values.forEach(v => s += v); s
-    }
-    def batchWallsMs: Seq[Long] = {
-      val b = Seq.newBuilder[Long]; batchMs.forEach(v => b += v); b.result()
-    }
-    override def onQueryStarted(e: QueryStartedEvent): Unit =
-      runGen.put(e.runId, Integer.valueOf(gen.get()))
-    override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      val g = runGen.get(e.progress.runId)
-      if (g != null && g.intValue == gen.get()) {
-        batches.incrementAndGet()
-        val d = e.progress.durationMs.get("triggerExecution")
-        batchMs.add(if (d == null) -1L else d.longValue)
-        var s = 0L
-        e.progress.stateOperators.foreach(op => s += op.numRowsTotal)
-        lastState.put(e.progress.id, s)
-      }
-    }
-    // runGen stays bounded: stamps are dropped when their query terminates
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
-      runGen.remove(e.runId); ()
-    }
-  }
-
   // ---- incremental artifact state (r15 verdict ask #1) ---------------------
   // BENCH_r15.json died on the driver's time budget with `parsed: null`: the
   // JSON was only assembled at the very end, so a SIGTERM mid-run produced
@@ -705,24 +650,11 @@ object Bench {
     // per-twin streaming telemetry rides the LAST timed sample (r15 ask #1a:
     // a 4th instrumented run per twin — 38 extra stream executions — helped
     // blow the driver budget; the listener is passive, so folding it into a
-    // timed sample costs nothing)
-    val streamStats = new StreamStats
-    spark.streams.addListener(streamStats)
-    // the listener bus is async: wait for TWO consecutive stable 100ms polls
-    // (r15 ADVICE — one stable poll let a trailing progress event from twin
-    // N land after twin N+1's reset and be mis-attributed)
-    def settleStream(): (Int, Long) = {
-      var stable = 0
-      var last = streamStats.batches.get()
-      var spins = 0
-      while (stable < 2 && spins < 60) {
-        Thread.sleep(100)
-        val n = streamStats.batches.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-        spins += 1
-      }
-      (last, streamStats.stateRows)
-    }
+    // timed sample costs nothing). Micro-batch count, final state-store rows
+    // and per-trigger walls make a twin's minus-control wall attributable:
+    // machinery cost scales with `batches`, the logic's state with
+    // `state_rows`, and `batch_ms` separates trigger 0 from steady state.
+    val streamStats = graft.streaming.Streams.Stats.attach(spark)
 
     // ---- adaptive sampling + cumulative-wall budget guard (r16 verdict
     // ask #1: the driver bench hit its timeout two rounds running; r16's fix
@@ -830,7 +762,8 @@ object Bench {
         } else {
           streamStats.reset()
           val t = timed()
-          val (b, sr) = settleStream()
+          streamStats.settle()
+          val (b, sr) = (streamStats.batches, streamStats.stateRows)
           val bms = streamStats.batchWallsMs.take(64).mkString("[", ",", "]")
           val row =
             if (t >= 0) s"""{"batches":$b,"state_rows":$sr,"batch_ms":$bms}"""
@@ -883,7 +816,7 @@ object Bench {
     def median(ts: Seq[Double]): Double = medianOf(ts)
 
     // timed run that also captures task count + max task duration (listener
-    // bus is async: poll the counter until it stops moving before reading)
+    // bus is async: drain it before reading)
     def timedWithTasks(run: () => Unit): (Double, Int, Double) = {
       val l = new TaskStats
       spark.sparkContext.addSparkListener(l)
@@ -891,11 +824,8 @@ object Bench {
         val t0 = System.nanoTime()
         run()
         val sec = (System.nanoTime() - t0) / 1e9
-        var last = -1
-        var n = l.tasks.get()
-        var spins = 0
-        while (n != last && spins < 50) { Thread.sleep(100); last = n; n = l.tasks.get(); spins += 1 }
-        (sec, n, l.maxMs.get() / 1e3)
+        org.apache.spark.sql.graftbridge.GraftSql.drainListenerBus(spark.sparkContext)
+        (sec, l.tasks.get(), l.maxMs.get() / 1e3)
       } finally spark.sparkContext.removeSparkListener(l)
     }
 
@@ -954,11 +884,7 @@ object Bench {
     def timedBuild(f: () => Unit): Double =
       try { val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable => System.err.println(s"[bench] index build: $e"); -1.0 }
-    def rmrf(p: String): Unit = {
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(p), true); ()
-    }
-    rmrf(servePqPath); rmrf(serveI8Path)
+    Tables.deleteTree(servePqPath); Tables.deleteTree(serveI8Path)
     val buildPqSec = timedBuild(() => graft.ops.Similarity.writeIvfIndex(
       emb, "vec_id", "embedding", servePqPath, 16, graft.ops.IvfCodec.Pq(4, 16, 64)))
     // the int8 index carries the label attribute so the filtered-search row
@@ -985,7 +911,7 @@ object Bench {
       // build number below)
       "q_serve_hybrid" -> {
         val statsPath = s"${Tables.scratchRoot}/graft_bench_bm25_stats"
-        rmrf(statsPath)
+        Tables.deleteTree(statsPath)
         val docs = Tables.documents(spark, sfDir)
         val buildSec = timedBuild(() =>
           graft.ops.Retrieval.bm25StatsTable(docs, "doc_id", "text")
@@ -1120,7 +1046,7 @@ object Bench {
     }
 
     recordBudget()
-    spark.streams.removeListener(streamStats)
+    streamStats.detach()
     // the box is shared: headline totals swing ±15% with other tenants'
     // load, so the artifact records the 1-min load average at start and end
     // (read inside buildJson) — a contended run is self-diagnosing

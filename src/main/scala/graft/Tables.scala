@@ -103,12 +103,14 @@ object Tables {
     */
   def scratch(name: String, sfDir: String): String = {
     val path = s"$scratchRoot/graft_${name}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
-    val dir = new java.io.File(path)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    if (dir.exists()) rm(dir)
+    deleteTree(path)
     path
+  }
+
+  /** Delete the local file or directory tree at `path`, if any; never
+    * throws. A symbolic link inside the tree is deleted, not followed.
+    */
+  private[graft] def deleteTree(path: String): Unit = {
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)); ()
   }
 }

@@ -62,12 +62,8 @@ object Verify {
         errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     // the per-PID scratch tree dies with the run (repeated rounds must not
     // accumulate table-sized directories on the shared box)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     if (sys.props.get("graft.scratch.root").contains(scratch))
-      rm(new java.io.File(scratch))
+      Tables.deleteTree(scratch)
     spark.stop()
   }
 }

@@ -41,17 +41,7 @@ object QuietSample {
     // bench folds into its last sample — the drift-adjudication protocol
     // needs per-trigger walls to separate "box load" from "a refit hiding
     // in one trigger" without a second tool
-    val streamStats = new graft.Bench.StreamStats
-    spark.streams.addListener(streamStats)
-    def settle(): Unit = {
-      var stable = 0; var last = streamStats.batches.get(); var spins = 0
-      while (stable < 2 && spins < 60) {
-        Thread.sleep(100)
-        val b = streamStats.batches.get()
-        if (b == last) stable += 1 else { stable = 0; last = b }
-        spins += 1
-      }
-    }
+    val streamStats = graft.streaming.Streams.Stats.attach(spark)
     val rows = names.map { name =>
       def run(): Double = {
         val t0 = System.nanoTime()
@@ -62,15 +52,15 @@ object QuietSample {
       run() // warmup
       val isStream = name.startsWith("q_stream_")
       val ts = (0 until n).map { i =>
-        if (isStream && i == n - 1) { settle(); streamStats.reset() }
+        if (isStream && i == n - 1) streamStats.reset()
         run()
       }
       val streamPart =
         if (!isStream) ""
         else {
-          settle()
+          streamStats.settle()
           val bms = streamStats.batchWallsMs.take(64).mkString("[", ",", "]")
-          s""","batches":${streamStats.batches.get()},""" +
+          s""","batches":${streamStats.batches},""" +
             s""""state_rows":${streamStats.stateRows},"batch_ms":$bms"""
         }
       // plan counts ride along so a drift adjudication can pin "same plan,
@@ -93,14 +83,10 @@ object QuietSample {
     }
     val load1 = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    spark.streams.removeListener(streamStats)
+    streamStats.detach()
     println(f"""{"samples":${rows.mkString("{", ",", "}")},""" +
       f""""load_avg_1m":{"start":$load0%.2f,"end":$load1%.2f},"sf":"$sfDir"}""")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(privRoot))
+    graft.Tables.deleteTree(privRoot)
     spark.stop()
   }
 }

@@ -442,11 +442,7 @@ object ScaleCurves {
     val n100 = sys.env.get("SPARK_GRAFT_SCALE_SAMPLES100").map(_.toInt).getOrElse(3)
     println(measureJson(spark, sfDir, samplesPerLeg = 3,
       samples100 = n100, at100 = legs100Standalone))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    sys.props.get("graft.scratch.root").foreach(r => rm(new java.io.File(r)))
+    sys.props.get("graft.scratch.root").foreach(graft.Tables.deleteTree)
     spark.stop()
   }
 

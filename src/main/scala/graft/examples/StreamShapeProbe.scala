@@ -1,7 +1,6 @@
 package graft.examples
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Print each stream twin's state shape — stateful operator count and the
   * distinct state-store shuffle-partition counts — from the twin's own
@@ -13,40 +12,6 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * sbt "runMain graft.examples.StreamShapeProbe [sfDir]"
   */
 object StreamShapeProbe {
-
-  /** last-generation progress collector (same run-id attribution scheme as
-    * Bench.StreamStats, reduced to what the shape pin needs)
-    */
-  final class ShapeStats extends StreamingQueryListener {
-    import StreamingQueryListener._
-    private val gen = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val runGen =
-      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Integer]()
-    // per query-id: (stateful operator count, distinct numShufflePartitions)
-    private val shapes =
-      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, (Int, Set[Long])]()
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    def reset(): Unit = { gen.incrementAndGet(); batches.set(0); shapes.clear() }
-    def shape: (Int, Set[Long]) = {
-      var ops = 0; var parts = Set.empty[Long]
-      shapes.values.forEach { case (o, p) => ops = math.max(ops, o); parts ++= p }
-      (ops, parts)
-    }
-    override def onQueryStarted(e: QueryStartedEvent): Unit =
-      runGen.put(e.runId, Integer.valueOf(gen.get()))
-    override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      val g = runGen.get(e.progress.runId)
-      if (g != null && g.intValue == gen.get()) {
-        batches.incrementAndGet()
-        val ops = e.progress.stateOperators.length
-        val parts = e.progress.stateOperators.map(_.numShufflePartitions).toSet
-        shapes.put(e.progress.id, (ops, parts))
-      }
-    }
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
-      runGen.remove(e.runId); ()
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -60,17 +25,7 @@ object StreamShapeProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val stats = new ShapeStats
-    spark.streams.addListener(stats)
-    def settle(): Unit = {
-      var stable = 0; var last = stats.batches.get(); var spins = 0
-      while (stable < 2 && spins < 60) {
-        Thread.sleep(100)
-        val b = stats.batches.get()
-        if (b == last) stable += 1 else { stable = 0; last = b }
-        spins += 1
-      }
-    }
+    val stats = graft.streaming.Streams.Stats.attach(spark)
     val twins = graft.SparkEntry.queries.keys.filter(_.startsWith("q_stream_"))
       .toSeq.sorted
     twins.foreach { name =>
@@ -81,18 +36,14 @@ object StreamShapeProbe {
       try {
         graft.SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
-        settle()
+        stats.settle()
         val (ops, parts) = stats.shape
         println(s"SHAPE $name ops=$ops parts=${parts.toSeq.sorted.mkString("/")}")
       } catch {
         case e: Throwable => println(s"SHAPE $name ERR ${e.getClass.getSimpleName}")
       } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
     }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(privRoot))
+    graft.Tables.deleteTree(privRoot)
     spark.stop()
   }
 }

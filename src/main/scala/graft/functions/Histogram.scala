@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
-
 /** A filled 1-D histogram: the result type of the reference's `Histo` action
   * (reference: TDataFrame.hxx:897-934 books a TH1F fill; per-slot partials are
   * merged at end of loop, TDataFrame.hxx:483-517). Bin i (0-based) covers
@@ -109,36 +105,4 @@ final case class HistBuffer(
 
 object HistBuffer {
   def empty(nbins: Int): HistBuffer = HistBuffer(new Array[Long](nbins), 0L, 0L, 0L, 0.0, 0.0)
-}
-
-/** Single-pass fixed-range histogram as a typed `Aggregator` (partial/final
-  * merge maps 1:1 onto the reference's per-slot fill + end-of-loop merge).
-  * Input is `Seq[Double]` so that array columns fill elementwise (the
-  * reference's container overloads, TDataFrame.hxx:451-459); scalar columns
-  * are wrapped with `array(col)` by the caller.
-  */
-final class HistogramAggregator(nbins: Int, lo: Double, hi: Double)
-    extends Aggregator[Seq[Double], HistBuffer, Histogram] {
-  private val w = (hi - lo) / nbins
-
-  override def zero: HistBuffer = HistBuffer.empty(nbins)
-
-  override def reduce(b: HistBuffer, in: Seq[Double]): HistBuffer = {
-    if (in != null) in.foreach(b.fill(_, 1L, lo, hi, w))
-    b
-  }
-
-  override def merge(a: HistBuffer, b: HistBuffer): HistBuffer = { a.add(b); a }
-
-  override def finish(b: HistBuffer): Histogram =
-    Histogram(nbins, lo, hi, b.counts, b.underflow, b.overflow, b.entries, b.sumx, b.sumx2)
-
-  override def bufferEncoder: Encoder[HistBuffer] = Encoders.product[HistBuffer]
-  override def outputEncoder: Encoder[Histogram] = Encoders.product[Histogram]
-}
-
-object HistogramAggregator {
-  /** Column-level entry: `histo(when(pred, array(x)), 100, 0, 50)`. */
-  def histo(in: Column, nbins: Int, lo: Double, hi: Double): Column =
-    udaf(new HistogramAggregator(nbins, lo, hi)).apply(in)
 }

@@ -11,13 +11,12 @@ import org.apache.spark.sql.graftbridge.{GraftSql => ExpressionUtils}
 import org.apache.spark.sql.types._
 
 /** Native histogram aggregate — a hand-written `TypedImperativeAggregate`
-  * replacing the `udaf(Aggregator)` path. The udaf wrapper deserializes every
-  * input row through an encoder (Seq[Double] boxing); this implementation
-  * reads the child expression's value straight off the InternalRow (~2×
-  * faster on the flagship chain). Semantics identical to
-  * [[HistogramAggregator]]: TH1F edge convention, per-partition partial
-  * buffers merged at the end — the Spark analog of the reference's per-slot
-  * TH1F clones (reference TDataFrame.hxx:483-517).
+  * in place of a `udaf(Aggregator)`, which would deserialize every input row
+  * through an encoder (Seq[Double] boxing); this implementation reads the
+  * child expression's value straight off the InternalRow (~2× faster on the
+  * flagship chain). TH1F edge convention ([[HistBuffer.bin]]), per-partition
+  * partial buffers merged at the end — the Spark analog of the reference's
+  * per-slot TH1F clones (reference TDataFrame.hxx:483-517).
   *
   * Accepts a `double` column (one fill per row) or `array<double>`
   * (elementwise fill — the reference's container overloads).

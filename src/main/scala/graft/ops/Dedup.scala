@@ -616,7 +616,7 @@ object Dedup {
       // (r17 block hygiene — the loop otherwise leaks one block set per
       // phase per round until GC, and the block-manager churn is measurable
       // on iterative rows)
-      edges.unpersist(false)
+      graft.Pins.release(edges)
       // SMALL-STAR: orient each edge at its larger endpoint u; connect u and
       // all its smaller neighbors to the neighborhood minimum
       val smallDir = large.select(col("hi").as("u"), col("lo").as("v"))
@@ -631,7 +631,7 @@ object Dedup {
       // small is materialized (isStarForest's count ran over it): the
       // round's large-phase blocks are dead. The FINAL small and `src` stay
       // pinned — the returned labels frame reads them lazily.
-      large.unpersist(false)
+      graft.Pins.release(large)
       edges = small
       rounds += 1
     }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pins.release
+
 /** Bounded-iteration graph analytics in pure integer arithmetic.
   *
   * PageRank's per-node update is a float sum over incoming contributions —
@@ -24,16 +26,6 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   val SCALE: Long = 1000000000L // 1e9 fixed-point units
-
-  /** Free an eager local checkpoint's blocks. `Dataset.unpersist` only drops
-    * cache-manager entries, so on a checkpoint it frees nothing: the blocks
-    * belong to the RDD under the checkpointed frame's `LogicalRDD`.
-    */
-  private def release(checkpoint: DataFrame): Unit =
-    checkpoint.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case p => throw new IllegalArgumentException(s"not a local checkpoint: ${p.nodeName}")
-    }
 
   /** `edges`: (src, dst, w) with w a positive long; directed (symmetrize
     * before calling for an undirected graph). Nodes are derived from edge

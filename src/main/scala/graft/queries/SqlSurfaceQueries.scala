@@ -198,16 +198,13 @@ object SqlSurfaceQueries {
     // sliding event-time windows (10 min length, 5 min slide) via the real
     // streaming path
     "q_stream_sliding" -> { (s, dir) =>
-      val name = s"graft_sliding_${System.nanoTime()}"
-      val q = Streams.eventStream(s, dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-        .writeStream.outputMode("complete").format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).orderBy(col("window_start"), col("event_type"))
+      Streams.drainToMemory("complete") {
+        Streams.eventStream(s, dir)
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").as("window_start"), col("event_type"), col("n"))
+      }.orderBy(col("window_start"), col("event_type"))
     },
 
     // approximate aggregates — the 100 TB scale path (sketch-based, fixed

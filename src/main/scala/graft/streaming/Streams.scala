@@ -4,6 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSql
+import org.apache.spark.sql.streaming.{
+  DataStreamWriter, StateOperatorProgress, StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming operators over the `events` table (SURVEY.md §2.5:
@@ -11,8 +14,10 @@ import org.apache.spark.sql.types._
   *
   * The parquet is replayed through a real `readStream` with watermarked
   * event-time windows, so the full streaming machinery (watermark tracking,
-  * state store, window assignment) is exercised; `processAllAvailable` drains
-  * it deterministically for tests/oracles.
+  * state store, window assignment) is exercised. Every twin runs through
+  * one protocol, [[drain]] (or [[drainToMemory]] for a memory sink), which
+  * processes the stream deterministically for tests/oracles; [[Stats]] is
+  * the one listener that records the runs.
   */
 object Streams {
 
@@ -51,6 +56,107 @@ object Streams {
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** The one run protocol of every stream twin: start `writer`, process
+    * everything its sources hold, stop. Returns the stopped query, whose
+    * progress stays readable; [[Stats.settle]] then delivers every progress
+    * event it posted.
+    */
+  def drain(writer: DataStreamWriter[Row]): StreamingQuery = {
+    val q = writer.start()
+    try q.processAllAvailable() finally q.stop()
+    q
+  }
+
+  /** [[drain]] `df` into a memory table in output `mode` and return the
+    * table as a batch frame. The temp view the memory sink registers is
+    * dropped before returning: the returned frame's plan is already
+    * analyzed and holds the sink itself, so the view would only keep the
+    * twin's whole output in memory for the rest of the session.
+    */
+  def drainToMemory(mode: String)(df: DataFrame): DataFrame = {
+    val name = s"graft_drain_${System.nanoTime()}"
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
+    try df.sparkSession.table(name) finally df.sparkSession.catalog.dropTempView(name)
+  }
+
+  /** The one progress listener of the stream twins: micro-batch count,
+    * per-trigger walls (`triggerExecution`), final state-store rows and the
+    * state-operator shape, read from the engine's own progress events.
+    * `batches` separates machinery cost from the logic's `stateRows`;
+    * `batchWallsMs` separates trigger 0 (plan + state init) from steady
+    * state; `shape` is what StreamShapeSpec pins.
+    *
+    * Run-id attribution: events count only for queries STARTED after the
+    * latest [[reset]]. Each started query is stamped with the generation
+    * current at its start (its started event is delivered before `start()`
+    * returns), and progress of an older generation's run is dropped, so two
+    * twins' records cannot interleave.
+    *
+    * Delivery is asynchronous, but [[settle]] is exact: once `stop()` has
+    * returned every progress event of the run has been posted, and
+    * draining the listener bus delivers them all.
+    */
+  final class Stats private (spark: SparkSession) extends StreamingQueryListener {
+    import StreamingQueryListener._
+    private val gen = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val runGen =
+      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Integer]()
+    private val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val batchMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    // per query id: the state operators of its latest progress
+    private val lastOps = new java.util.concurrent.ConcurrentHashMap[
+      java.util.UUID, Array[StateOperatorProgress]]()
+
+    def reset(): Unit = {
+      gen.incrementAndGet(); nBatches.set(0); batchMs.clear(); lastOps.clear()
+    }
+    /** Blocks until every progress event posted so far has been recorded. */
+    def settle(): Unit = GraftSql.drainListenerBus(spark.sparkContext)
+    /** Stops listening. */
+    def detach(): Unit = spark.streams.removeListener(this)
+
+    def batches: Int = nBatches.get()
+    def batchWallsMs: Seq[Long] = {
+      val b = Seq.newBuilder[Long]; batchMs.forEach(v => b += v); b.result()
+    }
+    def stateRows: Long = {
+      var s = 0L; lastOps.values.forEach(_.foreach(s += _.numRowsTotal)); s
+    }
+    /** (stateful operator count, distinct state-store partition counts) */
+    def shape: (Int, Set[Long]) = {
+      var ops = 0; var parts = Set.empty[Long]
+      lastOps.values.forEach { o =>
+        ops = math.max(ops, o.length); parts ++= o.map(_.numShufflePartitions)
+      }
+      (ops, parts)
+    }
+
+    override def onQueryStarted(e: QueryStartedEvent): Unit =
+      runGen.put(e.runId, Integer.valueOf(gen.get()))
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val g = runGen.get(e.progress.runId)
+      if (g != null && g.intValue == gen.get()) {
+        nBatches.incrementAndGet()
+        val d = e.progress.durationMs.get("triggerExecution")
+        batchMs.add(if (d == null) -1L else d.longValue)
+        lastOps.put(e.progress.id, e.progress.stateOperators)
+      }
+    }
+    // runGen stays bounded: stamps are dropped when their query terminates
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+      runGen.remove(e.runId); ()
+    }
+  }
+
+  object Stats {
+    /** A [[Stats]] listening to `spark`'s streams. */
+    def attach(spark: SparkSession): Stats = {
+      val s = new Stats(spark)
+      spark.streams.addListener(s)
+      s
     }
   }
 
@@ -139,34 +245,27 @@ object Streams {
     * a regression there can't hide under harness noise (and vice versa).
     */
   def streamingControl(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_sctl_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .select(col("event_id"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      eventStream(spark, sfDir)
+        .select(col("event_id"))
+    }
   }
 
   /** Tumbling event-time window aggregation with watermark; drained to an
     * in-memory table and returned as a finished DataFrame.
     */
   def tumblingAgg(spark: SparkSession, sfDir: String, windowLen: String): DataFrame = {
-    val name = s"graft_tumbling_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        // decimal internally (exact, order-independent); double on the wire —
-        // decimal output columns don't survive the oracle's typed hash
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      eventStream(spark, sfDir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), windowLen), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          // decimal internally (exact, order-independent); double on the wire —
+          // decimal output columns don't survive the oracle's typed hash
+          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+        .select(col("window.start").as("window_start"), col("event_type"),
+          col("n"), col("sum_value"))
+    }
   }
 
   /** Streaming histogram — the Histo family's streaming cell: per-bin counts
@@ -178,13 +277,9 @@ object Streams {
   def streamingHisto(
       spark: SparkSession, sfDir: String,
       nbins: Int, lo: Double, hi: Double): DataFrame = {
-    val name = s"graft_stream_histo_${System.nanoTime()}"
-    val q = histoAgg(spark, sfDir, nbins, lo, hi)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      histoAgg(spark, sfDir, nbins, lo, hi)
+    }
   }
 
   private def histoAgg(
@@ -204,17 +299,13 @@ object Streams {
     */
   def streamingQuantileHisto(
       spark: SparkSession, sfDir: String, bounds: DataFrame): DataFrame = {
-    val name = s"graft_squant_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .select(round(col("value") * 100).cast("long").as("c"))
-      .join(bounds) // 1-row static side: broadcast stream-static cross join
-      .select(expr("(c - lo) div width").as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      eventStream(spark, sfDir)
+        .select(round(col("value") * 100).cast("long").as("c"))
+        .join(bounds) // 1-row static side: broadcast stream-static cross join
+        .select(expr("(c - lo) div width").as("bucket"))
+        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
+    }
   }
 
   /** Streaming PSI bucket counts — the live side of the drift monitor
@@ -227,20 +318,16 @@ object Streams {
   def streamingPsiCounts(
       spark: SparkSession, sfDir: String, bounds: DataFrame,
       cutoff: String, nBins: Int): DataFrame = {
-    val name = s"graft_stream_psi_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .filter(col("ts") >= lit(cutoff).cast("timestamp"))
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("c"))
-      .join(bounds) // 1-row static side: broadcast stream-static cross join
-      .select(col("event_type"),
-        least(greatest(expr("(c - lo) div width"), lit(0L)),
-          lit((nBins - 1).toLong)).as("bucket"))
-      .groupBy(col("event_type"), col("bucket")).agg(count(lit(1)).as("nc"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      eventStream(spark, sfDir)
+        .filter(col("ts") >= lit(cutoff).cast("timestamp"))
+        .select(col("event_type"), round(col("value") * 100).cast("long").as("c"))
+        .join(bounds) // 1-row static side: broadcast stream-static cross join
+        .select(col("event_type"),
+          least(greatest(expr("(c - lo) div width"), lit(0L)),
+            lit((nBins - 1).toLong)).as("bucket"))
+        .groupBy(col("event_type"), col("bucket")).agg(count(lit(1)).as("nc"))
+    }
   }
 
   /** Streaming winsorized-stats maintenance: values clipped against the
@@ -252,21 +339,17 @@ object Streams {
     */
   def streamingWinsorize(
       spark: SparkSession, sfDir: String, bounds: DataFrame): DataFrame = {
-    val name = s"graft_stream_winsor_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("c"))
-      .join(bounds, Seq("event_type"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("c") < col("lo_c"), 1L).otherwise(0L)).as("n_clip_lo"),
-        sum(when(col("c") > col("hi_c"), 1L).otherwise(0L)).as("n_clip_hi"),
-        min(col("lo_c")).as("lo_c"), min(col("hi_c")).as("hi_c"),
-        sum(least(greatest(col("c"), col("lo_c")), col("hi_c"))).as("s_clip"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      eventStream(spark, sfDir)
+        .select(col("event_type"), round(col("value") * 100).cast("long").as("c"))
+        .join(bounds, Seq("event_type"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("c") < col("lo_c"), 1L).otherwise(0L)).as("n_clip_lo"),
+          sum(when(col("c") > col("hi_c"), 1L).otherwise(0L)).as("n_clip_hi"),
+          min(col("lo_c")).as("lo_c"), min(col("hi_c")).as("hi_c"),
+          sum(least(greatest(col("c"), col("lo_c")), col("hi_c"))).as("s_clip"))
+    }
   }
 
   /** Streaming multimodal feature extraction — the ingest-time decode cell:
@@ -278,16 +361,13 @@ object Streams {
     * stub for the codec call without touching this cell.
     */
   def streamingMultimodal(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_smm_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .transform(df => graft.ops.Multimodal.extractFeatures(
-        graft.ops.Multimodal.attachBinary(df, "doc_id", "text"), "doc_id").toDF())
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .transform(df => graft.ops.Multimodal.extractFeatures(
+          graft.ops.Multimodal.attachBinary(df, "doc_id", "text"), "doc_id").toDF())
+    }
   }
 
   /** Streaming QUARANTINE — expectations ENFORCED at ingest: each event
@@ -301,16 +381,12 @@ object Streams {
   def streamingQuarantine(
       spark: SparkSession, sfDir: String,
       rules: Seq[graft.ops.Expectations.Rule]): DataFrame = {
-    val name = s"graft_squar_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .withColumn("failed", graft.ops.Expectations.scalarFailedTag(rules))
-      .filter(length(col("failed")) > 0)
-      .select(col("event_id"), col("failed"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      eventStream(spark, sfDir)
+        .withColumn("failed", graft.ops.Expectations.scalarFailedTag(rules))
+        .filter(length(col("failed")) > 0)
+        .select(col("event_id"), col("failed"))
+    }
   }
 
   /** QUARANTINE REPLAY — the closure of the streaming DQ loop ("fix the
@@ -338,7 +414,7 @@ object Streams {
     val promoted = s"$outDir/promoted"
     val quar = s"$outDir/quarantine"
     val table = s"$outDir/table"
-    val q = eventStream(spark, sfDir)
+    drain(eventStream(spark, sfDir)
       .withColumn("failed", scalarFailedTag(strict))
       .writeStream.outputMode("append")
       .foreachBatch { (b: Dataset[Row], id: Long) =>
@@ -352,10 +428,7 @@ object Streams {
           bb.unpersist()
           ()
         }
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     // the promoted side needs the same existence guard as the quarantine:
     // if EVERY event fails the strict rules (or the stream yields no
     // non-empty batch) no promoted/batch=N was ever written, and v1 must be
@@ -420,40 +493,36 @@ object Streams {
     */
   def streamingCovMoments(
       spark: SparkSession, sfDir: String, dim: Int, batches: Int): DataFrame = {
-    val name = s"graft_stream_cov_${System.nanoTime()}"
     val stage = s"${graft.Tables.scratchRoot}/graft_scov_stage_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
     val base = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     base.repartition(batches).write.mode("overwrite").parquet(stage)
-    val q = spark.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-      // each staged file is a single row group → without an explicit widen,
-      // ONE task per trigger runs the dim²/2-per-vector explode and the
-      // partial moment-agg serially (the r15 single-task trap); the raw
-      // vectors are narrow, the fan-out is 2080× — shuffle before the fan.
-      // Moment sums are long-additive, so the exchange can't change a row
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("x6",
-        expr("transform(embedding, x -> cast(round(cast(x as double) * 1e6) as bigint))"))
-      .select(explode(expr(
-        s"""flatten(transform(sequence(0, ${dim - 1}), i ->
-              transform(sequence(i, ${dim - 1}), j ->
-                named_struct('i', i, 'j', j,
-                  'x6', element_at(x6, i + 1), 'y6', element_at(x6, j + 1)))))"""))
-        .as("p"))
-      .select(col("p.i").as("i"), col("p.j").as("j"), col("p.x6").as("x6"),
-        col("p.y6").as("y6"))
-      .groupBy(col("i"), col("j"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("x6")).as("sx"), sum(col("y6")).as("sy"),
-        sum(col("x6") * col("y6")).as("sxy"),
-        sum(col("x6") * col("x6")).as("sxx"),
-        sum(col("y6") * col("y6")).as("syy"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      spark.readStream.schema(base.schema)
+        .option("maxFilesPerTrigger", 1).parquet(stage)
+        // each staged file is a single row group → without an explicit widen,
+        // ONE task per trigger runs the dim²/2-per-vector explode and the
+        // partial moment-agg serially (the r15 single-task trap); the raw
+        // vectors are narrow, the fan-out is 2080× — shuffle before the fan.
+        // Moment sums are long-additive, so the exchange can't change a row
+        .repartition(spark.sparkContext.defaultParallelism)
+        .withColumn("x6",
+          expr("transform(embedding, x -> cast(round(cast(x as double) * 1e6) as bigint))"))
+        .select(explode(expr(
+          s"""flatten(transform(sequence(0, ${dim - 1}), i ->
+                transform(sequence(i, ${dim - 1}), j ->
+                  named_struct('i', i, 'j', j,
+                    'x6', element_at(x6, i + 1), 'y6', element_at(x6, j + 1)))))"""))
+          .as("p"))
+        .select(col("p.i").as("i"), col("p.j").as("j"), col("p.x6").as("x6"),
+          col("p.y6").as("y6"))
+        .groupBy(col("i"), col("j"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("x6")).as("sx"), sum(col("y6")).as("sy"),
+          sum(col("x6") * col("y6")).as("sxy"),
+          sum(col("x6") * col("x6")).as("sxx"),
+          sum(col("y6") * col("y6")).as("syy"))
+    }
   }
 
   /** Streaming per-day event counts — the live side of the volume-anomaly
@@ -462,15 +531,11 @@ object Streams {
     * mean/σ model joins in batch-side against the drained snapshot.
     */
   def streamingDailyCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_stream_daily_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .select(to_date(col("ts")).as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      eventStream(spark, sfDir)
+        .select(to_date(col("ts")).as("day"))
+        .groupBy(col("day")).agg(count(lit(1)).as("n"))
+    }
   }
 
   /** Streaming funnel-stage maintenance: per-user earliest timestamp of
@@ -483,19 +548,15 @@ object Streams {
     * gates.
     */
   def streamingFunnelStages(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_stream_funnel_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-        min(when(col("event_type") === "click", col("ts"))).as("t_click"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      eventStream(spark, sfDir)
+        .filter(col("event_type").isin("view", "click", "purchase"))
+        .groupBy(col("user_id"))
+        .agg(
+          min(when(col("event_type") === "view", col("ts"))).as("t_view"),
+          min(when(col("event_type") === "click", col("ts"))).as("t_click"),
+          min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
+    }
   }
 
   /** Weighted streaming histogram — the decimal-summed-bins discipline
@@ -511,19 +572,15 @@ object Streams {
       nbins: Int, lo: Double, hi: Double, wScale: Int): DataFrame = {
     require(wScale >= 0 && wScale <= 9, s"wScale must be in [0, 9], got $wScale")
     val unit = math.pow(10.0, wScale)
-    val name = s"graft_stream_whisto_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .select(
-        graft.functions.Histo2D.bucket(col(x).cast("double"), nbins, lo, hi).as("bin"),
-        round(col(w).cast("double") * unit).cast("long").as("__wu"))
-      .groupBy(col("bin"))
-      .agg((sum(col("__wu")).cast("double") / unit).as("w"),
-        count(lit(1)).as("n_fills"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      eventStream(spark, sfDir)
+        .select(
+          graft.functions.Histo2D.bucket(col(x).cast("double"), nbins, lo, hi).as("bin"),
+          round(col(w).cast("double") * unit).cast("long").as("__wu"))
+        .groupBy(col("bin"))
+        .agg((sum(col("__wu")).cast("double") / unit).as("w"),
+          count(lit(1)).as("n_fills"))
+    }
   }
 
   /** Production FILE sink for a streaming aggregation: `foreachBatch`
@@ -543,14 +600,11 @@ object Streams {
   def streamingHistoToParquet(
       spark: SparkSession, sfDir: String,
       nbins: Int, lo: Double, hi: Double, outDir: String): DataFrame = {
-    val q = histoAgg(spark, sfDir, nbins, lo, hi)
+    drain(histoAgg(spark, sfDir, nbins, lo, hi)
       .writeStream.outputMode("complete")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         commitSnapshot(batch, outDir, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     readSnapshot(spark, outDir)
   }
 
@@ -864,7 +918,7 @@ object Streams {
         when(col("doc_id") % 2 === 0, lit("u"))
           .when(col("doc_id") % 7 === 0, lit("d")))
       .filter(col("op").isNotNull)
-    val q = changes.writeStream.outputMode("append")
+    drain(changes.writeStream.outputMode("append")
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         val ups = proj(b.filter(col("op") === "u").toDF)
           .withColumn("n_chars", col("n_chars") * 2)
@@ -872,10 +926,7 @@ object Streams {
         if (!b.isEmpty)
           upsertSnapshot(ups, outDir, Seq("doc_id"), Some(dels), retain = 5)
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     readSnapshot(spark, outDir)
   }
 
@@ -894,7 +945,7 @@ object Streams {
       dims: Seq[String], measures: Seq[String]): DataFrame = {
     val sch = spark.read.parquet(stageDir).schema
     var mv = mv0.localCheckpoint()
-    val q = spark.readStream.schema(sch)
+    drain(spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(stageDir)
       .writeStream.outputMode("append")
       .foreachBatch { (b: Dataset[Row], _: Long) =>
@@ -903,10 +954,7 @@ object Streams {
             .localCheckpoint()
         }
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     mv
   }
 
@@ -969,27 +1017,23 @@ object Streams {
     * transition → deterministic result for any batch/partition split.
     */
   def statefulUserStats(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = s"graft_stateful_${System.nanoTime()}"
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val src = eventStream(spark, sfDir)
       .select(col("user_id"), col("value"))
       .as[(Long, Double)](Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-    val q = src.groupByKey(_._1)(Encoders.scalaLong)
-      .mapGroupsWithState[(Long, Long), (Long, Long, Long)](
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[(Long, Double)], state: GroupState[(Long, Long)]) =>
-          var (n, cents) = state.getOption.getOrElse((0L, 0L))
-          it.foreach { case (_, v) => n += 1; cents += math.round(v * 100) }
-          state.update((n, cents))
-          (uid, n, cents)
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
-      .toDF("user_id", "n_events", "sum_cents")
-      .writeStream.outputMode(OutputMode.Update)
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("update") {
+      src.groupByKey(_._1)(Encoders.scalaLong)
+        .mapGroupsWithState[(Long, Long), (Long, Long, Long)](
+          GroupStateTimeout.NoTimeout) {
+          (uid: Long, it: Iterator[(Long, Double)], state: GroupState[(Long, Long)]) =>
+            var (n, cents) = state.getOption.getOrElse((0L, 0L))
+            it.foreach { case (_, v) => n += 1; cents += math.round(v * 100) }
+            state.update((n, cents))
+            (uid, n, cents)
+        }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
+          Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
+        .toDF("user_id", "n_events", "sum_cents")
+    }
   }
 
   /** Stream-stream interval join: each click joins the same user's views from
@@ -997,7 +1041,6 @@ object Streams {
     * append-mode — the canonical watermark-bounded stream-stream join.
     */
   def clickViewJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_ssjoin_${System.nanoTime()}"
     val clicks = eventStream(spark, sfDir).filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("click_id"))
@@ -1006,13 +1049,11 @@ object Streams {
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
         col("event_id").as("view_id"))
       .withWatermark("v_ts", "1 hour")
-    val q = clicks.join(views, expr(
-      "c_user = v_user AND v_ts < c_ts AND v_ts >= c_ts - interval 10 minutes"))
-      .select(col("click_id"), col("view_id"), col("c_user").as("user_id"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      clicks.join(views, expr(
+        "c_user = v_user AND v_ts < c_ts AND v_ts >= c_ts - interval 10 minutes"))
+        .select(col("click_id"), col("view_id"), col("c_user").as("user_id"))
+    }
   }
 
   /** Gap sessionization through Spark's NATIVE streaming session windows
@@ -1030,7 +1071,6 @@ object Streams {
     */
   def streamingSessionize(spark: SparkSession, sfDir: String, gapMinutes: Int): DataFrame = {
     val raw = rawEventsSchema(spark, sfDir)
-    val name = s"graft_sess_${System.nanoTime()}"
     // the stage holds DERIVED sentinel files written in the RAW schema's ts
     // domain, so the stage key must include the schema: an mtime-only key
     // let a stage written under the old TIMESTAMP(NANOS) contract survive
@@ -1071,20 +1111,18 @@ object Streams {
         org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
       }
     }
-    val q = graft.Tables.adaptTs(spark.readStream.schema(raw)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(stage.toString))
-      .withColumn("cents", round(col("value") * 100).cast("long"))
-      .withWatermark("ts", "1 minute")
-      .groupBy(session_window(col("ts"), s"$gapMinutes minutes"), col("user_id"))
-      .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-        count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"), col("sum_cents"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).filter(col("user_id") >= 0)
+    drainToMemory("append") {
+      graft.Tables.adaptTs(spark.readStream.schema(raw)
+        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
+        .parquet(stage.toString))
+        .withColumn("cents", round(col("value") * 100).cast("long"))
+        .withWatermark("ts", "1 minute")
+        .groupBy(session_window(col("ts"), s"$gapMinutes minutes"), col("user_id"))
+        .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
+          count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
+        .select(col("user_id"), col("session_start"), col("session_end"),
+          col("n_events"), col("sum_cents"))
+    }.filter(col("user_id") >= 0)
   }
 
   /** Streaming exact dedup (`dropDuplicatesWithinWatermark`) — the streaming
@@ -1102,16 +1140,13 @@ object Streams {
     */
   def streamingDedup(
       spark: SparkSession, sfDir: String, keys: Seq[String], delay: String): DataFrame = {
-    val name = s"graft_sdedup_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .withWatermark("ts", delay)
-      .select(keys.map(col) :+ col("ts"): _*)
-      .dropDuplicatesWithinWatermark(keys)
-      .select(keys.map(col): _*)
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      eventStream(spark, sfDir)
+        .withWatermark("ts", delay)
+        .select(keys.map(col) :+ col("ts"): _*)
+        .dropDuplicatesWithinWatermark(keys)
+        .select(keys.map(col): _*)
+    }
   }
 
   /** Streaming NEAR-duplicate dedup — the last cell of the dedup matrix
@@ -1149,31 +1184,28 @@ object Streams {
       require(b >= 0 && bandSize >= 1 && (b + 1) * bandSize <= k,
         s"band ($b, size $bandSize) out of range for a $k-wide signature")
     }
-    val name = s"graft_sneardup_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
     val (as, bs) = graft.ops.Dedup.seedArrays(k)
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      // 2024-01-01 base: doc_id 0 at epoch 0 would sit exactly ON the initial
-      // watermark and be dropped as late before the batch advances it
-      .withColumn("ts", timestamp_micros((col("doc_id") + 1704067200L) * 1000000L))
-      .withColumn("__toks", graft.ops.TextOps.tokens(col("text")))
-      .withColumn("__sh", graft.ops.TextOps.shingles("__toks", shingleN))
-      .filter(size(col("__sh")) > 0)
-      .withColumn("__mh", graft.functions.TextHashExprs.minhashSig(col("__sh"), as, bs))
-      .withColumn("sig", band match {
-        case Some((b, bandSize)) => array_join(transform(
-          slice(col("__mh"), b * bandSize + 1, bandSize), x => x.cast("string")), "_")
-        case None => array_join(transform(col("__mh"), x => x.cast("string")), "_")
-      })
-      .withWatermark("ts", delay)
-      .select(col("sig"), col("ts"))
-      .dropDuplicatesWithinWatermark(Seq("sig"))
-      .select(col("sig"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        // 2024-01-01 base: doc_id 0 at epoch 0 would sit exactly ON the initial
+        // watermark and be dropped as late before the batch advances it
+        .withColumn("ts", timestamp_micros((col("doc_id") + 1704067200L) * 1000000L))
+        .withColumn("__toks", graft.ops.TextOps.tokens(col("text")))
+        .withColumn("__sh", graft.ops.TextOps.shingles("__toks", shingleN))
+        .filter(size(col("__sh")) > 0)
+        .withColumn("__mh", graft.functions.TextHashExprs.minhashSig(col("__sh"), as, bs))
+        .withColumn("sig", band match {
+          case Some((b, bandSize)) => array_join(transform(
+            slice(col("__mh"), b * bandSize + 1, bandSize), x => x.cast("string")), "_")
+          case None => array_join(transform(col("__mh"), x => x.cast("string")), "_")
+        })
+        .withWatermark("ts", delay)
+        .select(col("sig"), col("ts"))
+        .dropDuplicatesWithinWatermark(Seq("sig"))
+        .select(col("sig"))
+    }
   }
 
   /** Streaming incremental ingestion — the streaming twin of
@@ -1191,23 +1223,20 @@ object Streams {
   def streamingIncrementalDedup(
       spark: SparkSession, sfDir: String, corpusDigests: DataFrame,
       minDocId: Long, delay: String): DataFrame = {
-    val name = s"graft_sincr_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .filter(col("doc_id") >= minDocId)
-      // 2024 base — doc at epoch 0 would sit ON the initial watermark (late)
-      .withColumn("ts", timestamp_micros((col("doc_id") + 1704067200L) * 1000000L))
-      .withColumn("digest", md5(col("text")))
-      .join(corpusDigests.select(col("digest")), Seq("digest"), "left_anti")
-      .withWatermark("ts", delay)
-      .select(col("digest"), col("ts"))
-      .dropDuplicatesWithinWatermark(Seq("digest"))
-      .select(col("digest"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .filter(col("doc_id") >= minDocId)
+        // 2024 base — doc at epoch 0 would sit ON the initial watermark (late)
+        .withColumn("ts", timestamp_micros((col("doc_id") + 1704067200L) * 1000000L))
+        .withColumn("digest", md5(col("text")))
+        .join(corpusDigests.select(col("digest")), Seq("digest"), "left_anti")
+        .withWatermark("ts", delay)
+        .select(col("digest"), col("ts"))
+        .dropDuplicatesWithinWatermark(Seq("digest"))
+        .select(col("digest"))
+    }
   }
 
   /** Streaming SEMANTIC dedup — the SemDeDup cell of the streaming dedup
@@ -1248,7 +1277,6 @@ object Streams {
       minCos: Double, nCents: Int, trainIters: Int, batches: Int = 3,
       maxBucket: Int = graft.ops.Similarity.DEFAULT_MAX_BUCKET): DataFrame = {
     import graft.ops.Similarity
-    val name = s"graft_ssem_${System.nanoTime()}"
     val stage = s"$outDir-stage"
     Seq(stage, outDir).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
@@ -1286,11 +1314,12 @@ object Streams {
     val streamSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("__v", ArrayType(DoubleType))))
-    var owners = base.limit(0).withColumn("cent_id", lit(0L))
-    val q = spark.readStream.schema(streamSchema)
+    val noOwners = base.limit(0).withColumn("cent_id", lit(0L))
+    var owners = noOwners
+    drain(spark.readStream.schema(streamSchema)
       .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
       .parquet(stage)
-      .writeStream.outputMode("append").queryName(name)
+      .writeStream.outputMode("append")
       .foreachBatch { (b: Dataset[Row], batchId: Long) =>
         if (!b.isEmpty) {
           val assigned = b.toDF().withColumn("cent_id", assign(col("__v")))
@@ -1302,15 +1331,10 @@ object Streams {
           owners = newOwners.localCheckpoint(true)
           // r20: the eager checkpoint above makes the previous owner
           // generation's blocks dead — release them instead of leaking one
-          // owner-frame copy per trigger
-          if (prev.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-            prev.unpersist(false); ()
-          }
+          // owner-frame copy per trigger (the empty start is no checkpoint)
+          if (prev ne noOwners) graft.Pins.release(prev)
         }
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     if (!outPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(outPath))
       owners.select(col("id").as("vec_id"), col("cent_id")).limit(0)
@@ -1375,7 +1399,6 @@ object Streams {
       heldTextCol: String, n: Int,
       docPredicate: org.apache.spark.sql.Column = lit(true),
       fittedProbes: Option[(DataFrame, Seq[String])] = None): DataFrame = {
-    val name = s"graft_sdecon_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
     // probe structures are a FIT (held-set-sized, static across triggers) —
@@ -1387,19 +1410,17 @@ object Streams {
     // single-row-group staged file → widen before the gram explode + Bloom
     // probes (per-row decisions, partitioning-invariant)
     val par = spark.sparkContext.defaultParallelism
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .filter(docPredicate)
-      .repartition(par)
-      .withColumn("__d", md5(col("text")))
-      .withColumn("__toks", graft.ops.TextOps.tokens(col("text")))
-      .withColumn("__sh", graft.ops.TextOps.shingles("__toks", n))
-      .join(broadcast(heldDigests), col("__d") === col("digest"), "left_anti")
-      .filter(!gramHit)
-      .select(col("doc_id"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .filter(docPredicate)
+        .repartition(par)
+        .withColumn("__d", md5(col("text")))
+        .withColumn("__toks", graft.ops.TextOps.tokens(col("text")))
+        .withColumn("__sh", graft.ops.TextOps.shingles("__toks", n))
+        .join(broadcast(heldDigests), col("__d") === col("digest"), "left_anti")
+        .filter(!gramHit)
+        .select(col("doc_id"))
+    }
   }
 
   /** Streaming DSIR scoring — ONLINE domain-relevance scoring of arriving
@@ -1434,18 +1455,15 @@ object Streams {
   def streamingDsirScores(
       spark: SparkSession, sfDir: String, lr6: Array[Long],
       buckets: Int): DataFrame = {
-    val name = s"graft_sdsir_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val par = spark.sparkContext.defaultParallelism
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .transform(df =>
-        graft.ops.Selection.dsirScoreStream(df.repartition(par),
-          "doc_id", "text", lr6, buckets))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .transform(df =>
+          graft.ops.Selection.dsirScoreStream(df.repartition(par),
+            "doc_id", "text", lr6, buckets))
+    }
   }
 
   /** Streaming Gopher quality rules — the heuristic pre-filter applied at
@@ -1459,17 +1477,14 @@ object Streams {
       minWords: Int, maxWords: Int, minMeanLen: Double, maxMeanLen: Double,
       stopwords: Seq[String], minStopHits: Int,
       minAlphaFrac: Double, maxTop2Frac: Double): DataFrame = {
-    val name = s"graft_sgoph_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .transform(df => graft.ops.Selection.gopherRules(df, "doc_id", "text",
-        minWords, maxWords, minMeanLen, maxMeanLen, stopwords, minStopHits,
-        minAlphaFrac, maxTop2Frac))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .transform(df => graft.ops.Selection.gopherRules(df, "doc_id", "text",
+          minWords, maxWords, minMeanLen, maxMeanLen, stopwords, minStopHits,
+          minAlphaFrac, maxTop2Frac))
+    }
   }
 
   /** Streaming temperature-mixture ADMISSION — arriving documents pass the
@@ -1482,18 +1497,15 @@ object Streams {
     */
   def streamingTemperature(
       spark: SparkSession, sfDir: String, alpha: Double): DataFrame = {
-    val name = s"graft_stemp_${System.nanoTime()}"
     val docs = graft.Tables.documents(spark, sfDir)
     val thresholds = graft.ops.Splits.temperatureThresholds(docs, "lang", alpha)
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .transform(df =>
-        graft.ops.Splits.applyPpmThresholds(df, "lang", "doc_id", thresholds))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .transform(df =>
+          graft.ops.Splits.applyPpmThresholds(df, "lang", "doc_id", thresholds))
+    }
   }
 
   /** The COMPOSED streaming ingest-admission pipeline — what actually
@@ -1549,7 +1561,7 @@ object Streams {
     val lastCk = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
     val out = streamingSearch(docs, outDir, batches, { b =>
       val prev = lastCk.get()
-      if (prev != null) prev.unpersist(false)
+      if (prev != null) graft.Pins.release(prev)
       val scored = graft.ops.Selection.withGopherFlags(
           b.repartition(b.sparkSession.sparkContext.defaultParallelism), "text",
           minWords, maxWords, minMeanLen, maxMeanLen, stopwords,
@@ -1579,7 +1591,7 @@ object Streams {
     if (outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(outPath)) {
       val fin = lastCk.getAndSet(null)
-      if (fin != null) fin.unpersist(false)
+      if (fin != null) graft.Pins.release(fin)
     }
     out
   }
@@ -1644,20 +1656,17 @@ object Streams {
     */
   def streamingClassifierScore(
       spark: SparkSession, sfDir: String, nBuckets: Int, seed: String): DataFrame = {
-    val name = s"graft_sclass_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
     val par = spark.sparkContext.defaultParallelism
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .transform(df =>
-        // single-row-group staged file → widen before the md5-bucket scorer
-        // (per-row op, partitioning-invariant; measured 7.3 s one-task)
-        graft.ops.TextOps.withClassifierScore(df.repartition(par),
-          "doc_id", "text", nBuckets, seed))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .transform(df =>
+          // single-row-group staged file → widen before the md5-bucket scorer
+          // (per-row op, partitioning-invariant; measured 7.3 s one-task)
+          graft.ops.TextOps.withClassifierScore(df.repartition(par),
+            "doc_id", "text", nBuckets, seed))
+    }
   }
 
   /** Streaming BPE pair-count maintenance — the tokenizer-training counting
@@ -1669,7 +1678,6 @@ object Streams {
     * happens at drain time, batch-side.
     */
   def streamingBpePairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_sbpe_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
     // NOTE (r16, measured): the staged doc file is a single row group, but
@@ -1678,17 +1686,14 @@ object Streams {
     // explode+partial-agg is cheaper than the extra exchange it would take
     // to parallelize it (contrast streamingCovMoments' 2080×-per-row fan,
     // where the same widen wins)
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .select(explode(graft.ops.TextOps.tokens(col("text"))).as("tok"))
-      .filter(length(col("tok")) >= 2)
-      .select(explode(expr("sequence(1, length(tok) - 1)")).as("i"), col("tok"))
-      .select(expr("substring(tok, i, 2)").as("pair"))
-      .groupBy(col("pair")).agg(count(lit(1)).as("n"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .select(explode(graft.ops.TextOps.tokens(col("text"))).as("tok"))
+        .filter(length(col("tok")) >= 2)
+        .select(explode(expr("sequence(1, length(tok) - 1)")).as("i"), col("tok"))
+        .select(expr("substring(tok, i, 2)").as("pair"))
+        .groupBy(col("pair")).agg(count(lit(1)).as("n"))
+    }
   }
 
   /** Stage a batch frame as `nChunks` contiguous event-time files with
@@ -1760,7 +1765,7 @@ object Streams {
     // leaked every superseded open/closed generation's blocks.
     val closedDeltas = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var prevOpenChk: DataFrame = null
-    val q = spark.readStream.schema(sch)
+    drain(spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(stage.toString)
       .writeStream.outputMode("append")
       .foreachBatch { (b: Dataset[Row], _: Long) =>
@@ -1771,14 +1776,11 @@ object Streams {
           open = no.localCheckpoint()
           // both checkpoints above are EAGER, so the previous open
           // generation's blocks are dead once they return
-          if (prevOpenChk != null) prevOpenChk.unpersist(false)
+          if (prevOpenChk != null) graft.Pins.release(prevOpenChk)
           prevOpenChk = open
         }
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     Scd2.finish(closedDeltas.foldLeft(closed0)(_.unionByName(_)), open, "user_id")
   }
 
@@ -1804,7 +1806,7 @@ object Streams {
     // superseded state generations
     val deltaList = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var prevStateChk: DataFrame = null
-    val q = spark.readStream.schema(sch)
+    drain(spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(stage.toString)
       .writeStream.outputMode("append")
       .foreachBatch { (b: Dataset[Row], _: Long) =>
@@ -1813,14 +1815,11 @@ object Streams {
             "event_id", "event_type")
           deltaList += d.localCheckpoint()
           state = ns.localCheckpoint()
-          if (prevStateChk != null) prevStateChk.unpersist(false)
+          if (prevStateChk != null) graft.Pins.release(prevStateChk)
           prevStateChk = state
         }
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     Transitions.finish(deltaList.foldLeft(deltas0)(_.unionByName(_)))
   }
 
@@ -1833,7 +1832,6 @@ object Streams {
     */
   def streamingPhraseMatch(
       spark: SparkSession, sfDir: String, phrase: Seq[String]): DataFrame = {
-    val name = s"graft_sphrase_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
     // r19: the old HOF matcher (`filter(sequence(...), i →
@@ -1846,18 +1844,16 @@ object Streams {
     val hits = graft.functions.PhraseExprs.phraseHits(
       graft.ops.TextOps.tokens(col("text")), phrase)
     val par = spark.sparkContext.defaultParallelism
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      // single-row-group staged file → widen before the per-row matcher
-      .repartition(par)
-      .withColumn("__ph", hits)
-      .filter(col("__ph").getField("n_matches") > 0)
-      .select(col("doc_id"),
-        col("__ph").getField("n_matches").as("n_matches"),
-        col("__ph").getField("first_pos").as("first_pos"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        // single-row-group staged file → widen before the per-row matcher
+        .repartition(par)
+        .withColumn("__ph", hits)
+        .filter(col("__ph").getField("n_matches") > 0)
+        .select(col("doc_id"),
+          col("__ph").getField("n_matches").as("n_matches"),
+          col("__ph").getField("first_pos").as("first_pos"))
+    }
   }
 
   /** Streaming HLL distinct-count maintenance — the dedup-dashboard cell:
@@ -1868,17 +1864,13 @@ object Streams {
     * same within-2% envelope contract as the batch artifact gate.
     */
   def streamingHllDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"graft_shll_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .groupBy(col("source"))
-      .agg(expr("hll_sketch_agg(text, 12)").as("sk"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).select(col("source"),
+    drainToMemory("complete") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .groupBy(col("source"))
+        .agg(expr("hll_sketch_agg(text, 12)").as("sk"))
+    }.select(col("source"),
       expr("hll_sketch_estimate(sk)").as("est"))
   }
 
@@ -1894,15 +1886,12 @@ object Streams {
     */
   def streamingCmsSketch(
       spark: SparkSession, sfDir: String, depth: Int, width: Int): DataFrame = {
-    val name = s"graft_scms_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .transform(df => graft.ops.TextOps.cmsTokenSketch(df, "text", depth, width))
-      .writeStream.outputMode("complete").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("complete") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .transform(df => graft.ops.TextOps.cmsTokenSketch(df, "text", depth, width))
+    }
   }
 
   /** Streaming STUPID-BACKOFF scoring — the LM quality filter at ingest:
@@ -1946,14 +1935,11 @@ object Streams {
     val aggs = rules.map(r => Expectations.scalarViol(r).getOrElse(
       throw new IllegalArgumentException(
         s"streaming expectations supports scalar rules only, got ${r.name}")))
-    val name = s"graft_sexpect_${System.nanoTime()}"
-    val q = eventStream(spark, sfDir)
-      .agg(aggs.head.as("c0"),
-        aggs.tail.zipWithIndex.map { case (c, j) => c.as(s"c${j + 1}") }: _*)
-      .writeStream.outputMode("complete").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    val counts = spark.table(name).head()
+    val counts = drainToMemory("complete") {
+      eventStream(spark, sfDir)
+        .agg(aggs.head.as("c0"),
+          aggs.tail.zipWithIndex.map { case (c, j) => c.as(s"c${j + 1}") }: _*)
+    }.head()
     val rows = rules.zipWithIndex.map { case (r, i) =>
       val v = counts.getLong(i)
       org.apache.spark.sql.Row(i.toLong, r.name, v, if (v == 0L) 1L else 0L)
@@ -1979,19 +1965,16 @@ object Streams {
   def streamingTrainedClassify(
       spark: SparkSession, sfDir: String,
       model: graft.ops.TextOps.ClassifierModel, nBuckets: Int): DataFrame = {
-    val name = s"graft_stclass_${System.nanoTime()}"
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
     val par = spark.sparkContext.defaultParallelism
-    val q = spark.readStream.schema(docSchema).parquet(stage.toString)
-      .transform(df => graft.ops.TextOps.withTrainedClassifierScore(
-        // single-row-group staged file → widen before the scorer (see
-        // streamingClassifierScore)
-        df.repartition(par), "doc_id", "text", model, nBuckets))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory("append") {
+      spark.readStream.schema(docSchema).parquet(stage.toString)
+        .transform(df => graft.ops.TextOps.withTrainedClassifierScore(
+          // single-row-group staged file → widen before the scorer (see
+          // streamingClassifierScore)
+          df.repartition(par), "doc_id", "text", model, nBuckets))
+    }
   }
 
   /** Streaming similarity search — ONLINE retrieval against a static
@@ -2076,7 +2059,7 @@ object Streams {
       streamingSearch(docs, outDir, batches,
         b => graft.ops.Dedup.scrubSubstringsWithFps(b.repartition(par), idCol,
           textCol, refFps, k, w))
-    finally refFps.unpersist(false)
+    finally graft.Pins.release(refFps)
   }
 
   /** Streaming AS-OF enrichment — the as-of family's streaming member:
@@ -2205,7 +2188,6 @@ object Streams {
       queries: DataFrame, outDir: String, batches: Int,
       searchFn: DataFrame => DataFrame): DataFrame = {
     val spark = queries.sparkSession
-    val name = s"graft_sann_${System.nanoTime()}"
     val stage = s"$outDir-stage"
     val conf = spark.sparkContext.hadoopConfiguration
     Seq(stage, outDir).foreach { d =>
@@ -2213,15 +2195,12 @@ object Streams {
       p.getFileSystem(conf).delete(p, true)
     }
     queries.repartition(batches).write.mode("overwrite").parquet(stage)
-    val q = spark.readStream.schema(queries.schema)
+    drain(spark.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", 1).parquet(stage)
-      .writeStream.outputMode("append").queryName(name)
+      .writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         searchBatchSink(outDir, searchFn)(batch, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     // empty stream / all-empty batches leave no batch dirs: return the empty
     // result with the search schema instead of failing schema inference
     val outPath = new org.apache.hadoop.fs.Path(outDir)
@@ -2316,16 +2295,13 @@ object Streams {
     val docSchema = rawDocsSchema(spark, sfDir)
     val stage = stagedDir("graft_stream_docs", sfDir, "documents.parquet")
     val stream = spark.readStream.schema(docSchema).parquet(stage.toString)
-    val q = graft.ops.Splits.assign(stream, "doc_id", splits)
+    drain(graft.ops.Splits.assign(stream, "doc_id", splits)
       .select(col("doc_id"), col("split"))
       .writeStream.outputMode("append")
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("split")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .partitionBy("split"))
     spark.read.parquet(outDir)
   }
 

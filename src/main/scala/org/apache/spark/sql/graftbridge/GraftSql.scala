@@ -27,6 +27,12 @@ object GraftSql {
     if (renamed fastEquals e) c else column(renamed)
   }
 
+  /** Blocks until every event posted to `sc`'s listener bus so far has
+    * reached every listener (`listenerBus` is package-private to Spark).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   /** what `RDD.reduce` (and so `Dataset.reduce`) throws on empty input */
   def emptyCollectionError(): Throwable = SparkCoreErrors.emptyCollectionError()
 

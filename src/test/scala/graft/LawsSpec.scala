@@ -1383,13 +1383,7 @@ object LawsSpec extends Properties("graft") {
           model(id)._1 == kernel(id)._1 &&
             (model(id)._1 == 0L || model(id)._2 == kernel(id)._2))
         Prop(bad.isEmpty) :| s"phrase=$phrase bad=$bad model=${bad.map(model.get)} kernel=${bad.map(kernel.get)}"
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally Tables.deleteTree(dir)
     }
 
   // the covariance-moment aggregate (r19: CovMomentsAgg replaced the
@@ -1434,13 +1428,7 @@ object LawsSpec extends Properties("graft") {
         val bad = (model.keySet ++ kernel.keySet).filter(k =>
           model.get(k) != kernel.get(k))
         Prop(bad.isEmpty) :| s"pairs=$bad model=${bad.map(model.get)} kernel=${bad.map(kernel.get)}"
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally Tables.deleteTree(dir)
     }
 
   // the scalar-quantization kernels (r18: AbsMax / ScalarCodes /
@@ -1536,13 +1524,7 @@ object LawsSpec extends Properties("graft") {
         }
         Prop(bad.isEmpty) :| s"mismatched vec_ids=$bad " +
           s"model=${bad.map(model.get)} kernel=${bad.map(kernel.get)}"
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally Tables.deleteTree(dir)
     }
 
   // the r18 ADVICE NaN fix, pinned where parity IS well-defined: the max
@@ -1575,13 +1557,7 @@ object LawsSpec extends Properties("graft") {
         def nanEq(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
         Prop(nanEq(row.getDouble(0), row.getDouble(1)) &&
           nanEq(row.getDouble(2), row.getDouble(3))) :| s"row=$row"
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally Tables.deleteTree(dir)
     }
 
   // ---- r19 PQ / mat-vec kernels vs the literal expression forms ----------
@@ -1654,12 +1630,6 @@ object LawsSpec extends Properties("graft") {
             nanEqSeq(r.getSeq[Double](7).toSeq, r.getSeq[Double](8).toSeq)
         }
         Prop(bad.isEmpty) :| s"mismatches=${bad.mkString("; ")}"
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally Tables.deleteTree(dir)
     }
 }

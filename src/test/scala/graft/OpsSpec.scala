@@ -1312,6 +1312,18 @@ class OpsSpec extends AnyFunSuite {
     assert(added(edges) == ((1, 3L)))
   }
 
+  test("connectedComponentsWithRounds keeps only the checkpoints its labels read persisted") {
+    val pairs = (0 until 32).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (labels, rounds) = Dedup.connectedComponentsWithRounds(pairs, maxIter = 20)
+    val added = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    assert(rounds >= 2, s"a 33-node chain must take several rounds, took $rounds")
+    // `src` and the final round's small-star generation; every earlier
+    // generation is released
+    assert(added == 2, s"$added checkpoints stay persisted after $rounds rounds")
+    assert(labels.as[(Long, Long)].collect().toMap == (0 to 32).map(_.toLong -> 0L).toMap)
+  }
+
   test("interval overlap join: one row per overlapping pair even across many buckets") {
     val a = Seq((1L, 0.0, 100.0), (2L, 300.0, 310.0)).toDF("a_id", "a_lo", "a_hi")
     val b = Seq((10L, 50.0, 400.0), (11L, 150.0, 200.0), (12L, 500.0, 600.0))

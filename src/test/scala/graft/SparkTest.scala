@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.graftest.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.graftbridge.GraftSql
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for the whole test run. */
@@ -41,11 +41,11 @@ object SparkTest {
           .foreach(execs.add)
       }
     }
-    Bus.drain(sc)
+    GraftSql.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
       body
-      Bus.drain(sc)
+      GraftSql.drainListenerBus(sc)
       Runs(jobs.get, execs.size)
     } finally sc.removeSparkListener(listener)
   }
@@ -60,11 +60,11 @@ object SparkTest {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
     }
-    Bus.drain(sc)
+    GraftSql.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
       body
-      Bus.drain(sc)
+      GraftSql.drainListenerBus(sc)
       bytes.get
     } finally sc.removeSparkListener(listener)
   }

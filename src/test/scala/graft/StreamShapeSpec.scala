@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.Streams
+
 /** Pins every stream twin's STATE SHAPE in `sbt test` (r18 verdict ask #5
   * — PlanGuardSpec excludes the 54 stream gates because constructing one
   * executes the stream; this spec embraces the execution and reads the
@@ -28,6 +30,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * lives in batch-side artifacts (MERGE tables, stored indexes, capped
   * owner tables), not engine state stores — pinned at 0 so an accidental
   * migration INTO engine state is as loud as one out of it.
+  *
+  * The shape is read through the twins' one run protocol, which the last
+  * two tests pin: a memory-sink drain leaves no temp view behind, and one
+  * settle delivers every trigger of a stopped stream.
   */
 class StreamShapeSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = SparkTest.session
@@ -68,17 +74,7 @@ class StreamShapeSpec extends AnyFunSuite {
     assert(unpinned.isEmpty,
       s"stream twins without a golden shape row (record with " +
         s"examples/StreamShapeProbe and extend goldenOps): $unpinned")
-    val stats = new graft.examples.StreamShapeProbe.ShapeStats
-    spark.streams.addListener(stats)
-    def settle(): Unit = {
-      var stable = 0; var last = stats.batches.get(); var spins = 0
-      while (stable < 2 && spins < 60) {
-        Thread.sleep(100)
-        val b = stats.batches.get()
-        if (b == last) stable += 1 else { stable = 0; last = b }
-        spins += 1
-      }
-    }
+    val stats = Streams.Stats.attach(spark)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     try {
@@ -88,7 +84,7 @@ class StreamShapeSpec extends AnyFunSuite {
         try {
           SparkEntry.queries(name)(spark, dir)
             .write.format("noop").mode("overwrite").save()
-          settle()
+          stats.settle()
           val (ops, parts) = stats.shape
           val want = goldenOps(name)
           if (ops != want)
@@ -106,9 +102,35 @@ class StreamShapeSpec extends AnyFunSuite {
       }
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.streams.removeListener(stats)
+      stats.detach()
     }
     assert(failures.isEmpty,
       s"stream state-shape drift:\n  " + failures.mkString("\n  "))
+  }
+
+  test("a drained memory-sink twin leaves no temp view and its frame reads every row") {
+    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    val got = Streams.streamingControl(spark, dir)
+    assert(tempViews == before, s"drain left temp views ${tempViews -- before}")
+    assert(got.count() == Tables.events(spark, dir).count())
+  }
+
+  test("one settle delivers every trigger of a stopped multi-file stream") {
+    val root = java.nio.file.Files.createTempDirectory("graft_settle_test").toString
+    val src = s"$root/src"
+    try {
+      spark.range(40).repartition(4).write.parquet(src)
+      val stats = Streams.Stats.attach(spark)
+      try {
+        val q = Streams.drain(spark.readStream.schema(spark.read.parquet(src).schema)
+          .option("maxFilesPerTrigger", 1).parquet(src)
+          .writeStream.format("noop"))
+        stats.settle()
+        assert(q.recentProgress.length == 4)
+        assert(stats.batches == q.recentProgress.length)
+        assert(stats.batchWallsMs.length == 4 && stats.batchWallsMs.forall(_ >= 0))
+      } finally stats.detach()
+    } finally Tables.deleteTree(root)
   }
 }

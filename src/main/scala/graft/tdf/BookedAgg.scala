@@ -7,7 +7,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator, CodegenContext}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types._
 
 import graft.functions.HistBuffer
@@ -23,40 +24,24 @@ private[tdf] final class SlotBuffer(
     val longs: Array[Long], val doubles: Array[Double], val hists: Array[HistBuffer],
     val objs: Array[mutable.ArrayBuffer[Any]]) extends Serializable
 
-/** One entry's scratch, filled once per row by [[BookedAgg.fold]] and read by
-  * every op. Value v sits at row ordinal `nNodes + v`. `valueCap` is the
-  * pass's [[AutoHistoOp]] cap: the distinct values each of its counts may
-  * hold in a slot.
-  */
-private[tdf] final class Entry(val nNodes: Int, nValues: Int, val valueCap: Int) {
-  /** did the entry pass filter node k */
-  val pass = new Array[Boolean](nNodes)
-  /** the entry's value v: `nul` / `x` for a double, `arr` for an array
-    * (null when the array is null or the value is a scalar), `l` for a weight;
-    * a [[Raw]] value is left on the row
-    */
-  val nul = new Array[Boolean](nValues)
-  val x = new Array[Double](nValues)
-  val arr = new Array[ArrayData](nValues)
-  val l = new Array[Long](nValues)
-  var row: InternalRow = _
-  /** the weight in value `w` (-1: unweighted, 1); a null weight is 0 */
-  def weight(w: Int): Long = if (w < 0) 1L else if (nul(w)) 0L else l(w)
-}
-
 /** One booked action in the fused fold's op table. `node` is the filter node
   * gating it (-1: every entry); the other fields are offsets into the slot
-  * buffer and indexes of the batch's projected values.
+  * buffer and indexes of the batch's projected values. [[code]] is the op's
+  * Java statements for one entry that passed `node`, emitted into the pass's
+  * generated fold ([[FoldCode]]); [[merge]] folds another slot's cells into
+  * this slot's.
   */
 private[tdf] sealed abstract class BookedOp extends Serializable {
   def node: Int
-  def update(b: SlotBuffer, e: Entry): Unit
+  def code(g: FoldCode): String
   def merge(into: SlotBuffer, from: SlotBuffer): Unit
 }
 
-/** entries passing `node`, counted in `longs(l)` */
+/** entries passing `node`, counted in `longs(l)`: one per node of a pass,
+  * read by every Count and Report prefix on it
+  */
 private[tdf] final case class CountOp(node: Int, l: Int) extends BookedOp {
-  def update(b: SlotBuffer, e: Entry): Unit = b.longs(l) += 1
+  def code(g: FoldCode): String = s"longs[$l]++;"
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.longs(l) += from.longs(l)
 }
 
@@ -65,10 +50,11 @@ private[tdf] final case class CountOp(node: Int, l: Int) extends BookedOp {
   */
 private[tdf] final case class TakeOp(node: Int, v: Int, dataType: DataType, t: Int)
     extends BookedOp {
-  def update(b: SlotBuffer, e: Entry): Unit = {
-    val o = e.nNodes + v
-    if (!e.row.isNullAt(o)) b.objs(t) += InternalRow.copyValue(e.row.get(o, dataType))
-  }
+  def code(g: FoldCode): String =
+    s"${g.ref("take", this)}.add(buf, row, ${g.ordinal(v)});"
+  /** takes the entry's value at row ordinal `o` */
+  def add(b: SlotBuffer, row: InternalRow, o: Int): Unit =
+    if (!row.isNullAt(o)) b.objs(t) += InternalRow.copyValue(row.get(o, dataType))
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.objs(t) ++= from.objs(t)
 }
 
@@ -90,11 +76,13 @@ private[tdf] final case class FoldOp(
   private val ordinals = vs.toArray
   @transient private lazy val toRow =
     ExpressionEncoder(schema).resolveAndBind().createDeserializer()
-  def update(b: SlotBuffer, e: Entry): Unit = {
-    val row = toRow(new GenericInternalRow(Array.tabulate[Any](ordinals.length)(i =>
-      e.row.get(e.nNodes + ordinals(i), schema(i).dataType))))
+  def code(g: FoldCode): String = s"${g.ref("fold", this)}.add(buf, row, ${g.ordinal(0)});"
+  /** folds the entry whose value v sits at row ordinal `first + v` */
+  def add(b: SlotBuffer, row: InternalRow, first: Int): Unit = {
+    val r = toRow(new GenericInternalRow(Array.tabulate[Any](ordinals.length)(i =>
+      row.get(first + ordinals(i), schema(i).dataType))))
     val (s, slot) = (b.objs(t), TaskContext.getPartitionId())
-    if (s.isEmpty) s += fold.first(slot, row) else s(0) = fold.step(s(0), slot, row)
+    if (s.isEmpty) s += fold.first(slot, r) else s(0) = fold.step(s(0), slot, r)
   }
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = {
     val (a, z) = (into.objs(t), from.objs(t))
@@ -102,36 +90,18 @@ private[tdf] final case class FoldOp(
   }
 }
 
-/** An op fed with the doubles of value `v`: one per entry for a scalar, one
-  * per element for an array; null scalars and null elements are skipped.
+/** Spark `sum` order: `doubles(d)` starts at 0.0 and adds each value of `v`
+  * (each non-null one, elementwise for an array, as [[FoldCode.each]] walks
+  * them; so for every op over a value below)
   */
-private[tdf] sealed abstract class ValueOp extends BookedOp {
-  def v: Int
-  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit
-  def update(b: SlotBuffer, e: Entry): Unit = {
-    val a = e.arr(v)
-    if (a != null) {
-      var i = 0
-      val n = a.numElements()
-      while (i < n) {
-        if (!a.isNullAt(i)) add(b, e, a.getDouble(i))
-        i += 1
-      }
-    } else if (!e.nul(v)) add(b, e, e.x(v))
-  }
-}
-
-/** Spark `sum` order: `doubles(d)` starts at 0.0 and adds each value */
-private[tdf] final case class SumOp(node: Int, v: Int, d: Int) extends ValueOp {
-  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = b.doubles(d) += x
+private[tdf] final case class SumOp(node: Int, v: Int, d: Int) extends BookedOp {
+  def code(g: FoldCode): String = g.each(v)(x => s"doubles[$d] += $x;")
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.doubles(d) += from.doubles(d)
 }
 
 /** Spark `avg` partials: the sum in `doubles(d)`, the count of values in `longs(l)` */
-private[tdf] final case class MeanOp(node: Int, v: Int, d: Int, l: Int) extends ValueOp {
-  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = {
-    b.doubles(d) += x; b.longs(l) += 1
-  }
+private[tdf] final case class MeanOp(node: Int, v: Int, d: Int, l: Int) extends BookedOp {
+  def code(g: FoldCode): String = g.each(v)(x => s"doubles[$d] += $x; longs[$l]++;")
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = {
     into.doubles(d) += from.doubles(d); into.longs(l) += from.longs(l)
   }
@@ -142,8 +112,8 @@ private[tdf] final case class MeanOp(node: Int, v: Int, d: Int, l: Int) extends 
   * and a tie keeps the value seen first.
   */
 private[tdf] final case class ExtremumOp(node: Int, v: Int, d: Int, l: Int, isMin: Boolean)
-    extends ValueOp {
-  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = ExtremumOp.offer(b, d, l, isMin, x)
+    extends BookedOp {
+  def code(g: FoldCode): String = g.each(v)(x => ExtremumOp.offerCode(d, l, isMin, x))
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = ExtremumOp.merge(into, from, d, l, isMin)
 }
 
@@ -157,17 +127,21 @@ private[tdf] object ExtremumOp {
   }
   def merge(into: SlotBuffer, from: SlotBuffer, d: Int, l: Int, isMin: Boolean): Unit =
     if (from.longs(l) != 0L) offer(into, d, l, isMin, from.doubles(d))
+  /** the generated fold's call of [[offer]] */
+  def offerCode(d: Int, l: Int, isMin: Boolean, x: String): String =
+    s"graft.tdf.ExtremumOp$$.MODULE$$.offer(buf, $d, $l, $isMin, $x);"
 }
 
 /** TH1 fill of `hists(h)` on the axis `[lo, hi)`; `w` is the weight value
   * (-1: unweighted), a null or zero weight skips the entry
   */
 private[tdf] final case class HistoOp(
-    node: Int, v: Int, w: Int, h: Int, nbins: Int, lo: Double, hi: Double) extends ValueOp {
-  private val width = (hi - lo) / nbins
-  override def update(b: SlotBuffer, e: Entry): Unit = if (e.weight(w) != 0L) super.update(b, e)
-  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit =
-    b.hists(h).fill(x, e.weight(w), lo, hi, width)
+    node: Int, v: Int, w: Int, h: Int, nbins: Int, lo: Double, hi: Double) extends BookedOp {
+  def code(g: FoldCode): String = {
+    val (l, r, width) = (g.double("lo", lo), g.double("hi", hi), g.double("width", (hi - lo) / nbins))
+    def fill(wt: String) = g.each(v)(x => s"hists[$h].fill($x, $wt, $l, $r, $width);")
+    if (w < 0) fill("1L") else s"{ long wt = ${g.weight(w)}; if (wt != 0L) { ${fill("wt")} } }"
+  }
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = into.hists(h).add(from.hists(h))
 }
 
@@ -179,22 +153,23 @@ private[tdf] final case class HistoOp(
   * the same order, and the exact [[ValueCounts]] in `objs(t)` (empty until
   * the slot's first such value). Once the driver resolves the axis,
   * [[binned]] cuts the counts into bins. A slot meeting more than the pass's
-  * [[Entry.valueCap]] distinct values leaves the counts [[ValueCounts.full]]:
-  * the histogram then needs a pass on the resolved axis.
+  * cap ([[FoldCode.cap]]) distinct values leaves the counts
+  * [[ValueCounts.full]]: the histogram then needs a pass on the resolved axis.
   */
 private[tdf] final case class AutoHistoOp(
     node: Int, v: Int, w: Int, nbins: Int, d: Int, l: Int, h: Int, t: Int)
-    extends ValueOp {
+    extends BookedOp {
   private def counts(b: SlotBuffer): ValueCounts = b.objs(t)(0).asInstanceOf[ValueCounts]
-  protected def add(b: SlotBuffer, e: Entry, x: Double): Unit = {
-    ExtremumOp.offer(b, d, l, isMin = true, x)
-    ExtremumOp.offer(b, d + 1, l + 1, isMin = false, x)
-    val wt = e.weight(w)
-    if (wt != 0L) {
-      b.hists(h).moments(x, wt)
-      if (b.objs(t).isEmpty) b.objs(t) += new ValueCounts
-      counts(b).add(java.lang.Double.doubleToRawLongBits(x), wt, e.valueCap)
+  def code(g: FoldCode): String = {
+    val wt = if (w < 0) "1L" else "wt"
+    val each = g.each(v) { x =>
+      val fill = s"hists[$h].moments($x, $wt); " +
+        s"graft.tdf.AutoHistoOp$$.MODULE$$.count(buf, $t, $x, $wt, ${g.cap});"
+      ExtremumOp.offerCode(d, l, isMin = true, x) +
+        ExtremumOp.offerCode(d + 1, l + 1, isMin = false, x) +
+        (if (w < 0) fill else s"if (wt != 0L) { $fill }")
     }
+    if (w < 0) each else s"{ long wt = ${g.weight(w)}; $each }"
   }
   def merge(into: SlotBuffer, from: SlotBuffer): Unit = {
     ExtremumOp.merge(into, from, d, l, isMin = true)
@@ -251,6 +226,14 @@ private[tdf] object AutoHistoOp {
     */
   def slotCap(cap: Int, slots: Int, autos: Int): Int =
     if (slots == 0 || autos == 0) cap else math.min(cap, (Budget / slots.toLong / autos).toInt)
+
+  /** adds weight `wt` to value `x` of the counts in `objs(t)`, made at the
+    * slot's first value
+    */
+  def count(b: SlotBuffer, t: Int, x: Double, wt: Long, cap: Int): Unit = {
+    if (b.objs(t).isEmpty) b.objs(t) += new ValueCounts
+    b.objs(t)(0).asInstanceOf[ValueCounts].add(java.lang.Double.doubleToRawLongBits(x), wt, cap)
+  }
 }
 
 /** One slot's exact multiset of an auto-ranged histogram's values: each
@@ -342,28 +325,109 @@ private[tdf] case object Weight extends ValueKind(LongType)
   */
 private[tdf] final case class Raw(override val dataType: DataType) extends ValueKind(dataType)
 
-/** The fused fold of one booked pass: a plain per-slot fold over the output
-  * rows of the pass's codegen'd projection, whose ordinals are the batch's
+/** The base of a pass's generated fold: [[fold]] folds one slot's entries
+  * into its buffer.
+  */
+private[tdf] abstract class SlotFold {
+  def fold(rows: Iterator[InternalRow], b: SlotBuffer): Unit
+}
+
+/** What a [[BookedOp]] emits its code with, while one pass's fold class is
+  * generated: the names the generated code reads an entry's values by, and
+  * fields for the constants that are not offsets, handed over through the
+  * class's references array so that the source depends only on the pass's
+  * shape. In the generated code `buf` is the slot's buffer, `longs`,
+  * `doubles`, `hists` and `objs` its cells and `row` the entry.
+  */
+private[tdf] final class FoldCode(ctx: CodegenContext, nodes: Int, kinds: IndexedSeq[ValueKind],
+    valueCap: Int) {
+  /** the row ordinal of value `v` */
+  def ordinal(v: Int): Int = nodes + v
+  private def isNull(v: Int) = s"v${v}_null"
+
+  /** the fields holding the entry's value `v`, read once per entry */
+  def fields(v: Int): Seq[(String, String)] = kinds(v) match {
+    case Scalar => Seq("boolean" -> isNull(v), "double" -> s"v${v}_x")
+    case Elements => Seq("boolean" -> isNull(v), "org.apache.spark.sql.catalyst.util.ArrayData" -> s"v${v}_arr")
+    case Weight => Seq("boolean" -> isNull(v), "long" -> s"v${v}_l")
+    case Raw(_) => Nil
+  }
+  /** the statements reading value `v` off `row` into its [[fields]] */
+  def read(v: Int): String = {
+    val o = ordinal(v)
+    kinds(v) match {
+      case Scalar => s"${isNull(v)} = row.isNullAt($o); if (!${isNull(v)}) v${v}_x = row.getDouble($o);"
+      case Elements => s"${isNull(v)} = row.isNullAt($o); v${v}_arr = ${isNull(v)} ? null : row.getArray($o);"
+      case Weight => s"${isNull(v)} = row.isNullAt($o); if (!${isNull(v)}) v${v}_l = row.getLong($o);"
+      case Raw(_) => ""
+    }
+  }
+
+  /** `add` of each double of value `v`: the value of a scalar, each element
+    * of an array, in order; null scalars and null elements are skipped
+    */
+  def each(v: Int)(add: String => String): String = kinds(v) match {
+    case Scalar => s"if (!${isNull(v)}) { ${add(s"v${v}_x")} }"
+    case Elements =>
+      s"""if (!${isNull(v)}) {
+         |  int n = v${v}_arr.numElements();
+         |  for (int i = 0; i < n; i++) {
+         |    if (!v${v}_arr.isNullAt(i)) { double e = v${v}_arr.getDouble(i); ${add("e")} }
+         |  }
+         |}""".stripMargin
+    case k => throw new IllegalArgumentException(s"value $v is read as $k, not as doubles")
+  }
+  /** weight value `w` as a long: a null weight is 0 */
+  def weight(w: Int): String = s"(${isNull(w)} ? 0L : v${w}_l)"
+
+  /** a field of type `javaType` initialized to `value` (past the
+    * `CodegenContext`'s limit on fields, a cell of an array)
+    */
+  private def constant(name: String, javaType: String, value: AnyRef, init: String => String): String = {
+    val r = ctx.addReferenceObj(name, value, value.getClass.getName)
+    ctx.addMutableState(javaType, name, f => s"$f = ${init(r)};")
+  }
+  def double(name: String, x: Double): String =
+    constant(name, "double", java.lang.Double.valueOf(x), r => s"$r.doubleValue()")
+  /** a field holding `op`, whose methods the generated code calls */
+  def ref(name: String, op: BookedOp): String = constant(name, op.getClass.getName, op, identity)
+  /** the field holding the pass's [[AutoHistoOp]] cap */
+  lazy val cap: String = constant("cap", "int", Integer.valueOf(valueCap), r => s"$r.intValue()")
+}
+
+/** The fused fold of one booked pass: a per-slot fold over the output rows
+  * of the pass's codegen'd projection, whose ordinals are the batch's
   * filter-node flags (`nodes` non-null booleans, each distinct node projected
-  * once) followed by its distinct value columns (`kinds`). For each entry
-  * [[fold]] reads every flag and value once — the reference's per-entry
-  * filter memoization, TDataFrame.hxx:1293-1306 — and runs only the ops whose
-  * node passed, into one [[SlotBuffer]] per slot (the reference's per-slot
-  * results, :483-517). [[merge]] is a per-op add, compare or append; the
-  * driver merges the slots' buffers in slot order at the end of the loop
-  * (:1364-1394). `valueCap` is each slot's [[Entry.valueCap]].
+  * once) followed by its distinct value columns (`kinds`), into one
+  * [[SlotBuffer]] per slot (the reference's per-slot results,
+  * TDataFrame.hxx:483-517).
+  *
+  * The fold is one Java class per pass, generated on the driver from the op
+  * table ([[BookedAgg.generate]]) and compiled by Janino in each task
+  * through Spark's `CodeGenerator.compile`, whose cache is keyed by the
+  * source. For each entry the class reads every value once into fields,
+  * then tests each node's flag once and runs that node's ops as
+  * straight-line code, in the order the op table holds them — the
+  * reference's per-entry filter memoization (:1293-1306) and its
+  * template-inlined fills (:1362-1421). Each node's ops are one method (the
+  * ops of all entries, node -1, one more), cut into further methods and inner
+  * classes by the `CodegenContext` once they grow past Spark's split
+  * threshold, so a wide batch stays under the JVM's 64 KB method limit and the
+  * JIT's huge-method limit. Offsets into the buffer are literals; every other
+  * constant (a histogram's axis, the value-count cap, the Take and user-fold
+  * ops) reaches the class through its references array, so the source
+  * depends only on the pass's shape, and a repeated chain compiles once per
+  * JVM. [[merge]] is a per-op add, compare or append; the driver merges the
+  * slots' buffers in slot order at the end of the loop (:1364-1394).
+  * `valueCap` is the pass's [[AutoHistoOp]] cap.
   */
 private[tdf] final class BookedAgg(
     nodes: Int, kinds: Seq[ValueKind], ops: Seq[BookedOp],
     nLongs: Int, nDoubles: Int, bins: Seq[Int], nObjs: Int, valueCap: Int) extends Serializable {
 
-  // Plain fields, not lazy vals: `fold` reads them for every row.
-  private val kindTable: Array[ValueKind] = kinds.toArray
-  // ops grouped by gating node, so each node's flag is tested once per entry:
-  // group j runs opTable(groupEnd(j - 1) until groupEnd(j)) when groupNode(j) passed
+  // ops grouped by gating node, each group in booking order
   private val opTable: Array[BookedOp] = ops.sortBy(_.node).toArray
-  private val groupNode: Array[Int] = opTable.map(_.node).distinct
-  private val groupEnd: Array[Int] = groupNode.map(k => opTable.lastIndexWhere(_.node == k) + 1)
+  private val (source, references) = BookedAgg.generate(nodes, kinds.toIndexedSeq, opTable, valueCap)
 
   def newBuffer(): SlotBuffer =
     new SlotBuffer(new Array[Long](nLongs), new Array[Double](nDoubles),
@@ -372,48 +436,73 @@ private[tdf] final class BookedAgg(
   /** one slot's pass over its entries */
   def fold(rows: Iterator[InternalRow]): SlotBuffer = {
     val b = newBuffer()
-    val e = new Entry(nodes, kindTable.length, valueCap)
-    while (rows.hasNext) update(b, e, rows.next())
+    val (clazz, _) = CodeGenerator.compile(new CodeAndComment(source, Map.empty))
+    clazz.generate(references).asInstanceOf[SlotFold].fold(rows, b)
     b
-  }
-
-  private def update(b: SlotBuffer, e: Entry, row: InternalRow): Unit = {
-    val nNodes = nodes
-    var k = 0
-    while (k < nNodes) { e.pass(k) = row.getBoolean(k); k += 1 }
-    val vk = kindTable
-    var v = 0
-    while (v < vk.length) {
-      val o = nNodes + v
-      val isNull = row.isNullAt(o)
-      e.nul(v) = isNull
-      e.arr(v) = null
-      if (!isNull) vk(v) match {
-        case Scalar => e.x(v) = row.getDouble(o)
-        case Elements => e.arr(v) = row.getArray(o)
-        case Weight => e.l(v) = row.getLong(o)
-        case Raw(_) => ()
-      }
-      v += 1
-    }
-    e.row = row
-    val table = opTable
-    val gn = groupNode
-    val ge = groupEnd
-    var j = 0
-    var i = 0
-    while (j < gn.length) {
-      val g = gn(j)
-      val end = ge(j)
-      if (g < 0 || e.pass(g)) while (i < end) { table(i).update(b, e); i += 1 }
-      else i = end
-      j += 1
-    }
   }
 
   def merge(into: SlotBuffer, from: SlotBuffer): SlotBuffer = {
     var i = 0
     while (i < opTable.length) { opTable(i).merge(into, from); i += 1 }
     into
+  }
+}
+
+private[tdf] object BookedAgg {
+  /** The source of the fold class of `ops` (grouped by node) and its
+    * references.
+    */
+  def generate(nodes: Int, kinds: IndexedSeq[ValueKind], ops: Seq[BookedOp],
+      valueCap: Int): (String, Array[Any]) = {
+    val ctx = new CodegenContext
+    val g = new FoldCode(ctx, nodes, kinds, valueCap)
+    val groups = mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[String]]
+    ops.foreach(o => groups.getOrElseUpdate(o.node, mutable.ArrayBuffer.empty) += o.code(g))
+    val calls = groups.map { case (k, code) =>
+      val name = if (k < 0) "all" else s"node$k"
+      val body = ctx.splitExpressions(code.toSeq, funcName = s"${name}_ops", arguments = Nil)
+      val f = ctx.addNewFunction(name, s"private void $name() {\n$body\n}")
+      if (k < 0) s"$f();" else s"if (row.getBoolean($k)) $f();"
+    }
+    val entry = ctx.splitExpressions(kinds.indices.map(g.read) ++ calls, funcName = "entry",
+      arguments = Nil)
+    val fields = kinds.indices.flatMap(g.fields).map { case (t, n) => s"private $t $n;" }
+    val source =
+      s"""public java.lang.Object generate(Object[] references) {
+         |  return new SpecificSlotFold(references);
+         |}
+         |
+         |final class SpecificSlotFold extends ${classOf[SlotFold].getName} {
+         |  private Object[] references;
+         |  private ${classOf[SlotBuffer].getName} buf;
+         |  private long[] longs;
+         |  private double[] doubles;
+         |  private ${classOf[HistBuffer].getName}[] hists;
+         |  private scala.collection.mutable.ArrayBuffer[] objs;
+         |  private InternalRow row;
+         |  ${fields.mkString("\n  ")}
+         |  ${ctx.declareMutableStates()}
+         |
+         |  public SpecificSlotFold(Object[] references) {
+         |    this.references = references;
+         |    ${ctx.initMutableStates()}
+         |  }
+         |
+         |  public void fold(scala.collection.Iterator rows, ${classOf[SlotBuffer].getName} b) {
+         |    buf = b;
+         |    longs = b.longs();
+         |    doubles = b.doubles();
+         |    hists = b.hists();
+         |    objs = b.objs();
+         |    while (rows.hasNext()) {
+         |      row = (InternalRow) rows.next();
+         |      $entry
+         |    }
+         |  }
+         |
+         |  ${ctx.declareAddedFunctions()}
+         |}
+         |""".stripMargin
+    (source, ctx.references.toArray)
   }
 }

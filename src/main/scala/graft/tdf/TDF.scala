@@ -73,8 +73,13 @@ private[tdf] final case class Booked(
   * parent passed, the reference's per-entry filter memoization
   * (TDataFrame.hxx:1293-1306) — and each distinct value column once. Each
   * task folds its partition's rows into one per-slot buffer holding every
-  * action's partial state ([[BookedAgg]]), running only the ops whose node
-  * passed; the driver merges the slots' buffers in partition order at the
+  * action's partial state ([[BookedAgg]]) with the pass's generated fold
+  * class: one Java class per pass, its source made from the op table's
+  * shape only (offsets; the other constants ride its references array), so
+  * Janino's cache, keyed by the source, compiles a repeated chain once. Per
+  * entry it tests each node's flag once and runs that node's ops as
+  * straight-line code, one method per node, split further when a batch is
+  * wide. The driver merges the slots' buffers in partition order at the
   * end of the loop (the reference's per-slot results, :483-517, merged at
   * :1364-1394), so no result depends on the order tasks finish in. Sibling
   * forks that define one name differently each get their own column of the
@@ -216,8 +221,7 @@ final class BookingContext private[tdf] (
     }
     b.spec match {
       case CountSpec =>
-        val l = p.longs(1)
-        p.op(CountOp(k, l))
+        val l = p.counter(k)
         s => fill(b.result, s.longs(l))
       case SumSpec(c) =>
         val d = p.doubles(1)
@@ -234,16 +238,16 @@ final class BookingContext private[tdf] (
       case MaxSpec(c) =>
         extremum(c, isMin = false, if (compat) java.lang.Double.MIN_NORMAL else Double.NaN)
       case TakeSpec(c) =>
-        val (v, t) = (p.raw(name(c), None), p.obj())
-        p.op(TakeOp(k, v, p.typeOf(v), t))
+        val ((v, dt), t) = (p.raw(name(c), None), p.obj())
+        p.op(TakeOp(k, v, dt, t))
         // the external types `collect()` gives: the same row deserializer
-        val toRow = ExpressionEncoder(StructType(Seq(StructField(c, p.typeOf(v)))))
+        val toRow = ExpressionEncoder(StructType(Seq(StructField(c, dt))))
           .resolveAndBind().createDeserializer()
         s => fill(b.result, s.objs(t).map(x => toRow(InternalRow(x)).get(0)).toSeq)
       case FoldSpec(cols, fold, done) =>
         val (vs, t) = (cols.map { case (c, kind) => p.raw(name(c), kind) }, p.obj())
-        p.op(FoldOp(k, vs, StructType(cols.zip(vs).map { case ((c, _), v) =>
-          StructField(c, p.typeOf(v)) }), t, fold))
+        p.op(FoldOp(k, vs.map(_._1), StructType(cols.zip(vs).map { case ((c, _), (_, dt)) =>
+          StructField(c, dt) }), t, fold))
         s => fill(b.result, done(s.objs(t).headOption))
       case HistoSpec(c, nbins, range, weightCol) =>
         // an auto-ranged Histo is lowered here only once pass 1 resolved its axis
@@ -255,29 +259,31 @@ final class BookingContext private[tdf] (
         val names = b.steps.collect { case FilterStep(n, _) => n }.zipWithIndex.map {
           case (n, i) => n.getOrElse(s"filter_$i")
         }
-        // one count per prefix of the cut chain, the empty prefix included:
-        // cut i passes count i + 1 out of count i
-        val prefixes = if (names.isEmpty) Vector.empty else -1 +: p.chain(b.steps)
-        val l = p.longs(prefixes.length)
-        prefixes.zipWithIndex.foreach { case (node, i) => p.op(CountOp(node, l + i)) }
+        // the count of each prefix of the cut chain, the empty prefix
+        // included: cut i passes count i + 1 out of count i
+        val counts = if (names.isEmpty) Vector.empty else (-1 +: p.chain(b.steps)).map(p.counter)
         s => fill(b.result, names.zipWithIndex.map { case (n, i) =>
-          CutInfo(n, s.longs(l + i + 1), s.longs(l + i))
+          CutInfo(n, s.longs(counts(i + 1)), s.longs(counts(i)))
         })
     }
   }
 
   /** One pass of a batch, lowered onto one projection and one [[BookedAgg]]
     * fold. Filter node k is a (parent node, predicate) pair, each distinct
-    * pair once (Column equality): its flag is `coalesce(parent && pred,
-    * false)`, projected once, so a predicate runs once per entry and only on
-    * entries its parent passed. Each distinct value column is projected once
-    * for every entry, cast to double, `array<double>` or (weights) long, or
-    * (Take and the user folds) up-cast, so a lossy narrowing fails analysis
-    * on the driver.
+    * pair once (Column equality, hashed on the normalized node): its flag is
+    * `coalesce(parent && pred, false)`, projected once, so a predicate runs
+    * once per entry and only on entries its parent passed. Each node,
+    * -1 (every entry) included, has at most one counter, which every Count
+    * and Report prefix on it reads. Each distinct value column is projected
+    * once for every entry, cast to double, `array<double>` or (weights) long,
+    * or (Take and the user folds) up-cast, so a lossy narrowing fails
+    * analysis on the driver.
     */
   private final class Lowering(val wide: DataFrame) {
-    private val nodes = mutable.ArrayBuffer.empty[(Int, Column)]
-    private val values = mutable.ArrayBuffer.empty[(String, ValueKind)]
+    // each key's index is its insertion order
+    private val nodes = mutable.LinkedHashMap.empty[(Int, Column), Int]
+    private val values = mutable.LinkedHashMap.empty[(String, ValueKind), Int]
+    private val counters = mutable.HashMap.empty[Int, Int]
     private val ops = mutable.ArrayBuffer.empty[BookedOp]
     private val bins = mutable.ArrayBuffer.empty[Int]
     private var nLongs = 0
@@ -287,26 +293,28 @@ final class BookingContext private[tdf] (
     /** the nodes after each filter of a chain */
     def chain(steps: Vector[Step]): Vector[Int] =
       steps.collect { case FilterStep(_, p) => p }.scanLeft(-1) { (parent, p) =>
-        val i = nodes.indexOf((parent, p))
-        if (i >= 0) i else { nodes += ((parent, p)); nodes.length - 1 }
+        nodes.getOrElseUpdate((parent, p), nodes.size)
       }.tail
     /** the node gating a chain's actions; -1 (every entry) without filters */
     def node(steps: Vector[Step]): Int = chain(steps).lastOption.getOrElse(-1)
 
-    private def slot(key: (String, ValueKind)): Int = {
-      val i = values.indexOf(key)
-      if (i >= 0) i else { values += key; values.length - 1 }
-    }
+    private def slot(key: (String, ValueKind)): Int = values.getOrElseUpdate(key, values.size)
     /** a value column read elementwise when it is an array (the reference's
       * container overloads, TDataFrame.hxx:451-459)
       */
     def value(c: String): Int =
       slot((c, if (wide.schema(c).dataType.isInstanceOf[ArrayType]) Elements else Scalar))
     def weight(c: String): Int = slot((c, Weight))
-    /** a value read off the row, up-cast to `kind` (None: in its own type) */
-    def raw(c: String, kind: Option[ValueKind]): Int =
-      slot((c, kind.getOrElse(Raw(wide.schema(c).dataType))))
-    def typeOf(v: Int): DataType = values(v)._2.dataType
+    /** a value read off the row, up-cast to `kind` (None: in its own
+      * type), and the type it is read as
+      */
+    def raw(c: String, kind: Option[ValueKind]): (Int, DataType) = {
+      val k = kind.getOrElse(Raw(wide.schema(c).dataType))
+      (slot((c, k)), k.dataType)
+    }
+    /** the cell counting the entries that pass `node` */
+    def counter(node: Int): Int =
+      counters.getOrElseUpdate(node, { val l = longs(1); op(CountOp(node, l)); l })
     def longs(n: Int): Int = { nLongs += n; nLongs - n }
     def doubles(n: Int): Int = { nDoubles += n; nDoubles - n }
     def hist(nbins: Int): Int = { bins += nbins; bins.length - 1 }
@@ -324,18 +332,19 @@ final class BookingContext private[tdf] (
         if (ops.isEmpty) null
         else {
           def flag(k: Int) = col(s"__tdf_n$k")
+          val nodeList = nodes.keysIterator.toIndexedSeq
           val depth = mutable.ArrayBuffer.empty[Int]
-          nodes.foreach { case (parent, _) => depth += (if (parent < 0) 0 else depth(parent) + 1) }
+          nodeList.foreach { case (parent, _) => depth += (if (parent < 0) 0 else depth(parent) + 1) }
           // one select per depth: a node's flag reads its parent's
-          val flagged = nodes.indices.groupBy(depth).toSeq.sortBy(_._1).foldLeft(wide) {
+          val flagged = nodeList.indices.groupBy(depth).toSeq.sortBy(_._1).foldLeft(wide) {
             case (df, (_, ks)) => df.select(col("*") +: ks.map { k =>
-              val (parent, p) = nodes(k)
+              val (parent, p) = nodeList(k)
               coalesce(if (parent < 0) p else flag(parent) && p, lit(false)).as(s"__tdf_n$k")
             }: _*)
           }
           // the fold reads flag k at ordinal k and value v at nodes + v
-          val projected = flagged.select(nodes.indices.map(flag) ++
-            values.zipWithIndex.map {
+          val projected = flagged.select(nodeList.indices.map(flag) ++
+            values.keysIterator.zipWithIndex.toSeq.map {
               case ((c, Raw(dt)), v) =>
                 GraftSql.column(UpCast(GraftSql.expression(col(c)), dt)).as(s"__tdf_v$v")
               case ((c, kind), v) => col(c).cast(kind.dataType).as(s"__tdf_v$v")
@@ -343,7 +352,7 @@ final class BookingContext private[tdf] (
           GraftSql.withExecution(projected, "graft_booked") { rows =>
             val cap = AutoHistoOp.slotCap(valueCap, rows.getNumPartitions,
               ops.count(_.isInstanceOf[AutoHistoOp]))
-            val agg = new BookedAgg(nodes.length, values.map(_._2).toSeq, ops.toSeq,
+            val agg = new BookedAgg(nodes.size, values.keysIterator.map(_._2).toSeq, ops.toSeq,
               nLongs, nDoubles, bins.toSeq, nObjs, cap)
             rows.sparkContext.runJob(rows, agg.fold _).foldLeft(agg.newBuffer())(agg.merge)
           }
@@ -613,8 +622,12 @@ final class TDF private (
     foreach(cols.map(_ -> None), f)
 
   private def foreach(cols: Seq[(String, Option[ValueKind])], f: (Int, Row) => Unit): Unit =
-    ctx.book[Unit](steps, FoldSpec(cols, UserFold(f, (_, s, r) => f(s, r), (_, _) => ()),
-      _ => ()))()
+    bookForeach(cols, f)()
+
+  /** books `f` on the passing entries' `cols` without running the batch */
+  private[tdf] def bookForeach(
+      cols: Seq[(String, Option[ValueKind])], f: (Int, Row) => Unit): Result[Unit] =
+    ctx.book[Unit](steps, FoldSpec(cols, UserFold(f, (_, s, r) => f(s, r), (_, _) => ()), _ => ()))
 
   /** catalyst type for a lambda argument, so the column can be up-cast to the
     * exact runtime class the callable expects (an Int column handed to a

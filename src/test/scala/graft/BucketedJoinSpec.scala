@@ -42,7 +42,7 @@ class BucketedJoinSpec extends AnyFunSuite {
 
   test("SnapshotBucketed with explicit path writes an external table whose fact agg needs no exchange") {
     val dir = "/root/testdata/sf0.001"
-    val path = "/tmp/graft_bucketed_external_spec"
+    val path = s"${SparkTest.scratchRoot}/graft_bucketed_external_spec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     try {
       val t = graft.tdf.TDF(

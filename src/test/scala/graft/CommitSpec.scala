@@ -15,7 +15,7 @@ class CommitSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fresh(tag: String) =
-    s"/tmp/graft_commit_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
+    s"${SparkTest.scratchRoot}/graft_commit_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** Run `winner`, with `loser` interleaved inside its flip; the loser's
     * failure is caught there so the winner's flip completes.

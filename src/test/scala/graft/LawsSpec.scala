@@ -1360,7 +1360,7 @@ object LawsSpec extends Properties("graft") {
       val docs: Seq[(Long, Seq[String])] = (0L until 12L).map { id =>
         id -> Seq.fill(rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size)))
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft_phrase").toString
+      val dir = SparkTest.tempDir("graft_phrase").toString
       try {
         docs.toDF("doc_id", "toks").write.mode("overwrite").parquet(dir)
         val df = spark.read.parquet(dir)
@@ -1402,7 +1402,7 @@ object LawsSpec extends Properties("graft") {
             if (rnd.nextInt(5) == 0) None
             else Some((rnd.nextDouble() - 0.5) * 2.0))
         } :+ (9L -> (0 until dim).map(_ => Option.empty[Double])) // all-null elements
-      val dir = java.nio.file.Files.createTempDirectory("graft_covagg").toString
+      val dir = SparkTest.tempDir("graft_covagg").toString
       try {
         vecs.toDF("vec_id", "embedding").repartition(parts)
           .write.mode("overwrite").parquet(dir)
@@ -1502,7 +1502,7 @@ object LawsSpec extends Properties("graft") {
         4L -> Seq.empty,
         5L -> Seq.fill(6)(Some(0.0f)),
         7L -> (0 until 8).map(i => Some((if (i % 2 == 0) 1 else -1) * 1e-7f)))
-      val dir = java.nio.file.Files.createTempDirectory("graft_quant_cg").toString
+      val dir = SparkTest.tempDir("graft_quant_cg").toString
       try {
         vecs.toDF("vec_id", "embedding").write.mode("overwrite").parquet(dir)
         val df = spark.read.parquet(dir)
@@ -1541,7 +1541,7 @@ object LawsSpec extends Properties("graft") {
         else Some((i - 2).toFloat * 1.5f))
       val codes: Seq[Option[Int]] = (0 until 6).map(i =>
         if (i == (nanPos + 3) % 6) None else Some(i * 20 - 50))
-      val dir = java.nio.file.Files.createTempDirectory("graft_nan_max").toString
+      val dir = SparkTest.tempDir("graft_nan_max").toString
       try {
         Seq((1L, vec, codes)).toDF("vec_id", "embedding", "q")
           .write.mode("overwrite").parquet(dir)
@@ -1588,7 +1588,7 @@ object LawsSpec extends Properties("graft") {
         3L -> (0 until dim + 4).map(_ => -rnd.nextDouble() * 5.0), // longer
         4L -> (baseCents(0) ++ baseCents(1)), // exact centroid hit per subspace
         5L -> Seq.empty)
-      val dir = java.nio.file.Files.createTempDirectory("graft_pq_kernel").toString
+      val dir = SparkTest.tempDir("graft_pq_kernel").toString
       try {
         vecs.toDF("vec_id", "v").write.mode("overwrite").parquet(dir)
         val df = spark.read.parquet(dir)

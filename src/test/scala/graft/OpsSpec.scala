@@ -336,12 +336,12 @@ class OpsSpec extends AnyFunSuite {
   test("streaming ANN search equals the batch search over the same query set") {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.Tables.embeddings(spark, dir)
-    val idx = "/tmp/graft_stream_ann_opsspec_idx"
+    val idx = s"${SparkTest.scratchRoot}/graft_stream_ann_opsspec_idx"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
     graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, 8, IvfCodec.Int8)
     val qs = emb.filter($"vec_id" < 20)
     val streamed = Streams.streamingAnnSearch(
-      qs, idx, "/tmp/graft_stream_ann_opsspec_out", "vec_id", "embedding", 3, 2,
+      qs, idx, s"${SparkTest.scratchRoot}/graft_stream_ann_opsspec_out", "vec_id", "embedding", 3, 2,
       batches = 4)
       .collect().map(_.toString).sorted.toSeq
     val batch = graft.ops.Similarity.openIvfSearcher(
@@ -353,7 +353,7 @@ class OpsSpec extends AnyFunSuite {
   test("opened searcher (fit/serve split) serves repeated batches identically to the one-shot API") {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.Tables.embeddings(spark, dir)
-    val idx = "/tmp/graft_open_searcher_idx"
+    val idx = s"${SparkTest.scratchRoot}/graft_open_searcher_idx"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
     graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, 8, IvfCodec.Int8)
     // the r20 serving split: the static side (manifest, list frame,
@@ -414,8 +414,8 @@ class OpsSpec extends AnyFunSuite {
   test("streaming ANN sink is retry-idempotent: replaying a batch id adds no rows") {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.Tables.embeddings(spark, dir)
-    val idx = "/tmp/graft_sann_idem_idx"
-    val out = "/tmp/graft_sann_idem_out"
+    val idx = s"${SparkTest.scratchRoot}/graft_sann_idem_idx"
+    val out = s"${SparkTest.scratchRoot}/graft_sann_idem_out"
     Seq(idx, out).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
     graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, 8, IvfCodec.Int8)
@@ -443,11 +443,11 @@ class OpsSpec extends AnyFunSuite {
   test("streaming ANN search over an empty query set returns the search schema, empty") {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.Tables.embeddings(spark, dir)
-    val idx = "/tmp/graft_sann_empty_idx"
+    val idx = s"${SparkTest.scratchRoot}/graft_sann_empty_idx"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
     graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, 8, IvfCodec.Int8)
     val got = Streams.streamingAnnSearch(
-      emb.filter($"vec_id" < 0), idx, "/tmp/graft_sann_empty_out",
+      emb.filter($"vec_id" < 0), idx, s"${SparkTest.scratchRoot}/graft_sann_empty_out",
       "vec_id", "embedding", 3, 2, batches = 2)
     val expected = graft.ops.Similarity.openIvfSearcher(
       spark, idx, "vec_id", "embedding", 3, 2)(emb.limit(0))
@@ -459,7 +459,7 @@ class OpsSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val emb = Tables.embeddings(spark, dir)
     val got = Streams.streamingSemanticDedup(
-      spark, dir, "/tmp/graft_ssem_spec", minCos = 0.3, nCents = 4,
+      spark, dir, s"${SparkTest.scratchRoot}/graft_ssem_spec", minCos = 0.3, nCents = 4,
       trainIters = 1, batches = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = graft.ops.Similarity.semanticDedup(
@@ -568,7 +568,7 @@ class OpsSpec extends AnyFunSuite {
       s"median error ratio should reflect ~256x finer codes, got ${ratios(ratios.length / 2)}")
     // build/search round-trip is deterministic (the gate pins values; this
     // pins that two searches of the same stored index agree exactly)
-    val path = "/tmp/graft_f16_opsspec"
+    val path = s"${SparkTest.scratchRoot}/graft_f16_opsspec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Int16)
     def search() = Similarity.openIvfSearcher(
@@ -651,7 +651,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("persisted PQ index: round-trip equals in-memory; appends searchable; DPP fires") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_pq_index_opsspec"
+    val path = s"${SparkTest.scratchRoot}/graft_pq_index_opsspec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     graft.ops.Similarity.writeIvfIndex(
       emb, "vec_id", "embedding", path, 8, IvfCodec.Pq(4, 16, 64))
@@ -668,7 +668,7 @@ class OpsSpec extends AnyFunSuite {
     assert(plan.contains("dynamicpruning"),
       s"PQ list scan must carry dynamic partition pruning:\n$plan")
     // an appended batch is encoded with the STORED geometry and searchable
-    val base = "/tmp/graft_pq_append_opsspec"
+    val base = s"${SparkTest.scratchRoot}/graft_pq_append_opsspec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     graft.ops.Similarity.writeIvfIndex(
       emb.filter($"vec_id" < 300), "vec_id", "embedding", base, 8, IvfCodec.Pq(4, 16, 64))
@@ -729,7 +729,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("snapshot retention keeps a configurable number of previous versions") {
-    val out = "/tmp/graft_snapshot_retain_test"
+    val out = s"${SparkTest.scratchRoot}/graft_snapshot_retain_test"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     val a = Seq((0, 1L)).toDF("bin", "n")
     (0L to 2L).foreach(v => Streams.commitSnapshot(a, out, v, retain = 2))
@@ -752,7 +752,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("snapshot sink: pointer flip keeps readers on complete versions only") {
-    val out = "/tmp/graft_snapshot_sink_test"
+    val out = s"${SparkTest.scratchRoot}/graft_snapshot_sink_test"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     def readSet() = Streams.readSnapshot(spark, out)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
@@ -977,7 +977,7 @@ class OpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("ts", TimestampType)))
-    val stage = java.nio.file.Files.createTempDirectory("graft_late_test")
+    val stage = SparkTest.tempDir("graft_late_test")
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     def writeFile(idx: Int, rows: Seq[(Long, java.sql.Timestamp)]): Unit = {
       val tmp = stage.resolve(s"_tmp$idx")
@@ -1183,7 +1183,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("filtered ANN: predicate pushed into the list scan, top-k among matching rows") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_test_filtered_idx"
+    val path = s"${SparkTest.scratchRoot}/graft_test_filtered_idx"
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Int8,
@@ -1212,7 +1212,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("filtered PQ ANN: predicate pushed into the compressed list scan too") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_test_pq_filtered_idx"
+    val path = s"${SparkTest.scratchRoot}/graft_test_pq_filtered_idx"
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Pq(4, 16, 64),
@@ -1232,7 +1232,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("filtered ANN parity: the PQ index honors the same listFilter semantics") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_test_filtered_pq_idx"
+    val path = s"${SparkTest.scratchRoot}/graft_test_filtered_pq_idx"
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Pq(4, 16, 64),
@@ -1248,7 +1248,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("filtered PQ append takes the attribute columns from the index") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_test_pq_filtered_append_idx"
+    val path = s"${SparkTest.scratchRoot}/graft_test_pq_filtered_append_idx"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, IvfCodec.Pq(4, 16, 64),
       attrCols = Seq("label"))
@@ -1270,7 +1270,7 @@ class OpsSpec extends AnyFunSuite {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val qs = emb.filter($"vec_id" < 10)
     Seq("int16" -> IvfCodec.Int16, "pq" -> IvfCodec.Pq(4, 16, 64)).foreach { case (tag, codec) =>
-      val path = s"/tmp/graft_test_stats_vacuum_$tag"
+      val path = s"${SparkTest.scratchRoot}/graft_test_stats_vacuum_$tag"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
       Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, codec)
       // the per-list counts of the build, read straight from the fresh lists
@@ -1353,7 +1353,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("persisted bigram LM: scoring matches in-line compute; versions time-travel") {
     import graft.streaming.Streams
-    val dir = java.nio.file.Files.createTempDirectory("bigram_lm").toString
+    val dir = SparkTest.tempDir("bigram_lm").toString
     val c1 = Seq((1L, "the cat sat on the mat"), (2L, "the cat ran"),
       (3L, "a dog sat on a log")).toDF("doc_id", "text")
     Streams.commitSnapshot(TextOps.bigramLmTable(c1, "text"), dir, 1L, retain = 2)
@@ -1629,7 +1629,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("upsertSnapshot: merge semantics, version chain, time travel, schema guard") {
-    val out = s"/tmp/graft_upsert_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = s"${SparkTest.scratchRoot}/graft_upsert_spec_${java.util.UUID.randomUUID().toString.take(8)}"
     val base = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)).toDF("k", "s", "n")
     assert(Streams.upsertSnapshot(base, out, Seq("k"), retain = 5) == 0L)
     // update k=2, insert k=4, delete k=1 and k=2 (batch wins the k=2 overlap)
@@ -1648,7 +1648,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("data skipping: range read equals full filter, prunes files, handles empty/null") {
-    val out = s"/tmp/graft_skip_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = s"${SparkTest.scratchRoot}/graft_skip_spec_${java.util.UUID.randomUUID().toString.take(8)}"
     val df = spark.range(0, 1000).select($"id",
       when($"id" % 13 === 0, lit(null).cast("long")).otherwise($"id" % 7).as("m"))
     Streams.commitSnapshotStats(df.toDF, out, 0, Seq("id"), layoutParts = 8)
@@ -1666,7 +1666,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("bloom skipping: point read equals full filter, prunes files, never false-negative") {
-    val out = s"/tmp/graft_bloom_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = s"${SparkTest.scratchRoot}/graft_bloom_spec_${java.util.UUID.randomUUID().toString.take(8)}"
     val df = spark.range(0, 1000).select($"id", md5($"id".cast("string")).as("k"))
     Streams.commitSnapshotStats(df.toDF, out, 0, Seq("id"), layoutParts = 8,
       bloomCols = Seq("k"), bloomBits = 1 << 16)
@@ -1683,7 +1683,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("partitioned upsert: only touched partitions rewrite; reads prune; rewriteAll+vacuum") {
-    val out = s"/tmp/graft_part_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = s"${SparkTest.scratchRoot}/graft_part_spec_${java.util.UUID.randomUUID().toString.take(8)}"
     val base = Seq((1L, "en", 10L), (2L, "en", 20L), (3L, "de", 30L), (4L, "fr", 40L))
       .toDF("k", "lang", "n")
     assert(PartitionedSnapshot.upsert(base, out, Seq("k"), "lang") == 0L)
@@ -1716,7 +1716,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("dropPartitions: metadata-only, survivors untouched, cannot empty the table") {
-    val out = s"/tmp/graft_drop_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = s"${SparkTest.scratchRoot}/graft_drop_spec_${java.util.UUID.randomUUID().toString.take(8)}"
     val base = Seq((1L, "en", 10L), (2L, "de", 20L), (3L, "fr", 30L)).toDF("k", "lang", "n")
     PartitionedSnapshot.upsert(base, out, Seq("k"), "lang")
     assert(PartitionedSnapshot.dropPartitions(spark, out, Set("en")) == 1L)
@@ -1734,7 +1734,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("addColumn: metadata-only; defaults fill old versions; rewriteAll materializes") {
-    val out = s"/tmp/graft_evolve_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = s"${SparkTest.scratchRoot}/graft_evolve_spec_${java.util.UUID.randomUUID().toString.take(8)}"
     val base = Seq((1L, "en", 10L), (2L, "de", 20L), (3L, "fr", 30L)).toDF("k", "lang", "n")
     PartitionedSnapshot.upsert(base, out, Seq("k"), "lang")
     assert(PartitionedSnapshot.addColumn(spark, out, "q", "double", "0.5") == 1L)
@@ -1780,7 +1780,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("dropColumn: metadata-only; guards partition/last/resurrected columns") {
-    val out = s"/tmp/graft_dropcol_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = s"${SparkTest.scratchRoot}/graft_dropcol_spec_${java.util.UUID.randomUUID().toString.take(8)}"
     val base = Seq((1L, "en", 10L, "a"), (2L, "de", 20L, "b"))
       .toDF("k", "lang", "n", "src")
     PartitionedSnapshot.upsert(base, out, Seq("k"), "lang")
@@ -1811,7 +1811,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("upsertSnapshot: a leftover next-version dir aborts instead of clobbering") {
-    val out = s"/tmp/graft_upguard_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = s"${SparkTest.scratchRoot}/graft_upguard_spec_${java.util.UUID.randomUUID().toString.take(8)}"
     val base = Seq((1L, 10L)).toDF("k", "n")
     Streams.upsertSnapshot(base, out, Seq("k"), retain = 5)
     assert(new java.io.File(s"$out/v_1").mkdirs())

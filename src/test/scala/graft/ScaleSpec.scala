@@ -21,7 +21,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("partitioned write + read prunes partitions in the scan") {
-    val dir = "/tmp/graft_part_test"
+    val dir = s"${SparkTest.scratchRoot}/graft_part_test"
     (0L until 1000L).map(i => (i, s"g${i % 5}", i % 7))
       .toDF("id", "grp", "v")
       .write.mode("overwrite").partitionBy("grp").parquet(dir)
@@ -305,7 +305,7 @@ class ScaleSpec extends AnyFunSuite {
     // into a dynamic partition-pruning filter on the scan, so search I/O is
     // nprobe/nCents of the stored index — the build-once/search-many contract
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_ivf_index_scalespec"
+    val path = s"${SparkTest.scratchRoot}/graft_ivf_index_scalespec"
     graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
     val search = graft.ops.Similarity.openIvfSearcher(
       spark, path, "vec_id", "embedding", 3, 2)(emb.filter($"vec_id" < 10))
@@ -321,7 +321,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("index append is crash-safe: manifest flip isolates readers, orphans are swept") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_ivf_commit_scalespec"
+    val path = s"${SparkTest.scratchRoot}/graft_ivf_commit_scalespec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     graft.ops.Similarity.writeIvfIndex(
       emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
@@ -383,8 +383,8 @@ class ScaleSpec extends AnyFunSuite {
 
   test("index rebuild rides the manifest protocol; vacuum sweeps only unreferenced files") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_ivf_rebuild_scalespec"
-    val fresh = "/tmp/graft_ivf_rebuild_fresh"
+    val path = s"${SparkTest.scratchRoot}/graft_ivf_rebuild_scalespec"
+    val fresh = s"${SparkTest.scratchRoot}/graft_ivf_rebuild_fresh"
     Seq(path, fresh).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
     def manifest(): Seq[String] =
@@ -435,8 +435,8 @@ class ScaleSpec extends AnyFunSuite {
 
   test("index append equals full rebuild and rewrites only touched partitions") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val full = "/tmp/graft_ivf_full_scalespec"
-    val inc = "/tmp/graft_ivf_inc_scalespec"
+    val full = s"${SparkTest.scratchRoot}/graft_ivf_full_scalespec"
+    val inc = s"${SparkTest.scratchRoot}/graft_ivf_inc_scalespec"
     graft.ops.Similarity.writeIvfIndex(emb, "vec_id", "embedding", full, 8, graft.ops.IvfCodec.Int8)
     // base on an ODD split boundary (ids 0..7 still inside, so the stored
     // centroids equal the full build's smallest-id init)
@@ -485,8 +485,8 @@ class ScaleSpec extends AnyFunSuite {
 
   test("index writer fence: an interleaved second writer fails loudly, never clobbers") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_ivf_fence_scalespec"
-    val twin = "/tmp/graft_ivf_fence_twin"
+    val path = s"${SparkTest.scratchRoot}/graft_ivf_fence_scalespec"
+    val twin = s"${SparkTest.scratchRoot}/graft_ivf_fence_twin"
     Seq(path, twin).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
     def version(p: String): Long =
@@ -528,7 +528,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("vacuum fences against a writer that commits mid-sweep") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_ivf_vacfence_scalespec"
+    val path = s"${SparkTest.scratchRoot}/graft_ivf_vacfence_scalespec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     graft.ops.Similarity.writeIvfIndex(
       emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
@@ -546,7 +546,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("vacuum stage sweep honors the grace window (live staging spared)") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_ivf_vacgrace_scalespec"
+    val path = s"${SparkTest.scratchRoot}/graft_ivf_vacgrace_scalespec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     graft.ops.Similarity.writeIvfIndex(
       emb.filter($"vec_id" < 137), "vec_id", "embedding", path, 8, graft.ops.IvfCodec.Int8)
@@ -567,7 +567,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("a swept staging directory aborts the append instead of committing empty partitions") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = "/tmp/graft_ivf_stagesweep_scalespec"
+    val path = s"${SparkTest.scratchRoot}/graft_ivf_stagesweep_scalespec"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     def version(): Long =
       scala.io.Source.fromFile(s"$path/_COMMIT").getLines()
@@ -651,7 +651,7 @@ class ScaleSpec extends AnyFunSuite {
     // the 100 TB fact-table pattern: facts laid out by a partition column,
     // dim-side filters reaching the fact SCAN at runtime through DPP — the
     // partitioned layout only pays off if Spark actually prunes
-    val dir = "/tmp/graft_dpp_test"
+    val dir = s"${SparkTest.scratchRoot}/graft_dpp_test"
     (0L until 2000L).map(i => (i, s"g${i % 8}", i % 13))
       .toDF("id", "grp", "v")
       .write.mode("overwrite").partitionBy("grp").parquet(dir)
@@ -659,7 +659,7 @@ class ScaleSpec extends AnyFunSuite {
     // the dim must be a real source with a surviving Filter node — a local
     // relation constant-folds the predicate away and DPP's selective-
     // predicate heuristic never sees it
-    val dimDir = "/tmp/graft_dpp_dim"
+    val dimDir = s"${SparkTest.scratchRoot}/graft_dpp_dim"
     Seq(("g3", "keep"), ("g5", "keep"), ("g6", "drop"), ("g7", "drop"))
       .toDF("grp", "tag").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir).filter($"tag" === "keep")

@@ -8,13 +8,28 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for the whole test run. */
 object SparkTest {
+  /** One scratch directory for the whole test run, deleted when the JVM
+    * exits: the tests' own paths, `Tables.scratchRoot` (so the gates the tests
+    * build) and the session's warehouse all live under it.
+    */
+  val scratchRoot: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tests-").toString
+    sys.props("graft.scratch.root") = dir
+    sys.addShutdownHook(Tables.deleteTree(dir))
+    dir
+  }
+
+  /** a new directory named `prefix` plus a random suffix under [[scratchRoot]] */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(scratchRoot), prefix)
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
+      .config("spark.sql.warehouse.dir", s"$scratchRoot/warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -117,7 +117,7 @@ class StreamShapeSpec extends AnyFunSuite {
   }
 
   test("one settle delivers every trigger of a stopped multi-file stream") {
-    val root = java.nio.file.Files.createTempDirectory("graft_settle_test").toString
+    val root = SparkTest.tempDir("graft_settle_test").toString
     val src = s"$root/src"
     try {
       spark.range(40).repartition(4).write.parquet(src)

@@ -349,8 +349,8 @@ class TDFSpec extends AnyFunSuite {
   }
 
   test("CSV, JSON and ORC sources round-trip through the facade") {
-    val csvDir = "/tmp/graft_src_csv"
-    val jsonDir = "/tmp/graft_src_json"
+    val csvDir = s"${SparkTest.scratchRoot}/graft_src_csv"
+    val jsonDir = s"${SparkTest.scratchRoot}/graft_src_json"
     fixture.select($"b1", $"b2").write.mode("overwrite")
       .option("header", "true").csv(csvDir)
     fixture.select($"b1", $"b2").write.mode("overwrite").json(jsonDir)
@@ -364,13 +364,13 @@ class TDFSpec extends AnyFunSuite {
     val fromJson = TDF.readJson(spark, jsonDir, Some(schema))
     assert(fromJson.Filter($"b2" > 25).Count()() == 14L) // i*i > 25 → i in 6..19
     // ORC round-trip: snapshot the skim to ORC, reopen, identical results
-    val orc = TDF(fixture).Filter($"b2" > 25).SnapshotOrc("/tmp/graft_snap_orc")
+    val orc = TDF(fixture).Filter($"b2" > 25).SnapshotOrc(s"${SparkTest.scratchRoot}/graft_snap_orc")
     assert(orc.Count()() == 14L && orc.Sum("b1")() ==
       (6 until 20).map(_.toDouble).sum)
   }
 
   test("SnapshotPartitioned prunes; SnapshotBucketed joins shuffle-free") {
-    val dir = "/tmp/graft_snap_part"
+    val dir = s"${SparkTest.scratchRoot}/graft_snap_part"
     val d = TDF(fixture).Define("par", ($"b2" % 2).cast("string"))
       .SnapshotPartitioned(dir, Seq("par"))
     assert(d.Count()() == 20L)
@@ -392,7 +392,7 @@ class TDFSpec extends AnyFunSuite {
   }
 
   test("SnapshotSorted writes range-disjoint files; binaryFile source lists by glob") {
-    val dir = "/tmp/graft_snap_sorted"
+    val dir = s"${SparkTest.scratchRoot}/graft_snap_sorted"
     val d = TDF(fixture).SnapshotSorted(dir, Seq("b1"), numFiles = 4)
     assert(d.Count()() == 20L)
     // each part file must cover a disjoint b1 range (this is what makes the
@@ -409,7 +409,7 @@ class TDFSpec extends AnyFunSuite {
       s"file ranges must be disjoint: ${ranges.mkString(",")}")
 
     // binaryFile ingest: two files on disk, glob selects one at the listing
-    val binDir = new java.io.File("/tmp/graft_bin_src")
+    val binDir = new java.io.File(s"${SparkTest.scratchRoot}/graft_bin_src")
     binDir.mkdirs()
     java.nio.file.Files.write(
       new java.io.File(binDir, "a.jpg").toPath, Array[Byte](1, 2, 3, 4))
@@ -422,7 +422,7 @@ class TDFSpec extends AnyFunSuite {
   }
 
   test("SnapshotZOrdered clusters both dimensions into z-range-disjoint files") {
-    val dir = "/tmp/graft_snap_zorder"
+    val dir = s"${SparkTest.scratchRoot}/graft_snap_zorder"
     val d = TDF(fixture).SnapshotZOrdered(dir, "b2", "b1", numFiles = 4)
     assert(d.Count()() == 20L)
     val ranges = new java.io.File(dir).listFiles()
@@ -439,7 +439,7 @@ class TDFSpec extends AnyFunSuite {
   }
 
   test("SnapshotZOrderedN clusters three dimensions into z-range-disjoint files") {
-    val dir = "/tmp/graft_snap_zorder3"
+    val dir = s"${SparkTest.scratchRoot}/graft_snap_zorder3"
     val d = TDF(fixture.withColumn("b3", ($"b2" * 7) % 20))
       .SnapshotZOrderedN(dir, Seq("b2", "b1", "b3"), numFiles = 4)
     assert(d.Count()() == 20L)
@@ -457,7 +457,7 @@ class TDFSpec extends AnyFunSuite {
   }
 
   test("SnapshotZOrderedN at 4 columns: 60-bit budget clusters, 64 bits rejected") {
-    val dir = "/tmp/graft_snap_zorder4"
+    val dir = s"${SparkTest.scratchRoot}/graft_snap_zorder4"
     val src = fixture
       .withColumn("b3", ($"b2" * 7) % 20)
       .withColumn("b4", ($"b1" * 3) % 20)
@@ -479,14 +479,14 @@ class TDFSpec extends AnyFunSuite {
     // 4 cols x default 16 bits = 64 > 63: the sign bit would corrupt the
     // interleave order — must be rejected up front
     intercept[IllegalArgumentException] {
-      TDF(src).SnapshotZOrderedN("/tmp/graft_snap_zorder4_bad",
+      TDF(src).SnapshotZOrderedN(s"${SparkTest.scratchRoot}/graft_snap_zorder4_bad",
         Seq("b2", "b1", "b3", "b4"), numFiles = 4)
     }
   }
 
   test("compact rewrites a many-small-files directory into few files, data intact") {
-    val src = "/tmp/graft_compact_src"
-    val dst = "/tmp/graft_compact_dst"
+    val src = s"${SparkTest.scratchRoot}/graft_compact_src"
+    val dst = s"${SparkTest.scratchRoot}/graft_compact_dst"
     fixture.repartition(13).write.mode("overwrite").parquet(src)
     def parts(dir: String) = new java.io.File(dir).listFiles()
       .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
@@ -500,8 +500,8 @@ class TDFSpec extends AnyFunSuite {
   }
 
   test("compactPartitions compacts each partition dir independently") {
-    val src = "/tmp/graft_compactp_src"
-    val dst = "/tmp/graft_compactp_dst"
+    val src = s"${SparkTest.scratchRoot}/graft_compactp_src"
+    val dst = s"${SparkTest.scratchRoot}/graft_compactp_dst"
     fixture.withColumn("par", ($"b2" % 2).cast("string"))
       .repartition(6).write.mode("overwrite").partitionBy("par").parquet(src)
     val c = TDF.compactPartitions(spark, src, dst)
@@ -517,8 +517,8 @@ class TDFSpec extends AnyFunSuite {
   }
 
   test("compactPartitions recurses nested layouts and overlaps job execution") {
-    val src = "/tmp/graft_compactn_src"
-    val dst = "/tmp/graft_compactn_dst"
+    val src = s"${SparkTest.scratchRoot}/graft_compactn_src"
+    val dst = s"${SparkTest.scratchRoot}/graft_compactn_dst"
     fixture
       .withColumn("pa", ($"b2" % 2).cast("string"))
       .withColumn("pb", ($"b2" % 3).cast("string"))
@@ -1037,8 +1037,115 @@ class TDFSpec extends AnyFunSuite {
     }
   }
 
+  /** a result as comparable values: a histogram through [[canon]], a Seq as itself */
+  private def flat(v: Any): Seq[Any] = v match {
+    case h: Histogram => canon(h)
+    case s: Seq[_] => s
+    case o => Seq(o)
+  }
+
+  test("a repeated chain compiles its fold once: a second deref on a fresh TDF adds no Janino compile") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val df = spark.range(0, 100, 1, 4).select($"id", ($"id" % 9).cast("double").as("x"),
+      array(($"id" % 5).cast("double"), lit(1.0)).as("a"))
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // every op kind of the fold; `hi` is a constant of the fold, not of its shape
+    def deref(hi: Double): (Seq[Any], Long) = {
+      val before = compiles
+      val f = TDF(df).Define("z", $"x" * 2).Filter($"id" % 2 === 0)
+      val rs = Seq(f.Count(), f.Sum("z"), f.Mean("a"), f.Min("x"), f.Max("a"), f.Histo("z", 5, 0.0, hi),
+        f.Histo("a", 4), f.HistoWeighted("x", "id", 3, 0.0, hi), f.Take("id"), f.Report())
+      var acc = 0.0
+      f.Foreach(Seq("x"))(_ => ())
+      acc = f.Accumulate("x", 0.0)(_ + _)(_ + _)
+      (bits(rs.flatMap(r => flat(r())) :+ acc), compiles - before)
+    }
+    val (first, _) = deref(20.0)
+    val (second, added) = deref(20.0)
+    assert(added == 0L, s"the second deref compiled $added classes")
+    assert(second == first)
+    val (_, other) = deref(40.0)
+    assert(other == 0L, s"a deref with other histogram axes compiled $other classes")
+  }
+
+  test("a wide batch, 272 filter nodes and over 3,000 ops, runs as one job and equals each action alone") {
+    import graft.functions.HistBuffer
+    import graft.tdf.Result
+    val data = spark.range(0, 2000, 1, 4).select(($"id" % 16).as("r"),
+      (($"id" / 16).cast("long") % 16).as("c"), ($"id" * 37 % 101).cast("double").as("x"),
+      ($"id" % 13 - 6).cast("double").as("y"), ($"id" % 3).as("w"))
+    def one[T](key: String)(book: TDF => Result[T])(f: T => Seq[Any]) =
+      key -> ((t: TDF) => { val r = book(t); () => f(r()) })
+    // twelve ops on each node (Count and Report share its counter), a
+    // counter on each root node and one on every entry: unsplit, the fold's
+    // code would pass the JVM's 64 KB method limit
+    val kinds = Seq(one("count")(_.Count())(Seq(_)), one("sum x")(_.Sum("x"))(Seq(_)),
+      one("sum y")(_.Sum("y"))(Seq(_)), one("mean x")(_.Mean("x"))(Seq(_)),
+      one("mean y")(_.Mean("y"))(Seq(_)), one("min x")(_.Min("x"))(Seq(_)),
+      one("min y")(_.Min("y"))(Seq(_)), one("max x")(_.Max("x"))(Seq(_)),
+      one("max y")(_.Max("y"))(Seq(_)), one("histo x")(_.Histo("x", 10, 0.0, 100.0))(canon),
+      one("histo y")(_.Histo("y", 12, -6.0, 6.0))(canon),
+      one("weighted y")(_.HistoWeighted("y", "w", 6, -6.0, 6.0))(canon),
+      one("report")(_.Report())(_.flatMap(c => Seq(c.pass, c.all))))
+    val nodes = for (i <- 0 until 16; j <- 0 until 16) yield (i, j)
+    def node(d: TDF, i: Int, j: Int) = d.Filter($"r" === i).Filter($"c" < j)
+
+    // the data is integral, so no sum depends on the order of its terms
+    val rows = data.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))
+    def expect(i: Int, j: Int): Map[String, Seq[Any]] = {
+      val root = rows.filter(_._1 == i)
+      val in = root.filter(_._2 < j)
+      val (xs, ys) = (in.map(_._3).toSeq, in.map(_._4).toSeq)
+      def orNaN(f: Seq[Double] => Double, vs: Seq[Double]) = if (vs.isEmpty) Double.NaN else f(vs)
+      def histo(n: Int, lo: Double, hi: Double, vs: Seq[(Double, Long)]) = {
+        val h = HistBuffer.empty(n)
+        vs.foreach { case (v, wt) => if (wt != 0L) h.fill(v, wt, lo, hi, (hi - lo) / n) }
+        Seq(lo, hi, h.underflow, h.overflow, h.entries, h.sumx, h.sumx2) ++ h.counts
+      }
+      Map("count" -> Seq(in.length.toLong), "sum x" -> Seq(xs.sum), "sum y" -> Seq(ys.sum),
+        "mean x" -> Seq(orNaN(_.sum / in.length, xs)), "mean y" -> Seq(orNaN(_.sum / in.length, ys)),
+        "min x" -> Seq(orNaN(_.min, xs)), "min y" -> Seq(orNaN(_.min, ys)),
+        "max x" -> Seq(orNaN(_.max, xs)), "max y" -> Seq(orNaN(_.max, ys)),
+        "histo x" -> histo(10, 0.0, 100.0, xs.map(_ -> 1L)),
+        "histo y" -> histo(12, -6.0, 6.0, ys.map(_ -> 1L)),
+        "weighted y" -> histo(6, -6.0, 6.0, in.toSeq.map(r => r._4 -> r._5)),
+        "report" -> Seq(root.length.toLong, rows.length.toLong, in.length.toLong, root.length.toLong))
+    }
+
+    val d = TDF(data)
+    val booked = nodes.map { case (i, j) => (i, j, kinds.map { case (k, book) => k -> book(node(d, i, j)) }) }
+    val run = SparkTest.runs(spark) { booked.head._3.head._2() }
+    assert(run == SparkTest.Runs(jobs = 1, executions = 1), s"one pass, one job: $run")
+    for ((i, j, rs) <- booked; (k, r) <- rs)
+      assert(bits(r()) == bits(expect(i, j)(k)), s"node ($i, $j) $k: fused ${r()} vs ${expect(i, j)(k)}")
+    // a few actions each booked alone on a fresh TDF
+    val fused = booked.map { case (i, j, rs) => (i, j) -> rs.toMap }.toMap
+    for ((i, j) <- Seq((0, 0), (5, 9), (15, 15)); (k, book) <- kinds) {
+      val alone = book(node(TDF(data), i, j))()
+      assert(bits(alone) == bits(fused((i, j))(k)()), s"node ($i, $j) $k alone")
+    }
+  }
+
+  test("Take, Foreach and Accumulate ride the aggregates' pass: one job") {
+    val d = TDF(spark.range(0, 40, 1, 4).select($"id", ($"id" % 7).cast("double").as("x")))
+    val f = d.Filter($"id" % 3 === 0)
+    val (t, c, s, h, rep, m) = (f.Take("id"), f.Count(), f.Sum("x"), f.Histo("x", 7), f.Report(), d.Max("x"))
+    val acc = spark.sparkContext.longAccumulator("mixed_foreach")
+    val each = graft.tdf.TestSeams.bookForeach(f, Seq("id"))(r => acc.add(r.getLong(0)))
+    var total = 0.0
+    val run = SparkTest.runs(spark) { total = f.Accumulate("x", 0.0)(_ + _)(_ + _) }
+    assert(run == SparkTest.Runs(jobs = 1, executions = 1), s"one pass, one job: $run")
+    assert(Seq(t, c, s, h, rep, m, each).forall(_.isReady), "every pending action fills in the pass")
+    val ids = (0L until 40L).filter(_ % 3 == 0)
+    val xs = ids.map(i => (i % 7).toDouble)
+    assert(t() == ids && c() == ids.size.toLong && acc.value == ids.sum)
+    assert(s() == xs.sum && total == xs.sum && m() == 6.0)
+    assert(h().lo == 0.0 && h().entries == ids.size.toLong && h().counts.sum == ids.size.toLong)
+    assert(rep() == Seq(graft.tdf.CutInfo("filter_0", ids.size.toLong, 40L)))
+  }
+
   test("Snapshot writes a skim and reopens it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString + "/skim"
+    val dir = SparkTest.tempDir("graft_snap").toString + "/skim"
     val d = TDF(fixture).Filter($"b1" < 5).Snapshot(dir, Seq("b1", "b2"))
     assert(d.Count()() == 5L)
     assert(d.columns == Seq("b1", "b2"))

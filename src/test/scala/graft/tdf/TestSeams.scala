@@ -1,6 +1,6 @@
 package graft.tdf
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Test access to the booking context's knobs that are not user options. */
 object TestSeams {
@@ -14,4 +14,10 @@ object TestSeams {
     */
   def withValueCap(df: DataFrame, cap: Int, compat: Boolean = false): TDF =
     TDF.of(new BookingContext(df, compat, cap))
+
+  /** books `d.Foreach(cols)(f)` without running the batch, so that a later
+    * trigger runs it in the same pass as the other pending actions
+    */
+  def bookForeach(d: TDF, cols: Seq[String])(f: Row => Unit): Result[Unit] =
+    d.bookForeach(cols.map(_ -> None), (_, r) => f(r))
 }

@@ -1,8 +1,12 @@
 package graft
 
+import scala.collection.mutable
+
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{num, nums, obj}
 import graft.tdf.TDF
 
 /** Benchmark main — one JSON line for the driver (BENCH_r{N}.json).
@@ -81,29 +85,29 @@ object Bench {
     }
   }
 
-  // ---- incremental artifact state (r15 verdict ask #1) ---------------------
-  // BENCH_r15.json died on the driver's time budget with `parsed: null`: the
-  // JSON was only assembled at the very end, so a SIGTERM mid-run produced
-  // NOTHING. Every section now lands in this state the moment it is
-  // measured, and a shutdown hook flushes the JSON-so-far — a future timeout
-  // degrades to a partial artifact (flagged `"partial":true`) instead of a
-  // dead round. All access goes through `lock`: the hook thread may read
-  // while the main thread records.
   /** one row of the committed quiet-pin envelope (QUIET_PINS.json,
     * generated by tools/make_pins.py from the round's quiet artifact of
     * record): the quiet stat, the quiet plan counts when recorded, and for
     * stream twins the quiet summed trigger wall
     */
-  private case class Pin(
+  private[graft] case class Pin(
       stat: Double, plan: Option[(Int, Int)], batchMsSum: Option[Double])
 
-  private object Art {
+  // ---- incremental artifact state (r15 verdict ask #1) ---------------------
+  // BENCH_r15.json died on the driver's time budget with `parsed: null`: the
+  // JSON was only assembled at the very end, so a SIGTERM mid-run produced
+  // NOTHING. Every section now lands in this state the moment it is
+  // measured, and a shutdown hook flushes the record-so-far — a future
+  // timeout degrades to a partial artifact (flagged `"partial":true`) instead
+  // of a dead round. All access goes through `lock`: the hook thread may read
+  // while the main thread records.
+  private[graft] final class Art {
     val lock = new Object
     // gate/serve rows (feed the `queries` medians and `samples` raw arrays)
-    val samples = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val samples = mutable.LinkedHashMap[String, Seq[Double]]()
     // summed per-trigger wall (sec) of each stream twin's LAST timed sample
     // — the anomaly classifier's batch-ms signal (mirrors bench_compare)
-    val batchMsSumSec = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val batchMsSumSec = mutable.LinkedHashMap[String, Double]()
     // quiet-pin envelope, loaded once at main entry; None = file absent
     @volatile var pins: Option[(String, Map[String, Pin])] = None
     // 1-min loadavg read immediately BEFORE each timed sample (r17 verdict
@@ -113,25 +117,149 @@ object Bench {
     // threads), so the stamp reads "conditions the sample started under",
     // not pure external contention; bench_compare classifies on it with
     // that in mind.
-    val sampleLoads = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val sampleLoads = mutable.LinkedHashMap[String, Seq[Double]]()
     // raw-only rows (scale_100m probes, layout runs — never in `queries`)
-    val extraSamples = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    val streamStats = scala.collection.mutable.LinkedHashMap[String, String]()
-    val plans = scala.collection.mutable.LinkedHashMap[String, String]()
+    val extraSamples = mutable.LinkedHashMap[String, Seq[Double]]()
+    val streamStats = mutable.LinkedHashMap[String, ObjectNode]()
+    val plans = mutable.LinkedHashMap[String, ObjectNode]()
     // whole top-level sections, pre-seeded with inert defaults so a partial
     // artifact still parses with the full shape
-    val sections = scala.collection.mutable.LinkedHashMap[String, String](
-      "scale" -> """{"p1_sec":-1.000,"parallel_sec":-1.000,"speedup":-1.0}""",
-      "layout" -> ("""{"q_join_plain":-1.000,"q_join_bcast_bucketed":-1.000,""" +
-        """"layout_write_sec":-1.000}"""),
-      "serving" -> """{"build_pq_sec":-1.000,"build_int8_sec":-1.000}""",
-      "scale_curves" -> "{}",
+    val sections = mutable.LinkedHashMap[String, ObjectNode](
+      "scale" -> obj("p1_sec" -> num(-1), "parallel_sec" -> num(-1), "speedup" -> num(-1, 1)),
+      "layout" -> obj("q_join_plain" -> num(-1), "q_join_bcast_bucketed" -> num(-1),
+        "layout_write_sec" -> num(-1)),
+      "serving" -> obj("build_pq_sec" -> num(-1), "build_int8_sec" -> num(-1)),
+      "scale_curves" -> obj(),
       // budget-guard transparency (r16 verdict ask #1): which tier each
       // degraded/skipped row hit, and the elapsed wall at emit time
-      "budget" -> """{"degraded":[],"skipped":[],"sections_skipped":[],"sections_filtered":[]}""")
+      "budget" -> obj("degraded" -> Nil, "skipped" -> Nil, "sections_skipped" -> Nil,
+        "sections_filtered" -> Nil))
     var headlineNames: Seq[String] = Seq.empty
-    var emitted = false
+    private var emitted = false
+
+    /** Self-adjudication THROUGH the driver's tail-only artifact capture
+      * (r18 verdict ask #1): BENCH_r{N}.json keeps only the last ~4 KB of
+      * output, which truncated away exactly the sample_load/plans telemetry
+      * built to classify rows like q_ann_pq_filtered's 91–128 s driver-box
+      * samples. This object serializes LAST (after "sf"), so it survives the
+      * capture: every row whose stat exceeds 3× its quiet pin (and +0.3 s —
+      * sub-second rows are classified by the bench_compare relative gate
+      * instead) carries its samples, load stamps, and a verdict using the
+      * same cause order as tools/bench_compare.py (plan-changed → batch-ms →
+      * load-episode → unexplained). Capped at 10 rows by descending ratio so
+      * the object itself fits the driver's ~2 KB tail window whole.
+      */
+    def anomalies(): ObjectNode = lock.synchronized {
+      pins match {
+        case None => obj("pins" -> "absent")
+        case Some((src, pinMap)) =>
+          def fmt(x: Double, decimals: Int) = num(x, decimals).asText
+          val stamps = sampleLoads.values.flatten.toSeq.sorted
+          val env =
+            if (stamps.isEmpty) 2.0
+            else math.max(2.0, 1.5 * stamps(stamps.size / 2))
+          val rows = (samples ++ extraSamples).toSeq.flatMap {
+            case (k, ts) =>
+              pinMap.get(k).flatMap { pin =>
+                val stat = medianOf(ts)
+                if (stat < 0 || pin.stat <= 0 ||
+                    stat <= 3.0 * pin.stat || stat - pin.stat <= 0.3) None
+                else {
+                  val loads = sampleLoads.getOrElse(k, Seq.empty)
+                  val planNow = plans.get(k)
+                    .map(p => (p.get("shuffles").asInt, p.get("broadcasts").asInt))
+                    .filter(_._1 >= 0)
+                  val verdict = (pin.plan, planNow) match {
+                    case (Some((s0, b0)), Some((s1, b1))) if (s0, b0) != (s1, b1) =>
+                      s"plan-changed sh $s0->$s1 bc $b0->$b1"
+                    case _ =>
+                      val bmsMove = for {
+                        b0 <- pin.batchMsSum; b1 <- batchMsSumSec.get(k)
+                      } yield (b0, b1)
+                      bmsMove match {
+                        case Some((b0, b1))
+                            if b1 - b0 > 0.3 && (b1 - b0) >= 0.5 * (stat - pin.stat) =>
+                          s"batch-ms ${fmt(b0, 2)}s->${fmt(b1, 2)}s triggers"
+                        case _ =>
+                          val peaks = loads.filter(_ >= env)
+                          if (peaks.nonEmpty)
+                            s"load-episode max ${fmt(peaks.max, 1)} (envelope ${fmt(env, 1)})"
+                          else "unexplained"
+                      }
+                  }
+                  Some((stat / pin.stat, k, stat, pin.stat, ts, loads, verdict))
+                }
+              }
+          }.sortBy(-_._1)
+          // top 10 by ratio, emitted ASCENDING so the worst offenders land
+          // nearest the end of the JSON — the driver keeps the LAST ~2 KB, so
+          // if anything is cut it is the mildest rows, never the worst
+          val kept = rows.take(10).reverse
+          val body = kept.map { case (ratio, k, stat, pin, ts, loads, verdict) =>
+            k -> obj("stat" -> num(stat), "pin" -> num(pin), "ratio" -> num(ratio, 1),
+              "samples" -> nums(ts), "load" -> nums(loads, 2), "verdict" -> verdict)
+          }
+          val trunc =
+            if (rows.size > kept.size) Seq("truncated" -> (rows.size - kept.size)) else Nil
+          obj(Seq("pins_source" -> src, "rule" -> "stat>3x_pin_and_+0.3s",
+            "count" -> rows.size) ++ trunc :+ ("rows" -> obj(body: _*)): _*)
+      }
+    }
+
+    /** the whole artifact so far; `loadEnd` is the 1-min load at emit time */
+    def record(partial: Boolean, sfDir: String, loadStart: Double, loadEnd: Double)
+        : ObjectNode = lock.synchronized {
+      val total = headlineNames.flatMap(samples.get).map(medianOf).filter(_ >= 0).sum
+      // streaming twins minus the no-op control: the stateful logic's own
+      // cost, with the fixed micro-batch machinery (staged source,
+      // readStream planning, memory-sink drain) subtracted out. Clamped at
+      // 0 (a twin can beat the control by run noise). NOT like-for-like for
+      // the stream_shuffle_exempt twins (r18 ADVICE): those run at the
+      // session's 32 partitions while the control runs under the 4-partition
+      // override, so their adjusted rows subtract cheaper per-trigger
+      // machinery than they pay — the exemption list is emitted alongside
+      // so adjudication can discount them.
+      val controlMed = medianOf(samples.getOrElse("q_stream_control", Seq(-1.0)))
+      val streamAdj = samples.collect {
+        case (k, ts) if k.startsWith("q_stream_") && k != "q_stream_control" =>
+          val m = medianOf(ts)
+          k -> num(if (m < 0 || controlMed < 0) -1.0 else math.max(0.0, m - controlMed))
+      }
+      obj(Seq("metric" -> "total", "value" -> num(total), "unit" -> "sec") ++
+        (if (partial) Seq("partial" -> true) else Nil) ++ Seq(
+        "queries" -> samples.map { case (k, ts) => k -> num(medianOf(ts)) },
+        "scale" -> sections("scale"),
+        "layout" -> sections("layout"),
+        "serving" -> sections("serving"),
+        "scale_curves" -> sections("scale_curves"),
+        "budget" -> sections("budget"),
+        "stream_control_sec" -> num(controlMed),
+        "stream_shuffle_exempt" -> SparkEntry.streamShuffleExempt.toSeq.sorted,
+        "stream_minus_control" -> streamAdj,
+        "stream_stats" -> streamStats,
+        "plans" -> plans,
+        "load_avg_1m" -> obj("start" -> num(loadStart, 2), "end" -> num(loadEnd, 2)),
+        "sample_load" -> sampleLoads.map { case (k, ls) => k -> nums(ls, 2) },
+        "samples" -> (samples ++ extraSamples).map { case (k, ts) => k -> nums(ts) },
+        "protocol" -> "adaptive_r17_quick1_stable2min_spread3",
+        "sf" -> sfDir,
+        // "anomalies" MUST stay the LAST key: the driver's artifact capture
+        // keeps only the tail of stdout (see anomalies)
+        "anomalies" -> anomalies()): _*)
+    }
+
+    /** prints the record once: the normal emit or the shutdown hook's partial */
+    def emitOnce(partial: Boolean, sfDir: String, loadStart: Double): Unit = lock.synchronized {
+      if (!emitted) {
+        emitted = true
+        println(Harness.write(record(partial, sfDir, loadStart, osLoad())))
+        System.out.flush()
+      }
+    }
   }
+
+  private def osLoad(): Double = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean.getSystemLoadAverage
 
   /** central stat per row. 3 samples → middle; 2 → MIN of the two; 1 →
     * itself. Min-of-2 because box noise is ONE-SIDED — contention only adds
@@ -156,8 +284,7 @@ object Bench {
       "/root/repo/QUIET_PINS.json").map(new java.io.File(_))
     cand.find(_.isFile).flatMap { file =>
       try {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(file)
+        val root = Harness.read(file)
         val pinsNode = root.get("pins")
         val b = Map.newBuilder[String, Pin]
         val names = pinsNode.fieldNames()
@@ -182,139 +309,14 @@ object Bench {
     }
   }
 
-  private def parsePlanCounts(row: String): Option[(Int, Int)] = {
-    val re = """"shuffles":(-?\d+),"broadcasts":(-?\d+)""".r
-    re.findFirstMatchIn(row).collect {
-      case m if m.group(1).toInt >= 0 => (m.group(1).toInt, m.group(2).toInt)
+  /** a `plans` row: the (shuffles, broadcasts) of `df`, or -1s and the error */
+  private def planRow(df: => DataFrame): ObjectNode =
+    try {
+      val (sh, bc) = Harness.planCounts(df)
+      obj("shuffles" -> sh, "broadcasts" -> bc)
+    } catch { case e: Throwable =>
+      obj("shuffles" -> -1, "broadcasts" -> -1, "err" -> String.valueOf(e.getMessage).take(120))
     }
-  }
-
-  /** Self-adjudication THROUGH the driver's tail-only artifact capture
-    * (r18 verdict ask #1): BENCH_r{N}.json keeps only the last ~4 KB of
-    * output, which truncated away exactly the sample_load/plans telemetry
-    * built to classify rows like q_ann_pq_filtered's 91–128 s driver-box
-    * samples. This object serializes LAST (after "sf"), so it survives the
-    * capture: every row whose stat exceeds 3× its quiet pin (and +0.3 s —
-    * sub-second rows are classified by the bench_compare relative gate
-    * instead) carries its samples, load stamps, and a verdict using the
-    * same cause order as tools/bench_compare.py (plan-changed → batch-ms →
-    * load-episode → unexplained). Capped at 10 rows by descending ratio so
-    * the object itself fits the driver's ~2 KB tail window whole.
-    */
-  private def anomaliesJson(): String = Art.lock.synchronized {
-    Art.pins match {
-      case None => """{"pins":"absent"}"""
-      case Some((src, pins)) =>
-        val stamps = Art.sampleLoads.values.flatten.toSeq.sorted
-        val env =
-          if (stamps.isEmpty) 2.0
-          else math.max(2.0, 1.5 * stamps(stamps.size / 2))
-        val rows = (Art.samples ++ Art.extraSamples).toSeq.flatMap {
-          case (k, ts) =>
-            pins.get(k).flatMap { pin =>
-              val stat = medianOf(ts)
-              if (stat < 0 || pin.stat <= 0 ||
-                  stat <= 3.0 * pin.stat || stat - pin.stat <= 0.3) None
-              else {
-                val loads = Art.sampleLoads.getOrElse(k, Seq.empty)
-                val planNow = Art.plans.get(k).flatMap(parsePlanCounts)
-                val verdict = (pin.plan, planNow) match {
-                  case (Some((s0, b0)), Some((s1, b1))) if (s0, b0) != (s1, b1) =>
-                    s"plan-changed sh $s0->$s1 bc $b0->$b1"
-                  case _ =>
-                    val bmsMove = for {
-                      b0 <- pin.batchMsSum; b1 <- Art.batchMsSumSec.get(k)
-                    } yield (b0, b1)
-                    bmsMove match {
-                      case Some((b0, b1))
-                          if b1 - b0 > 0.3 && (b1 - b0) >= 0.5 * (stat - pin.stat) =>
-                        f"batch-ms $b0%.2fs->$b1%.2fs triggers"
-                      case _ =>
-                        val peaks = loads.filter(_ >= env)
-                        if (peaks.nonEmpty)
-                          f"load-episode max ${peaks.max}%.1f (envelope $env%.1f)"
-                        else "unexplained"
-                    }
-                }
-                Some((stat / pin.stat, k, stat, pin.stat, ts, loads, verdict))
-              }
-            }
-        }.sortBy(-_._1)
-        // top 10 by ratio, emitted ASCENDING so the worst offenders land
-        // nearest the end of the JSON — the driver keeps the LAST ~2 KB, so
-        // if anything is cut it is the mildest rows, never the worst
-        val kept = rows.take(10).reverse
-        val body = kept.map { case (ratio, k, stat, pin, ts, loads, verdict) =>
-          f""""$k":{"stat":$stat%.3f,"pin":$pin%.3f,"ratio":$ratio%.1f,""" +
-            s""""samples":${ts.map(t => f"$t%.3f").mkString("[", ",", "]")},""" +
-            s""""load":${loads.map(l => f"$l%.2f").mkString("[", ",", "]")},""" +
-            s""""verdict":"$verdict"}"""
-        }.mkString("{", ",", "}")
-        val trunc = if (rows.size > kept.size) s""","truncated":${rows.size - kept.size}""" else ""
-        s"""{"pins_source":"$src","rule":"stat>3x_pin_and_+0.3s",""" +
-          s""""count":${rows.size}$trunc,"rows":$body}"""
-    }
-  }
-
-  private def buildJson(partial: Boolean, sfDir: String, loadStart: Double): String =
-    Art.lock.synchronized {
-      def jsonArr(ts: Seq[Double]): String =
-        ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-      val qs = Art.samples
-        .map { case (k, ts) => f""""$k":${medianOf(ts)}%.3f""" }
-        .mkString("{", ",", "}")
-      val total = Art.headlineNames
-        .flatMap(Art.samples.get).map(medianOf).filter(_ >= 0).sum
-      // streaming twins minus the no-op control: the stateful logic's own
-      // cost, with the fixed micro-batch machinery (staged source,
-      // readStream planning, memory-sink drain) subtracted out. Clamped at
-      // 0 (a twin can beat the control by run noise). NOT like-for-like for
-      // the stream_shuffle_exempt twins (r18 ADVICE): those run at the
-      // session's 32 partitions while the control runs under the 4-partition
-      // override, so their adjusted rows subtract cheaper per-trigger
-      // machinery than they pay — the exemption list is emitted alongside
-      // so adjudication can discount them.
-      val controlMed = medianOf(Art.samples.getOrElse("q_stream_control", Seq(-1.0)))
-      val streamAdj = Art.samples.collect {
-        case (k, ts) if k.startsWith("q_stream_") && k != "q_stream_control" =>
-          val m = medianOf(ts)
-          val adj = if (m < 0 || controlMed < 0) -1.0 else math.max(0.0, m - controlMed)
-          f""""$k":$adj%.3f"""
-      }.mkString("{", ",", "}")
-      val raw = (Art.samples ++ Art.extraSamples)
-        .map { case (k, ts) => s""""$k":${jsonArr(ts)}""" }.mkString("{", ",", "}")
-      val loads = Art.sampleLoads
-        .map { case (k, ls) =>
-          s""""$k":${ls.map(l => f"$l%.2f").mkString("[", ",", "]")}"""
-        }.mkString("{", ",", "}")
-      val loadEnd = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      val partialField = if (partial) """"partial":true,""" else ""
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$partialField"queries":$qs,""" +
-        s""""scale":${Art.sections("scale")},""" +
-        s""""layout":${Art.sections("layout")},""" +
-        s""""serving":${Art.sections("serving")},""" +
-        s""""scale_curves":${Art.sections("scale_curves")},""" +
-        s""""budget":${Art.sections("budget")},""" +
-        f""""stream_control_sec":$controlMed%.3f,""" +
-        s""""stream_shuffle_exempt":${SparkEntry.streamShuffleExempt.toSeq.sorted
-          .map(k => s""""$k"""").mkString("[", ",", "]")},""" +
-        s""""stream_minus_control":$streamAdj,""" +
-        s""""stream_stats":${Art.streamStats.map { case (k, v) => s""""$k":$v""" }
-          .mkString("{", ",", "}")},""" +
-        s""""plans":${Art.plans.map { case (k, v) => s""""$k":$v""" }
-          .mkString("{", ",", "}")},""" +
-        f""""load_avg_1m":{"start":$loadStart%.2f,"end":$loadEnd%.2f},""" +
-        s""""sample_load":$loads,""" +
-        f""""samples":$raw,"protocol":"adaptive_r17_quick1_stable2min_spread3",""" +
-        // "anomalies" MUST stay the LAST key: the driver's artifact capture
-        // keeps only the tail of stdout (see anomaliesJson)
-        f""""sf":"$sfDir","anomalies":${anomaliesJson()}}"""
-    }
-
-  private def emitOnce(json: String): Unit = Art.lock.synchronized {
-    if (!Art.emitted) { Art.emitted = true; println(json); System.out.flush() }
-  }
 
   def main(args: Array[String]): Unit = {
     // the budget clock starts at main entry: every tier below is measured
@@ -323,48 +325,27 @@ object Bench {
     val benchT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // per-run Spark scratch root: halt(0) below skips the JVM shutdown hooks
-    // that would normally clean blockmgr-*/spill dirs (r17 ADVICE — repeated
-    // rounds were accumulating disk on the shared box), so the bench owns a
-    // private local dir it deletes itself right before the halt
-    val localDir = s"/tmp/graft_bench_local_${ProcessHandle.current().pid()}"
     // EVERY disk artifact this run creates — gate scratch (persisted
     // indexes, snapshot tables, stream staging), the layout experiment's
-    // warehouse, the serving indexes — lives under the per-PID private dir
-    // (r18 verdict ask #2): the old fixed shared paths let a second graft
-    // JVM's delete-before-build destroy an index THIS process was mid-read
-    // on, and all three unadjudicated driver-box outliers
-    // (q_ann_pq_filtered, q_join_plain_layout, q_join_bcast_bucketed) were
-    // rows whose timed body touched such a path. The whole tree is deleted
-    // before halt(0) below.
-    System.setProperty("graft.scratch.root", s"$localDir/scratch")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // local testdata files are ~10 MB; the 128 MB default would hand each
-      // table to ONE task and leave 31 cores idle. On a real cluster this is
-      // the same lever, sized so scan tasks cover the executor cores.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      // the layout experiment's bucketed tables go through the catalog —
-      // per-PID for the same cross-process isolation as the scratch root
-      .config("spark.sql.warehouse.dir", s"$localDir/wh")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Art.pins = loadPins()
-    val loadStart = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    // warehouse, the serving indexes, Spark's own local dir — lives under
+    // the session's per-PID root (r18 verdict ask #2): the old fixed shared
+    // paths let a second graft JVM's delete-before-build destroy an index
+    // THIS process was mid-read on, and all three unadjudicated driver-box
+    // outliers (q_ann_pq_filtered, q_join_plain_layout,
+    // q_join_bcast_bucketed) were rows whose timed body touched such a path.
+    // halt(0) below skips the JVM shutdown hooks that would clean Spark's
+    // blockmgr-*/spill dirs (r17 ADVICE), so the root is deleted right
+    // before it.
+    val session = Harness.session("bench")
+    val spark = session.spark
+    val art = new Art
+    art.pins = loadPins()
+    val loadStart = osLoad()
     // the timeout escape hatch: `timeout` sends SIGTERM (rc 124), which runs
     // shutdown hooks before the JVM dies — flush whatever has been measured.
-    // Normal completion emits first and the hook no-ops via Art.emitted.
+    // Normal completion emits first and the hook no-ops.
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      emitOnce(buildJson(partial = true, sfDir, loadStart))))
+      art.emitOnce(partial = true, sfDir, loadStart)))
 
     // noop sink: executes the FULL plan users run (a bare .count() would let
     // Catalyst drop final orderBy / unreferenced projections and under-measure
@@ -697,18 +678,12 @@ object Bench {
     // from budget-tier skips: an ONLY-run artifact must not read as if the
     // budget guard fired on all four sections (r17 ADVICE)
     val sectionsFiltered = scala.collection.mutable.ArrayBuffer[String]()
-    def recordBudget(): Unit = Art.lock.synchronized {
-      def arr(b: Seq[String]) = b.map(s => s""""$s"""").mkString("[", ",", "]")
-      Art.sections("budget") =
-        f"""{"elapsed_sec":$elapsedSec%.1f,"soft_no_third":$SOFT_NO_THIRD,""" +
-          f""""degrade_one":$DEGRADE_ONE,"hard_skip":$HARD_SKIP,""" +
-          s""""degraded":${arr(degraded.toSeq)},"skipped":${arr(skippedRows.toSeq)},""" +
-          s""""sections_skipped":${arr(sectionsSkipped.toSeq)},""" +
-          s""""sections_filtered":${arr(sectionsFiltered.toSeq)}}"""
+    def recordBudget(): Unit = art.lock.synchronized {
+      art.sections("budget") = obj("elapsed_sec" -> num(elapsedSec, 1),
+        "soft_no_third" -> num(SOFT_NO_THIRD, 1), "degrade_one" -> num(DEGRADE_ONE, 1),
+        "hard_skip" -> num(HARD_SKIP, 1), "degraded" -> degraded, "skipped" -> skippedRows,
+        "sections_skipped" -> sectionsSkipped, "sections_filtered" -> sectionsFiltered)
     }
-
-    def osLoad(): Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
 
     def samples3(name: String, run: () => Unit): Seq[Double] = {
       // 1-min loadavg stamped at the START of each timed sample, aligned
@@ -739,39 +714,27 @@ object Bench {
           lastDf.set(null)
           val t = timed()
           if (SparkEntry.queries.contains(name) &&
-              !Art.lock.synchronized(Art.plans.contains(name))) {
-            val df = lastDf.get()
-            // df == null means the gate's DataFrame CONSTRUCTION threw:
-            // record an explicit err row instead of silently omitting the
-            // plans entry (r16 ADVICE — a single broken gate must stay
-            // visible in the artifact of record)
-            val row =
-              if (df == null)
-                """{"shuffles":-1,"broadcasts":-1,"err":"no df captured"}"""
-              else try {
-                val (sh, bc) = planCounts(df)
-                s"""{"shuffles":$sh,"broadcasts":$bc}"""
-              } catch { case e: Throwable =>
-                val msg = String.valueOf(e.getMessage)
-                  .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120)
-                s"""{"shuffles":-1,"broadcasts":-1,"err":"$msg"}"""
-              }
-            Art.lock.synchronized { Art.plans(name) = row }
+              !art.lock.synchronized(art.plans.contains(name))) {
+            // no DataFrame means the gate's CONSTRUCTION threw: record an
+            // explicit err row instead of silently omitting the plans entry
+            // (r16 ADVICE — a single broken gate must stay visible in the
+            // artifact of record)
+            val row = planRow(Option(lastDf.get())
+              .getOrElse(throw new IllegalStateException("no df captured")))
+            art.lock.synchronized { art.plans(name) = row }
           }
           t
         } else {
           streamStats.reset()
           val t = timed()
           streamStats.settle()
-          val (b, sr) = (streamStats.batches, streamStats.stateRows)
-          val bms = streamStats.batchWallsMs.take(64).mkString("[", ",", "]")
           val row =
-            if (t >= 0) s"""{"batches":$b,"state_rows":$sr,"batch_ms":$bms}"""
-            else """{"batches":-1,"state_rows":-1,"batch_ms":[]}"""
-          Art.lock.synchronized {
-            Art.streamStats(name) = row
+            if (t >= 0) Harness.streamRow(streamStats)
+            else obj("batches" -> -1, "state_rows" -> -1, "batch_ms" -> Nil)
+          art.lock.synchronized {
+            art.streamStats(name) = row
             if (t >= 0)
-              Art.batchMsSumSec(name) =
+              art.batchMsSumSec(name) =
                 streamStats.batchWallsMs.filter(_ >= 0).sum / 1e3
           }
           t
@@ -806,14 +769,13 @@ object Bench {
             if (needThird) Seq(t1, t2, timedSample()) else Seq(t1, t2)
           }
         }
-      if (ts.nonEmpty) Art.lock.synchronized {
-        Art.samples(name) = ts
-        Art.sampleLoads(name) = loadBuf.toSeq
+      if (ts.nonEmpty) art.lock.synchronized {
+        art.samples(name) = ts
+        art.sampleLoads(name) = loadBuf.toSeq
       }
       recordBudget()
       ts
     }
-    def median(ts: Seq[Double]): Double = medianOf(ts)
 
     // timed run that also captures task count + max task duration (listener
     // bus is async: drain it before reading)
@@ -829,21 +791,6 @@ object Bench {
       } finally spark.sparkContext.removeSparkListener(l)
     }
 
-    // plan-shape counts: the contention-robust regression signal — a shuffle
-    // or broadcast appearing/disappearing is a real plan change even when the
-    // wall-clock is noise (counts are from the pre-execution plan, which is
-    // deterministic; AQE runtime re-plans don't add logical shuffles)
-    def planCounts(df: DataFrame): (Int, Int) = {
-      val p = df.queryExecution.executedPlan.toString
-      val broadcasts = "BroadcastExchange".r.findAllIn(p).size
-      // ReusedExchange re-reads another exchange's output — counting it as a
-      // new shuffle would fake a plan change whenever Spark starts/stops
-      // reusing one
-      val reused = "ReusedExchange".r.findAllIn(p).size
-      val exchanges = "Exchange".r.findAllIn(p).size
-      (exchanges - broadcasts - reused, broadcasts)
-    }
-
     // adjudication filter: SPARK_GRAFT_BENCH_ONLY="q_a,q_b" runs only the
     // named rows and skips every post-gate section — the instrumented re-pin
     // protocol for volatile rows (quiet box, batch_ms + plan counts) without
@@ -852,7 +799,7 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def keepRow(name: String): Boolean = only.forall(_.contains(name))
 
-    Art.lock.synchronized { Art.headlineNames = headline.map(_._1) }
+    art.lock.synchronized { art.headlineNames = headline.map(_._1) }
     headline.withFilter(kv => keepRow(kv._1))
       .foreach { case (name, run) => samples3(name, run) }
     (coverage ++ coverage13 ++ coverage14 ++ coverage15 ++ coverage19)
@@ -924,22 +871,16 @@ object Bench {
             "doc_id", "text", "vec_id", "embedding", 10, 20, 3, 2)
             .write.format("noop").mode("overwrite").save())
       })
-    Art.lock.synchronized {
-      Art.sections("serving") =
-        f"""{"build_pq_sec":$buildPqSec%.3f,"build_int8_sec":$buildI8Sec%.3f}"""
+    art.lock.synchronized {
+      art.sections("serving") =
+        obj("build_pq_sec" -> num(buildPqSec), "build_int8_sec" -> num(buildI8Sec))
     }
     // serving plan shapes ride the same plans section as the gate queries
     Seq("q_serve_pq_index" -> servePq _, "q_serve_int8_index" -> serveI8 _,
       "q_serve_int8_filtered" -> serveI8F _)
       .foreach { case (name, df) =>
-        val row = try {
-          val (sh, bc) = planCounts(df())
-          s"""{"shuffles":$sh,"broadcasts":$bc}"""
-        } catch { case e: Throwable =>
-          val msg = String.valueOf(e.getMessage).replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120)
-          s"""{"shuffles":-1,"broadcasts":-1,"err":"$msg"}"""
-        }
-        Art.lock.synchronized { Art.plans(name) = row }
+        val row = planRow(df())
+        art.lock.synchronized { art.plans(name) = row }
       }
     }
 
@@ -949,14 +890,14 @@ object Bench {
     // These rows are raw-only: pull them back out of the gate map.
     val scaleP1s = samples3("scale_100m_p1", () => scaleFlagship(spark, 1))
     val scalePars = samples3("scale_100m_par", () => scaleFlagship(spark, 0))
-    val (scaleP1, scalePar) = (median(scaleP1s), median(scalePars))
+    val (scaleP1, scalePar) = (medianOf(scaleP1s), medianOf(scalePars))
     val speedup = if (scalePar > 0) scaleP1 / scalePar else -1.0
-    Art.lock.synchronized {
+    art.lock.synchronized {
       Seq("scale_100m_p1", "scale_100m_par").foreach { k =>
-        Art.samples.remove(k).foreach(Art.extraSamples(k) = _)
+        art.samples.remove(k).foreach(art.extraSamples(k) = _)
       }
-      Art.sections("scale") =
-        f"""{"p1_sec":$scaleP1%.3f,"parallel_sec":$scalePar%.3f,"speedup":$speedup%.1f}"""
+      art.sections("scale") = obj("p1_sec" -> num(scaleP1), "parallel_sec" -> num(scalePar),
+        "speedup" -> num(speedup, 1))
     }
     }
 
@@ -993,26 +934,20 @@ object Bench {
     }
     val plainStats = layoutRuns.map(_._1)
     val bucketStats = layoutRuns.map(_._2)
-    def safePlanCounts(df: => DataFrame): (Int, Int) =
-      try planCounts(df)
-      catch { case e: Throwable => System.err.println(s"[bench] planCounts: $e"); (-1, -1) }
-    val (plainEx, plainBc) = safePlanCounts(graft.examples.BucketedJoinExperiment.plain(spark, sfDir))
-    val (bucketEx, bucketBc) = safePlanCounts(graft.examples.BucketedJoinExperiment.bucketed(spark, sfDir))
-    def layoutJson(ss: Seq[(Double, Int, Double)], sh: Int, bc: Int): String =
-      s""""shuffles":$sh,"broadcasts":$bc,""" +
-        s""""tasks":${ss.map(_._2).mkString("[", ",", "]")},""" +
-        s""""max_task_sec":${ss.map(s => f"${s._3}%.3f").mkString("[", ",", "]")}"""
+    def layoutRow(ss: Seq[(Double, Int, Double)], df: => DataFrame): ObjectNode =
+      planRow(df).setAll[ObjectNode](
+        obj("tasks" -> ss.map(_._2), "max_task_sec" -> nums(ss.map(_._3))))
     val plainTs = plainStats.map(_._1)
     val bucketTs = bucketStats.map(_._1)
-    Art.lock.synchronized {
-      Art.extraSamples("q_join_plain_layout") = plainTs
-      Art.extraSamples("q_join_bcast_bucketed") = bucketTs
-      Art.sections("layout") =
-        f"""{"q_join_plain":${median(plainTs)}%.3f,""" +
-          f""""q_join_bcast_bucketed":${median(bucketTs)}%.3f,""" +
-          f""""layout_write_sec":$layoutSec%.3f,""" +
-          s""""plain":{${layoutJson(plainStats, plainEx, plainBc)}},""" +
-          s""""bucketed":{${layoutJson(bucketStats, bucketEx, bucketBc)}}}"""
+    val layout = obj("q_join_plain" -> num(medianOf(plainTs)),
+      "q_join_bcast_bucketed" -> num(medianOf(bucketTs)), "layout_write_sec" -> num(layoutSec),
+      "plain" -> layoutRow(plainStats, graft.examples.BucketedJoinExperiment.plain(spark, sfDir)),
+      "bucketed" ->
+        layoutRow(bucketStats, graft.examples.BucketedJoinExperiment.bucketed(spark, sfDir)))
+    art.lock.synchronized {
+      art.extraSamples("q_join_plain_layout") = plainTs
+      art.extraSamples("q_join_bcast_bucketed") = bucketTs
+      art.sections("layout") = layout
     }
     }
     // gate plan counts were recorded inside samples3 (riding each gate's
@@ -1032,7 +967,7 @@ object Bench {
     // 100× leg alone is ~385 s (r16 measured), the single biggest block in
     // a driver bench that must fit its ~2,500 s window — the two-decade
     // pins live in the committed BENCH_scale_* quiet artifacts instead.
-    val scaleCurvesJson =
+    val scaleCurves =
       try graft.examples.ScaleCurves.measureJson(spark, sfDir,
         samplesPerLeg = 2, samples100 = 1, at100 = Set.empty, samplesX10 = 1,
         // per-leg deadline (r17 ADVICE): a section entered just under its
@@ -1040,32 +975,28 @@ object Bench {
         // legs are skipped (and named in the JSON) once the wall crosses this
         deadline = () => elapsedSec > 2150.0)
       catch { case e: Throwable =>
-        System.err.println(s"[bench] scale curves: $e"); "{}"
+        System.err.println(s"[bench] scale curves: $e"); obj()
       }
-    Art.lock.synchronized { Art.sections("scale_curves") = scaleCurvesJson }
+    art.lock.synchronized { art.sections("scale_curves") = scaleCurves }
     }
 
     recordBudget()
     streamStats.detach()
     // the box is shared: headline totals swing ±15% with other tenants'
     // load, so the artifact records the 1-min load average at start and end
-    // (read inside buildJson) — a contended run is self-diagnosing
-    emitOnce(buildJson(partial = false, sfDir, loadStart))
+    // (read at emit) — a contended run is self-diagnosing
+    art.emitOnce(partial = false, sfDir, loadStart)
     // hard-halt instead of spark.stop() (r16 verdict ask #1d): the JSON line
     // is flushed, so nothing of value remains — Spark/sbt teardown (state
     // stores, executor pools, shutdown hooks) has been observed to eat tens
     // of seconds, and on a contended box it must not be able to spend the
     // driver's remaining timeout budget after the artifact is already out.
     // halt skips shutdown hooks by design; the partial-flush hook is a no-op
-    // here anyway (Art.emitted). The bench forks its own JVM (run / fork :=
-    // true), so sbt itself exits normally with rc 0. Because the skipped
-    // hooks include Spark's DiskBlockManager cleanup, the per-run local dir
-    // is deleted explicitly first (a few ms; the JSON is already out).
-    try {
-      val fs = org.apache.hadoop.fs.FileSystem
-        .getLocal(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(localDir), true); ()
-    } catch { case _: Throwable => () }
+    // here anyway (already emitted). The bench forks its own JVM (run /
+    // fork := true), so sbt itself exits normally with rc 0. Because the
+    // skipped hooks include Spark's DiskBlockManager cleanup, the per-run
+    // root is deleted explicitly first (a few ms; the JSON is already out).
+    session.deleteRoot()
     System.out.flush()
     Runtime.getRuntime.halt(0)
   }

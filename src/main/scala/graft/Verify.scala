@@ -4,6 +4,13 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** a name → text map as one JSON object; Jackson escapes every quote,
+    * backslash and control character, so a tab or CR in an oracle's SQL
+    * cannot make the driver's json.load fail
+    */
+  private[graft] def json(m: scala.collection.Map[String, String]): String =
+    Harness.write(Harness.obj(m.toSeq: _*))
+
   def main(args: Array[String]): Unit = {
     // driver contract: (sfDir, outDir). Optional extra args are a builder-
     // side query-name filter for fast single-query iteration.
@@ -42,24 +49,8 @@ object Verify {
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    if (errors.nonEmpty)
-      Files.writeString(Paths.get(s"$outDir/_errors.json"),
-        errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql))
+    if (errors.nonEmpty) Files.writeString(Paths.get(s"$outDir/_errors.json"), json(errors))
     // the per-PID scratch tree dies with the run (repeated rounds must not
     // accumulate table-sized directories on the shared box)
     if (sys.props.get("graft.scratch.root").contains(scratch))

@@ -3,7 +3,8 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
+import graft.Harness.{num, nums, obj}
 
 /** Layout experiment for the slowest benched query (`q_join_bcast`): does a
   * BUCKETED layout of the two big sides (lineitem by l_orderkey, orders by
@@ -18,7 +19,8 @@ import graft.Tables
   * only wins for tables joined on the same key many times.
   *
   * Run: `sbt "runMain graft.examples.BucketedJoinExperiment [sfDir]"`.
-  * Prints exchange counts for both plans and median-of-3 timings.
+  * Prints the (shuffles, broadcasts) pair of both plans and median-of-3
+  * timings as one JSON line.
   */
 object BucketedJoinExperiment {
 
@@ -86,26 +88,13 @@ object BucketedJoinExperiment {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bucketed-join-experiment")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_bucket_experiment_wh")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the bench's session: the bucketed tables land in its per-PID warehouse
+    val session = Harness.session("bucket_experiment")
+    val spark = session.spark
 
     val layoutSec = setupTables(spark, sfDir)
     def viaPlain() = plain(spark, sfDir)
     def viaBucketed() = bucketed(spark, sfDir)
-
-    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-      "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).size
 
     def median3(run: () => Unit): Seq[Double] = {
       run() // warm-up
@@ -123,13 +112,17 @@ object BucketedJoinExperiment {
 
     val plainTs = median3(noop(viaPlain()))
     val bucketTs = median3(noop(viaBucketed()))
-    def med(ts: Seq[Double]) = ts.sorted.apply(1)
-    println(f"""{"experiment":"bucketed_join","sf":"$sfDir",""" +
-      f""""plain_exchanges":${exchanges(viaPlain())},""" +
-      f""""bucketed_exchanges":${exchanges(viaBucketed())},""" +
-      f""""layout_write_sec":$layoutSec%.3f,""" +
-      f""""plain_sec":${med(plainTs)}%.3f,"plain_samples":${plainTs.map(t => f"$t%.3f").mkString("[", ",", "]")},""" +
-      f""""bucketed_sec":${med(bucketTs)}%.3f,"bucketed_samples":${bucketTs.map(t => f"$t%.3f").mkString("[", ",", "]")}}""")
+    // the (shuffles, broadcasts) pair the bench's layout section records
+    val (plainSh, plainBc) = Harness.planCounts(viaPlain())
+    val (bucketSh, bucketBc) = Harness.planCounts(viaBucketed())
+    def med(ts: Seq[Double]) = num(ts.sorted.apply(1))
+    println(Harness.write(obj("experiment" -> "bucketed_join", "sf" -> sfDir,
+      "plain_shuffles" -> plainSh, "plain_broadcasts" -> plainBc,
+      "bucketed_shuffles" -> bucketSh, "bucketed_broadcasts" -> bucketBc,
+      "layout_write_sec" -> num(layoutSec),
+      "plain_sec" -> med(plainTs), "plain_samples" -> nums(plainTs),
+      "bucketed_sec" -> med(bucketTs), "bucketed_samples" -> nums(bucketTs))))
+    session.deleteRoot()
     spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.node.ObjectNode
 
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
+import graft.Harness.{num, nums, obj}
 
 /** Quiet-box re-measure of individual gate queries: warmup + N samples each,
   * noop-sinked through the exact SparkEntry plan the bench times, printed as
@@ -19,22 +20,10 @@ object QuietSample {
     val sfDir = args(0)
     val n = args(1).toInt
     val names = args.drop(2).toSeq
-    // per-PID scratch + warehouse, matching the r19 bench protocol (see
-    // Tables.scratchRoot) — re-pins must measure the same isolated paths
-    val privRoot = s"/tmp/graft_quiet_${ProcessHandle.current().pid()}"
-    System.setProperty("graft.scratch.root", s"$privRoot/scratch")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-quiet-sample")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.warehouse.dir", s"$privRoot/wh")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the bench's own session and per-PID root (r19 protocol, see
+    // Tables.scratchRoot) — re-pins must measure the bench's configuration
+    val session = Harness.session("quiet")
+    val spark = session.spark
     val load0 = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // stream twins get the same batches/state_rows/batch_ms telemetry the
@@ -55,38 +44,28 @@ object QuietSample {
         if (isStream && i == n - 1) streamStats.reset()
         run()
       }
-      val streamPart =
-        if (!isStream) ""
-        else {
-          streamStats.settle()
-          val bms = streamStats.batchWallsMs.take(64).mkString("[", ",", "]")
-          s""","batches":${streamStats.batches},""" +
-            s""""state_rows":${streamStats.stateRows},"batch_ms":$bms"""
-        }
+      val row = obj("t" -> nums(ts))
       // plan counts ride along so a drift adjudication can pin "same plan,
       // different wall" vs "plan changed" without a second tool — for BATCH
       // gates only: building a q_stream_* gate's DataFrame executes the
       // whole streaming query eagerly (silently doubling the twin's wall)
       // and the captured plan is just the post-hoc orderBy over the memory
       // sink, cost without signal (r15 ADVICE)
-      val planPart =
-        if (name.startsWith("q_stream_")) ""
-        else {
-          val p = SparkEntry.queries(name)(spark, sfDir)
-            .queryExecution.executedPlan.toString
-          val bc = "BroadcastExchange".r.findAllIn(p).size
-          val reused = "ReusedExchange".r.findAllIn(p).size
-          val sh = "Exchange".r.findAllIn(p).size - bc - reused
-          s""","shuffles":$sh,"broadcasts":$bc"""
-        }
-      s""""$name":{"t":${ts.map(t => f"$t%.3f").mkString("[", ",", "]")}$planPart$streamPart}"""
+      if (isStream) {
+        streamStats.settle()
+        row.setAll[ObjectNode](Harness.streamRow(streamStats))
+      } else {
+        val (sh, bc) = Harness.planCounts(SparkEntry.queries(name)(spark, sfDir))
+        row.setAll[ObjectNode](obj("shuffles" -> sh, "broadcasts" -> bc))
+      }
+      name -> row
     }
     val load1 = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     streamStats.detach()
-    println(f"""{"samples":${rows.mkString("{", ",", "}")},""" +
-      f""""load_avg_1m":{"start":$load0%.2f,"end":$load1%.2f},"sf":"$sfDir"}""")
-    graft.Tables.deleteTree(privRoot)
+    println(Harness.write(obj("samples" -> obj(rows: _*),
+      "load_avg_1m" -> obj("start" -> num(load0, 2), "end" -> num(load1, 2)), "sf" -> sfDir)))
+    session.deleteRoot()
     spark.stop()
   }
 }

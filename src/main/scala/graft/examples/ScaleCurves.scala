@@ -3,7 +3,10 @@ package graft.examples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import com.fasterxml.jackson.databind.node.ObjectNode
+
+import graft.{Harness, Tables}
+import graft.Harness.{num, nums, obj}
 import graft.ops.{Dedup, IvfCodec, Similarity}
 
 /** Empirical scaling curves for the most expensive candidate-generation
@@ -413,25 +416,15 @@ object ScaleCurves {
   /** Standalone quiet-box runner: prints one JSON object with raw samples,
     * ratios and plan shapes at 1× and 10× (the bench embeds the same
     * measurement; this exists so the curve can be re-measured alone on a
-    * quiet box without paying for the full suite).
+    * quiet box without paying for the full suite). It measures in the
+    * bench's session ([[graft.Harness.session]]), so a re-pin with
+    * `SPARK_GRAFT_CPUS=4` measures the bench's configuration.
     */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // per-PID scratch (r19): the amplified IVF indexes are table-sized and
+    // per-PID root (r19): the amplified IVF indexes are table-sized and
     // must neither collide with a concurrent graft JVM nor outlive the run
-    System.setProperty("graft.scratch.root",
-      s"/tmp/graft_scale_${ProcessHandle.current().pid()}")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-curves")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val session = Harness.session("scale")
     // samples100 = 3 (r16 verdict ask #5): the r16 ppjoin 100× pin rested on
     // two samples 1.6× apart; a third sample + the per-row-cost ratio make
     // the no-superlinearity claim defensible on its own.
@@ -440,10 +433,10 @@ object ScaleCurves {
     // not cost a full multi-leg session to re-take), and
     // SPARK_GRAFT_SCALE_SAMPLES100 overrides the ×100 sample count.
     val n100 = sys.env.get("SPARK_GRAFT_SCALE_SAMPLES100").map(_.toInt).getOrElse(3)
-    println(measureJson(spark, sfDir, samplesPerLeg = 3,
-      samples100 = n100, at100 = legs100Standalone))
-    sys.props.get("graft.scratch.root").foreach(graft.Tables.deleteTree)
-    spark.stop()
+    println(Harness.write(measureJson(session.spark, sfDir, samplesPerLeg = 3,
+      samples100 = n100, at100 = legs100Standalone)))
+    session.deleteRoot()
+    session.spark.stop()
   }
 
   /** `{"ppjoin":{"x1":[..],"x10":[..],"ratio":..,"shuffles_x1":..,...},..}` —
@@ -453,7 +446,7 @@ object ScaleCurves {
     */
   def measureJson(spark: SparkSession, sfDir: String, samplesPerLeg: Int,
       samples100: Int = 2, at100: Set[String] = legs100,
-      samplesX10: Int = -1, deadline: () => Boolean = () => false): String = {
+      samplesX10: Int = -1, deadline: () => Boolean = () => false): ObjectNode = {
     // the 10× legs may take fewer samples than the 1× legs (the driver
     // bench passes 1: its in-bench curves are a drift canary; the robust
     // multi-sample pins live in the standalone quiet artifact)
@@ -462,12 +455,6 @@ object ScaleCurves {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
-    }
-    def planCounts(df: DataFrame): (Int, Int) = {
-      val p = df.queryExecution.executedPlan.toString
-      val bc = "BroadcastExchange".r.findAllIn(p).size
-      val reused = "ReusedExchange".r.findAllIn(p).size
-      ("Exchange".r.findAllIn(p).size - bc - reused, bc)
     }
     def median(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
     // legs skipped by the caller's deadline (the bench's budget tiers reach
@@ -486,24 +473,25 @@ object ScaleCurves {
         run(leg(spark, sfDir, copies)) // warm-up (codegen, I/O cache)
         (0 until n).map(_ => run(leg(spark, sfDir, copies)))
       }
+      def shape(copies: Int, suffix: String): Seq[(String, Any)] = {
+        val (sh, bc) = Harness.planCounts(leg(spark, sfDir, copies))
+        Seq(s"shuffles_$suffix" -> sh, s"broadcasts_$suffix" -> bc)
+      }
       val x1 = samples(1, samplesPerLeg)
       val x10 = samples(10, nX10)
-      val (sh1, bc1) = planCounts(leg(spark, sfDir, 1))
-      val (sh10, bc10) = planCounts(leg(spark, sfDir, 10))
-      val ratio = median(x10) / median(x1)
-      def arr(ts: Seq[Double]) = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
+      val shapes = shape(1, "x1") ++ shape(10, "x10")
       // the 100× pin: `samples100` samples (the leg is minutes-scale there),
       // ratio vs 1×, the exchange counts (read as a broadcast/shuffle PAIR —
       // size-driven strategy shifts are legitimate at this size), and the
       // PER-ROW cost ratio (r16 verdict ask #5: (wall/rows)@100× ÷
       // (wall/rows)@1× — a ≈1 value states "no superlinear growth" directly
       // instead of resting on a wide wall spread)
-      val x100 =
-        if (!at100.contains(name)) ""
+      val x100: Seq[(String, Any)] =
+        if (!at100.contains(name)) Nil
         // a deadline-cut ×100 sub-step must leave a marker (r18 ADVICE: the
         // x100 fields silently absent made a cut artifact indistinguishable
         // from a complete one) — recorded as "<leg>:x100" in legs_skipped
-        else if (deadline()) { legsSkipped += s"$name:x100"; "" }
+        else if (deadline()) { legsSkipped += s"$name:x100"; Nil }
         else {
           // the scaled-index leg's fit/serve contract: the ×100 index build
           // (2M int8 vectors, √N = 506 centroids at sf0.1) is the pay-once
@@ -513,11 +501,9 @@ object ScaleCurves {
             scaledIndexPath(spark, sfDir, 100 * AMP_BASE)
           val s100 = (0 until samples100)
             .map(_ => run(leg(spark, sfDir, 100)))
-          val (sh100, bc100) = planCounts(leg(spark, sfDir, 100))
-          val perRow = (median(s100) / 100.0) / median(x1)
-          f""","x100":${arr(s100)},"ratio_100":${median(s100) / median(x1)}%.2f""" +
-            f""","per_row_ratio_100":$perRow%.3f""" +
-            s""","shuffles_x100":$sh100,"broadcasts_x100":$bc100"""
+          Seq("x100" -> nums(s100), "ratio_100" -> num(median(s100) / median(x1), 2),
+            "per_row_ratio_100" -> num((median(s100) / 100.0) / median(x1))) ++
+            shape(100, "x100")
         }
       // the scaled-index leg's quality pin is PLANTED recall (r16 verdict
       // ask #6): each query has a deterministic jittered twin in the stored
@@ -525,37 +511,21 @@ object ScaleCurves {
       // by construction, so the number is index quality, not fixture noise,
       // and the old truth_noise caveat rows are retired. (Operator recall
       // on the real, un-amplified corpus stays pinned by q_ann_recall.)
-      val recall =
-        if (name != "ivf_search_scaled") ""
-        else {
-          val r1 = ivfScaledPlantedRecall(spark, sfDir, 1)
-          val r10 = ivfScaledPlantedRecall(spark, sfDir, 10)
-          // the ×100 decade's quality pin rides the same stored 1000-shard
-          // index the x100 wall samples just searched (r17 verdict ask #4)
-          val r100 =
-            if (x100.isEmpty) ""
-            else f""","recall_planted_x100":${
-              ivfScaledPlantedRecall(spark, sfDir, 100)}%.3f"""
-          f""","recall_planted_x1":$r1%.3f,"recall_planted_x10":$r10%.3f""" + r100
+      // The ×100 decade's quality pin rides the same stored 1000-shard index
+      // the x100 wall samples just searched (r17 verdict ask #4).
+      val recall: Seq[(String, Any)] =
+        if (name != "ivf_search_scaled") Nil
+        else (Seq(1, 10) ++ (if (x100.isEmpty) Nil else Seq(100))).map { c =>
+          s"recall_planted_x$c" -> num(ivfScaledPlantedRecall(spark, sfDir, c))
         }
-      f""""$name":{"x1":${arr(x1)},"x10":${arr(x10)},"ratio":$ratio%.2f,""" +
-        s""""shuffles_x1":$sh1,"broadcasts_x1":$bc1,""" +
-        s""""shuffles_x10":$sh10,"broadcasts_x10":$bc10$recall$x100}"""
+      name -> obj(Seq("x1" -> nums(x1), "x10" -> nums(x10),
+        "ratio" -> num(median(x10) / median(x1), 2)) ++ shapes ++ recall ++ x100: _*)
     } }
-    val skipRow =
-      if (legsSkipped.isEmpty) Nil
-      else Seq(s""""legs_skipped":${
-        legsSkipped.map(s => s""""$s"""").mkString("[", ",", "]")}""")
     // an ONLY-filtered artifact must name what it dropped (r18 ADVICE —
     // a filtered run otherwise reads as if those legs never existed)
-    val filteredRow = onlyLegs match {
-      case Some(keep) =>
-        val dropped = legs.map(_._1).filterNot(keep.contains)
-        if (dropped.isEmpty) Nil
-        else Seq(s""""legs_filtered":${
-          dropped.map(s => s""""$s"""").mkString("[", ",", "]")}""")
-      case None => Nil
-    }
-    (rows ++ skipRow ++ filteredRow).mkString("{", ",", "}")
+    val dropped = onlyLegs.fold(Seq.empty[String])(keep => legs.map(_._1).filterNot(keep))
+    obj(rows ++
+      (if (legsSkipped.isEmpty) Nil else Seq("legs_skipped" -> legsSkipped)) ++
+      (if (dropped.isEmpty) Nil else Seq("legs_filtered" -> dropped)): _*)
   }
 }

@@ -81,10 +81,12 @@ private[tdf] final case class Booked(
   * straight-line code, one method per node, split further when a batch is
   * wide. The driver merges the slots' buffers in partition order at the
   * end of the loop (the reference's per-slot results, :483-517, merged at
-  * :1364-1394), so no result depends on the order tasks finish in. Sibling
-  * forks that define one name differently each get their own column of the
-  * same projection. An auto-ranged histogram is exact in the same job: each
-  * slot keeps its values' exact counts, which the driver bins once the
+  * :1364-1394), so no result depends on the order tasks finish in. A define
+  * on every action's path keeps its name; any other gets its own column of
+  * the same projection, read only by the forks that define it, so sibling
+  * forks may define one name differently and no fork sees another's
+  * define. An auto-ranged histogram is exact in the same job: each slot
+  * keeps its values' exact counts, which the driver bins once the
   * merged extrema give the axis; only one whose slot met too many distinct
   * values needs a second job. `valueCap` is the most distinct values such
   * counts hold per slot ([[AutoHistoOp.Cap]]; tests lower it, it is not a
@@ -111,33 +113,58 @@ final class BookingContext private[tdf] (
   /** a decoder that throws fills its own result with the failure */
   private def fill[T](r: Result[Any], value: => T): Unit = r.v = Some(Try(value))
 
-  /** The batch's defines, each distinct (name, expression) once, and every
-    * booked action with its fork's filters rewritten onto them. The first
-    * expression of a name keeps the name; a later distinct one — a sibling
-    * fork defining the name differently, or a define over such a column —
-    * gets a private column, and the fork's later steps and its action columns
-    * read that column. Expressions compare as Columns (normalized nodes,
-    * Origin stripped): a UDF keeps its function object in the node, so two
+  /** The batch's defines, each distinct one once, and every booked action
+    * with its fork's filters rewritten onto them. A define is its name, its
+    * expression and the defines that expression reads (so the same text over
+    * two forks' different columns stays two defines). It keeps its name only
+    * when every action of the batch has it on its path; any other gets a
+    * private column, and only the forks that define it read that column, so
+    * a fork never sees a sibling's define and fails as it fails when booked
+    * alone. Expressions compare as Columns (normalized nodes, Origin
+    * stripped): a UDF keeps its function object in the node, so two
     * DIFFERENT typed lambdas stay apart even though both render as `UDF(x)`.
     */
   private def unify(batch: Vector[Booked]): (Seq[(String, Column)], Vector[Booked]) = {
-    val defines = mutable.LinkedHashMap.empty[(String, Column), String]
-    val unified = batch.map { b =>
-      var ren = Map.empty[String, String]
-      def rewrite(c: Column) =
-        if (ren.isEmpty) c else GraftSql.renameColumns(base.sparkSession, c, ren)
+    val spark = base.sparkSession
+    val resolve = GraftSql.resolver(spark)
+    val ids = mutable.LinkedHashMap.empty[(String, Column, Set[Int]), Int]
+    val reads = mutable.HashMap.empty[Column, Seq[String]]
+    // each action's path: the ids of its defines, in order
+    val paths = batch.map { b =>
+      b.steps.foldLeft(Vector.empty[(String, Int)]) {
+        case (scope, DefineStep(n, e)) =>
+          val from = reads.getOrElseUpdate(e, GraftSql.references(spark, e)).flatMap { r =>
+            scope.collectFirst { case (k, id) if resolve(k, r) => id }
+          }.toSet
+          scope :+ (n -> ids.getOrElseUpdate((n, e, from), ids.size))
+        case (scope, _) => scope
+      }.map(_._2)
+    }
+    val keys = ids.keys.toVector
+    val uses = paths.flatten.groupBy(identity).map { case (id, us) => id -> us.size }
+    val column = keys.indices.map { id =>
+      if (uses(id) == batch.size) keys(id)._1 else s"__tdf_d$id"
+    }
+    val exprs = new Array[Column](keys.size)
+    val unified = batch.zip(paths).map { case (b, path) =>
+      var (ren, i) = (Map.empty[String, String], 0)
+      def rewrite(c: Column) = if (ren.isEmpty) c else GraftSql.renameColumns(spark, c, ren)
       val filters = b.steps.flatMap {
         case DefineStep(n, e) =>
-          val c = defines.getOrElseUpdate((n, rewrite(e)),
-            if (defines.keysIterator.exists(_._1 == n)) s"__tdf_d${defines.size}" else n)
-          if (c != n) ren += n -> c
+          val id = path(i)
+          i += 1
+          if (exprs(id) eq null) exprs(id) = rewrite(e)
+          if (column(id) != n) ren += n -> column(id)
           None
         case FilterStep(n, p) => Some(FilterStep(n, rewrite(p)))
       }
       b.copy(steps = filters, ren = ren)
     }
-    (defines.toSeq.map { case ((_, e), c) => (c, e) }, unified)
+    (column.zip(exprs), unified)
   }
+
+  /** the columns the pending batch defines, in order (a test seam) */
+  private[tdf] def pendingDefines: Seq[String] = synchronized(unify(pending.toVector)._1.map(_._1))
 
   /** Execute every pending action in one job, plus one shared job for the
     * auto-ranged histograms a slot met too many distinct values for. Clears
@@ -397,7 +424,10 @@ final class TDF private (
     * collision with an existing column (TDataFrame.hxx:290-297).
     */
   def Define(name: String, expr: Column): TDF = {
-    if (columns.contains(name))
+    // names compare as the analyzer resolves them: `X` collides with `x`
+    // unless the session is case-sensitive
+    val resolve = GraftSql.resolver(spark)
+    if (columns.exists(resolve(_, name)))
       throw new IllegalArgumentException(s"branch '$name' already present")
     new TDF(ctx, steps :+ DefineStep(name, expr), defaultColumns)
   }

@@ -14,15 +14,33 @@ object GraftSql {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** the session's column-name resolver: case-insensitive unless
+    * `spark.sql.caseSensitive` is set
+    */
+  def resolver(spark: org.apache.spark.sql.SparkSession): (String, String) => Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf.resolver
+
+  /** the first part of each column name `c` reads (`s` for `s.a`), SQL
+    * strings parsed
+    */
+  def references(spark: org.apache.spark.sql.SparkSession, c: Column): Seq[String] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
+      .collect { case UnresolvedAttribute(n +: _) => n }
+
   /** `c` with each reference to a column named by a key of `names` renamed
     * to its value (`c` fully converted by `spark`, SQL strings parsed); `c`
-    * itself when it references none of them
+    * itself when it references none of them. Names match as the analyzer
+    * resolves them: through the session's [[resolver]], on the first part
+    * of a nested name (`s.a` reads column `s`).
     */
   def renameColumns(
       spark: org.apache.spark.sql.SparkSession, c: Column, names: Map[String, String]): Column = {
+    val resolve = resolver(spark)
     val e = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
     val renamed = e.transform {
-      case UnresolvedAttribute(Seq(n)) if names.contains(n) => UnresolvedAttribute(Seq(names(n)))
+      case a @ UnresolvedAttribute(n +: rest) =>
+        names.collectFirst { case (k, v) if resolve(k, n) => UnresolvedAttribute(v +: rest) }
+          .getOrElse(a)
     }
     if (renamed fastEquals e) c else column(renamed)
   }

@@ -92,6 +92,46 @@ class TDFSpec extends AnyFunSuite {
     }
   }
 
+  test("Define collides with a column whose name differs only in case") {
+    intercept[IllegalArgumentException] { TDF(fixture).Define("B1", lit(1)) }
+    intercept[IllegalArgumentException] { TDF(fixture).Define("x", lit(1)).Define("X", lit(2)) }
+  }
+
+  test("a fork never reads a sibling's define: booked together it fails as it fails alone") {
+    def unresolved(r: => Any): String = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](r)
+      assert(e.getCondition.startsWith("UNRESOLVED_COLUMN"), e.getMessage)
+      e.getMessage
+    }
+    val d = TDF(fixture)
+    unresolved(d.Filter($"z" > 150).Count()())
+    // booked next to the fork that defines z, as a filter and as a define
+    val (z, leak) = (d.Define("z", $"b1" * 100).Count(), d.Filter($"z" > 150).Count())
+    unresolved(leak())
+    val (z2, leak2) = (d.Define("z", $"b1" * 100).Sum("z"), d.Define("w", $"z" + 1).Sum("w"))
+    unresolved(leak2())
+    // the defining forks still read their own private column, through any
+    // case and through a struct's field
+    val e = d.Define("z", $"b1" * 100)
+    val s = d.Define("s", struct($"b1".as("a")))
+    val (n1, n2, n3, all) =
+      (e.Filter($"Z" > 150).Count(), s.Filter($"S.a" > 5).Count(), e.Sum("z"), d.Count())
+    assert((n1(), n2(), n3(), all()) == ((18L, 14L, 19000.0, 20L)))
+  }
+
+  test("a define on every action's path keeps its name: the bench chains rename nothing") {
+    // the benchmark chains' shape: one root define, one filter per branch
+    val d = TDF(fixture)
+    val root = d.Define("z", $"b1" * 2)
+    val (c, s) = (root.Filter("a", $"z" > 4).Count(), root.Filter("b", $"z" > 8).Sum("z"))
+    assert(TestSeams.pendingDefines(d) == Seq("z"))
+    assert((c(), s()) == ((17L, (5 until 20).map(2.0 * _).sum)))
+    // an action off the define's path makes it private to its fork
+    val (z, all) = (d.Define("z", $"b1" * 2).Count(), d.Count())
+    assert(TestSeams.pendingDefines(d) == Seq("__tdf_d0"))
+    assert((z(), all()) == ((20L, 20L)))
+  }
+
   test("empty-input identities (regression_zeroentries), compat sentinels") {
     val d = TDF(fixture, compat = true).Filter(lit(false))
     assert(d.Count()() == 0L)

@@ -15,6 +15,9 @@ object TestSeams {
   def withValueCap(df: DataFrame, cap: Int, compat: Boolean = false): TDF =
     TDF.of(new BookingContext(df, compat, cap))
 
+  /** the columns the pending batch of `d`'s context would define, in order */
+  def pendingDefines(d: TDF): Seq[String] = d.ctx.pendingDefines
+
   /** books `d.Foreach(cols)(f)` without running the batch, so that a later
     * trigger runs it in the same pass as the other pending actions
     */
